@@ -463,18 +463,6 @@ def _word_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).select(F.explode(words_col("text")).alias("word"))
 
 
-def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import bloom
-
-    return _membership_panel(
-        spark, sf_dir, bloom.build_bloom, bloom.ShardedBloom,
-        lambda n: bloom.BloomConfig(n_capacity=n, bits_per_key=12, num_shards=8, seed=42),
-        # cfg-derived bound: closed-form FPR x 1.5 sampling margin
-        lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4,
-        "zz",
-    )
-
-
 def q_prefix_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prefix_filter_spark.sketches import prefix_filter as pfm
 
@@ -1387,12 +1375,13 @@ def _membership_panel(spark, sf_dir, build, handle_cls, cfg_factory, fpr_bound, 
 def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consolidated membership panel — ONE gate row per filter kind
     (round-3 verdict item #1: ten single-row gates wasted the driver's
-    50-query window). Same assertions per kind as the individual
-    panels: zero false negatives on every inserted key, and empirical
-    FPR on 50k disjoint probes under the kind's bound. The word stream
-    is scanned and deduplicated ONCE for all ten builds (the individual
-    panels each re-scanned it — at 100 TB the scan dominates, so the
-    shared-scan shape is also the right production pattern).
+    50-query window). Same assertions per kind as the single-kind
+    panels it replaced: zero false negatives on every inserted key, and
+    empirical FPR on 50k disjoint probes under the kind's bound. The
+    word stream is scanned and deduplicated ONCE for all ten builds
+    (the single-kind panels each re-scanned it — at 100 TB the scan
+    dominates, so the shared-scan shape is also the right production
+    pattern).
 
     Kinds: Bloom, blocked-Bloom, two-choice, cuckoo (CF-12-stable),
     the five reference prefix-filter assemblies (Bloom / TC / CF /
@@ -1512,89 +1501,6 @@ def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("kind")
 
 
-def q_blocked_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import blocked_bloom as bb
-
-    return _membership_panel(
-        spark, sf_dir, bb.build_blocked_bloom, bb.ShardedBlockedBloom,
-        lambda n: bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, num_shards=8, seed=42),
-        0.05, "bbf",
-    )
-
-
-def q_two_choice_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import two_choice as tc
-
-    return _membership_panel(
-        spark, sf_dir, tc.build_two_choice, tc.ShardedTwoChoice,
-        lambda n: tc.TwoChoiceConfig(n_capacity=n, num_shards=8, seed=42),
-        0.02, "tc",
-    )
-
-
-def q_cuckoo_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch cuckoo filter (reference CuckooFilterStable, 12-bit tags,
-    4-way buckets, delete-capable; cuckoofilter_stable.h:69-135)."""
-    from prefix_filter_spark.sketches import cuckoo as ckm
-
-    return _membership_panel(
-        spark, sf_dir, ckm.build_cuckoo, ckm.ShardedCuckoo,
-        lambda n: ckm.CuckooConfig(n_capacity=n, num_shards=8, seed=42),
-        0.01, "ck",
-    )
-
-
-def q_pf_tc_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix filter with the two-choice spare (PF[TC], example.cpp:4-5)."""
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42, spare_kind="tc"),
-        0.006, "pftc",
-    )
-
-
-def q_pf_cf_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix filter with a stable-cuckoo spare — the reference's third
-    published assembly, PF[CF12-Flex]
-    (/root/reference/main-perf.cpp:16-31, spare sizing
-    Tests/wrappers.hpp:529-546)."""
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42, spare_kind="cuckoo"),
-        0.006, "pfcf",
-    )
-
-
-def q_pf_bbf_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix filter with the register-blocked spare — the reference's
-    PF[BBF-Fixed] assembly (/root/reference/main-fpp.cpp:20, spare
-    sizing Tests/wrappers.hpp:564-569)."""
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42, spare_kind="bbf"),
-        0.008, "pfbbf",
-    )
-
-
-def q_pf_impala_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix filter with the 64B-block spare — the reference's
-    PF[Impala512] assembly (/root/reference/main-fpp.cpp:23, spare
-    sizing Tests/wrappers.hpp:578-593)."""
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-        lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42, spare_kind="impala512"),
-        0.008, "pfimp",
-    )
-
-
 def q_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-join runtime filter: fact side pruned map-side by an AMQ
     filter on the dim keys before the join's shuffle; zero false
@@ -1617,24 +1523,6 @@ def q_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
         )
         .orderBy("l_returnflag")
-    )
-
-
-def q_doc_id_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-ID probes (north star: 'token-ID and doc-ID probes')."""
-    from prefix_filter_spark.functions import register_contains_udf
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.count()
-    cfg = pfm.PrefixFilterConfig(n_capacity=max(n, 1024), num_shards=8, seed=42)
-    handle = pfm.ShardedPrefixFilter.from_df(
-        cfg, pfm.build_prefix_filter(docs, "doc_id", cfg)
-    )
-    fn = register_contains_udf(spark, "q_pf_doc", handle, cfg.seed)
-    found = docs.where(fn("doc_id")).count()
-    return spark.createDataFrame(
-        [(n, n - found)], "n_probed bigint, false_negatives bigint"
     )
 
 
@@ -1827,7 +1715,7 @@ def q_pf_join_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         shards,
         seed=cfg.seed,
         num_shards=cfg.num_shards,
-        probe_fn=probe.pf_probe_fn(cfg),
+        probe_fn=probe.probe_fn_for(pfm.ShardedPrefixFilter, cfg),
     )
     return out.agg(
         F.count("*").alias("n_probed"),
@@ -2166,8 +2054,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ``text_signals``, freeing the slot for ``unigram_scores``.
     Round-4 session-10 merged ``bpe_token_stats`` into ``token_stats``
     (same aggregations, joined on source), freeing the slot for the
-    ``nb_quality`` classifier gate. Every individual q_* callable
-    remains available as API and for pytest."""
+    ``nb_quality`` classifier gate. The single-kind membership
+    callables were removed with that consolidation —
+    ``filters_membership`` gates every kind they did;
+    ``q_prefix_filter_membership`` stays as the ``entry()`` flagship.
+    Every other q_* callable remains available as API and for pytest."""
     return {
         "tpch_q1": q_tpch_q1,
         "top_customers": q_top_customers,

@@ -62,12 +62,10 @@ def register_contains_udf(
 ) -> "ContainsFunction":
     """Register ``name(h bigint) -> boolean`` over a probe handle.
 
-    ``sketch`` must expose ``contains_h(np.ndarray[u64]) -> bool array``
-    (ShardedBloom, ShardedPrefixFilter, ...).
+    ``sketch`` is a probe handle (``sketches.base.ShardedFilter``:
+    ShardedBloom, ShardedPrefixFilter, ...).
     """
-    predecode = getattr(sketch, "predecode", None)
-    if predecode is not None:
-        predecode()  # pay header decode once, ship decoded tables
+    sketch.predecode()  # pay header check + decode once, ship decoded tables
     bc = spark.sparkContext.broadcast(sketch)
 
     @F.pandas_udf(T.BooleanType())

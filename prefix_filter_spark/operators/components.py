@@ -142,23 +142,24 @@ def _small_star(half: DataFrame) -> DataFrame:
     ).select("e.u", "e.v")
 
 
-def _auto_round_width(spark, n_edges: int) -> int:
+def _auto_round_width(session_width: int, n_edges: int) -> int:
     """Shuffle width for the CC rounds from the measured edge count:
     ~16k canonical edges per task (pow2-rounded), floored at 8 and
-    capped at the session's configured shuffle width (never WIDER than
-    the caller asked for anywhere else). The r4 bench A/B that
-    motivates sizing down: 200k edges at the session's corpus-sized
-    128 -> 1.5k-row tasks of pure overhead, 27% slower than 32; the
-    round-5 sweep then put 16 ahead of 32 on the same gate."""
+    capped at ``session_width`` — the session's configured shuffle
+    width, saved BEFORE any provisional override (never WIDER than the
+    caller asked for anywhere else, and never capped by the override).
+    The r4 bench A/B that motivates sizing down: 200k edges at the
+    session's corpus-sized 128 -> 1.5k-row tasks of pure overhead, 27%
+    slower than 32; the round-5 sweep then put 16 ahead of 32 on the
+    same gate."""
     import math
 
     target = max(1, -(-n_edges // 16384))
     pow2 = 1 << math.ceil(math.log2(target))
-    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # no core-count floor: each round's exchanges are latency-bound at
     # gate scale and a 16-wide round beat 32 on a 32-core session in
     # the width sweep; large edge counts widen via the edges/task term
-    return max(8, min(session, pow2))
+    return max(8, min(session_width, pow2))
 
 
 def connected_components(
@@ -240,7 +241,9 @@ def connected_components(
         spark.conf.set("spark.sql.shuffle.partitions", str(provisional))
         try:
             canon = _truncate(_canon(canon_src))
-            num_shuffle_partitions = _auto_round_width(spark, canon.count())
+            num_shuffle_partitions = _auto_round_width(
+                int(prev_parts), canon.count()
+            )
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prefix_filter_spark.functions import register_contains_udf
@@ -105,9 +105,13 @@ def prune_fact(fact: DataFrame, fact_key: str, contains) -> DataFrame:
 
     ``contains`` is the column factory from :func:`build_runtime_filter`.
     NULL join keys never match an equi-join, so they are dropped here
-    too (same as the exchange would).
+    too (same as the exchange would). The key is probed with ``df=fact``
+    so int/smallint/tinyint keys hash at the bigint width the build used
+    (a 4-byte hash would make every fact row a false negative).
     """
-    return fact.where(F.col(fact_key).isNotNull() & contains(F.col(fact_key)))
+    return fact.where(
+        F.col(fact_key).isNotNull() & contains(F.col(fact_key), df=fact)
+    )
 
 
 def runtime_filter_join(

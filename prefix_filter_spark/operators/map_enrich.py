@@ -135,11 +135,12 @@ def enrich(
         spark, f"{udf_prefix}_lookup", em.retrieval, em.seed
     )
     em.lookup_fn = rfn
-    value: Column = rfn(fact_key)
+    # df=fact: integral keys hash at the bigint width the builds used
+    value: Column = rfn(fact_key, df=fact)
     if em.guard is not None:
         cfn = register_contains_udf(
             spark, f"{udf_prefix}_guard", em.guard, em.seed
         )
         em.guard_fn = cfn
-        value = F.when(cfn(fact_key), value)
+        value = F.when(cfn(fact_key, df=fact), value)
     return fact.withColumn(out_col, value)

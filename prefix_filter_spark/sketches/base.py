@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prefix_filter_spark.hashing import as_u64
+from prefix_filter_spark.hashing import as_u64, shard_of
 from prefix_filter_spark.plans.sharding import hashed_key_col, shard_col, widen_key_col
 
 SHARD_SCHEMA = (
@@ -116,8 +116,6 @@ def build_sharded(
     values raise (pandas would silently turn them into float NaN →
     INT64_MIN garbage).
     """
-    from prefix_filter_spark.hashing import shard_of
-
     # integral keys hash at bigint width on every path (widen_key_col) —
     # a narrow int column would otherwise take the JVM 4-byte kernel and
     # break the driver-side probe twins' zero-FN contract
@@ -462,3 +460,87 @@ def collect_states(shards_df: DataFrame) -> dict[int, bytes]:
     """
     rows = shards_df.select("shard_id", "state").collect()
     return {r["shard_id"]: bytes(r["state"]) for r in rows}
+
+
+class ShardedFilter:
+    """Driver-side probe handle over collected shard states — the one
+    "route hashes to shards, then probe each shard" loop every sharded
+    filter kind shares (the shard concatenation IS the reference's
+    single PD array, generalized).
+
+    A filter kind is two functions of its family module, bound by a
+    short subclass as ``prepare_state`` / ``probe_state``:
+
+    - ``prepare_state(cfg, state)``: reject a state/config mismatch
+      (silent false negatives otherwise) and decode whatever the probe
+      reuses. Runs once per shard — lazily before the shard's first
+      probe, or for every shard via ``predecode()``. The default keeps
+      the state as is (kinds whose kernel checks the state itself).
+    - ``probe_state(cfg, prepared, shard_id, h_u64) -> ndarray``: the
+      kind's seed mix and vectorized kernel over one shard's hashes.
+
+    ``contains_h`` takes the xxhash64 column values (int64) — the same
+    base hash used at build time — and is what the registered SQL UDF
+    calls (see functions.py). Hashes routed to a shard absent from
+    ``states`` answer False (0 for ``out_dtype=np.int64`` handles).
+    """
+
+    out_dtype = bool
+
+    def __init__(self, cfg, states: dict[int, bytes]):
+        self.cfg = cfg
+        self.states = states
+        self._prepared: dict[int, object] = {}
+
+    @staticmethod
+    def prepare_state(cfg, state: bytes):
+        return state
+
+    @staticmethod
+    def probe_state(cfg, prepared, shard_id: int, h_u64: np.ndarray) -> np.ndarray:
+        raise NotImplementedError  # pragma: no cover
+
+    @classmethod
+    def from_df(cls, cfg, shards_df: DataFrame):
+        return cls(cfg, collect_states(shards_df))
+
+    def byte_size(self) -> int:
+        # the reference FilterAPI::get_byte_size (Tests/wrappers.hpp:766-772)
+        return sum(len(s) for s in self.states.values())
+
+    def prepared(self, sid: int):
+        p = self._prepared.get(sid)
+        if p is None:
+            p = self.prepare_state(self.cfg, self.states[sid])
+            self._prepared[sid] = p
+        return p
+
+    def predecode(self) -> "ShardedFilter":
+        """Prepare every shard once (driver-side, before broadcast) so
+        executors probe immediately — the batch analogue of the
+        reference amortizing select64 across a probe loop. A prepared
+        value that is the state itself is the same bytes object, so
+        pickling the handle stores it once."""
+        for sid in self.states:
+            self.prepared(sid)
+        return self
+
+    def contains_h(self, h) -> np.ndarray:
+        h = as_u64(np.asarray(h))
+        out = np.zeros(len(h), dtype=self.out_dtype)
+        if len(h) == 0:
+            return out
+        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
+        order = np.argsort(shards, kind="stable")
+        sorted_shards = shards[order]
+        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
+        for sid in np.unique(sorted_shards):
+            sid = int(sid)
+            if sid in self.states:
+                idx = order[bounds[sid] : bounds[sid + 1]]
+                out[idx] = self.probe_state(self.cfg, self.prepared(sid), sid, h[idx])
+        return out
+
+    # value handles (the retrieval structure) answer through the same
+    # loop; the name says what the int64 result means
+    lookup_h = contains_h

@@ -38,7 +38,7 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches.xor import _peel
 
@@ -195,34 +195,19 @@ def build_bfuse(df: DataFrame, key_col, cfg: BFuseConfig) -> DataFrame:
     )
 
 
-class ShardedBFuse:
-    """Probe handle; protocol-identical to ShardedXor/ShardedBloom."""
+def prepare_state(cfg: BFuseConfig, state: bytes) -> bytes:
+    check_state(cfg, state)
+    return state
 
-    def __init__(self, cfg: BFuseConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
 
-    @classmethod
-    def from_df(cls, cfg: BFuseConfig, shards_df: DataFrame) -> "ShardedBFuse":
-        return cls(cfg, base.collect_states(shards_df))
+def probe_state(
+    cfg: BFuseConfig, state: bytes, shard_id: int, h_u64: np.ndarray
+) -> np.ndarray:
+    return _contains_in_state(state, h_u64)
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            idx = order[lo:hi]
-            state = self.states.get(int(sid))
-            if state is not None:
-                check_state(self.cfg, state)
-                out[idx] = _contains_in_state(state, h[idx])
-        return out
+class ShardedBFuse(base.ShardedFilter):
+    """Binary fuse probe handle (see base.ShardedFilter)."""
+
+    prepare_state = staticmethod(prepare_state)
+    probe_state = staticmethod(probe_state)

@@ -30,7 +30,7 @@ from functools import reduce
 import numpy as np
 from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 
 _MAGIC = b"PFBB"
@@ -196,31 +196,14 @@ def build_blocked_bloom(df: DataFrame, key_col, cfg: BlockedBloomConfig) -> Data
     )
 
 
-class ShardedBlockedBloom:
-    def __init__(self, cfg: BlockedBloomConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
+def probe_state(
+    cfg: BlockedBloomConfig, state: bytes, shard_id: int, h_u64: np.ndarray
+) -> np.ndarray:
+    return _contains_in_state(cfg, state, mix_with_seed(h_u64, cfg.seed + 0xBB0C))
 
-    @classmethod
-    def from_df(cls, cfg, shards_df) -> "ShardedBlockedBloom":
-        return cls(cfg, base.collect_states(shards_df))
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
+class ShardedBlockedBloom(base.ShardedFilter):
+    """Blocked-Bloom probe handle (see base.ShardedFilter); the kernel
+    checks the state header on every call, so no prepare step."""
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        g = mix_with_seed(h, self.cfg.seed + 0xBB0C)
-        order = np.argsort(shards, kind="stable")
-        ss = shards[order]
-        bounds = np.searchsorted(ss, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(ss):
-            idx = order[bounds[sid] : bounds[sid + 1]]
-            st = self.states.get(int(sid))
-            if st is not None:
-                out[idx] = _contains_in_state(self.cfg, st, g[idx])
-        return out
+    probe_state = staticmethod(probe_state)

@@ -27,7 +27,7 @@ from functools import reduce
 import numpy as np
 from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
 _MAGIC = b"PFSB"
@@ -67,6 +67,13 @@ class BloomConfig:
         return (1.0 - math.exp(-k * n / m)) ** k
 
 
+def seed_mix(hashes_u64: np.ndarray, seed: int) -> np.ndarray:
+    """Base hash -> the remix every Bloom build and probe derives its
+    bit positions from (one salt for all of them: a probe that mixed
+    differently from the build would be silent false negatives)."""
+    return mix_with_seed(hashes_u64, seed + 0x5EED)
+
+
 def _probe_positions(g: np.ndarray, k: int, m_bits: int) -> np.ndarray:
     """(n, k) bit positions via double hashing a += b (bloom.hpp:140-154)."""
     old = np.seterr(over="ignore")
@@ -84,7 +91,7 @@ def _probe_positions(g: np.ndarray, k: int, m_bits: int) -> np.ndarray:
 
 def _build_state(cfg: BloomConfig, hashes_u64: np.ndarray) -> bytes:
     m = cfg.m_bits_per_shard
-    g = mix_with_seed(hashes_u64, cfg.seed + 0x5EED)
+    g = seed_mix(hashes_u64, cfg.seed)
     bits = np.zeros(m, dtype=bool)
     if len(g):
         pos = _probe_positions(g, cfg.k, m)
@@ -159,44 +166,22 @@ def build_bloom(df: DataFrame, key_col, cfg: BloomConfig) -> DataFrame:
     )
 
 
-class ShardedBloom:
-    """Driver-side probe handle over collected shard states.
+def prepare_state(cfg: BloomConfig, state: bytes) -> bytes:
+    check_state(cfg, state)
+    return state
 
-    ``contains_h`` takes the xxhash64 column values (int64) — the same
-    base hash used at build time — and is fully vectorized; it is what
-    the registered SQL UDF calls (see functions.py).
-    """
 
-    def __init__(self, cfg: BloomConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
+def probe_state(
+    cfg: BloomConfig, state: bytes, shard_id: int, h_u64: np.ndarray
+) -> np.ndarray:
+    return _contains_in_state(state, seed_mix(h_u64, cfg.seed))
 
-    @classmethod
-    def from_df(cls, cfg: BloomConfig, shards_df: DataFrame) -> "ShardedBloom":
-        return cls(cfg, base.collect_states(shards_df))
 
-    def byte_size(self) -> int:
-        # FilterAPI::get_byte_size (/root/reference/Tests/wrappers.hpp:766-772)
-        return sum(len(s) for s in self.states.values())
+class ShardedBloom(base.ShardedFilter):
+    """Bloom probe handle (see base.ShardedFilter)."""
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        g = mix_with_seed(h, self.cfg.seed + 0x5EED)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            idx = order[lo:hi]
-            state = self.states.get(int(sid))
-            if state is not None:
-                check_state(self.cfg, state)
-                out[idx] = _contains_in_state(state, g[idx])
-        return out
+    prepare_state = staticmethod(prepare_state)
+    probe_state = staticmethod(probe_state)
 
 
 def contains_h_in_state(state: bytes, h) -> np.ndarray:
@@ -205,5 +190,4 @@ def contains_h_in_state(state: bytes, h) -> np.ndarray:
     table of states, e.g. the per-file index), where no driver handle
     exists to carry the config."""
     _magic, _ver, _k, _, _m, seed, _ns = _HDR.unpack_from(state, 0)
-    g = mix_with_seed(as_u64(np.asarray(h)), seed + 0x5EED)
-    return _contains_in_state(state, g)
+    return _contains_in_state(state, seed_mix(as_u64(np.asarray(h)), seed))

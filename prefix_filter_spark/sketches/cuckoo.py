@@ -80,7 +80,6 @@ from prefix_filter_spark.hashing import (
     as_u64,
     fastrange32,
     mix_with_seed,
-    shard_of,
     splitmix64,
 )
 from prefix_filter_spark.sketches import base
@@ -528,30 +527,14 @@ def build_cuckoo(df: DataFrame, key_col, cfg: CuckooConfig) -> DataFrame:
     )
 
 
-class ShardedCuckoo:
-    def __init__(self, cfg: CuckooConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
+def probe_state(
+    cfg: CuckooConfig, state: bytes, shard_id: int, h_u64: np.ndarray
+) -> np.ndarray:
+    return _contains_in_state(cfg, state, h_u64)
 
-    @classmethod
-    def from_df(cls, cfg, shards_df) -> "ShardedCuckoo":
-        return cls(cfg, base.collect_states(shards_df))
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
+class ShardedCuckoo(base.ShardedFilter):
+    """Cuckoo probe handle (see base.ShardedFilter); the kernel checks
+    the state geometry on every call, so no prepare step."""
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        ss = shards[order]
-        bounds = np.searchsorted(ss, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(ss):
-            idx = order[bounds[sid] : bounds[sid + 1]]
-            st = self.states.get(int(sid))
-            if st is not None:
-                out[idx] = _contains_in_state(self.cfg, st, h[idx])
-        return out
+    probe_state = staticmethod(probe_state)

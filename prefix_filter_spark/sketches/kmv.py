@@ -26,7 +26,6 @@ from __future__ import annotations
 import math
 import struct
 from dataclasses import dataclass
-from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame

@@ -41,7 +41,6 @@ from prefix_filter_spark.hashing import (
     fastrange32,
     fixed_reduce,
     mix_with_seed,
-    shard_of,
 )
 from prefix_filter_spark.sketches import base, bloom, pd_kernel
 
@@ -94,162 +93,89 @@ class PrefixFilterConfig:
     def spare_capacity_per_shard(self) -> int:
         return max(64, math.ceil(self.shard_capacity * self.spare_ratio))
 
-    def spare_bloom_config(self) -> bloom.BloomConfig:
-        return bloom.BloomConfig(
-            n_capacity=self.spare_capacity_per_shard,
-            bits_per_key=self.spare_bits_per_key,
-            num_shards=1,
-            seed=self.seed ^ 0x5A5A5A5A,
-        )
 
-    def spare_tc_config(self):
-        from prefix_filter_spark.sketches import two_choice as tc
-
-        return tc.TwoChoiceConfig(
-            n_capacity=self.spare_capacity_per_shard,
-            num_shards=1,
-            seed=self.seed ^ 0x5A5A5A5A,
-        )
-
-    def spare_bbf_config(self):
-        """Register-blocked spares: the reference's PF[BBF-Fixed]
-        (wrappers.hpp:564-569: L2 slots = 2x the eviction stream /
-        load) and PF[Impala512] (wrappers.hpp:578-593, 64B blocks).
-        We size from spare_ratio like the other spares; 10 bits/key
-        keeps the spare's FPR contribution below the L1 term."""
-        from prefix_filter_spark.sketches import blocked_bloom as bb
-
-        return bb.BlockedBloomConfig(
-            n_capacity=self.spare_capacity_per_shard,
-            bits_per_key=10,
-            block_bytes=64 if self.spare_kind == "impala512" else 32,
-            num_shards=1,
-            seed=self.seed ^ 0x5A5A5A5A,
-        )
-
-    def spare_xor_config(self):
-        from prefix_filter_spark.sketches import xor as xorm
-
-        return xorm.XorConfig(
-            n_capacity=self.spare_capacity_per_shard,
-            fingerprint_bits=8,
-            num_shards=1,
-            seed=self.seed ^ 0x5A5A5A5A,
-        )
-
-    def spare_ribbon_config(self):
-        from prefix_filter_spark.sketches import ribbon as rbm
-
-        return rbm.RibbonConfig(
-            n_capacity=self.spare_capacity_per_shard,
-            fingerprint_bits=8,
-            num_shards=1,
-            seed=self.seed ^ 0x5A5A5A5A,
-        )
-
-    def spare_cuckoo_config(self):
-        """The reference's PF[CF12-Flex] spare: CuckooFilterStable with
-        12-bit tags, sized for the eviction stream at stable load
-        (wrappers.hpp:529-546: slots = 1.08 * 0.0586 / 0.94 * n ≈ 6.7%
-        of n; our spare_ratio=0.08 keeps the same safety margin plus
-        headroom for merge-time evictions)."""
-        from prefix_filter_spark.sketches import cuckoo as ck
-
-        return ck.CuckooConfig(
-            n_capacity=self.spare_capacity_per_shard,
-            fp_bits=12,
-            num_shards=1,
-            seed=self.seed ^ 0x5A5A5A5A,
-        )
-
-
-def _spare_ops(kind: str):
-    """THE spare dispatch registry: kind -> (build, merge-or-None,
-    probe). Every spare kind registers here exactly once — the previous
-    per-function if-chains had four sites to keep in lockstep, and a
-    kind missing from one silently fell through to the bloom default
-    (silent false negatives at probe time). merge is None for the
-    static build-once kinds (xor / ribbon)."""
+def _spare_ops(cfg: PrefixFilterConfig):
+    """THE spare dispatch registry: spare kind -> (family module, spare
+    config, merge-or-None). Every spare kind registers here exactly
+    once — the previous per-function if-chains had four sites to keep
+    in lockstep, and a kind missing from one silently fell through to
+    the bloom default (silent false negatives at probe time). Build and
+    probe are the family's own ``_build_state`` / ``probe_state`` under
+    the spare config; merge is None for the static build-once kinds
+    (xor / ribbon)."""
+    kind = cfg.spare_kind
+    # every spare is a one-shard filter inside its PF shard's state,
+    # sized from spare_ratio for the expected eviction stream
+    size = dict(
+        n_capacity=cfg.spare_capacity_per_shard,
+        num_shards=1,
+        seed=cfg.seed ^ 0x5A5A5A5A,
+    )
     if kind == "bloom":
-        return (
-            lambda cfg, keys: bloom._build_state(cfg.spare_bloom_config(), keys),
-            lambda cfg, states: bloom.merge_states(states),
-            lambda cfg, state, keys: bloom._contains_in_state(
-                state, mix_with_seed(keys, cfg.spare_bloom_config().seed + 0x5EED)
-            ),
-        )
+        scfg = bloom.BloomConfig(bits_per_key=cfg.spare_bits_per_key, **size)
+        return bloom, scfg, bloom.merge_states
     if kind == "tc":
         from prefix_filter_spark.sketches import two_choice as tc
 
-        return (
-            lambda cfg, keys: tc._build_state(cfg.spare_tc_config(), keys),
-            lambda cfg, states: tc.merge_states(states, cfg.spare_tc_config()),
-            lambda cfg, state, keys: tc._contains_in_state(
-                cfg.spare_tc_config(), state, keys
-            ),
-        )
+        scfg = tc.TwoChoiceConfig(**size)
+        return tc, scfg, lambda states: tc.merge_states(states, scfg)
     if kind == "cuckoo":
+        # the reference's PF[CF12-Flex] spare: CuckooFilterStable with
+        # 12-bit tags, sized for the eviction stream at stable load
+        # (wrappers.hpp:529-546: slots = 1.08 * 0.0586 / 0.94 * n ≈ 6.7%
+        # of n; our spare_ratio=0.08 keeps the same safety margin plus
+        # headroom for merge-time evictions)
         from prefix_filter_spark.sketches import cuckoo as ck
 
-        return (
-            lambda cfg, keys: ck._build_state(cfg.spare_cuckoo_config(), keys),
-            lambda cfg, states: ck.merge_states(states, cfg.spare_cuckoo_config()),
-            lambda cfg, state, keys: ck._contains_in_state(
-                cfg.spare_cuckoo_config(), state, keys
-            ),
-        )
+        scfg = ck.CuckooConfig(fp_bits=12, **size)
+        return ck, scfg, lambda states: ck.merge_states(states, scfg)
     if kind in ("bbf", "impala512"):
+        # register-blocked spares: the reference's PF[BBF-Fixed]
+        # (wrappers.hpp:564-569: L2 slots = 2x the eviction stream /
+        # load) and PF[Impala512] (wrappers.hpp:578-593, 64B blocks).
+        # We size from spare_ratio like the other spares; 10 bits/key
+        # keeps the spare's FPR contribution below the L1 term.
         from prefix_filter_spark.sketches import blocked_bloom as bb
 
-        def _bb_probe(cfg, state, keys):
-            bcfg = cfg.spare_bbf_config()
-            return bb._contains_in_state(
-                bcfg, state, mix_with_seed(keys, bcfg.seed + 0xBB0C)
-            )
-
-        return (
-            lambda cfg, keys: bb._build_state(cfg.spare_bbf_config(), keys),
-            lambda cfg, states: bb.merge_states(states),
-            _bb_probe,
+        scfg = bb.BlockedBloomConfig(
+            bits_per_key=10, block_bytes=64 if kind == "impala512" else 32, **size
         )
+        return bb, scfg, bb.merge_states
     if kind == "xor":
         from prefix_filter_spark.sketches import xor as xorm
 
-        return (
-            lambda cfg, keys: xorm._build_state(cfg.spare_xor_config(), np.sort(keys)),
-            None,
-            lambda cfg, state, keys: xorm._contains_in_state(state, keys),
-        )
+        return xorm, xorm.XorConfig(fingerprint_bits=8, **size), None
     if kind == "ribbon":
         from prefix_filter_spark.sketches import ribbon as rbm
 
-        return (
-            lambda cfg, keys: rbm._build_state(cfg.spare_ribbon_config(), np.sort(keys)),
-            None,
-            lambda cfg, state, keys: rbm._contains_in_state(state, keys),
-        )
+        return rbm, rbm.RibbonConfig(fingerprint_bits=8, **size), None
     raise ValueError(
         f"unknown spare_kind {kind!r} — one of {sorted(_SPARE_KIND_CODE)}"
     )
 
 
 def _spare_build(cfg: PrefixFilterConfig, keys_u64: np.ndarray) -> bytes:
-    return _spare_ops(cfg.spare_kind)[0](cfg, keys_u64)
+    """``keys_u64`` sorted + distinct (the static kinds' solves need it;
+    both callers pass np.unique output)."""
+    family, scfg, _merge = _spare_ops(cfg)
+    return family._build_state(scfg, keys_u64)
 
 
 def _spare_merge(cfg: PrefixFilterConfig, states: list[bytes]) -> bytes:
-    merge = _spare_ops(cfg.spare_kind)[1]
+    merge = _spare_ops(cfg)[2]
     if merge is None:
         raise ValueError(
             f"PF[{cfg.spare_kind}] is a build-once assembly: the static "
             "spare cannot merge partial states — rebuild from the full key "
             "stream, or pick a mergeable spare kind for incremental use"
         )
-    return merge(cfg, states)
+    return merge(states)
 
 
 def _spare_probe(cfg: PrefixFilterConfig, spare_state: bytes, keys_u64: np.ndarray) -> np.ndarray:
-    return _spare_ops(cfg.spare_kind)[2](cfg, spare_state, keys_u64)
+    family, scfg, _merge = _spare_ops(cfg)
+    # the spare is a one-shard filter inside its PF shard: shard id 0
+    return family.probe_state(scfg, spare_state, 0, keys_u64)
 
 
 def _derive_pd_qr(hashes_u64: np.ndarray, cfg: PrefixFilterConfig):
@@ -457,71 +383,43 @@ def shard_diagnostics(cfg: PrefixFilterConfig, shards_df: DataFrame) -> DataFram
     )
 
 
-class ShardedPrefixFilter:
-    """Probe handle; decodes each shard's headers once and probes whole
-    Arrow batches as matrix ops (amortized select64, SURVEY.md §4)."""
+def prepare_state(cfg: PrefixFilterConfig, state: bytes):
+    """Check the header and decode the shard's PD headers once, so
+    every Arrow batch probes as matrix ops (amortized select64,
+    SURVEY.md §4)."""
+    check_state(cfg, state)
+    headers, body, spare = _parse_state(state)
+    counts_incl, overflowed, last_quot = pd_kernel.decode_headers(headers)
+    max_qr = pd_kernel.max_qr_of(body, counts_incl, overflowed, last_quot)
+    # compact dtypes: decoded tables ride the broadcast after
+    # predecode(), so keep them ~1 byte/slot
+    return (
+        counts_incl.astype(np.uint8),
+        overflowed,
+        max_qr.astype(np.int16),
+        body,
+        spare,
+    )
 
-    def __init__(self, cfg: PrefixFilterConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
-        self._decoded: dict[int, tuple] = {}
 
-    @classmethod
-    def from_df(cls, cfg: PrefixFilterConfig, shards_df: DataFrame) -> "ShardedPrefixFilter":
-        return cls(cfg, base.collect_states(shards_df))
+def probe_state(
+    cfg: PrefixFilterConfig, prepared, shard_id: int, h_u64: np.ndarray
+) -> np.ndarray:
+    counts_incl, overflowed, max_qr, body, spare = prepared
+    pd_idx, qr = _derive_pd_qr(h_u64, cfg)
+    l1_hit, route_spare = pd_kernel.probe_pds(
+        counts_incl, overflowed, max_qr, body, pd_idx, qr
+    )
+    res = l1_hit
+    if route_spare.any():
+        sk = _spare_keys(shard_id, cfg, pd_idx[route_spare], qr[route_spare])
+        res = res.copy()
+        res[route_spare] = _spare_probe(cfg, spare, sk)
+    return res
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
 
-    def _shard(self, sid: int):
-        dec = self._decoded.get(sid)
-        if dec is None:
-            check_state(self.cfg, self.states[sid])
-            headers, body, spare = _parse_state(self.states[sid])
-            counts_incl, overflowed, last_quot = pd_kernel.decode_headers(headers)
-            max_qr = pd_kernel.max_qr_of(body, counts_incl, overflowed, last_quot)
-            # compact dtypes: decoded tables ride the broadcast after
-            # predecode(), so keep them ~1 byte/slot
-            dec = (
-                counts_incl.astype(np.uint8),
-                overflowed,
-                max_qr.astype(np.int16),
-                body,
-                spare,
-            )
-            self._decoded[sid] = dec
-        return dec
+class ShardedPrefixFilter(base.ShardedFilter):
+    """Prefix-filter probe handle (see base.ShardedFilter)."""
 
-    def predecode(self) -> "ShardedPrefixFilter":
-        """Decode every shard's headers once (driver-side, before
-        broadcast) so executors probe immediately — the batch analogue
-        of the reference amortizing select64 across a probe loop."""
-        for sid in self.states:
-            self._shard(sid)
-        return self
-
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            idx = order[bounds[sid] : bounds[sid + 1]]
-            if int(sid) not in self.states:
-                continue
-            counts_incl, overflowed, max_qr, body, spare = self._shard(int(sid))
-            pd_idx, qr = _derive_pd_qr(h[idx], self.cfg)
-            l1_hit, route_spare = pd_kernel.probe_pds(
-                counts_incl, overflowed, max_qr, body, pd_idx, qr
-            )
-            res = l1_hit
-            if route_spare.any():
-                sk = _spare_keys(int(sid), self.cfg, pd_idx[route_spare], qr[route_spare])
-                res = res.copy()
-                res[route_spare] = _spare_probe(self.cfg, spare, sk)
-            out[idx] = res
-        return out
+    prepare_state = staticmethod(prepare_state)
+    probe_state = staticmethod(probe_state)

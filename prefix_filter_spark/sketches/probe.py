@@ -83,46 +83,15 @@ def _types_of(df: DataFrame, cols: list[str]) -> list[str]:
     return [m[c] for c in cols]
 
 
-def pf_probe_fn(cfg) -> ProbeFn:
-    """Prefix-filter probe kernel for probe_via_join."""
-    from prefix_filter_spark.sketches import pd_kernel
-    from prefix_filter_spark.sketches import prefix_filter as pfm
+def probe_fn_for(handle_cls, cfg) -> ProbeFn:
+    """probe_via_join kernel for one filter kind, derived from the two
+    functions its broadcast handle binds (``handle_cls`` is a
+    base.ShardedFilter subclass, e.g. ShardedPrefixFilter): prepare the
+    group's shard state — header check, decode — then probe it. Both
+    probe regimes therefore run the same per-shard code."""
 
     def fn(state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
-        pfm.check_state(cfg, state)
-        headers, body, spare = pfm._parse_state(state)
-        counts_incl, overflowed, last_quot = pd_kernel.decode_headers(headers)
-        max_qr = pd_kernel.max_qr_of(body, counts_incl, overflowed, last_quot)
-        pd_idx, qr = pfm._derive_pd_qr(h, cfg)
-        l1_hit, route_spare = pd_kernel.probe_pds(
-            counts_incl, overflowed, max_qr, body, pd_idx, qr
-        )
-        res = l1_hit
-        if route_spare.any():
-            sk = pfm._spare_keys(shard_id, cfg, pd_idx[route_spare], qr[route_spare])
-            res = res.copy()
-            res[route_spare] = pfm._spare_probe(cfg, spare, sk)
-        return res
-
-    return fn
-
-
-def bloom_probe_fn(cfg) -> ProbeFn:
-    from prefix_filter_spark.hashing import mix_with_seed
-    from prefix_filter_spark.sketches import bloom
-
-    def fn(state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
-        bloom.check_state(cfg, state)
-        g = mix_with_seed(h, cfg.seed + 0x5EED)
-        return bloom._contains_in_state(state, g)
-
-    return fn
-
-
-def cuckoo_probe_fn(cfg) -> ProbeFn:
-    from prefix_filter_spark.sketches import cuckoo
-
-    def fn(state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
-        return cuckoo._contains_in_state(cfg, state, h)
+        prepared = handle_cls.prepare_state(cfg, state)
+        return handle_cls.probe_state(cfg, prepared, shard_id, h)
 
     return fn

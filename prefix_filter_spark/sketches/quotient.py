@@ -65,7 +65,7 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 
 _MAGIC = b"PFSQ"
@@ -204,9 +204,9 @@ def _decode_cached(state: bytes) -> np.ndarray:
     """State -> sorted unique fingerprint array (u64). LRU for ad-hoc
     driver-side decode (merge/delete); NOTE bytes hashing is O(state
     size) per call, so the broadcast-probe hot path does NOT go through
-    this — ShardedQuotient.predecode() decodes once per handle and
-    register_contains_udf ships the decoded arrays (the same predecode
-    protocol the other sketches use)."""
+    this per batch — prepare_state decodes once per shard and
+    register_contains_udf ships the decoded arrays (the predecode
+    protocol of base.ShardedFilter)."""
     r, n_q, m, _seed, _ns, occ, rend, slots = _parse(state)
     if m == 0:
         return np.zeros(0, dtype=np.uint64)
@@ -329,53 +329,24 @@ def remove_keys(
     )
 
 
-class ShardedQuotient:
-    """Driver-side probe handle; protocol-identical to ShardedBloom
-    (functions.register_contains_udf works unchanged)."""
+def prepare_state(cfg: QuotientFilterConfig, state: bytes):
+    """Check the header and decode the shard's fingerprint array once,
+    so the probe path never pays the O(state-size) bytes hash of the
+    LRU per Arrow batch (after predecode() the decoded arrays ship with
+    the broadcast handle)."""
+    check_state(cfg, state)
+    return state, _decode_cached(state)
 
-    def __init__(self, cfg: QuotientFilterConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
-        self._decoded: dict[int, np.ndarray] | None = None
 
-    @classmethod
-    def from_df(cls, cfg: QuotientFilterConfig, shards_df: DataFrame) -> "ShardedQuotient":
-        return cls(cfg, base.collect_states(shards_df))
+def probe_state(
+    cfg: QuotientFilterConfig, prepared, shard_id: int, h_u64: np.ndarray
+) -> np.ndarray:
+    state, fps = prepared
+    return _contains_in_state(state, h_u64, fps=fps)
 
-    def predecode(self) -> None:
-        """Decode every shard's fingerprint array once, so the probe
-        path never pays the O(state-size) bytes hash of the LRU per
-        Arrow batch. register_contains_udf calls this before
-        broadcasting (the decoded arrays ship with the handle)."""
-        if self._decoded is None:
-            for st in self.states.values():
-                check_state(self.cfg, st)
-            self._decoded = {
-                sid: _decode_cached(st) for sid, st in self.states.items()
-            }
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
+class ShardedQuotient(base.ShardedFilter):
+    """Quotient-filter probe handle (see base.ShardedFilter)."""
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            idx = order[lo:hi]
-            state = self.states.get(int(sid))
-            if state is not None:
-                if self._decoded is not None:
-                    out[idx] = _contains_in_state(
-                        state, h[idx], fps=self._decoded[int(sid)]
-                    )
-                else:
-                    check_state(self.cfg, state)
-                    out[idx] = _contains_in_state(state, h[idx])
-        return out
+    prepare_state = staticmethod(prepare_state)
+    probe_state = staticmethod(probe_state)

@@ -41,7 +41,6 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, shard_of
 from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches.ribbon import _MAX_ATTEMPTS, _W, _derive, _m_for, _solve
 
@@ -191,37 +190,24 @@ def build_retrieval(
     )
 
 
-class ShardedRetrieval:
-    """Driver-side lookup handle; same shard-routing shape as the probe
-    handles, but returns the stored value (int64) instead of a boolean.
-    Keys never inserted return arbitrary values (static-function
-    contract) — gate with an AMQ filter when membership is unknown."""
+def prepare_state(cfg: RetrievalConfig, state: bytes) -> bytes:
+    check_state(cfg, state)
+    return state
 
-    def __init__(self, cfg: RetrievalConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
 
-    @classmethod
-    def from_df(cls, cfg: RetrievalConfig, shards_df: DataFrame) -> "ShardedRetrieval":
-        return cls(cfg, base.collect_states(shards_df))
+def probe_state(
+    cfg: RetrievalConfig, state: bytes, shard_id: int, h_u64: np.ndarray
+) -> np.ndarray:
+    return _lookup_in_state(state, h_u64)
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
 
-    def lookup_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=np.int64)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        sorted_shards = shards[order]
-        bounds = np.searchsorted(sorted_shards, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(sorted_shards):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            idx = order[lo:hi]
-            state = self.states.get(int(sid))
-            if state is not None:
-                check_state(self.cfg, state)
-                out[idx] = _lookup_in_state(state, h[idx])
-        return out
+class ShardedRetrieval(base.ShardedFilter):
+    """Driver-side lookup handle (see base.ShardedFilter): the same
+    shard routing as the probe handles, but ``lookup_h`` returns the
+    stored value (int64) instead of a boolean. Keys never inserted
+    return arbitrary values (static-function contract) — gate with an
+    AMQ filter when membership is unknown."""
+
+    out_dtype = np.int64
+    prepare_state = staticmethod(prepare_state)
+    probe_state = staticmethod(probe_state)

@@ -41,7 +41,7 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed, shard_of
+from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
 _MAGIC = b"PFTC"
@@ -317,30 +317,14 @@ def build_two_choice(df: DataFrame, key_col, cfg: TwoChoiceConfig) -> DataFrame:
     )
 
 
-class ShardedTwoChoice:
-    def __init__(self, cfg: TwoChoiceConfig, states: dict[int, bytes]):
-        self.cfg = cfg
-        self.states = states
+def probe_state(
+    cfg: TwoChoiceConfig, state: bytes, shard_id: int, h_u64: np.ndarray
+) -> np.ndarray:
+    return _contains_in_state(cfg, state, h_u64)
 
-    @classmethod
-    def from_df(cls, cfg, shards_df) -> "ShardedTwoChoice":
-        return cls(cfg, base.collect_states(shards_df))
 
-    def byte_size(self) -> int:
-        return sum(len(s) for s in self.states.values())
+class ShardedTwoChoice(base.ShardedFilter):
+    """Two-choice probe handle (see base.ShardedFilter); the kernel checks
+    the state geometry on every call, so no prepare step."""
 
-    def contains_h(self, h) -> np.ndarray:
-        h = as_u64(np.asarray(h))
-        out = np.zeros(len(h), dtype=bool)
-        if len(h) == 0:
-            return out
-        shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
-        order = np.argsort(shards, kind="stable")
-        ss = shards[order]
-        bounds = np.searchsorted(ss, np.arange(self.cfg.num_shards + 1))
-        for sid in np.unique(ss):
-            idx = order[bounds[sid] : bounds[sid + 1]]
-            st = self.states.get(int(sid))
-            if st is not None:
-                out[idx] = _contains_in_state(self.cfg, st, h[idx])
-        return out
+    probe_state = staticmethod(probe_state)

@@ -54,7 +54,6 @@ from pyspark.sql import functions as F
 
 from prefix_filter_spark.hashing import (
     as_u64,
-    mix_with_seed,
     spark_xxhash64_long,
     spark_xxhash64_str,
 )
@@ -64,6 +63,7 @@ from prefix_filter_spark.sketches.bloom import (
     _build_state,
     _contains_in_state,
     merge_states,
+    seed_mix,
 )
 
 INDEX_SCHEMA = (
@@ -269,7 +269,7 @@ def probe_file_index(
     that truly holds a probe key always reports n_maybe >= 1.
     """
     cfg = cfg or FileIndexConfig()
-    g = mix_with_seed(as_u64(np.asarray(probe_hashes)), cfg.seed + 0x5EED)
+    g = seed_mix(as_u64(np.asarray(probe_hashes)), cfg.seed)
     want_seed = cfg.seed & 0xFFFFFFFFFFFFFFFF
 
     def probe(batches):
@@ -299,14 +299,16 @@ def prune_files(
     probe_hashes: np.ndarray,
     cfg: FileIndexConfig | None = None,
 ) -> list[str]:
-    """File names whose state may contain ANY probe key (sorted)."""
+    """File names whose state may contain ANY probe key (sorted, each
+    once: an index holding duplicate rows for a file — a replayed
+    update — must not make pruned_read scan that file twice)."""
     hits = (
         probe_file_index(index_df, probe_hashes, cfg)
         .filter(F.col("n_maybe") > 0)
         .select("file")
         .collect()
     )
-    return sorted(r["file"] for r in hits)
+    return sorted({r["file"] for r in hits})
 
 
 def pruned_read(

@@ -31,12 +31,11 @@ Python.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from prefix_filter_spark.hashing import as_u64, mix_with_seed
+from prefix_filter_spark.hashing import as_u64
 from prefix_filter_spark.plans.sharding import hashed_key_col, shard_col
 from prefix_filter_spark.sketches import bloom
 
@@ -106,8 +105,7 @@ def streaming_dedup_amq(
             hs = as_u64(pdf["_h"].to_numpy())
             if len(hs) == 0:
                 continue
-            g = mix_with_seed(hs, cfg.seed + 0x5EED)
-            seen = bloom._contains_in_state(blob, g)
+            seen = bloom.probe_state(cfg, blob, 0, hs)
             # stable within-batch first occurrence: np.unique's
             # return_index points at the FIRST index of each value
             first = np.zeros(len(hs), dtype=bool)
@@ -196,7 +194,7 @@ def streaming_dedup_amq_aged(
             hs = as_u64(pdf["_h"].to_numpy())
             if len(hs) == 0:
                 continue
-            g = mix_with_seed(hs, cfg.seed + 0x5EED)
+            g = bloom.seed_mix(hs, cfg.seed)
             seen = np.zeros(len(hs), dtype=bool)
             for blob in gens:
                 seen |= bloom._contains_in_state(blob, g)

@@ -3,7 +3,9 @@ union-find reference, plus the keep-list contract."""
 
 import random
 
+from prefix_filter_spark.operators import components
 from prefix_filter_spark.operators.components import (
+    _auto_round_width,
     connected_components,
     dedup_keep_list,
 )
@@ -177,3 +179,36 @@ def test_num_shuffle_partitions_identical_result(spark):
     }
     assert a == b
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_auto_round_width_capped_at_session_width():
+    # ~16k edges per task, pow2-rounded, floored at 8
+    assert _auto_round_width(128, 1_000_000) == 64
+    assert _auto_round_width(128, 100) == 8
+    # capped at the session width it is given
+    assert _auto_round_width(16, 10**8) == 16
+
+
+def test_auto_width_sees_session_width_not_provisional(spark, monkeypatch):
+    """The canonicalizing pass runs under a provisional (narrower)
+    shuffle width; the round width must be capped by the session's
+    own width, saved before that override."""
+    seen = []
+
+    def spy(session_width, n_edges):
+        seen.append(
+            (session_width, int(spark.conf.get("spark.sql.shuffle.partitions")))
+        )
+        return _auto_round_width(session_width, n_edges)
+
+    monkeypatch.setattr(components, "_auto_round_width", spy)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4096")
+    try:
+        df = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "d1 long, d2 long")
+        connected_components(df).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    (session_width, in_force), = seen
+    assert in_force < 4096  # the provisional override was active
+    assert session_width == 4096

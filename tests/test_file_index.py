@@ -74,6 +74,26 @@ def test_pruned_read_equals_full_scan(spark, layout, index, cfg):
     assert len(want) > 0
 
 
+def test_duplicate_index_rows_read_each_file_once(spark, layout, index, cfg):
+    """An index that holds every file twice (a replayed update) must
+    still read each data row once: pruned_read == the full-scan filter."""
+    full = spark.read.parquet(layout)
+    keys = [r["l_orderkey"] for r in full.select("l_orderkey").distinct().limit(40).collect()]
+    doubled = index.unionByName(index)
+    got = (
+        pruned_read(spark, doubled, "l_orderkey", keys, cfg)
+        .orderBy("l_orderkey", "l_linenumber")
+        .collect()
+    )
+    want = (
+        full.filter(F.col("l_orderkey").isin(keys))
+        .orderBy("l_orderkey", "l_linenumber")
+        .collect()
+    )
+    assert got == want
+    assert len(want) > 0
+
+
 def test_absent_keys_skip_most_files(spark, index, cfg):
     """Keys outside the domain prune ~all files (FPR-bounded survivors)."""
     absent = [-(10**9) - i for i in range(64)]

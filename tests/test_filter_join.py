@@ -79,3 +79,18 @@ def test_null_fact_keys_dropped_like_equijoin(spark):
         F.broadcast(dim), fact_nulls["l_orderkey"] == dim["o_orderkey"]
     )
     assert got.count() == plain.count()
+
+
+def test_int32_keys_equal_plain_join(spark):
+    """int keys are widened to bigint by the build; the fact-side probe
+    must widen them the same way, or every row is a false negative."""
+    fact = spark.range(2_000).select(
+        F.col("id").alias("row_id"), F.col("id").cast("int").alias("fk")
+    )
+    dim = spark.range(0, 2_000, 4).select(F.col("id").cast("int").alias("dk"))
+    got = fj.runtime_filter_join(spark, fact, dim, "fk", "dk", seed=21)
+    plain = fact.join(F.broadcast(dim), fact["fk"] == dim["dk"])
+    assert plain.count() == 500
+    assert sorted(r.row_id for r in got.select("row_id").collect()) == sorted(
+        r.row_id for r in plain.select("row_id").collect()
+    )

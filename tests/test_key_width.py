@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from prefix_filter_spark.functions import probe_keys_local, register_contains_udf
 from prefix_filter_spark.plans.sharding import widen_key_col
 from prefix_filter_spark.sketches import bloom
-from prefix_filter_spark.sketches.probe import bloom_probe_fn, probe_via_join
+from prefix_filter_spark.sketches.probe import probe_fn_for, probe_via_join
 
 N = 4000
 
@@ -66,7 +66,7 @@ def test_join_probe_int_probe_column(spark, cfg):
         shards,
         seed=cfg.seed,
         num_shards=cfg.num_shards,
-        probe_fn=bloom_probe_fn(cfg),
+        probe_fn=probe_fn_for(bloom.ShardedBloom, cfg),
     )
     assert out.filter(~F.col("contains")).count() == 0
 

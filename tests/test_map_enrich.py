@@ -50,6 +50,25 @@ def test_covered_equals_left_join(spark, dim, fact_covered):
     ]
 
 
+def test_int32_keys_equal_left_join(spark):
+    """int keys are widened to bigint by both builds; the lookup and the
+    guard must probe at the same width, or every value comes back NULL."""
+    dim = spark.range(1_000).select(
+        F.col("id").cast("int").alias("k"),
+        F.pmod(F.col("id") * 3, F.lit(1_024)).alias("v"),
+    )
+    fact = spark.range(3_000).select(
+        F.col("id").alias("row_id"),
+        F.pmod(F.col("id") * 7, F.lit(1_000)).cast("int").alias("k"),
+    )
+    em = me.build_enrichment_map(dim, "k", "v", seed=16)
+    got = me.enrich(spark, fact, "k", em, "v", udf_prefix="me_i32").collect()
+    want = fact.join(dim, "k", "left").collect()
+    assert sorted((r.row_id, r.v) for r in got) == sorted(
+        (r.row_id, r.v) for r in want
+    )
+
+
 def test_unguarded_covered_mode(spark, dim, fact_covered):
     em = me.build_enrichment_map(dim, "token", "bucket", seed=12, guard=False)
     got = me.enrich(
