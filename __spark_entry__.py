@@ -467,7 +467,7 @@ def q_prefix_filter_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prefix_filter_spark.sketches import prefix_filter as pfm
 
     return _membership_panel(
-        spark, sf_dir, pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
+        spark, sf_dir,
         lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42),
         0.006,  # paper-ballpark bound at load<=0.95
         "qq",
@@ -1347,19 +1347,20 @@ def q_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _membership_panel(spark, sf_dir, build, handle_cls, cfg_factory, fpr_bound, prefix):
+def _membership_panel(spark, sf_dir, cfg_factory, fpr_bound, prefix):
     """cfg_factory: n_distinct_words -> config; fpr_bound: a float or a
     callable(cfg) for closed-form bounds. The panel counts the word
     stream ONCE and sizes the filter from that count (callers used to
     run the identical distinct+count themselves just to build the
     config — a doubled input scan, which at 100TB is the dominant cost)."""
     from prefix_filter_spark.functions import register_contains_udf
+    from prefix_filter_spark.sketches import base
 
     words = _word_stream(spark, sf_dir).distinct()
     n = words.count()
     cfg = cfg_factory(max(n, 1024))
     bound = fpr_bound(cfg) if callable(fpr_bound) else fpr_bound
-    handle = handle_cls.from_df(cfg, build(words, "word", cfg))
+    handle = base.ShardedFilter.from_df(cfg, base.build_filter(words, "word", cfg))
     fn = register_contains_udf(spark, f"{prefix}_contains", handle, cfg.seed)
     found = words.where(fn("word")).count()
     probes = spark.range(30_000_000, 30_000_000 + 50_000).select(
@@ -1398,6 +1399,7 @@ def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes'; FP probe skipped there — ids, not words — so its bound
     check is trivially true)."""
     from prefix_filter_spark.functions import register_contains_udf
+    from prefix_filter_spark.sketches import base
     from prefix_filter_spark.sketches import blocked_bloom as bb
     from prefix_filter_spark.sketches import bloom
     from prefix_filter_spark.sketches import cuckoo as ckm
@@ -1413,55 +1415,46 @@ def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_capacity=n, num_shards=8, seed=42, spare_kind=spare
         )
     )
+    static_bound = lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4
+    # (kind, n -> config, FPR bound or cfg -> bound, probe-word prefix)
     kinds = [
-        ("bloom", bloom.build_bloom, bloom.ShardedBloom,
+        ("bloom",
          lambda n: bloom.BloomConfig(n_capacity=n, bits_per_key=12, num_shards=8, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4, "zz"),
-        ("blocked_bloom", bb.build_blocked_bloom, bb.ShardedBlockedBloom,
+         static_bound, "zz"),
+        ("blocked_bloom",
          lambda n: bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, num_shards=8, seed=42),
          0.05, "bbf"),
-        ("two_choice", tc.build_two_choice, tc.ShardedTwoChoice,
-         lambda n: tc.TwoChoiceConfig(n_capacity=n, num_shards=8, seed=42),
+        ("two_choice", lambda n: tc.TwoChoiceConfig(n_capacity=n, num_shards=8, seed=42),
          0.02, "tc"),
-        ("cuckoo", ckm.build_cuckoo, ckm.ShardedCuckoo,
-         lambda n: ckm.CuckooConfig(n_capacity=n, num_shards=8, seed=42),
+        ("cuckoo", lambda n: ckm.CuckooConfig(n_capacity=n, num_shards=8, seed=42),
          0.01, "ck"),
-        ("pf_bloom", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         lambda n: pfm.PrefixFilterConfig(n_capacity=n, num_shards=8, seed=42),
-         0.006, "qq"),
-        ("pf_tc", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("tc"), 0.006, "pftc"),
-        ("pf_cf", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("cuckoo"), 0.006, "pfcf"),
-        ("pf_bbf", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("bbf"), 0.008, "pfbbf"),
-        ("pf_impala", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("impala512"), 0.008, "pfimp"),
-        ("xor", xorm.build_xor, xorm.ShardedXor,
+        ("pf_bloom", pf_cfg("bloom"), 0.006, "qq"),
+        ("pf_tc", pf_cfg("tc"), 0.006, "pftc"),
+        ("pf_cf", pf_cfg("cuckoo"), 0.006, "pfcf"),
+        ("pf_bbf", pf_cfg("bbf"), 0.008, "pfbbf"),
+        ("pf_impala", pf_cfg("impala512"), 0.008, "pfimp"),
+        ("xor",
          lambda n: xorm.XorConfig(n_capacity=n, fingerprint_bits=8, num_shards=8, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4, "xr"),
-        ("pf_xor", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("xor"), 0.006, "pfxr"),
-        ("bfuse", bfm.build_bfuse, bfm.ShardedBFuse,
+         static_bound, "xr"),
+        ("pf_xor", pf_cfg("xor"), 0.006, "pfxr"),
+        ("bfuse",
          lambda n: bfm.BFuseConfig(n_capacity=n, fingerprint_bits=8, num_shards=4, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4, "bfu"),
-        ("ribbon", rbm.build_ribbon, rbm.ShardedRibbon,
+         static_bound, "bfu"),
+        ("ribbon",
          lambda n: rbm.RibbonConfig(n_capacity=n, fingerprint_bits=8, num_shards=8, seed=42),
-         lambda cfg: cfg.theoretical_fpr() * 1.5 + 1e-4, "rbn"),
-        ("pf_ribbon", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pf_cfg("ribbon"), 0.006, "pfrbn"),
-        ("quotient", qfm.build_quotient, qfm.ShardedQuotient,
-         lambda n: qfm.QuotientFilterConfig(n_capacity=n, num_shards=8, seed=42),
+         static_bound, "rbn"),
+        ("pf_ribbon", pf_cfg("ribbon"), 0.006, "pfrbn"),
+        ("quotient", lambda n: qfm.QuotientFilterConfig(n_capacity=n, num_shards=8, seed=42),
          lambda cfg: cfg.theoretical_fpr() * 1.8 + 1e-4, "qf"),
     ]
     words = _word_stream(spark, sf_dir).distinct().cache()
     n = words.count()
     probes = spark.range(30_000_000, 30_000_000 + 50_000)
     rows = []
-    for kind, build, handle_cls, cfg_factory, fpr_bound, prefix in kinds:
+    for kind, cfg_factory, fpr_bound, prefix in kinds:
         cfg = cfg_factory(max(n, 1024))
         bound = fpr_bound(cfg) if callable(fpr_bound) else fpr_bound
-        handle = handle_cls.from_df(cfg, build(words, "word", cfg))
+        handle = base.ShardedFilter.from_df(cfg, base.build_filter(words, "word", cfg))
         fn = register_contains_udf(spark, f"{prefix}_contains_all", handle, cfg.seed)
         found = words.where(fn("word")).count()
         neg = probes.select(
@@ -1473,25 +1466,22 @@ def q_filters_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "false_negatives" column counts VALUE MISMATCHES on member keys —
     # the static-function exactness contract says it must be 0; the FP
     # bound is vacuous (non-members return arbitrary values by design)
-    from prefix_filter_spark.functions import register_lookup_udf
     from prefix_filter_spark.sketches import retrieval as rvm
 
     val = F.pmod(F.xxhash64("word", F.lit(99)), F.lit(65_536))
     pairs = words.select("word", val.alias("val"))
     rcfg = rvm.RetrievalConfig(n_capacity=max(n, 1024), value_bits=16, num_shards=8, seed=42)
-    rhandle = rvm.ShardedRetrieval.from_df(
-        rcfg, rvm.build_retrieval(pairs, "word", "val", rcfg)
+    rhandle = base.ShardedFilter.from_df(
+        rcfg, base.build_filter(pairs, "word", rcfg, value_col="val")
     )
-    rfn = register_lookup_udf(spark, "rvmap_lookup_all", rhandle, rcfg.seed)
+    rfn = register_contains_udf(spark, "rvmap_lookup_all", rhandle, rcfg.seed)
     mismatches = pairs.where(rfn("word") != F.col("val")).count()
     rows.append(("ribbon_map", n, mismatches, True))
     words.unpersist()
     docs = _docs(spark, sf_dir).select("doc_id")
     nd = docs.count()
     cfg = pfm.PrefixFilterConfig(n_capacity=max(nd, 1024), num_shards=8, seed=42)
-    handle = pfm.ShardedPrefixFilter.from_df(
-        cfg, pfm.build_prefix_filter(docs, "doc_id", cfg)
-    )
+    handle = base.ShardedFilter.from_df(cfg, base.build_filter(docs, "doc_id", cfg))
     fn = register_contains_udf(spark, "pf_docid_all", handle, cfg.seed)
     found = docs.where(fn("doc_id")).count()
     rows.append(("doc_id", nd, nd - found, True))
@@ -1715,7 +1705,7 @@ def q_pf_join_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         shards,
         seed=cfg.seed,
         num_shards=cfg.num_shards,
-        probe_fn=probe.probe_fn_for(pfm.ShardedPrefixFilter, cfg),
+        probe_fn=probe.probe_fn_for(cfg),
     )
     return out.agg(
         F.count("*").alias("n_probed"),

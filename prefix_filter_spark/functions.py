@@ -60,15 +60,21 @@ def _mg_cached(state: bytes):
 def register_contains_udf(
     spark: SparkSession, name: str, sketch, seed: int
 ) -> "ContainsFunction":
-    """Register ``name(h bigint) -> boolean`` over a probe handle.
+    """Register ``name(h bigint)`` over a probe handle
+    (``sketches.base.ShardedFilter``). Membership filters answer
+    boolean; the retrieval structure (``out_dtype`` int64) answers
+    bigint — the stored value for every inserted key, an arbitrary
+    hash-determined value for non-members (static-function contract).
 
-    ``sketch`` is a probe handle (``sketches.base.ShardedFilter``:
-    ShardedBloom, ShardedPrefixFilter, ...).
+    Every shard is prepared on the driver first (``predecode()``), so a
+    state/config mismatch fails here rather than inside executor tasks,
+    and the decoded tables ship with the broadcast.
     """
-    sketch.predecode()  # pay header check + decode once, ship decoded tables
+    sketch.predecode()
     bc = spark.sparkContext.broadcast(sketch)
+    out_type = T.BooleanType() if sketch.out_dtype is bool else T.LongType()
 
-    @F.pandas_udf(T.BooleanType())
+    @F.pandas_udf(out_type)
     def _contains(h: pd.Series) -> pd.Series:
         s = bc.value
         return pd.Series(s.contains_h(h.to_numpy()))
@@ -77,23 +83,8 @@ def register_contains_udf(
     return ContainsFunction(name, _contains, seed, bc)
 
 
-def register_lookup_udf(
-    spark: SparkSession, name: str, retrieval, seed: int
-) -> "LookupFunction":
-    """Register ``name(h bigint) -> bigint`` over a ShardedRetrieval
-    handle (sketches/retrieval.py): returns the stored value for every
-    inserted key, an arbitrary hash-determined value for non-members
-    (static-function contract). Same broadcast + Arrow-batch shape as
-    register_contains_udf."""
-    bc = spark.sparkContext.broadcast(retrieval)
-
-    @F.pandas_udf(T.LongType())
-    def _lookup(h: pd.Series) -> pd.Series:
-        s = bc.value
-        return pd.Series(s.lookup_h(h.to_numpy()))
-
-    spark.udf.register(name, _lookup)
-    return LookupFunction(name, _lookup, seed, bc)
+# the value-lookup name for the same registration (retrieval handles)
+register_lookup_udf = register_contains_udf
 
 
 class ContainsFunction:
@@ -121,12 +112,6 @@ class ContainsFunction:
 
             key = widen_key_col(df, key)
         return self.udf(hashed_key_col(key, self.seed))
-
-
-class LookupFunction(ContainsFunction):
-    """Same wrapper + broadcast-lifecycle contract as ContainsFunction;
-    the registered UDF returns the stored bigint value instead of a
-    boolean."""
 
 
 def register_sketch_sql(spark: SparkSession) -> None:

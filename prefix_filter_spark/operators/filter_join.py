@@ -30,49 +30,27 @@ across queries (build once per dim snapshot, probe many facts).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prefix_filter_spark.functions import register_contains_udf
+from prefix_filter_spark.sketches import base, bloom, prefix_filter, xor
 
-
-def _default_build(n_keys: int, seed: int):
-    from prefix_filter_spark.sketches import bloom
-
-    cfg = bloom.BloomConfig(
-        n_capacity=max(n_keys, 1024), bits_per_key=12, num_shards=8, seed=seed
-    )
-    return cfg, bloom.build_bloom, bloom.ShardedBloom
-
-
-def _prefix_build(n_keys: int, seed: int):
-    from prefix_filter_spark.sketches import prefix_filter as pfm
-
-    cfg = pfm.PrefixFilterConfig(
-        n_capacity=max(n_keys, 1024), num_shards=8, seed=seed
-    )
-    return cfg, pfm.build_prefix_filter, pfm.ShardedPrefixFilter
-
-
-def _xor_build(n_keys: int, seed: int):
+# runtime-filter kind -> its config for n dim keys (n >= 1024)
+_KINDS = {
+    "bloom": lambda n, seed: bloom.BloomConfig(
+        n_capacity=n, bits_per_key=12, num_shards=8, seed=seed
+    ),
+    "prefix": lambda n, seed: prefix_filter.PrefixFilterConfig(
+        n_capacity=n, num_shards=8, seed=seed
+    ),
     # the natural runtime-filter kind when the dim/benchmark key set is
     # FIXED (decontamination: eval sets never grow): build-once static
     # filter at 9.84 bits/key @ 2^-8 FPR — denser than Bloom-12 at a
     # lower false-probe rate, so fewer survivors reach the exact verify
-    from prefix_filter_spark.sketches import xor as xorm
-
-    cfg = xorm.XorConfig(
-        n_capacity=max(n_keys, 1024), fingerprint_bits=8, num_shards=8, seed=seed
-    )
-    return cfg, xorm.build_xor, xorm.ShardedXor
-
-
-_KINDS: dict[str, Callable] = {
-    "bloom": _default_build,
-    "prefix": _prefix_build,
-    "xor": _xor_build,
+    "xor": lambda n, seed: xor.XorConfig(
+        n_capacity=n, fingerprint_bits=8, num_shards=8, seed=seed
+    ),
 }
 
 
@@ -94,8 +72,8 @@ def build_runtime_filter(
     """
     keys = dim.select(dim_key).where(F.col(dim_key).isNotNull()).distinct()
     n = keys.count()
-    cfg, build, handle_cls = _KINDS[kind](n, seed)
-    handle = handle_cls.from_df(cfg, build(keys, dim_key, cfg))
+    cfg = _KINDS[kind](max(n, 1024), seed)
+    handle = base.ShardedFilter.from_df(cfg, base.build_filter(keys, dim_key, cfg))
     udf_name = name or f"rf_{kind}_{dim_key}"
     return register_contains_udf(spark, udf_name, handle, cfg.seed)
 

@@ -39,7 +39,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from prefix_filter_spark.functions import register_contains_udf, register_lookup_udf
+from prefix_filter_spark.functions import register_contains_udf
+from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches import retrieval as rvm
 
 
@@ -53,8 +54,8 @@ class EnrichmentMap:
     (``em.lookup_fn.broadcast.unpersist()``) instead of pinning every
     generation — the same lifecycle contract as ContainsFunction."""
 
-    retrieval: rvm.ShardedRetrieval
-    guard: object | None  # ShardedBloom when guarded, else None
+    retrieval: base.ShardedFilter  # over a rvm.RetrievalConfig
+    guard: base.ShardedFilter | None  # a Bloom handle when guarded
     guard_cfg: object | None
     seed: int
     lookup_fn: object | None = None
@@ -74,7 +75,7 @@ def build_enrichment_map(
 ) -> EnrichmentMap:
     """Build the broadcastable map from a (key, value) dim. ``value_col``
     must be integral in [0, 2**value_bits) and non-null — the build
-    raises otherwise (retrieval._build_state's domain check +
+    raises otherwise (retrieval.build_state's domain check +
     build_sharded's null check).
 
     The dim is persisted around the builds: with a guard it is read by
@@ -92,15 +93,15 @@ def build_enrichment_map(
                 n_capacity=max(n, 1024), value_bits=value_bits,
                 num_shards=num_shards, seed=seed,
             )
-            handle = rvm.ShardedRetrieval.from_df(
-                rcfg, rvm.build_retrieval(dim, key_col, value_col, rcfg)
+            handle = base.ShardedFilter.from_df(
+                rcfg, base.build_filter(dim, key_col, rcfg, value_col)
             )
             gcfg = bloom.BloomConfig(
                 n_capacity=max(n, 1024), bits_per_key=guard_bits_per_key,
                 num_shards=num_shards, seed=seed,
             )
-            ghandle = bloom.ShardedBloom.from_df(
-                gcfg, bloom.build_bloom(dim, key_col, gcfg)
+            ghandle = base.ShardedFilter.from_df(
+                gcfg, base.build_filter(dim, key_col, gcfg)
             )
         finally:
             dim.unpersist()
@@ -109,8 +110,8 @@ def build_enrichment_map(
             n_capacity=1024, value_bits=value_bits,
             num_shards=num_shards, seed=seed,
         )
-        handle = rvm.ShardedRetrieval.from_df(
-            rcfg, rvm.build_retrieval(dim, key_col, value_col, rcfg)
+        handle = base.ShardedFilter.from_df(
+            rcfg, base.build_filter(dim, key_col, rcfg, value_col)
         )
     return EnrichmentMap(handle, ghandle, gcfg, seed)
 
@@ -131,7 +132,7 @@ def enrich(
     the map was built with a guard (modulo the guard's FPR of junk
     values), or an arbitrary value when guard=False (callers assert
     coverage in that mode)."""
-    rfn = register_lookup_udf(
+    rfn = register_contains_udf(
         spark, f"{udf_prefix}_lookup", em.retrieval, em.seed
     )
     em.lookup_fn = rfn

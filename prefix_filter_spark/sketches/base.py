@@ -20,7 +20,9 @@ from its key batch instead of 25M single-key Add() calls.
 
 from __future__ import annotations
 
+import functools
 import time
+from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
@@ -83,7 +85,6 @@ def build_sharded(
     seed: int,
     num_shards: int,
     state_fn: StateFn,
-    dedupe: bool = True,
     spread_tasks: bool = False,
     value_col=None,
 ) -> DataFrame:
@@ -155,10 +156,7 @@ def build_sharded(
             state = state_fn(shard_id, hashes, values)
             n_keys = len(np.unique(hashes))
         else:
-            if dedupe:
-                hashes = np.unique(hashes)  # sorted + distinct
-            else:
-                hashes = np.sort(hashes)
+            hashes = np.unique(hashes)  # sorted + distinct
             state = state_fn(shard_id, hashes)
             n_keys = len(hashes)
         return pd.DataFrame(
@@ -175,16 +173,74 @@ def build_sharded(
     return keyed.groupBy(group_key).applyInPandas(build_group, schema=SHARD_SCHEMA)
 
 
-def merge_shard_states(df: DataFrame, merge_fn) -> DataFrame:
+def _state_as_is(cfg, state: bytes) -> bytes:
+    return state
+
+
+@dataclass(frozen=True)
+class FilterFamily:
+    """One sharded filter kind — the reference's FilterAPI template
+    (construct / add / contain, ``Tests/wrappers.hpp:50-116``) as a
+    record. Each filter module declares one as ``FAMILY`` and its config
+    class carries it as ``family``, so the config alone says how to
+    build, merge and probe (``build_filter``, ``merge_shard_states``,
+    ``ShardedFilter``, ``probe.probe_fn_for``):
+
+    - ``sketch_name(cfg)``: the shard rows' ``sketch`` column
+      (``bloom12``, ``cuckoo13ss``, ``prefix_filter``, ...);
+    - ``build_state(cfg, shard_id, hashes)``: one shard's state from its
+      sorted distinct base hashes (the retrieval structure also takes
+      the values, see build_sharded's ``value_col``);
+    - ``merge_states(states, cfg, shard_id)``: combine same-shard
+      partials; the static kinds (xor, bfuse, ribbon, retrieval) raise
+      ``ValueError``;
+    - ``prepare_state(cfg, state)``: reject a state/config mismatch
+      (silent false negatives otherwise) and decode whatever the probe
+      reuses; runs once per shard. The default keeps the state as is
+      (kinds whose kernel checks the state itself);
+    - ``probe_state(cfg, prepared, shard_id, h_u64) -> ndarray``: the
+      kind's seed mix and vectorized kernel over one shard's hashes;
+    - ``spread_tasks``: one build task per shard (see build_sharded);
+    - ``out_dtype``: ``bool`` membership, or ``np.int64`` stored values.
+    """
+
+    sketch_name: Callable
+    build_state: Callable
+    merge_states: Callable
+    probe_state: Callable
+    prepare_state: Callable = _state_as_is
+    spread_tasks: bool = False
+    out_dtype: type = bool
+
+
+def build_filter(df: DataFrame, key_col, cfg, value_col=None) -> DataFrame:
+    """df[key_col] -> shard-row DataFrame of the filter ``cfg``
+    configures: one shuffle, one vectorized build per shard. The value
+    kind (the retrieval structure) takes the ``value_col`` to store."""
+    family = cfg.family
+    # build_sharded is looked up as a module global at call time, so a
+    # tracing wrapper installed on this module sees every filter build
+    return build_sharded(
+        df,
+        key_col,
+        sketch_name=family.sketch_name(cfg),
+        seed=cfg.seed,
+        num_shards=cfg.num_shards,
+        state_fn=functools.partial(family.build_state, cfg),
+        spread_tasks=family.spread_tasks,
+        value_col=value_col,
+    )
+
+
+def merge_shard_states(df: DataFrame, merge) -> DataFrame:
     """Combine same-shard partial states (associative + commutative).
 
     Used for incremental / streaming builds where several batches each
-    produced partial states for the same shard. ``merge_fn`` is either
-    ``f(states)`` (Bloom/BBF/HLL/CMS/KLL/t-digest, and two-choice with
-    the config curried: ``lambda states: tc.merge_states(states, cfg)``)
-    or ``f(states, shard_id)`` (the prefix filter, whose spare re-keying
-    depends on the shard id: ``lambda states, sid:
-    pf.merge_states(states, cfg, sid)``). The result is
+    produced partial states for the same shard. ``merge`` is either a
+    sharded filter's config — its family's ``merge_states(states, cfg,
+    shard_id)`` runs, which the prefix filter needs for spare re-keying
+    — or ``f(states)`` for the global-state sketches (HLL/CMS/KLL/
+    t-digest/...), whose shard id is mere lineage. The result is
     order-independent by the sketches' associativity (pytest-verified
     by shuffling orders).
 
@@ -192,32 +248,20 @@ def merge_shard_states(df: DataFrame, merge_fn) -> DataFrame:
     (which coarsens shard ids) for key-sharded filters — that is only
     for global-state sketches where shard_id is mere lineage.
     """
-    import inspect
-
-    # dispatch on REQUIRED positional arity only: a default-bound config
-    # (lambda states, cfg=cfg: ...) must not be mistaken for shard-aware,
-    # and *args wrappers count as shard-aware capable
-    params = list(inspect.signature(merge_fn).parameters.values())
-    required_positional = sum(
-        1
-        for p in params
-        if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
-        and p.default is p.empty
-    )
-    wants_shard = required_positional >= 2
+    family = getattr(merge, "family", None)
+    if family is None:
+        combine = lambda states, sid: merge(states)  # noqa: E731
+    else:
+        combine = lambda states, sid: family.merge_states(states, merge, sid)  # noqa: E731
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         states = [bytes(s) for s in pdf["state"]]
         sid = int(pdf["shard_id"].iloc[0])
-        if len(states) > 1:
-            merged = merge_fn(states, sid) if wants_shard else merge_fn(states)
-        else:
-            merged = states[0]
         return pd.DataFrame(
             {
                 "sketch": [pdf["sketch"].iloc[0]],
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "state": [merged],
+                "shard_id": [sid],
+                "state": [combine(states, sid) if len(states) > 1 else states[0]],
                 "n_keys": [int(pdf["n_keys"].sum())],  # upper bound across batches
                 "input_rows": [int(pdf["input_rows"].sum())],
                 "build_ns": [int(pdf["build_ns"].sum())],
@@ -230,12 +274,10 @@ def merge_shard_states(df: DataFrame, merge_fn) -> DataFrame:
 def remove_keys_sharded(
     df: DataFrame,
     key_col,
-    *,
-    seed: int,
-    num_shards: int,
+    cfg,
     shards_df: DataFrame,
+    *,
     remove_state_fn: Callable[[bytes, np.ndarray], bytes],
-    merge_fn: Callable[[list[bytes]], bytes],
     count_state_fn: Callable[[bytes], int] | None = None,
 ) -> DataFrame:
     """Distributed delete for delete-capable filters (two-choice,
@@ -244,7 +286,8 @@ def remove_keys_sharded(
     with the shard's state row(s), rebuild without the dead pairs.
 
     Shards holding several un-compacted partial rows (the streaming
-    accumulation shape) are MERGED first — deleting from only one
+    accumulation shape) are MERGED first (``cfg``'s family merge) —
+    deleting from only one
     partial would silently resurrect the key from the others.
     Shards with no removal keys pass through (post-merge) unchanged.
 
@@ -255,8 +298,8 @@ def remove_keys_sharded(
     partials — an upper bound that can overstate materially once the
     merge dedupes overlapping partials and the delete removes pairs.
     """
-    h = hashed_key_col(widen_key_col(df, key_col), seed)
-    keyed = df.select(h.alias("h"), shard_col(h, num_shards).alias("shard_id"))
+    h = hashed_key_col(widen_key_col(df, key_col), cfg.seed)
+    keyed = df.select(h.alias("h"), shard_col(h, cfg.num_shards).alias("shard_id"))
 
     def apply_removals(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(right) == 0:
@@ -264,7 +307,8 @@ def remove_keys_sharded(
                 columns=["sketch", "shard_id", "state", "n_keys", "input_rows", "build_ns"]
             )
         states = [bytes(s) for s in right["state"]]
-        state = merge_fn(states) if len(states) > 1 else states[0]
+        sid = int(right["shard_id"].iloc[0])
+        state = cfg.family.merge_states(states, cfg, sid) if len(states) > 1 else states[0]
         if len(left):
             state = remove_state_fn(state, as_u64(left["h"].to_numpy()))
         out = right.iloc[[0]].copy()
@@ -466,39 +510,26 @@ class ShardedFilter:
     """Driver-side probe handle over collected shard states — the one
     "route hashes to shards, then probe each shard" loop every sharded
     filter kind shares (the shard concatenation IS the reference's
-    single PD array, generalized).
-
-    A filter kind is two functions of its family module, bound by a
-    short subclass as ``prepare_state`` / ``probe_state``:
-
-    - ``prepare_state(cfg, state)``: reject a state/config mismatch
-      (silent false negatives otherwise) and decode whatever the probe
-      reuses. Runs once per shard — lazily before the shard's first
-      probe, or for every shard via ``predecode()``. The default keeps
-      the state as is (kinds whose kernel checks the state itself).
-    - ``probe_state(cfg, prepared, shard_id, h_u64) -> ndarray``: the
-      kind's seed mix and vectorized kernel over one shard's hashes.
+    single PD array, generalized). The kind comes from ``cfg.family``
+    (FilterFamily): its ``prepare_state`` runs once per shard — lazily
+    before the shard's first probe, or for every shard via
+    ``predecode()`` — and its ``probe_state`` answers each shard's
+    slice of the batch.
 
     ``contains_h`` takes the xxhash64 column values (int64) — the same
     base hash used at build time — and is what the registered SQL UDF
     calls (see functions.py). Hashes routed to a shard absent from
-    ``states`` answer False (0 for ``out_dtype=np.int64`` handles).
+    ``states`` answer False (0 for the ``np.int64`` value kind).
     """
-
-    out_dtype = bool
 
     def __init__(self, cfg, states: dict[int, bytes]):
         self.cfg = cfg
         self.states = states
         self._prepared: dict[int, object] = {}
 
-    @staticmethod
-    def prepare_state(cfg, state: bytes):
-        return state
-
-    @staticmethod
-    def probe_state(cfg, prepared, shard_id: int, h_u64: np.ndarray) -> np.ndarray:
-        raise NotImplementedError  # pragma: no cover
+    @property
+    def out_dtype(self) -> type:
+        return self.cfg.family.out_dtype
 
     @classmethod
     def from_df(cls, cfg, shards_df: DataFrame):
@@ -511,7 +542,7 @@ class ShardedFilter:
     def prepared(self, sid: int):
         p = self._prepared.get(sid)
         if p is None:
-            p = self.prepare_state(self.cfg, self.states[sid])
+            p = self.cfg.family.prepare_state(self.cfg, self.states[sid])
             self._prepared[sid] = p
         return p
 
@@ -530,6 +561,7 @@ class ShardedFilter:
         out = np.zeros(len(h), dtype=self.out_dtype)
         if len(h) == 0:
             return out
+        probe_state = self.cfg.family.probe_state
         shards = shard_of(h, self.cfg.num_shards).astype(np.int64)
         order = np.argsort(shards, kind="stable")
         sorted_shards = shards[order]
@@ -538,7 +570,7 @@ class ShardedFilter:
             sid = int(sid)
             if sid in self.states:
                 idx = order[bounds[sid] : bounds[sid + 1]]
-                out[idx] = self.probe_state(self.cfg, self.prepared(sid), sid, h[idx])
+                out[idx] = probe_state(self.cfg, self.prepared(sid), sid, h[idx])
         return out
 
     # value handles (the retrieval structure) answer through the same

@@ -36,7 +36,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
@@ -100,7 +99,7 @@ def _derive(g: np.ndarray, seg_len: int, num_seg: int, fp_bits: int):
         np.seterr(**old)
 
 
-def _build_state(cfg: BFuseConfig, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: BFuseConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     seg_len, num_seg = _layout_for(len(hashes_u64))
     slots = (num_seg + 2) * seg_len
     dtype = np.uint16 if cfg.fingerprint_bits == 16 else np.uint8
@@ -176,22 +175,11 @@ def _contains_in_state(state: bytes, h_u64: np.ndarray) -> np.ndarray:
     return (fingers[h[:, 0]] ^ fingers[h[:, 1]] ^ fingers[h[:, 2]]) == fp
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     raise ValueError(
         "binary fuse filter states are not mergeable (static filter) — "
         "rebuild from the union of keys, or use bloom/cuckoo for "
         "incremental corpora"
-    )
-
-
-def build_bfuse(df: DataFrame, key_col, cfg: BFuseConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"bfuse{cfg.fingerprint_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
     )
 
 
@@ -206,8 +194,13 @@ def probe_state(
     return _contains_in_state(state, h_u64)
 
 
-class ShardedBFuse(base.ShardedFilter):
-    """Binary fuse probe handle (see base.ShardedFilter)."""
-
-    prepare_state = staticmethod(prepare_state)
-    probe_state = staticmethod(probe_state)
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"bfuse{cfg.fingerprint_bits}",
+    build_state=build_state,
+    merge_states=merge_states,
+    prepare_state=prepare_state,
+    probe_state=probe_state,
+)
+BFuseConfig.family = FAMILY
+build_bfuse = base.build_filter
+ShardedBFuse = base.ShardedFilter

@@ -28,7 +28,6 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
@@ -109,7 +108,7 @@ def _block_and_masks(cfg: BlockedBloomConfig, g: np.ndarray):
         np.seterr(**old)
 
 
-def _build_state(cfg: BlockedBloomConfig, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: BlockedBloomConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     nblocks = cfg.num_blocks_per_shard
     lanes_total = nblocks * cfg.lanes
     lanes_arr = np.zeros(lanes_total, dtype=np.uint32)
@@ -175,8 +174,9 @@ def _contains_in_state(cfg: BlockedBloomConfig, state: bytes, g: np.ndarray) -> 
     return ((got & want) == want).all(axis=1)
 
 
-def merge_states(states: list[bytes]) -> bytes:
-    """OR-merge; the full header (incl. seed + shard count) must agree."""
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
+    """OR-merge; the full header (incl. seed + shard count) must agree,
+    so the family merge's ``cfg`` and ``shard_id`` are not needed."""
     hdr = states[0][: _HDR.size]
     if any(s[: _HDR.size] != hdr for s in states[1:]):
         raise ValueError("config mismatch")
@@ -185,25 +185,19 @@ def merge_states(states: list[bytes]) -> bytes:
     return hdr + merged.tobytes()
 
 
-def build_blocked_bloom(df: DataFrame, key_col, cfg: BlockedBloomConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"bbf{cfg.block_bytes * 8}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-    )
-
-
 def probe_state(
     cfg: BlockedBloomConfig, state: bytes, shard_id: int, h_u64: np.ndarray
 ) -> np.ndarray:
     return _contains_in_state(cfg, state, mix_with_seed(h_u64, cfg.seed + 0xBB0C))
 
 
-class ShardedBlockedBloom(base.ShardedFilter):
-    """Blocked-Bloom probe handle (see base.ShardedFilter); the kernel
-    checks the state header on every call, so no prepare step."""
-
-    probe_state = staticmethod(probe_state)
+# the kernel checks the state header on every call: no prepare step
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"bbf{cfg.block_bytes * 8}",
+    build_state=build_state,
+    merge_states=merge_states,
+    probe_state=probe_state,
+)
+BlockedBloomConfig.family = FAMILY
+build_blocked_bloom = base.build_filter
+ShardedBlockedBloom = base.ShardedFilter

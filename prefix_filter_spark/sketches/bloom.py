@@ -25,7 +25,6 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
@@ -89,7 +88,7 @@ def _probe_positions(g: np.ndarray, k: int, m_bits: int) -> np.ndarray:
         np.seterr(**old)
 
 
-def _build_state(cfg: BloomConfig, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: BloomConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     m = cfg.m_bits_per_shard
     g = seed_mix(hashes_u64, cfg.seed)
     bits = np.zeros(m, dtype=bool)
@@ -143,27 +142,16 @@ def _contains_in_state(state: bytes, g: np.ndarray) -> np.ndarray:
     return hit.all(axis=1)
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     """OR-merge same-shard partials (bloom.hpp AddAll over subsets).
-    The full header (incl. seed + shard count) must agree byte-for-byte."""
+    The full header (incl. seed + shard count) must agree byte-for-byte,
+    so the family merge's ``cfg`` and ``shard_id`` are not needed."""
     hdr = states[0][: _HDR.size]
     if any(s[: _HDR.size] != hdr for s in states[1:]):
         raise ValueError("cannot merge bloom states with different configs")
     parsed = [_parse_state(s) for s in states]
     merged = reduce(np.bitwise_or, (p[2] for p in parsed[1:]), parsed[0][2])
     return hdr + merged.tobytes()
-
-
-def build_bloom(df: DataFrame, key_col, cfg: BloomConfig) -> DataFrame:
-    """df[key_col] -> shard-row DataFrame (one shuffle, vectorized build)."""
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"bloom{cfg.bits_per_key}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-    )
 
 
 def prepare_state(cfg: BloomConfig, state: bytes) -> bytes:
@@ -177,13 +165,6 @@ def probe_state(
     return _contains_in_state(state, seed_mix(h_u64, cfg.seed))
 
 
-class ShardedBloom(base.ShardedFilter):
-    """Bloom probe handle (see base.ShardedFilter)."""
-
-    prepare_state = staticmethod(prepare_state)
-    probe_state = staticmethod(probe_state)
-
-
 def contains_h_in_state(state: bytes, h) -> np.ndarray:
     """Probe base-hash values against ONE serialized state, reading the
     seed from the state header — the state-COLUMN path (SQL UDF over a
@@ -191,3 +172,15 @@ def contains_h_in_state(state: bytes, h) -> np.ndarray:
     exists to carry the config."""
     _magic, _ver, _k, _, _m, seed, _ns = _HDR.unpack_from(state, 0)
     return _contains_in_state(state, seed_mix(as_u64(np.asarray(h)), seed))
+
+
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"bloom{cfg.bits_per_key}",
+    build_state=build_state,
+    merge_states=merge_states,
+    prepare_state=prepare_state,
+    probe_state=probe_state,
+)
+BloomConfig.family = FAMILY
+build_bloom = base.build_filter
+ShardedBloom = base.ShardedFilter

@@ -338,7 +338,7 @@ def _canonical(cfg: CuckooConfig, b1: np.ndarray, tag: np.ndarray, nb: int) -> n
     return np.minimum(b1, _alt_bucket(b1, tag, nb))
 
 
-def _build_state(cfg: CuckooConfig, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: CuckooConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     nb = cfg.num_buckets_per_shard
     b1, tag = _derive(cfg, hashes_u64, nb)
     if cfg.flagless:
@@ -422,7 +422,7 @@ def _encode_table(cfg: CuckooConfig, table: np.ndarray) -> bytes:
     return table.tobytes()
 
 
-def merge_states(states: list[bytes], cfg: CuckooConfig) -> bytes:
+def merge_states(states: list[bytes], cfg: CuckooConfig, shard_id: int = 0) -> bytes:
     """Union of (primary, tag) pairs -> deterministic rebuild."""
     nb = cfg.num_buckets_per_shard
     fp_shift = np.uint64(cfg.fp_bits)
@@ -507,23 +507,10 @@ def remove_keys(df: DataFrame, key_col, cfg: CuckooConfig, shards_df: DataFrame)
     return base.remove_keys_sharded(
         df,
         key_col,
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        shards_df=shards_df,
+        cfg,
+        shards_df,
         remove_state_fn=lambda state, h: remove_states(state, cfg, h),
-        merge_fn=lambda states: merge_states(states, cfg),
         count_state_fn=lambda state: len(_pairs_of_state(cfg, state)),
-    )
-
-
-def build_cuckoo(df: DataFrame, key_col, cfg: CuckooConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"cuckoo{cfg.fp_bits}{'ss' if cfg.semisort else ''}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
     )
 
 
@@ -533,8 +520,13 @@ def probe_state(
     return _contains_in_state(cfg, state, h_u64)
 
 
-class ShardedCuckoo(base.ShardedFilter):
-    """Cuckoo probe handle (see base.ShardedFilter); the kernel checks
-    the state geometry on every call, so no prepare step."""
-
-    probe_state = staticmethod(probe_state)
+# the kernel checks the state geometry on every call: no prepare step
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"cuckoo{cfg.fp_bits}{'ss' if cfg.semisort else ''}",
+    build_state=build_state,
+    merge_states=merge_states,
+    probe_state=probe_state,
+)
+CuckooConfig.family = FAMILY
+build_cuckoo = base.build_filter
+ShardedCuckoo = base.ShardedFilter

@@ -94,31 +94,26 @@ class PrefixFilterConfig:
         return max(64, math.ceil(self.shard_capacity * self.spare_ratio))
 
 
-def _spare_ops(cfg: PrefixFilterConfig):
-    """THE spare dispatch registry: spare kind -> (family module, spare
-    config, merge-or-None). Every spare kind registers here exactly
-    once — the previous per-function if-chains had four sites to keep
-    in lockstep, and a kind missing from one silently fell through to
-    the bloom default (silent false negatives at probe time). Build and
-    probe are the family's own ``_build_state`` / ``probe_state`` under
-    the spare config; merge is None for the static build-once kinds
-    (xor / ribbon)."""
+def _spare_config(cfg: PrefixFilterConfig):
+    """THE spare dispatch: spare kind -> the spare's filter config, whose
+    family record then builds, merges and probes it. Every spare kind is
+    listed here once, and an unknown kind raises instead of falling
+    through to a default (silent false negatives at probe time). Every
+    spare is a one-shard filter (shard id 0) inside its PF shard's
+    state, sized from spare_ratio for the expected eviction stream; the
+    static kinds (xor / ribbon) raise on merge."""
     kind = cfg.spare_kind
-    # every spare is a one-shard filter inside its PF shard's state,
-    # sized from spare_ratio for the expected eviction stream
     size = dict(
         n_capacity=cfg.spare_capacity_per_shard,
         num_shards=1,
         seed=cfg.seed ^ 0x5A5A5A5A,
     )
     if kind == "bloom":
-        scfg = bloom.BloomConfig(bits_per_key=cfg.spare_bits_per_key, **size)
-        return bloom, scfg, bloom.merge_states
+        return bloom.BloomConfig(bits_per_key=cfg.spare_bits_per_key, **size)
     if kind == "tc":
         from prefix_filter_spark.sketches import two_choice as tc
 
-        scfg = tc.TwoChoiceConfig(**size)
-        return tc, scfg, lambda states: tc.merge_states(states, scfg)
+        return tc.TwoChoiceConfig(**size)
     if kind == "cuckoo":
         # the reference's PF[CF12-Flex] spare: CuckooFilterStable with
         # 12-bit tags, sized for the eviction stream at stable load
@@ -127,8 +122,7 @@ def _spare_ops(cfg: PrefixFilterConfig):
         # headroom for merge-time evictions)
         from prefix_filter_spark.sketches import cuckoo as ck
 
-        scfg = ck.CuckooConfig(fp_bits=12, **size)
-        return ck, scfg, lambda states: ck.merge_states(states, scfg)
+        return ck.CuckooConfig(fp_bits=12, **size)
     if kind in ("bbf", "impala512"):
         # register-blocked spares: the reference's PF[BBF-Fixed]
         # (wrappers.hpp:564-569: L2 slots = 2x the eviction stream /
@@ -137,18 +131,17 @@ def _spare_ops(cfg: PrefixFilterConfig):
         # keeps the spare's FPR contribution below the L1 term.
         from prefix_filter_spark.sketches import blocked_bloom as bb
 
-        scfg = bb.BlockedBloomConfig(
+        return bb.BlockedBloomConfig(
             bits_per_key=10, block_bytes=64 if kind == "impala512" else 32, **size
         )
-        return bb, scfg, bb.merge_states
     if kind == "xor":
         from prefix_filter_spark.sketches import xor as xorm
 
-        return xorm, xorm.XorConfig(fingerprint_bits=8, **size), None
+        return xorm.XorConfig(fingerprint_bits=8, **size)
     if kind == "ribbon":
         from prefix_filter_spark.sketches import ribbon as rbm
 
-        return rbm, rbm.RibbonConfig(fingerprint_bits=8, **size), None
+        return rbm.RibbonConfig(fingerprint_bits=8, **size)
     raise ValueError(
         f"unknown spare_kind {kind!r} — one of {sorted(_SPARE_KIND_CODE)}"
     )
@@ -157,25 +150,8 @@ def _spare_ops(cfg: PrefixFilterConfig):
 def _spare_build(cfg: PrefixFilterConfig, keys_u64: np.ndarray) -> bytes:
     """``keys_u64`` sorted + distinct (the static kinds' solves need it;
     both callers pass np.unique output)."""
-    family, scfg, _merge = _spare_ops(cfg)
-    return family._build_state(scfg, keys_u64)
-
-
-def _spare_merge(cfg: PrefixFilterConfig, states: list[bytes]) -> bytes:
-    merge = _spare_ops(cfg)[2]
-    if merge is None:
-        raise ValueError(
-            f"PF[{cfg.spare_kind}] is a build-once assembly: the static "
-            "spare cannot merge partial states — rebuild from the full key "
-            "stream, or pick a mergeable spare kind for incremental use"
-        )
-    return merge(states)
-
-
-def _spare_probe(cfg: PrefixFilterConfig, spare_state: bytes, keys_u64: np.ndarray) -> np.ndarray:
-    family, scfg, _merge = _spare_ops(cfg)
-    # the spare is a one-shard filter inside its PF shard: shard id 0
-    return family.probe_state(scfg, spare_state, 0, keys_u64)
+    scfg = _spare_config(cfg)
+    return scfg.family.build_state(scfg, 0, keys_u64)
 
 
 def _derive_pd_qr(hashes_u64: np.ndarray, cfg: PrefixFilterConfig):
@@ -198,7 +174,7 @@ def _spare_keys(shard_id: int, cfg: PrefixFilterConfig, pd_idx: np.ndarray, qr: 
     return (global_pd << np.uint64(13)) | as_u64(qr)
 
 
-def _build_state(cfg: PrefixFilterConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: PrefixFilterConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     pd_idx, qr = _derive_pd_qr(hashes_u64, cfg)
     num_pd = cfg.num_pd_per_shard
     headers, body, ev_pd, ev_qr, _n_l1 = pd_kernel.build_pds(pd_idx, qr, num_pd)
@@ -323,23 +299,16 @@ def merge_states(states: list[bytes], cfg: PrefixFilterConfig, shard_id: int) ->
     ev_state = _spare_build(
         cfg, np.unique(_spare_keys(shard_id, cfg, ev_pd, ev_qr))
     )
-    spare = _spare_merge(cfg, spares + [ev_state])
+    scfg = _spare_config(cfg)
+    try:
+        spare = scfg.family.merge_states(spares + [ev_state], scfg, 0)
+    except ValueError as e:  # e.g. the static spares: rebuild instead
+        raise ValueError(f"PF[{cfg.spare_kind}] spare: {e}") from e
     return (
         _pack_header(cfg, num_pd, len(spare))
         + headers.tobytes()
         + body.tobytes()
         + spare
-    )
-
-
-def build_prefix_filter(df: DataFrame, key_col, cfg: PrefixFilterConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name="prefix_filter",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, shard_id, hashes),
     )
 
 
@@ -414,12 +383,18 @@ def probe_state(
     if route_spare.any():
         sk = _spare_keys(shard_id, cfg, pd_idx[route_spare], qr[route_spare])
         res = res.copy()
-        res[route_spare] = _spare_probe(cfg, spare, sk)
+        scfg = _spare_config(cfg)
+        res[route_spare] = scfg.family.probe_state(scfg, spare, 0, sk)
     return res
 
 
-class ShardedPrefixFilter(base.ShardedFilter):
-    """Prefix-filter probe handle (see base.ShardedFilter)."""
-
-    prepare_state = staticmethod(prepare_state)
-    probe_state = staticmethod(probe_state)
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: "prefix_filter",
+    build_state=build_state,
+    merge_states=merge_states,
+    prepare_state=prepare_state,
+    probe_state=probe_state,
+)
+PrefixFilterConfig.family = FAMILY
+build_prefix_filter = base.build_filter
+ShardedPrefixFilter = base.ShardedFilter

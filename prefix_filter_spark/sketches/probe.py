@@ -83,15 +83,14 @@ def _types_of(df: DataFrame, cols: list[str]) -> list[str]:
     return [m[c] for c in cols]
 
 
-def probe_fn_for(handle_cls, cfg) -> ProbeFn:
-    """probe_via_join kernel for one filter kind, derived from the two
-    functions its broadcast handle binds (``handle_cls`` is a
-    base.ShardedFilter subclass, e.g. ShardedPrefixFilter): prepare the
-    group's shard state — header check, decode — then probe it. Both
-    probe regimes therefore run the same per-shard code."""
+def probe_fn_for(cfg) -> ProbeFn:
+    """probe_via_join kernel for the filter ``cfg`` configures, from the
+    same family record the broadcast handle (base.ShardedFilter) uses:
+    prepare the group's shard state — header check, decode — then probe
+    it. Both probe regimes therefore run the same per-shard code."""
+    family = cfg.family
 
     def fn(state: bytes, shard_id: int, h: np.ndarray) -> np.ndarray:
-        prepared = handle_cls.prepare_state(cfg, state)
-        return handle_cls.probe_state(cfg, prepared, shard_id, h)
+        return family.probe_state(cfg, family.prepare_state(cfg, state), shard_id, h)
 
     return fn

@@ -227,7 +227,7 @@ def _decode_cached(state: bytes) -> np.ndarray:
     return (quots << np.uint64(r)) | rems
 
 
-def _build_state(cfg: QuotientFilterConfig, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: QuotientFilterConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     return _encode(cfg, _fingerprints(cfg, hashes_u64))
 
 
@@ -270,7 +270,9 @@ def check_state(cfg: QuotientFilterConfig, state: bytes) -> None:
         )
 
 
-def merge_states(states: list[bytes], cfg: QuotientFilterConfig) -> bytes:
+def merge_states(
+    states: list[bytes], cfg: QuotientFilterConfig, shard_id: int = 0
+) -> bytes:
     """Union of fingerprint sets, re-encoded canonically — associative,
     commutative, bit-identical under any merge grouping."""
     for s in states:
@@ -297,19 +299,6 @@ def count_state(state: bytes) -> int:
     return int(len(_decode_cached(state)))
 
 
-def build_quotient(df: DataFrame, key_col, cfg: QuotientFilterConfig) -> DataFrame:
-    """df[key_col] -> shard-row DataFrame (one shuffle; NumPy-vectorized
-    encode per shard)."""
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"quotient{cfg.remainder_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-    )
-
-
 def remove_keys(
     df: DataFrame, key_col, cfg: QuotientFilterConfig, shards_df: DataFrame
 ) -> DataFrame:
@@ -320,11 +309,9 @@ def remove_keys(
     return base.remove_keys_sharded(
         df,
         key_col,
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        shards_df=shards_df,
+        cfg,
+        shards_df,
         remove_state_fn=lambda state, keys: remove_from_state(cfg, state, keys),
-        merge_fn=lambda states: merge_states(states, cfg),
         count_state_fn=count_state,
     )
 
@@ -345,8 +332,13 @@ def probe_state(
     return _contains_in_state(state, h_u64, fps=fps)
 
 
-class ShardedQuotient(base.ShardedFilter):
-    """Quotient-filter probe handle (see base.ShardedFilter)."""
-
-    prepare_state = staticmethod(prepare_state)
-    probe_state = staticmethod(probe_state)
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"quotient{cfg.remainder_bits}",
+    build_state=build_state,
+    merge_states=merge_states,
+    prepare_state=prepare_state,
+    probe_state=probe_state,
+)
+QuotientFilterConfig.family = FAMILY
+build_quotient = base.build_filter
+ShardedQuotient = base.ShardedFilter

@@ -39,7 +39,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches.ribbon import _MAX_ATTEMPTS, _W, _derive, _m_for, _solve
@@ -72,7 +71,9 @@ class RetrievalConfig:
             raise ValueError("epsilon must be in [0.01, 1.0]")
 
 
-def _build_state(cfg: RetrievalConfig, hashes_u64: np.ndarray, values: np.ndarray) -> bytes:
+def build_state(
+    cfg: RetrievalConfig, shard_id: int, hashes_u64: np.ndarray, values: np.ndarray
+) -> bytes:
     """Solve Z so that lookup(h) == value for every pair. ``hashes_u64``
     need not be pre-deduplicated: exact duplicate pairs collapse here,
     conflicting ones raise."""
@@ -162,31 +163,11 @@ def _lookup_in_state(state: bytes, h_u64: np.ndarray) -> np.ndarray:
     return np.bitwise_xor.reduce(np.where(mask, vals, 0), axis=1).astype(np.int64)
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     raise ValueError(
         "retrieval states are not mergeable (static structure: the "
         "elimination order is a global property of the key set) — rebuild "
         "from the union of pairs"
-    )
-
-
-def build_retrieval(
-    df: DataFrame, key_col, value_col, cfg: RetrievalConfig
-) -> DataFrame:
-    """(key, value) DataFrame -> shard-row DataFrame (base.SHARD_SCHEMA).
-
-    The shared one-shuffle build with the value column riding next to
-    the 8-byte hash through Arrow; spread_tasks puts each sequential
-    banded solve in its own task (see base.build_sharded)."""
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"ribbon_retrieval{cfg.value_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda sid, hashes, values: _build_state(cfg, hashes, values),
-        spread_tasks=True,
-        value_col=value_col,
     )
 
 
@@ -201,13 +182,14 @@ def probe_state(
     return _lookup_in_state(state, h_u64)
 
 
-class ShardedRetrieval(base.ShardedFilter):
-    """Driver-side lookup handle (see base.ShardedFilter): the same
-    shard routing as the probe handles, but ``lookup_h`` returns the
-    stored value (int64) instead of a boolean. Keys never inserted
-    return arbitrary values (static-function contract) — gate with an
-    AMQ filter when membership is unknown."""
-
-    out_dtype = np.int64
-    prepare_state = staticmethod(prepare_state)
-    probe_state = staticmethod(probe_state)
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"ribbon_retrieval{cfg.value_bits}",
+    build_state=build_state,
+    merge_states=merge_states,
+    prepare_state=prepare_state,
+    probe_state=probe_state,
+    spread_tasks=True,  # one sequential banded solve per task, like ribbon
+    out_dtype=np.int64,
+)
+RetrievalConfig.family = FAMILY
+ShardedRetrieval = base.ShardedFilter

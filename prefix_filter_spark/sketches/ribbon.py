@@ -45,7 +45,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
@@ -172,7 +171,7 @@ def _solve(start: np.ndarray, coeff: np.ndarray, fp: np.ndarray, m: int):
     return z
 
 
-def _build_state(cfg: RibbonConfig, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: RibbonConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     m = _m_for(len(hashes_u64), cfg.epsilon)
     dtype = np.uint16 if cfg.fingerprint_bits == 16 else np.uint8
     z = np.zeros(m, dtype=dtype)
@@ -249,28 +248,12 @@ def _contains_in_state(state: bytes, h_u64: np.ndarray) -> np.ndarray:
     return acc == fp
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     raise ValueError(
-        "ribbon filter states are not mergeable (static filter: the "
-        "elimination order is a global property of the key set) — rebuild "
-        "from the union of keys, or use bloom/cuckoo for incremental corpora"
-    )
-
-
-def build_ribbon(df: DataFrame, key_col, cfg: RibbonConfig) -> DataFrame:
-    """df[key_col] -> shard-row DataFrame (one shuffle, banded solve per
-    shard; shards are the parallelism unit)."""
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"ribbon{cfg.fingerprint_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
-        # the banded solve is seconds of sequential Python per shard:
-        # keep one task per shard instead of letting AQE coalesce the
-        # small shuffle partitions onto fewer tasks (see build_sharded)
-        spread_tasks=True,
+        "ribbon filter states are not mergeable (static build-once filter: "
+        "the elimination order is a global property of the key set) — "
+        "rebuild from the union of keys, or use bloom/cuckoo for "
+        "incremental corpora"
     )
 
 
@@ -285,8 +268,17 @@ def probe_state(
     return _contains_in_state(state, h_u64)
 
 
-class ShardedRibbon(base.ShardedFilter):
-    """Ribbon probe handle (see base.ShardedFilter)."""
-
-    prepare_state = staticmethod(prepare_state)
-    probe_state = staticmethod(probe_state)
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"ribbon{cfg.fingerprint_bits}",
+    build_state=build_state,
+    merge_states=merge_states,
+    prepare_state=prepare_state,
+    probe_state=probe_state,
+    # the banded solve is seconds of sequential Python per shard: keep
+    # one task per shard instead of letting AQE coalesce the small
+    # shuffle partitions onto fewer tasks (see base.build_sharded)
+    spread_tasks=True,
+)
+RibbonConfig.family = FAMILY
+build_ribbon = base.build_filter
+ShardedRibbon = base.ShardedFilter

@@ -164,7 +164,7 @@ def _pack_header(cfg: TwoChoiceConfig, nb: int, n_overflow: int) -> bytes:
     )
 
 
-def _build_state(cfg: TwoChoiceConfig, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: TwoChoiceConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     nb = cfg.num_buckets_per_shard
     b1, fp = _derive(cfg, hashes_u64, nb)
     table, overflow = _fill_buckets(cfg, b1, fp, nb)
@@ -224,7 +224,7 @@ def _check_geometry(cfg: TwoChoiceConfig, state: bytes) -> None:
         )
 
 
-def merge_states(states: list[bytes], cfg: TwoChoiceConfig) -> bytes:
+def merge_states(states: list[bytes], cfg: TwoChoiceConfig, shard_id: int = 0) -> bytes:
     """Union of (primary, fp) pairs -> deterministic rebuild."""
     nb = cfg.num_buckets_per_shard
     for s in states:
@@ -297,23 +297,10 @@ def remove_keys(df: DataFrame, key_col, cfg: TwoChoiceConfig, shards_df: DataFra
     return base.remove_keys_sharded(
         df,
         key_col,
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        shards_df=shards_df,
+        cfg,
+        shards_df,
         remove_state_fn=lambda state, h: remove_states(state, cfg, h),
-        merge_fn=lambda states: merge_states(states, cfg),
         count_state_fn=lambda state: len(_pairs_of_state(cfg, state)),
-    )
-
-
-def build_two_choice(df: DataFrame, key_col, cfg: TwoChoiceConfig) -> DataFrame:
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"tc{cfg.fp_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
     )
 
 
@@ -323,8 +310,13 @@ def probe_state(
     return _contains_in_state(cfg, state, h_u64)
 
 
-class ShardedTwoChoice(base.ShardedFilter):
-    """Two-choice probe handle (see base.ShardedFilter); the kernel checks
-    the state geometry on every call, so no prepare step."""
-
-    probe_state = staticmethod(probe_state)
+# the kernel checks the state geometry on every call: no prepare step
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"tc{cfg.fp_bits}",
+    build_state=build_state,
+    merge_states=merge_states,
+    probe_state=probe_state,
+)
+TwoChoiceConfig.family = FAMILY
+build_two_choice = base.build_filter
+ShardedTwoChoice = base.ShardedFilter

@@ -38,7 +38,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
@@ -149,7 +148,7 @@ def _peel(h: np.ndarray, slots: int):
     return rounds, claimed
 
 
-def _build_state(cfg: XorConfig, hashes_u64: np.ndarray) -> bytes:
+def build_state(cfg: XorConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
     seglen = _seglen_for(len(hashes_u64))
     slots = 3 * seglen
     dtype = np.uint16 if cfg.fingerprint_bits == 16 else np.uint8
@@ -230,24 +229,11 @@ def _contains_in_state(state: bytes, h_u64: np.ndarray) -> np.ndarray:
     return (fingers[h[:, 0]] ^ fingers[h[:, 1]] ^ fingers[h[:, 2]]) == fp
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     raise ValueError(
-        "xor filter states are not mergeable (static filter: the peeling "
-        "order is a global property of the key set) — rebuild from the "
-        "union of keys, or use bloom/cuckoo for incremental corpora"
-    )
-
-
-def build_xor(df: DataFrame, key_col, cfg: XorConfig) -> DataFrame:
-    """df[key_col] -> shard-row DataFrame (one shuffle, vectorized
-    peel-and-assign per shard)."""
-    return base.build_sharded(
-        df,
-        key_col,
-        sketch_name=f"xor{cfg.fingerprint_bits}",
-        seed=cfg.seed,
-        num_shards=cfg.num_shards,
-        state_fn=lambda shard_id, hashes: _build_state(cfg, hashes),
+        "xor filter states are not mergeable (static build-once filter: "
+        "the peeling order is a global property of the key set) — rebuild "
+        "from the union of keys, or use bloom/cuckoo for incremental corpora"
     )
 
 
@@ -262,8 +248,13 @@ def probe_state(
     return _contains_in_state(state, h_u64)
 
 
-class ShardedXor(base.ShardedFilter):
-    """Xor probe handle (see base.ShardedFilter)."""
-
-    prepare_state = staticmethod(prepare_state)
-    probe_state = staticmethod(probe_state)
+FAMILY = base.FilterFamily(
+    sketch_name=lambda cfg: f"xor{cfg.fingerprint_bits}",
+    build_state=build_state,
+    merge_states=merge_states,
+    prepare_state=prepare_state,
+    probe_state=probe_state,
+)
+XorConfig.family = FAMILY
+build_xor = base.build_filter
+ShardedXor = base.ShardedFilter

@@ -49,7 +49,6 @@ import numpy as np
 import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 from pyspark.sql import functions as F
 
 from prefix_filter_spark.hashing import (
@@ -57,11 +56,11 @@ from prefix_filter_spark.hashing import (
     spark_xxhash64_long,
     spark_xxhash64_str,
 )
-from prefix_filter_spark.plans.sharding import hashed_key_col
+from prefix_filter_spark.plans.sharding import hashed_key_col, widen_key_col
 from prefix_filter_spark.sketches.bloom import (
     BloomConfig,
-    _build_state,
     _contains_in_state,
+    build_state,
     merge_states,
     seed_mix,
 )
@@ -72,16 +71,19 @@ INDEX_SCHEMA = (
 
 
 def _decode_file_uri(name: str) -> str:
-    """Undo ``input_file_name()``'s URI percent-encoding before feeding
-    a file name back into ``spark.read``: the scan tags files as
-    encoded URIs (space -> ``%20``), and a reader given the encoded
+    """The one decoder for the file URIs a scan reports
+    (``input_file_name()``, ``inputFiles()``, snapshot manifests) before
+    they go back into ``spark.read``, pyarrow or ``os`` calls: undo the
+    percent-encoding (space -> ``%20``) — a reader given the encoded
     string treats the escapes as literal path characters and
-    mis-resolves any path containing spaces or ``%`` sequences. Index
-    rows keep the encoded form (it is the anti-join/compare key the
-    scan itself produces); decoding happens only at read-back."""
-    from urllib.parse import unquote
+    mis-resolves any path containing spaces or ``%`` sequences — and
+    give a ``file:`` URI as its plain local path. Index rows and
+    manifests keep the encoded form (it is the compare key the scan
+    itself produces); decoding happens only at read-back and compare."""
+    from urllib.parse import unquote, urlparse
 
-    return unquote(name)
+    p = urlparse(name)
+    return unquote(p.path) if p.scheme in ("file", "") else unquote(name)
 
 
 @dataclass(frozen=True)
@@ -110,18 +112,13 @@ class FileIndexConfig:
 
 
 def _tagged_keys(df: DataFrame, key_col: str, seed: int) -> DataFrame:
-    # integral keys are pinned to the 8-byte hash path (cast bigint) so
-    # the driver-side NumPy twin in hash_probe_keys agrees regardless
-    # of the column's storage width (an int32 column would otherwise
-    # take the JVM's 4-byte path and silently break zero-FN)
-    col = F.col(key_col)
-    if isinstance(
-        df.schema[key_col].dataType, (ByteType, ShortType, IntegerType, LongType)
-    ):
-        col = col.cast("bigint")
+    # integral keys hash at bigint width (widen_key_col) so the
+    # driver-side NumPy twin in hash_probe_keys agrees regardless of
+    # the column's storage width (an int32 column would otherwise take
+    # the JVM's 4-byte path and silently break zero-FN)
     return df.select(
         F.input_file_name().alias("file"),
-        hashed_key_col(col, seed).alias("h"),
+        hashed_key_col(widen_key_col(df, key_col), seed).alias("h"),
     )
 
 
@@ -158,7 +155,7 @@ def _build_from_tagged(src: DataFrame, cfg: FileIndexConfig) -> DataFrame:
             fc = FileIndexConfig(bits_per_key=bpk, seed=seed)._cfg_for(
                 len(hashes)
             )
-            state = _build_state(fc, hashes)
+            state = build_state(fc, 0, hashes)
             return pd.DataFrame(
                 {
                     "file": [fname],
@@ -189,7 +186,7 @@ def _build_from_tagged(src: DataFrame, cfg: FileIndexConfig) -> DataFrame:
                 yield pd.DataFrame(
                     {
                         "file": [fname],
-                        "state": [_build_state(slice_cfg, hashes)],
+                        "state": [build_state(slice_cfg, 0, hashes)],
                         "n_keys": [len(hashes)],
                         "input_rows": [len(grp)],
                         "build_ns": [time.perf_counter_ns() - t0],

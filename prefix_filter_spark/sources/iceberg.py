@@ -93,6 +93,8 @@ import json
 import os
 import time
 
+from prefix_filter_spark.sources.file_index import _decode_file_uri
+
 
 def _manifest_path(table_path: str) -> str:
     return os.path.join(table_path, "metadata", "snapshots.json")
@@ -217,7 +219,7 @@ def read_table(
     reader = spark.read.option("basePath", os.path.join(table_path, "data"))
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
+    return reader.parquet(*[_decode_file_uri(f) for f in files])
 
 
 def compact_table(
@@ -240,7 +242,7 @@ def compact_table(
     cur = content_files(table_path)
     df = read_table(spark, table_path)
     if num_files is None:
-        total = sum(os.path.getsize(_local(f)) for f in cur)
+        total = sum(os.path.getsize(_decode_file_uri(f)) for f in cur)
         num_files = max(1, total // (128 << 20))
     if zorder_cols is not None:
         from prefix_filter_spark.sources.zorder import zorder_layout
@@ -267,13 +269,6 @@ def compact_table(
         json.dump(manifest, f, indent=1)
     os.replace(tmp, _manifest_path(table_path))
     return snap_id
-
-
-def _local(file_uri: str) -> str:
-    from urllib.parse import unquote, urlparse
-
-    p = urlparse(file_uri)
-    return unquote(p.path) if p.scheme in ("file", "") else unquote(file_uri)
 
 
 def update_table_index(
@@ -325,7 +320,7 @@ def update_table_index(
     if fresh_files:
         fresh = spark.read.option(
             "basePath", os.path.join(table_path, "data")
-        ).parquet(*fresh_files)
+        ).parquet(*[_decode_file_uri(f) for f in fresh_files])
         states = fidx._build_from_tagged(
             fidx._tagged_keys(fresh, key_col, cfg.seed), cfg
         )
@@ -352,7 +347,7 @@ def table_health(table_path: str, *, small_file_bytes: int = 32 << 20) -> dict:
     if not manifest:
         raise FileNotFoundError(f"no table at {table_path}")
     files = content_files(table_path)
-    sizes = [os.path.getsize(_local(f)) for f in files]
+    sizes = [os.path.getsize(_decode_file_uri(f)) for f in files]
     n_small = sum(1 for s in sizes if s < small_file_bytes)
     ops: dict[str, int] = {}
     for s in manifest:
@@ -420,7 +415,7 @@ def expire_snapshots(table_path: str, *, keep_last: int = 1) -> dict:
     os.replace(tmp, _manifest_path(table_path))
     n_del = 0
     for f in dead:
-        p = _local(f)
+        p = _decode_file_uri(f)
         if os.path.exists(p):
             os.remove(p)
             n_del += 1

@@ -78,7 +78,7 @@ def file_minmax_stats(
         for pdf in batches:
             rows = []
             for fname in pdf["f"]:
-                md = pq.ParquetFile(_local_path(fname)).metadata
+                md = pq.ParquetFile(_decode_file_uri(fname)).metadata
                 name_to_idx = {
                     md.schema.column(i).name: i for i in range(md.num_columns)
                 }
@@ -114,13 +114,6 @@ def file_minmax_stats(
         max(1, min(len(files), 64))
     )
     return fdf.mapInPandas(scan, schema=STATS_SCHEMA)
-
-
-def _local_path(file_uri: str) -> str:
-    from urllib.parse import unquote, urlparse
-
-    p = urlparse(file_uri)
-    return unquote(p.path) if p.scheme in ("file", "") else unquote(file_uri)
 
 
 def range_prune(
@@ -189,7 +182,8 @@ def skipping_read(
         raise ValueError("skipping_read needs keys and/or ranges")
 
     if not survivors:
-        schema = spark.read.parquet(*_resolve_files(spark, path)[:1] or [path]).schema
+        first = [_decode_file_uri(f) for f in _resolve_files(spark, path)[:1]]
+        schema = spark.read.parquet(*(first or [path])).schema
         return spark.createDataFrame([], schema).where(pred)
     return spark.read.parquet(*sorted(survivors)).where(pred)
 

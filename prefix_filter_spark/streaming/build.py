@@ -8,8 +8,8 @@ the property the merge tests pin down). Two shapes:
 
 - ``foreach_batch_build``: exactly-once accumulation into a parquet
   state store via foreachBatch (the recommended custom-sink pattern);
-  works for every sketch in the library since they all expose
-  ``merge_states``.
+  works for every sketch in the library: filters merge through their
+  config's family record, the other sketches through ``merge_states``.
 - ``streaming_distinct_by_source``: applyInPandasWithState showcase —
   per-`source` running distinct-token estimate with HLL state kept in
   the streaming state store.
@@ -31,9 +31,8 @@ def foreach_batch_build(
     key_col: str,
     *,
     build_fn: Callable[[DataFrame, str], DataFrame],
-    merge_fn: Callable,  # f(states) or f(states, shard_id) — see
-    # base.merge_shard_states for the dual contract (prefix filter
-    # merges need the shard id for spare re-keying)
+    merge_fn,  # a filter config (its family's shard-aware merge) or
+    # f(states) for the global-state sketches — see base.merge_shard_states
     state_path: str,
     checkpoint_dir: str,
     trigger_once: bool = True,

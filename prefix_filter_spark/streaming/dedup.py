@@ -100,7 +100,7 @@ def streaming_dedup_amq(
         if state.exists:
             (blob,) = state.get
         else:
-            blob = bloom._build_state(cfg, np.zeros(0, dtype=np.uint64))
+            blob = bloom.build_state(cfg, 0, np.zeros(0, dtype=np.uint64))
         for pdf in pdfs:
             hs = as_u64(pdf["_h"].to_numpy())
             if len(hs) == 0:
@@ -114,7 +114,7 @@ def streaming_dedup_amq(
             keep = (~seen) & first
             if keep.any():
                 blob = bloom.merge_states(
-                    [blob, bloom._build_state(cfg, hs[keep])]
+                    [blob, bloom.build_state(cfg, 0, hs[keep])]
                 )
                 out = pdf.loc[keep, ["doc_id", "fingerprint"]].copy()
                 out.insert(1, "shard", int(key[0]))
@@ -178,7 +178,7 @@ def streaming_dedup_amq_aged(
         shard_col(h, cfg.num_shards).alias("shard"),
         doc_fingerprint_col(text_col).alias("fingerprint"),
     )
-    empty = bloom._build_state(cfg, np.zeros(0, dtype=np.uint64))
+    empty = bloom.build_state(cfg, 0, np.zeros(0, dtype=np.uint64))
     blob_len = len(empty)
 
     def update(key, pdfs, state: GroupState):
@@ -204,7 +204,7 @@ def streaming_dedup_amq_aged(
             keep = (~seen) & first
             if keep.any():
                 gens[-1] = bloom.merge_states(
-                    [gens[-1], bloom._build_state(cfg, hs[keep])]
+                    [gens[-1], bloom.build_state(cfg, 0, hs[keep])]
                 )
                 n_cur += int(keep.sum())
                 out = pdf.loc[keep, ["doc_id", "fingerprint"]].copy()

@@ -40,7 +40,7 @@ def test_density_beats_xor_at_large_n():
     rng = np.random.default_rng(3)
     keys = np.sort(np.unique(rng.integers(0, 2**63, 500_000, dtype=np.uint64)))
     cfg = bfuse.BFuseConfig(n_capacity=len(keys), fingerprint_bits=8, num_shards=1)
-    st = bfuse._build_state(cfg, keys)
+    st = bfuse.build_state(cfg, 0, keys)
     bpk = 8 * len(st) / len(keys)
     assert bpk < 9.5, bpk  # xor is 9.84 at any n
     assert bfuse._contains_in_state(st, keys).all()
@@ -68,7 +68,7 @@ def test_small_and_empty_shards():
             else np.array([], dtype=np.uint64)
         )
         cfg = bfuse.BFuseConfig(n_capacity=max(n, 4), fingerprint_bits=8, num_shards=1)
-        st = bfuse._build_state(cfg, keys)
+        st = bfuse.build_state(cfg, 0, keys)
         if n:
             assert bfuse._contains_in_state(st, keys).all()
 

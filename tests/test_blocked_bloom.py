@@ -34,9 +34,9 @@ def test_merge_bit_identical():
     cfg = bb.BlockedBloomConfig(n_capacity=10_000, num_shards=4, seed=3)
     rng = np.random.default_rng(0)
     keys = as_u64(rng.integers(0, 2**63, 10_000, dtype=np.int64))
-    full = bb._build_state(cfg, np.unique(keys))
+    full = bb.build_state(cfg, 0, np.unique(keys))
     parts = np.array_split(keys, 5)
-    partials = [bb._build_state(cfg, np.unique(p)) for p in parts]
+    partials = [bb.build_state(cfg, 0, np.unique(p)) for p in parts]
     import random
 
     for t in range(3):

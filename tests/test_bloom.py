@@ -66,8 +66,8 @@ def test_merge_associativity_bit_identical(built):
     rng = np.random.default_rng(3)
     keys = as_u64(rng.integers(0, 2**63, 5_000, dtype=np.int64))
     parts = np.array_split(keys, 7)
-    partials = [bloom._build_state(cfg, np.unique(p)) for p in parts]
-    full = bloom._build_state(cfg, np.unique(keys))
+    partials = [bloom.build_state(cfg, 0, np.unique(p)) for p in parts]
+    full = bloom.build_state(cfg, 0, np.unique(keys))
     for trial in range(5):
         random.Random(trial).shuffle(partials)
         # random binary merge tree
@@ -127,5 +127,5 @@ def test_state_config_mismatch_raises(spark):
         bad_handle.contains_h([123, 456])
     with _pytest.raises(ValueError):
         bloom.merge_states(
-            [next(iter(handle.states.values())), bloom._build_state(bad, __import__("numpy").arange(5, dtype="uint64"))]
+            [next(iter(handle.states.values())), bloom.build_state(bad, 0, __import__("numpy").arange(5, dtype="uint64"))]
         )

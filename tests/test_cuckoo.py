@@ -47,7 +47,7 @@ def test_no_overflow_at_design_load(cfg):
     at the stable variant's 0.94 design load."""
     rng = np.random.default_rng(1)
     keys = as_u64(rng.integers(0, 2**63, N // cfg.num_shards, dtype=np.int64))
-    state = ck._build_state(cfg, np.unique(keys))
+    state = ck.build_state(cfg, 0, np.unique(keys))
     _, _, nb, table, overflow, _, _, _ = ck._parse_state(state)
     assert len(overflow) == 0
     fill = (table != 0).sum() / (nb * cfg.slots_per_bucket)
@@ -70,9 +70,9 @@ def test_alt_index_symmetric(cfg):
 def test_merge_bit_identical_any_order(cfg):
     rng = np.random.default_rng(3)
     keys = as_u64(rng.integers(0, 2**63, 4000, dtype=np.int64))
-    full = ck._build_state(cfg, np.unique(keys))
+    full = ck.build_state(cfg, 0, np.unique(keys))
     parts = np.array_split(keys, 6)
-    partials = [ck._build_state(cfg, np.unique(p)) for p in parts]
+    partials = [ck.build_state(cfg, 0, np.unique(p)) for p in parts]
     for trial in range(4):
         s = list(partials)
         r = random.Random(trial)
@@ -87,8 +87,8 @@ def test_merge_bit_identical_any_order(cfg):
 def test_arrival_order_free(cfg):
     rng = np.random.default_rng(4)
     keys = as_u64(rng.integers(0, 2**63, 3000, dtype=np.int64))
-    a = ck._build_state(cfg, np.unique(keys))
-    b = ck._build_state(cfg, np.unique(keys[::-1].copy()))
+    a = ck.build_state(cfg, 0, np.unique(keys))
+    b = ck.build_state(cfg, 0, np.unique(keys[::-1].copy()))
     assert a == b
 
 
@@ -147,7 +147,7 @@ def test_config_and_geometry_validation(cfg):
     with pytest.raises(ValueError):
         ck.CuckooConfig(n_capacity=1000, fp_bits=17)
     other = ck.CuckooConfig(n_capacity=N * 4, num_shards=16, seed=8)
-    st = ck._build_state(cfg, np.arange(100, dtype=np.uint64))
+    st = ck.build_state(cfg, 0, np.arange(100, dtype=np.uint64))
     with pytest.raises(ValueError):
         ck.merge_states([st], other)
 
@@ -198,7 +198,7 @@ def test_ss_merge_bit_identical_any_order(ss_cfg):
         np.unique(as_u64(rng.integers(0, 2**63, 2_000, dtype=np.int64)))
         for _ in range(4)
     ]
-    states = [ck._build_state(ss_cfg, p) for p in parts]
+    states = [ck.build_state(ss_cfg, 0, p) for p in parts]
     merged = []
     for _ in range(4):
         random.shuffle(states)
@@ -206,7 +206,7 @@ def test_ss_merge_bit_identical_any_order(ss_cfg):
     assert all(m == merged[0] for m in merged[1:])
     # merged pairs == pairs of a single build over the union
     union = np.unique(np.concatenate(parts))
-    direct = ck._build_state(ss_cfg, union)
+    direct = ck.build_state(ss_cfg, 0, union)
     assert sorted(ck._pairs_of_state(ss_cfg, merged[0]).tolist()) == sorted(
         ck._pairs_of_state(ss_cfg, direct).tolist()
     )
@@ -215,7 +215,7 @@ def test_ss_merge_bit_identical_any_order(ss_cfg):
 def test_ss_delete_and_recount(ss_cfg):
     rng = np.random.default_rng(7)
     keys = np.unique(as_u64(rng.integers(0, 2**63, 4_000, dtype=np.int64)))
-    state = ck._build_state(ss_cfg, keys)
+    state = ck.build_state(ss_cfg, 0, keys)
     n0 = len(ck._pairs_of_state(ss_cfg, state))
     dead = keys[:1_000]
     after = ck.remove_states(state, ss_cfg, dead)
@@ -231,7 +231,7 @@ def test_ss_rejects_plain_state(cfg, ss_cfg):
     rng = np.random.default_rng(9)
     keys = np.unique(as_u64(rng.integers(0, 2**63, 2_000, dtype=np.int64)))
     plain13 = ck.CuckooConfig(n_capacity=N, fp_bits=13, num_shards=16, seed=8)
-    state = ck._build_state(plain13, keys)
+    state = ck.build_state(plain13, 0, keys)
     with pytest.raises(ValueError, match="does not match config"):
         ck.merge_states([state], ss_cfg)
 
@@ -263,7 +263,7 @@ def test_collision_delete_caveat_pinned():
     collider = cand[collides][:1]
     clean = cand[~collides][:1_000]
 
-    state = ck._build_state(small, keys)
+    state = ck.build_state(small, 0, keys)
     assert ck._contains_in_state(small, state, keys).all()
 
     # 1) colliding never-inserted delete erases the shared tag -> the
@@ -291,14 +291,14 @@ def test_cf16_flagless_layout():
     cfg16 = ck.CuckooConfig(n_capacity=60_000, fp_bits=16, num_shards=1, seed=3)
     rng = np.random.default_rng(5)
     keys = np.unique(as_u64(rng.integers(0, 2**63, 60_000, dtype=np.int64)))
-    st = ck._build_state(cfg16, keys)
+    st = ck.build_state(cfg16, 0, keys)
     assert ck._contains_in_state(cfg16, st, keys).all()
     probes = np.setdiff1d(
         np.unique(as_u64(rng.integers(0, 2**63, 400_000, dtype=np.int64))), keys
     )
     fpr = ck._contains_in_state(cfg16, st, probes).mean()
     assert fpr < 4 * 8 / 2**16, fpr  # closed form + generous slack
-    parts = [ck._build_state(cfg16, np.unique(p)) for p in np.array_split(keys, 4)]
+    parts = [ck.build_state(cfg16, 0, np.unique(p)) for p in np.array_split(keys, 4)]
     assert ck.merge_states(parts, cfg16) == st
     dead = keys[:10_000]
     after = ck.remove_states(st, cfg16, dead)

@@ -113,17 +113,17 @@ def test_cuckoo_state_invariants(keys, rnd):
 
     cfg = ck.CuckooConfig(n_capacity=4_000, num_shards=16, seed=3)
     arr = as_u64(np.array(sorted(set(keys)), dtype=np.uint64))
-    state = ck._build_state(cfg, arr)
+    state = ck.build_state(cfg, 0, arr)
     if len(arr):
         assert ck._contains_in_state(cfg, state, arr).all(), "false negative"
     # arrival-order free
     shuffled = list(arr)
     rnd.shuffle(shuffled)
-    assert ck._build_state(cfg, np.unique(as_u64(np.array(shuffled, dtype=np.uint64)))) == state
+    assert ck.build_state(cfg, 0, np.unique(as_u64(np.array(shuffled, dtype=np.uint64)))) == state
     # split anywhere, merge in shuffled order -> bit-identical
     if len(arr) >= 2:
         cut = rnd.randrange(1, len(arr))
-        parts = [ck._build_state(cfg, arr[:cut]), ck._build_state(cfg, arr[cut:])]
+        parts = [ck.build_state(cfg, 0, arr[:cut]), ck.build_state(cfg, 0, arr[cut:])]
         rnd.shuffle(parts)
         assert ck.merge_states(parts, cfg) == state
 
@@ -142,17 +142,17 @@ def test_cuckoo_flagless_state_invariants(keys, fp_bits, rnd):
         semisort=(fp_bits == 13),
     )
     arr = as_u64(np.array(sorted(set(keys)), dtype=np.uint64))
-    state = ck._build_state(cfg, arr)
+    state = ck.build_state(cfg, 0, arr)
     if len(arr):
         assert ck._contains_in_state(cfg, state, arr).all(), "false negative"
     shuffled = list(arr)
     rnd.shuffle(shuffled)
     assert (
-        ck._build_state(cfg, np.unique(as_u64(np.array(shuffled, dtype=np.uint64))))
+        ck.build_state(cfg, 0, np.unique(as_u64(np.array(shuffled, dtype=np.uint64))))
         == state
     )
     if len(arr) >= 2:
         cut = rnd.randrange(1, len(arr))
-        parts = [ck._build_state(cfg, arr[:cut]), ck._build_state(cfg, arr[cut:])]
+        parts = [ck.build_state(cfg, 0, arr[:cut]), ck.build_state(cfg, 0, arr[cut:])]
         rnd.shuffle(parts)
         assert ck.merge_states(parts, cfg) == state

@@ -66,7 +66,7 @@ def test_join_probe_int_probe_column(spark, cfg):
         shards,
         seed=cfg.seed,
         num_shards=cfg.num_shards,
-        probe_fn=probe_fn_for(bloom.ShardedBloom, cfg),
+        probe_fn=probe_fn_for(cfg),
     )
     assert out.filter(~F.col("contains")).count() == 0
 

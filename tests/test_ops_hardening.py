@@ -248,9 +248,9 @@ def test_windowed_streaming_with_watermark(spark):
 
 
 def test_streaming_prefix_filter_build(spark):
-    """PF through the streaming path: merge_fn takes (states, shard_id)
-    (the spare re-keys on global PD index) — final state must equal the
-    batch build bit-for-bit."""
+    """PF through the streaming path: merge_fn is the config, whose
+    family merge receives the shard id (the spare re-keys on global PD
+    index) — final state must equal the batch build bit-for-bit."""
     from prefix_filter_spark.sketches import prefix_filter as pfm
     from prefix_filter_spark.streaming.build import foreach_batch_build
 
@@ -263,14 +263,14 @@ def test_streaming_prefix_filter_build(spark):
         ).parquet(src_dir)
     stream = (
         spark.readStream.schema("key long")
-        .option("maxFilesPerTrigger", 1)  # multi-batch: exercise (states, shard_id) dispatch
+        .option("maxFilesPerTrigger", 1)  # multi-batch: exercise the shard-aware merge
         .parquet(src_dir)
     )
     q = foreach_batch_build(
         stream,
         "key",
         build_fn=lambda df, k: pfm.build_prefix_filter(df, k, cfg),
-        merge_fn=lambda states, sid: pfm.merge_states(states, cfg, sid),
+        merge_fn=cfg,
         state_path=f"{TMP}/pf_stream_state",
         checkpoint_dir=f"{TMP}/pf_stream_ckpt",
     )
@@ -316,7 +316,7 @@ def test_sketch_by_group_salted(spark):
 
 def test_streaming_foreach_batch_cuckoo(spark):
     """Streamed cuckoo accumulation == one-shot batch build bit-for-bit
-    (deterministic rebuild merge under the curried-config contract)."""
+    (deterministic rebuild merge through the config's family record)."""
     from prefix_filter_spark.sketches import cuckoo as ck
     from prefix_filter_spark.streaming.build import foreach_batch_build
 
@@ -337,7 +337,7 @@ def test_streaming_foreach_batch_cuckoo(spark):
         stream,
         "key",
         build_fn=lambda df, k: ck.build_cuckoo(df, k, cfg),
-        merge_fn=lambda states: ck.merge_states(states, cfg),
+        merge_fn=cfg,
         state_path=f"{TMP}/ck_stream_state",
         checkpoint_dir=f"{TMP}/ck_stream_ckpt",
     )

@@ -61,9 +61,9 @@ def test_merge_associativity_bit_identical(cfg):
     rng = np.random.default_rng(5)
     keys = as_u64(rng.integers(0, 2**63, 30_000, dtype=np.int64))
     shard_id = 3
-    full = pf._build_state(cfg, shard_id, np.unique(keys))
+    full = pf.build_state(cfg, shard_id, np.unique(keys))
     parts = np.array_split(keys, 6)
-    partials = [pf._build_state(cfg, shard_id, np.unique(p)) for p in parts]
+    partials = [pf.build_state(cfg, shard_id, np.unique(p)) for p in parts]
     for trial in range(4):
         states = list(partials)
         r = random.Random(trial)
@@ -80,9 +80,9 @@ def test_merge_preserves_overflow_flag(cfg):
     with a subset partial, even if the merged retained set fits."""
     rng = np.random.default_rng(9)
     keys = as_u64(rng.integers(0, 2**63, 40_000, dtype=np.int64))
-    a = pf._build_state(cfg, 0, np.unique(keys))
+    a = pf.build_state(cfg, 0, np.unique(keys))
     sub = np.unique(keys[:100])
-    b = pf._build_state(cfg, 0, sub)
+    b = pf.build_state(cfg, 0, sub)
     merged = pf.merge_states([a, b], cfg, 0)
     assert merged == a  # b ⊆ a ⇒ merge is a no-op, incl. flags & spare
 
@@ -112,8 +112,8 @@ def test_tc_spare_variant(spark, keys_df):
     # merge associativity holds with the TC spare too
     rng = np.random.default_rng(6)
     keys = as_u64(rng.integers(0, 2**63, 20_000, dtype=np.int64))
-    full = pf._build_state(cfg, 2, np.unique(keys))
-    parts = [pf._build_state(cfg, 2, np.unique(p)) for p in np.array_split(keys, 4)]
+    full = pf.build_state(cfg, 2, np.unique(keys))
+    parts = [pf.build_state(cfg, 2, np.unique(p)) for p in np.array_split(keys, 4)]
     merged = pf.merge_states(parts, cfg, 2)
     assert merged == full
 
@@ -135,8 +135,8 @@ def test_cuckoo_spare_variant(spark, keys_df):
     # merge associativity holds with the cuckoo spare too
     rng = np.random.default_rng(7)
     keys = as_u64(rng.integers(0, 2**63, 20_000, dtype=np.int64))
-    full = pf._build_state(cfg, 2, np.unique(keys))
-    parts = [pf._build_state(cfg, 2, np.unique(p)) for p in np.array_split(keys, 4)]
+    full = pf.build_state(cfg, 2, np.unique(keys))
+    parts = [pf.build_state(cfg, 2, np.unique(p)) for p in np.array_split(keys, 4)]
     merged = pf.merge_states(parts, cfg, 2)
     assert merged == full
 
@@ -157,8 +157,8 @@ def test_blocked_spare_variants(spark, keys_df, kind):
     assert fpr <= 0.008, fpr  # blocked spares trade ~2x spare FPR for speed
     rng = np.random.default_rng(8)
     keys = as_u64(rng.integers(0, 2**63, 20_000, dtype=np.int64))
-    full = pf._build_state(cfg, 2, np.unique(keys))
-    parts = [pf._build_state(cfg, 2, np.unique(p)) for p in np.array_split(keys, 4)]
+    full = pf.build_state(cfg, 2, np.unique(keys))
+    parts = [pf.build_state(cfg, 2, np.unique(p)) for p in np.array_split(keys, 4)]
     merged = pf.merge_states(parts, cfg, 2)
     assert merged == full
 
@@ -203,7 +203,7 @@ def test_static_spare_assemblies(spark, keys_df, kind):
     assert fpr <= 0.006, fpr
     rng = np.random.default_rng(9)
     keys = as_u64(rng.integers(0, 2**63, 20_000, dtype=np.int64))
-    parts = [pf._build_state(cfg, 2, np.unique(p)) for p in np.array_split(keys, 4)]
+    parts = [pf.build_state(cfg, 2, np.unique(p)) for p in np.array_split(keys, 4)]
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="build-once"):

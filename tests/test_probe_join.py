@@ -23,7 +23,7 @@ def test_pf_join_probe_equals_broadcast(spark):
         shards,
         seed=cfg.seed,
         num_shards=cfg.num_shards,
-        probe_fn=probe.probe_fn_for(pf.ShardedPrefixFilter, cfg),
+        probe_fn=probe.probe_fn_for(cfg),
         id_cols=["probe_id"],
     ).toPandas()
     assert len(joined) == 200_000
@@ -47,7 +47,7 @@ def test_bloom_join_probe(spark):
         shards,
         seed=cfg.seed,
         num_shards=cfg.num_shards,
-        probe_fn=probe.probe_fn_for(bloom.ShardedBloom, cfg),
+        probe_fn=probe.probe_fn_for(cfg),
     )
     assert out.where("contains").count() == 30_000
     # the probe plan shuffles probes once and never replicates state rows
@@ -67,6 +67,6 @@ def test_cuckoo_join_probe(spark):
         shards,
         seed=cfg.seed,
         num_shards=cfg.num_shards,
-        probe_fn=probe.probe_fn_for(ck.ShardedCuckoo, cfg),
+        probe_fn=probe.probe_fn_for(cfg),
     )
     assert out.where("contains").count() == 30_000

@@ -73,7 +73,7 @@ def test_merge_shuffled_orders_bit_identical():
         rng.integers(0, 2**63, size=2_000, dtype=np.int64).astype(np.uint64)
         for _ in range(4)
     ]
-    states = [qf._build_state(cfg, p) for p in parts]
+    states = [qf.build_state(cfg, 0, p) for p in parts]
     all_at_once = qf.merge_states(states, cfg)
     shuffled = qf.merge_states(
         [qf.merge_states([states[2], states[0]], cfg),
@@ -81,14 +81,14 @@ def test_merge_shuffled_orders_bit_identical():
         cfg,
     )
     assert all_at_once == shuffled
-    direct = qf._build_state(cfg, np.concatenate(parts))
+    direct = qf.build_state(cfg, 0, np.concatenate(parts))
     assert all_at_once == direct  # merge == single-pass build
 
 
 def test_delete_and_collision_caveat():
     cfg = qf.QuotientFilterConfig(n_capacity=5_000, num_shards=1, seed=9)
     h = np.arange(1, 4_001, dtype=np.uint64)
-    state = qf._build_state(cfg, h)
+    state = qf.build_state(cfg, 0, h)
     assert qf.count_state(state) == len(qf._fingerprints(cfg, h))
     dead = h[:500]
     state2 = qf.remove_from_state(cfg, state, dead)
@@ -127,7 +127,7 @@ def test_capacity_guard():
     )
     too_many = np.arange(0, 5_000, dtype=np.uint64) * np.uint64(2**50)
     with pytest.raises(ValueError, match="over capacity"):
-        qf._build_state(cfg, too_many)
+        qf.build_state(cfg, 0, too_many)
 
 
 def test_config_mismatch_raises(built):
@@ -160,9 +160,7 @@ def test_distributed_delete_and_incremental_merge(spark, keys_df):
     partials = qf.build_quotient(half1, "key", cfg).unionAll(
         qf.build_quotient(half2, "key", cfg)
     )
-    merged = merge_shard_states(
-        partials, lambda states: qf.merge_states(states, cfg)
-    )
+    merged = merge_shard_states(partials, cfg)
     direct = qf.build_quotient(keys_df, "key", cfg)
     ms = {r["shard_id"]: bytes(r["state"]) for r in merged.collect()}
     ds = {r["shard_id"]: bytes(r["state"]) for r in direct.collect()}
@@ -206,7 +204,7 @@ def test_streaming_build_equals_batch(spark, tmp_path):
         stream,
         "key",
         build_fn=lambda df, k: qf.build_quotient(df, k, cfg),
-        merge_fn=lambda states: qf.merge_states(states, cfg),
+        merge_fn=cfg,
         state_path=f"{tmp_path}/state",
         checkpoint_dir=f"{tmp_path}/ckpt",
     )
@@ -224,6 +222,6 @@ def test_streaming_build_equals_batch(spark, tmp_path):
 
 def test_empty_state():
     cfg = qf.QuotientFilterConfig(n_capacity=100, num_shards=1, seed=2)
-    state = qf._build_state(cfg, np.zeros(0, dtype=np.uint64))
+    state = qf.build_state(cfg, 0, np.zeros(0, dtype=np.uint64))
     assert qf.count_state(state) == 0
     assert not qf._contains_in_state(state, np.arange(5, dtype=np.uint64)).any()

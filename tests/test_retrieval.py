@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from prefix_filter_spark.functions import register_lookup_udf
 from prefix_filter_spark.sketches import retrieval as rv
+from prefix_filter_spark.sketches.base import build_filter
 
 N = 60_000
 
@@ -30,7 +31,7 @@ def pairs_df(spark):
 def handle(spark, pairs_df):
     cfg = rv.RetrievalConfig(n_capacity=N, value_bits=16, num_shards=16, seed=3)
     return cfg, rv.ShardedRetrieval.from_df(
-        cfg, rv.build_retrieval(pairs_df, "key", "val", cfg)
+        cfg, build_filter(pairs_df, "key", cfg, "val")
     )
 
 
@@ -63,7 +64,7 @@ def test_partition_invariance(spark, pairs_df):
     cfg = rv.RetrievalConfig(n_capacity=N, value_bits=16, num_shards=8, seed=9)
 
     def states(df):
-        rows = rv.build_retrieval(df, "key", "val", cfg).collect()
+        rows = build_filter(df, "key", cfg, "val").collect()
         return {r["shard_id"]: bytes(r["state"]) for r in rows}
 
     a = states(pairs_df.repartition(1))
@@ -77,19 +78,19 @@ def test_duplicates_collapse_and_conflicts_raise(spark):
     v = (h % 251).astype(np.int64)
     dup_h = np.concatenate([h, h[:10]])
     dup_v = np.concatenate([v, v[:10]])
-    state = rv._build_state(cfg, dup_h, dup_v)
+    state = rv.build_state(cfg, 0, dup_h, dup_v)
     assert (rv._lookup_in_state(state, h) == v).all()
     bad_v = dup_v.copy()
     bad_v[-1] ^= 1
     with pytest.raises(ValueError, match="conflicting values"):
-        rv._build_state(cfg, dup_h, bad_v)
+        rv.build_state(cfg, 0, dup_h, bad_v)
 
 
 def test_value_domain_checked():
     cfg = rv.RetrievalConfig(n_capacity=10, value_bits=8, num_shards=1, seed=1)
     h = np.arange(10, dtype=np.uint64)
     with pytest.raises(ValueError, match="values must be in"):
-        rv._build_state(cfg, h, np.full(10, 256, dtype=np.int64))
+        rv.build_state(cfg, 0, h, np.full(10, 256, dtype=np.int64))
     with pytest.raises(ValueError, match="value_bits must be"):
         rv.RetrievalConfig(n_capacity=10, value_bits=12)
 
@@ -97,7 +98,7 @@ def test_value_domain_checked():
 def test_config_mismatch_raises(spark, pairs_df):
     cfg = rv.RetrievalConfig(n_capacity=N, value_bits=16, num_shards=4, seed=5)
     built = rv.ShardedRetrieval.from_df(
-        cfg, rv.build_retrieval(pairs_df.limit(5_000), "key", "val", cfg)
+        cfg, build_filter(pairs_df.limit(5_000), "key", cfg, "val")
     )
     wrong = rv.RetrievalConfig(n_capacity=N, value_bits=16, num_shards=4, seed=6)
     bad = rv.ShardedRetrieval(wrong, built.states)
@@ -112,9 +113,9 @@ def test_merge_raises():
 
 def test_empty_and_value_bits_32(spark):
     cfg = rv.RetrievalConfig(n_capacity=0, value_bits=32, num_shards=1, seed=2)
-    state = rv._build_state(cfg, np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64))
+    state = rv.build_state(cfg, 0, np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64))
     assert len(rv._lookup_in_state(state, np.zeros(0, dtype=np.uint64))) == 0
     h = np.arange(1_000, dtype=np.uint64)
     v = ((h * 2_654_435_761) % (1 << 32)).astype(np.int64)
-    state = rv._build_state(cfg, h, v)
+    state = rv.build_state(cfg, 0, h, v)
     assert (rv._lookup_in_state(state, h) == v).all()

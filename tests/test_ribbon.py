@@ -71,7 +71,7 @@ def test_density_beats_bfuse_at_scale():
     cfg = ribbon.RibbonConfig(
         n_capacity=len(keys), fingerprint_bits=8, num_shards=1, seed=1
     )
-    st = ribbon._build_state(cfg, keys)
+    st = ribbon.build_state(cfg, 0, keys)
     bpk = len(st) * 8 / len(keys)
     # (1+eps)f + w/n + header: 8.8 + ~0.01 — under bfuse's ~1.13f = 9.04
     assert bpk <= 8 * 1.13, bpk
@@ -101,7 +101,7 @@ def test_solution_satisfies_linear_system():
     cfg = ribbon.RibbonConfig(
         n_capacity=len(keys), fingerprint_bits=8, num_shards=1, seed=11
     )
-    state = ribbon._build_state(cfg, keys)
+    state = ribbon.build_state(cfg, 0, keys)
     fp_bits, attempt, m, seed, _ns, z = ribbon._parse_state(state)
     start, coeff, fp = ribbon._derive(keys, seed, attempt, m, fp_bits)
     zl = z.tolist()
@@ -122,7 +122,7 @@ def test_empty_and_tiny_builds():
         cfg = ribbon.RibbonConfig(
             n_capacity=max(n, 4), fingerprint_bits=8, num_shards=1, seed=5
         )
-        st = ribbon._build_state(cfg, np.sort(keys))
+        st = ribbon.build_state(cfg, 0, np.sort(keys))
         if n:
             assert ribbon._contains_in_state(st, keys).all()
 
@@ -133,7 +133,7 @@ def test_fpr_16bit():
     cfg = ribbon.RibbonConfig(
         n_capacity=len(keys), fingerprint_bits=16, num_shards=1, seed=3
     )
-    st = ribbon._build_state(cfg, keys)
+    st = ribbon.build_state(cfg, 0, keys)
     assert ribbon._contains_in_state(st, keys).all()
     neg = np.setdiff1d(
         np.unique(rng.integers(2**63, 2**64 - 1, 200_000, dtype=np.uint64)), keys
@@ -189,7 +189,7 @@ def test_property_build_always_solves_and_has_zero_fn(n, seed):
         n_capacity=max(len(keys), 4), fingerprint_bits=8, num_shards=1,
         seed=seed & 0xFFFF,
     )
-    st_bytes = ribbon._build_state(cfg, np.sort(keys))
+    st_bytes = ribbon.build_state(cfg, 0, np.sort(keys))
     if len(keys):
         assert ribbon._contains_in_state(st_bytes, keys).all()
     neg = np.unique(rng.integers(2**62, 2**63, 2 * max(n, 500), dtype=np.uint64))

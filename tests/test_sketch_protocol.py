@@ -1,8 +1,9 @@
-"""The probe-handle protocol (sketches/base.py ShardedFilter) over every
-sharded filter kind: each handle is its family's ``prepare_state`` +
-``probe_state`` wrapped by the one routing loop.
+"""The filter-family contract (sketches/base.py FilterFamily) over every
+sharded filter kind: each config carries its module's family record,
+and the one build / merge / probe machinery (``ShardedFilter``, the
+family's ``build_state`` / ``merge_states``) resolves the kind from it.
 
-States are built driver-side with each family's ``_build_state`` (no
+States are built driver-side with each family's ``build_state`` (no
 Spark), so the whole matrix runs in seconds.
 """
 
@@ -10,11 +11,13 @@ from __future__ import annotations
 
 import dataclasses
 import functools
+import importlib
 import pickle
 
 import numpy as np
 import pytest
 
+from prefix_filter_spark import registry
 from prefix_filter_spark.hashing import shard_of
 from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches import bfuse as bfm
@@ -32,60 +35,60 @@ N = 4_000
 SHARDS = 4
 MISSING = 2  # shard left out of the handle's states
 
-# kind -> (family module, handle class, config, build(cfg, sid, keys, values))
+# kind -> (family module, config)
 KINDS = {
-    "bloom": (blm, blm.ShardedBloom, blm.BloomConfig(n_capacity=N, num_shards=SHARDS),
-              lambda c, s, k, v: blm._build_state(c, k)),
-    "blocked_bloom": (bbm, bbm.ShardedBlockedBloom,
-                      bbm.BlockedBloomConfig(n_capacity=N, num_shards=SHARDS),
-                      lambda c, s, k, v: bbm._build_state(c, k)),
-    "two_choice": (tcm, tcm.ShardedTwoChoice,
-                   tcm.TwoChoiceConfig(n_capacity=N, num_shards=SHARDS),
-                   lambda c, s, k, v: tcm._build_state(c, k)),
-    "cuckoo": (ckm, ckm.ShardedCuckoo, ckm.CuckooConfig(n_capacity=N, num_shards=SHARDS),
-               lambda c, s, k, v: ckm._build_state(c, k)),
-    "prefix_filter": (pfm, pfm.ShardedPrefixFilter,
-                      pfm.PrefixFilterConfig(n_capacity=N, num_shards=SHARDS),
-                      lambda c, s, k, v: pfm._build_state(c, s, k)),
-    "xor": (xrm, xrm.ShardedXor, xrm.XorConfig(n_capacity=N, num_shards=SHARDS),
-            lambda c, s, k, v: xrm._build_state(c, k)),
-    "bfuse": (bfm, bfm.ShardedBFuse, bfm.BFuseConfig(n_capacity=N, num_shards=SHARDS),
-              lambda c, s, k, v: bfm._build_state(c, k)),
-    "ribbon": (rbm, rbm.ShardedRibbon, rbm.RibbonConfig(n_capacity=N, num_shards=SHARDS),
-               lambda c, s, k, v: rbm._build_state(c, k)),
-    "quotient": (qfm, qfm.ShardedQuotient,
-                 qfm.QuotientFilterConfig(n_capacity=N, num_shards=SHARDS),
-                 lambda c, s, k, v: qfm._build_state(c, k)),
-    "retrieval": (rvm, rvm.ShardedRetrieval,
-                  rvm.RetrievalConfig(n_capacity=N, num_shards=SHARDS),
-                  lambda c, s, k, v: rvm._build_state(c, k, v)),
+    "bloom": (blm, blm.BloomConfig(n_capacity=N, num_shards=SHARDS)),
+    "blocked_bloom": (bbm, bbm.BlockedBloomConfig(n_capacity=N, num_shards=SHARDS)),
+    "two_choice": (tcm, tcm.TwoChoiceConfig(n_capacity=N, num_shards=SHARDS)),
+    "cuckoo": (ckm, ckm.CuckooConfig(n_capacity=N, num_shards=SHARDS)),
+    "prefix_filter": (pfm, pfm.PrefixFilterConfig(n_capacity=N, num_shards=SHARDS)),
+    "xor": (xrm, xrm.XorConfig(n_capacity=N, num_shards=SHARDS)),
+    "bfuse": (bfm, bfm.BFuseConfig(n_capacity=N, num_shards=SHARDS)),
+    "ribbon": (rbm, rbm.RibbonConfig(n_capacity=N, num_shards=SHARDS)),
+    "quotient": (qfm, qfm.QuotientFilterConfig(n_capacity=N, num_shards=SHARDS)),
+    "retrieval": (rvm, rvm.RetrievalConfig(n_capacity=N, num_shards=SHARDS)),
 }
+# the merge contract also covers every other prefix-filter assembly
+MERGE_CASES = {
+    **{kind: cfg for kind, (_m, cfg) in KINDS.items()},
+    **{
+        f"prefix_filter[{spare}]": pfm.PrefixFilterConfig(
+            n_capacity=N, num_shards=SHARDS, spare_kind=spare
+        )
+        for spare in ("tc", "cuckoo", "bbf", "impala512", "xor", "ribbon")
+    },
+}
+# build-once kinds: their family merge raises
+STATIC = {"xor", "bfuse", "ribbon", "retrieval", "prefix_filter[xor]", "prefix_filter[ribbon]"}
 
 _rng = np.random.default_rng(7)
 KEYS = np.unique(_rng.integers(0, 2**64 - 1, size=N, dtype=np.uint64))
-VALUES = (KEYS % np.uint64(1 << 16)).astype(np.int64)
 BATCH = np.concatenate(
     [KEYS, _rng.integers(0, 2**64 - 1, size=N, dtype=np.uint64)]
 ).view(np.int64)  # the int64 xxhash64 column values a UDF receives
 _rng.shuffle(BATCH)
 
 
-def _probe(handle, h):
-    if isinstance(handle, rvm.ShardedRetrieval):
-        return handle.lookup_h(h)
-    return handle.contains_h(h)
+def _values(keys):
+    return (keys % np.uint64(1 << 16)).astype(np.int64)
+
+
+def _build(cfg, sid, keys):
+    """The one build_state signature; the value kind also takes values."""
+    values = (_values(keys),) if isinstance(cfg, rvm.RetrievalConfig) else ()
+    return cfg.family.build_state(cfg, sid, keys, *values)
 
 
 @functools.lru_cache(maxsize=None)
 def _case(kind):
-    family, cls, cfg, build = KINDS[kind]
+    module, cfg = KINDS[kind]
     sid_of_key = shard_of(KEYS, cfg.num_shards)
     states = {
-        sid: build(cfg, sid, KEYS[sid_of_key == sid], VALUES[sid_of_key == sid])
+        sid: _build(cfg, sid, KEYS[sid_of_key == sid])
         for sid in range(cfg.num_shards)
         if sid != MISSING
     }
-    return family, cls, cfg, states
+    return module, cfg, states
 
 
 @pytest.fixture(params=sorted(KINDS))
@@ -94,66 +97,67 @@ def case(request):
 
 
 def test_handle_binds_the_family_functions(case):
-    family, cls, _cfg, _states = case
-    assert issubclass(cls, base.ShardedFilter)
-    assert cls.probe_state is family.probe_state
-    if hasattr(family, "prepare_state"):
-        assert cls.prepare_state is family.prepare_state
-    # the routing loop and handle plumbing live only in the base class
-    for name in ("contains_h", "lookup_h", "from_df", "byte_size", "predecode"):
-        assert name not in cls.__dict__, name
+    module, cfg, states = case
+    family = cfg.family
+    assert isinstance(family, base.FilterFamily)
+    assert family is module.FAMILY is type(cfg).family
+    assert family.build_state is module.build_state
+    assert family.merge_states is module.merge_states
+    assert family.probe_state is module.probe_state
+    assert family.prepare_state is getattr(module, "prepare_state", base._state_as_is)
+    # the handle plumbing lives only in base.ShardedFilter
+    assert base.ShardedFilter(cfg, states).out_dtype is family.out_dtype
 
 
 def test_mixed_batch_equals_per_shard_probe_state(case):
-    family, cls, cfg, states = case
-    got = _probe(cls(cfg, states), BATCH)
-    prepare = getattr(family, "prepare_state", lambda c, s: s)
+    module, cfg, states = case
+    got = base.ShardedFilter(cfg, states).contains_h(BATCH)
     h = BATCH.view(np.uint64)
     sids = shard_of(h, cfg.num_shards)
     assert len(np.unique(sids)) == cfg.num_shards  # really mixed
     want = np.zeros(len(h), dtype=got.dtype)
     for sid, state in states.items():
         m = sids == sid
-        want[m] = family.probe_state(cfg, prepare(cfg, state), sid, h[m])
+        prepared = cfg.family.prepare_state(cfg, state)
+        want[m] = module.probe_state(cfg, prepared, sid, h[m])
     assert np.array_equal(got, want)
     # inserted keys: zero false negatives / exact values
     member = np.isin(h, KEYS) & (sids != MISSING)
     if got.dtype == np.int64:
-        lookup = dict(zip(KEYS.tolist(), VALUES.tolist()))
-        assert all(got[i] == lookup[int(h[i])] for i in np.flatnonzero(member))
+        assert np.array_equal(got[member], _values(h[member]))
     else:
         assert got[member].all()
 
 
 def test_empty_batch(case):
-    _family, cls, cfg, states = case
-    out = _probe(cls(cfg, states), np.zeros(0, dtype=np.int64))
+    _module, cfg, states = case
+    out = base.ShardedFilter(cfg, states).contains_h(np.zeros(0, dtype=np.int64))
     assert len(out) == 0
-    assert out.dtype == (np.int64 if cls is rvm.ShardedRetrieval else bool)
+    assert out.dtype == cfg.family.out_dtype
 
 
 def test_missing_shard_answers_false_or_zero(case):
-    _family, cls, cfg, states = case
+    _module, cfg, states = case
     h = BATCH.view(np.uint64)
     on_missing = BATCH[shard_of(h, cfg.num_shards) == MISSING]
     assert len(on_missing) > 0
-    assert not _probe(cls(cfg, states), on_missing).any()
+    assert not base.ShardedFilter(cfg, states).contains_h(on_missing).any()
 
 
 def test_other_seed_raises(case):
-    _family, cls, cfg, states = case
+    _module, cfg, states = case
     other = dataclasses.replace(cfg, seed=cfg.seed + 1)
     with pytest.raises(ValueError):
-        _probe(cls(other, states), BATCH)
+        base.ShardedFilter(other, states).contains_h(BATCH)
 
 
 def test_pickle_after_predecode_identical(case):
-    _family, cls, cfg, states = case
-    handle = cls(cfg, states)
-    want = _probe(handle, BATCH)
+    _module, cfg, states = case
+    handle = base.ShardedFilter(cfg, states)
+    want = handle.contains_h(BATCH)
     assert handle.predecode() is handle
     clone = pickle.loads(pickle.dumps(handle, protocol=pickle.HIGHEST_PROTOCOL))
-    assert np.array_equal(_probe(clone, BATCH), want)
+    assert np.array_equal(clone.contains_h(BATCH), want)
     assert clone.byte_size() == handle.byte_size() == sum(map(len, states.values()))
 
 
@@ -164,10 +168,44 @@ def test_pickle_after_predecode_identical(case):
 def test_state_prepared_as_itself_is_pickled_once(kind):
     """A prepared value that IS the state must be the same bytes object,
     so the broadcast pickle stores the state once, not twice."""
-    _family, cls, cfg, states = _case(kind)
-    handle = cls(cfg, states)
+    _module, cfg, states = _case(kind)
+    handle = base.ShardedFilter(cfg, states)
     size_before = len(pickle.dumps(handle, protocol=pickle.HIGHEST_PROTOCOL))
     handle.predecode()
     assert all(handle.prepared(sid) is st for sid, st in states.items())
     size_after = len(pickle.dumps(handle, protocol=pickle.HIGHEST_PROTOCOL))
     assert size_after - size_before < 64 * len(states)
+
+
+@pytest.mark.parametrize("kind", sorted(MERGE_CASES))
+def test_family_merge_of_two_partials(kind):
+    """Merging two same-shard partials answers every member key, and —
+    as every mergeable module's docstring promises — equals the one-pass
+    build byte for byte. Build-once kinds raise instead."""
+    cfg = MERGE_CASES[kind]
+    sid = 1
+    keys = KEYS[shard_of(KEYS, cfg.num_shards) == sid]
+    partials = [_build(cfg, sid, keys[::2]), _build(cfg, sid, keys[1::2])]
+    if kind in STATIC:
+        with pytest.raises(ValueError):
+            cfg.family.merge_states(partials, cfg, sid)
+        return
+    merged = cfg.family.merge_states(partials, cfg, sid)
+    assert base.ShardedFilter(cfg, {sid: merged}).contains_h(keys).all()
+    assert merged == _build(cfg, sid, keys)
+
+
+def test_every_lookup_sketch_has_a_family_record():
+    """The registry cannot drift from the family records: every LOOKUP
+    sketch's module declares one, and each kind's sketch name resolves
+    back to that module."""
+    lookup = {
+        name: info
+        for name, info in registry.REGISTRY.items()
+        if info.functionality & registry.Capability.LOOKUP
+    }
+    assert len(lookup) == len(KINDS)
+    for name, info in lookup.items():
+        assert isinstance(importlib.import_module(info.module).FAMILY, base.FilterFamily), name
+    for module, cfg in KINDS.values():
+        assert registry.info(cfg.family.sketch_name(cfg)).module == module.__name__

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from prefix_filter_spark.sources import iceberg as ice
 from prefix_filter_spark.sources.file_index import (
     FileIndexConfig,
+    _decode_file_uri,
     build_file_index,
 )
 from prefix_filter_spark.sources.skipping import (
@@ -419,7 +420,7 @@ def test_expire_snapshots_vacuum(spark, li, tmp_path):
     ice.compact_table(spark, tbl, num_files=1)                             # s3 replace
     ice.write_table(li.limit(50).repartition(1), tbl)                      # s4 append
     before_rows = ice.read_table(spark, tbl).count()
-    s1_files = [ice._local(f) for f in ice.load_manifest(tbl)[0]["files"]]
+    s1_files = [_decode_file_uri(f) for f in ice.load_manifest(tbl)[0]["files"]]
 
     # keep_last=1 anchors back to the replace (s3): s1+s2 expire
     out = ice.expire_snapshots(tbl, keep_last=1)
@@ -449,3 +450,27 @@ def test_schema_evolution_merge_schema(spark, li, tmp_path):
     assert set(got.columns) == {"l_orderkey", "lang"}
     assert got.count() == 150
     assert got.where(F.col("lang").isNull()).count() == 100
+
+
+def test_table_under_percent_encoded_path(spark, li, tmp_path):
+    """A table whose path holds a space and a literal ``%20``: manifests
+    list percent-encoded URIs, so every read decodes them once (an
+    encoded URI read as a path doubles the escapes: PATH_NOT_FOUND)."""
+    tbl = str(tmp_path / "tbl with space%20x")
+    idx_path = str(tmp_path / "idx")
+    cfg = FileIndexConfig(bits_per_key=14, expected_keys_per_file=4096)
+    ice.write_table(li.limit(600).repartition(2), tbl, mode="overwrite")
+    ice.write_table(li.limit(300).repartition(1), tbl)
+    assert ice.read_table(spark, tbl).count() == 900
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 3
+    key = int(ice.read_table(spark, tbl).first()["l_orderkey"])
+    got = skipping_read(
+        spark,
+        ice.content_files(tbl),
+        "l_orderkey",
+        [key],
+        index_df=spark.read.parquet(idx_path),
+        cfg=cfg,
+    )
+    want = ice.read_table(spark, tbl).where(F.col("l_orderkey") == key)
+    assert got.count() == want.count() > 0

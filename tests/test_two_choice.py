@@ -35,7 +35,7 @@ def test_zero_fn_and_fpr(spark, cfg):
 def test_little_overflow_at_design_load(cfg):
     rng = np.random.default_rng(1)
     keys = as_u64(rng.integers(0, 2**63, N // cfg.num_shards, dtype=np.int64))
-    state = tc._build_state(cfg, np.unique(keys))
+    state = tc.build_state(cfg, 0, np.unique(keys))
     _, _, _, _, overflow, _, _ = tc._parse_state(state)
     assert len(overflow) < len(keys) * 0.01  # two-choice keeps overflow tiny
 
@@ -43,9 +43,9 @@ def test_little_overflow_at_design_load(cfg):
 def test_merge_bit_identical_any_order(cfg):
     rng = np.random.default_rng(2)
     keys = as_u64(rng.integers(0, 2**63, 20_000, dtype=np.int64))
-    full = tc._build_state(cfg, np.unique(keys))
+    full = tc.build_state(cfg, 0, np.unique(keys))
     parts = np.array_split(keys, 6)
-    partials = [tc._build_state(cfg, np.unique(p)) for p in parts]
+    partials = [tc.build_state(cfg, 0, np.unique(p)) for p in parts]
     for t in range(4):
         s = list(partials)
         r = random.Random(t)
@@ -60,8 +60,8 @@ def test_merge_bit_identical_any_order(cfg):
 def test_arrival_order_free(cfg):
     rng = np.random.default_rng(3)
     keys = as_u64(rng.integers(0, 2**63, 10_000, dtype=np.int64))
-    a = tc._build_state(cfg, np.unique(keys))
-    b = tc._build_state(cfg, np.unique(rng.permutation(keys)))
+    a = tc.build_state(cfg, 0, np.unique(keys))
+    b = tc.build_state(cfg, 0, np.unique(rng.permutation(keys)))
     assert a == b
 
 
@@ -132,7 +132,7 @@ def test_config_and_geometry_validation(cfg):
     with _pytest.raises(ValueError):
         tc.TwoChoiceConfig(n_capacity=1000, fp_bits=15)
     other = tc.TwoChoiceConfig(n_capacity=N, num_shards=16, seed=99)
-    st = tc._build_state(cfg, np.arange(100, dtype=np.uint64))
+    st = tc.build_state(cfg, 0, np.arange(100, dtype=np.uint64))
     with _pytest.raises(ValueError):
         tc.merge_states([st], other)  # same geometry, different seed
     with _pytest.raises(ValueError):

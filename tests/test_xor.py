@@ -78,7 +78,7 @@ def _sequential_reference(cfg, hashes):
     RESULTING FILTER SEMANTICS (membership of every key; the slot
     assignment itself may differ, that's fine — only the probe contract
     matters)."""
-    state = xor._build_state(cfg, hashes)
+    state = xor.build_state(cfg, 0, hashes)
     return xor._contains_in_state(state, hashes)
 
 
@@ -94,7 +94,7 @@ def test_fpr_16bit():
     rng = np.random.default_rng(5)
     keys = np.sort(np.unique(rng.integers(0, 2**63, 50_000, dtype=np.uint64)))
     cfg = xor.XorConfig(n_capacity=len(keys), fingerprint_bits=16, num_shards=1, seed=3)
-    st = xor._build_state(cfg, keys)
+    st = xor.build_state(cfg, 0, keys)
     assert xor._contains_in_state(st, keys).all()
     neg = np.setdiff1d(
         np.unique(rng.integers(2**63, 2**64 - 1, 200_000, dtype=np.uint64)), keys
@@ -143,7 +143,7 @@ def test_property_build_always_peels_and_has_zero_fn(n, seed):
     rng = np.random.default_rng(seed)
     keys = np.unique(rng.integers(0, 2**62, n, dtype=np.uint64)) if n else np.array([], dtype=np.uint64)
     cfg = xor.XorConfig(n_capacity=max(len(keys), 4), fingerprint_bits=8, num_shards=1, seed=seed & 0xFFFF)
-    st_bytes = xor._build_state(cfg, np.sort(keys))
+    st_bytes = xor.build_state(cfg, 0, np.sort(keys))
     if len(keys):
         assert xor._contains_in_state(st_bytes, keys).all()
     neg = np.unique(rng.integers(2**62, 2**63, 2 * max(n, 500), dtype=np.uint64))

@@ -68,7 +68,7 @@ def main() -> int:
     joined = probe.probe_via_join(
         probes, "key", shards,
         seed=cfg.seed, num_shards=cfg.num_shards,
-        probe_fn=probe.probe_fn_for(bloom.ShardedBloom, cfg),
+        probe_fn=probe.probe_fn_for(cfg),
     )
     # plan audit: no broadcast of the state side, cogroup evaluation
     plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -86,7 +86,7 @@ def main() -> int:
     member_joined = probe.probe_via_join(
         members, "key", shards,
         seed=cfg.seed, num_shards=cfg.num_shards,
-        probe_fn=probe.probe_fn_for(bloom.ShardedBloom, cfg),
+        probe_fn=probe.probe_fn_for(cfg),
     )
     member_found = member_joined.where("contains").count()
     zero_fn = member_found == n_probes

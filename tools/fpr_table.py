@@ -26,6 +26,7 @@ def main() -> int:
     from prefix_filter_spark.functions import register_contains_udf
     from prefix_filter_spark.session import get_spark
     from prefix_filter_spark.sketches import (
+        base,
         blocked_bloom as bb,
         bloom,
         cuckoo as ck,
@@ -49,70 +50,45 @@ def main() -> int:
     # (fastrange), Impala512, the three Prefix_Filter assemblies, bare
     # TC_shortcut — plus the semisorted CF-13 space point
     filters = [
-        ("PF[Bloom]", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17)),
-        ("PF[TC]", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="tc")),
-        ("PF[CF12]", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="cuckoo")),
-        ("PF[BBF-Fixed]", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="bbf")),
-        ("PF[Impala512]", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="impala512")),
-        ("PF[Xor8]", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="xor")),
-        ("PF[Ribbon8]", pfm.build_prefix_filter, pfm.ShardedPrefixFilter,
-         pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="ribbon")),
-        ("Bloom-8", bloom.build_bloom, bloom.ShardedBloom,
-         bloom.BloomConfig(n_capacity=n, bits_per_key=8, num_shards=32, seed=17)),
-        ("Bloom-12", bloom.build_bloom, bloom.ShardedBloom,
-         bloom.BloomConfig(n_capacity=n, bits_per_key=12, num_shards=32, seed=17)),
-        ("Bloom-16", bloom.build_bloom, bloom.ShardedBloom,
-         bloom.BloomConfig(n_capacity=n, bits_per_key=16, num_shards=32, seed=17)),
-        ("BBF", bb.build_blocked_bloom, bb.ShardedBlockedBloom,
-         bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, block_bytes=32,
-                               num_shards=32, seed=17, pow2_blocks=True)),
-        ("BBF-Fixed", bb.build_blocked_bloom, bb.ShardedBlockedBloom,
-         bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, block_bytes=32, num_shards=32, seed=17)),
-        ("Impala512", bb.build_blocked_bloom, bb.ShardedBlockedBloom,
-         bb.BlockedBloomConfig(n_capacity=n, bits_per_key=12, block_bytes=64, num_shards=32, seed=17)),
-        ("TC", tc.build_two_choice, tc.ShardedTwoChoice,
-         tc.TwoChoiceConfig(n_capacity=n, num_shards=32, seed=17)),
-        ("CF-8", ck.build_cuckoo, ck.ShardedCuckoo,
-         ck.CuckooConfig(n_capacity=n, fp_bits=8, num_shards=32, seed=17)),
-        ("CF-12", ck.build_cuckoo, ck.ShardedCuckoo,
-         ck.CuckooConfig(n_capacity=n, num_shards=32, seed=17)),
-        ("CF-16", ck.build_cuckoo, ck.ShardedCuckoo,
-         ck.CuckooConfig(n_capacity=n, fp_bits=16, num_shards=32, seed=17)),
-        ("CF-13-ss", ck.build_cuckoo, ck.ShardedCuckoo,
-         ck.CuckooConfig(n_capacity=n, fp_bits=13, num_shards=32, seed=17,
-                         semisort=True)),
-        ("Xor-8", xorm.build_xor, xorm.ShardedXor,
-         xorm.XorConfig(n_capacity=n, fingerprint_bits=8, num_shards=32, seed=17)),
-        ("Xor-16", xorm.build_xor, xorm.ShardedXor,
-         xorm.XorConfig(n_capacity=n, fingerprint_bits=16, num_shards=32, seed=17)),
+        ("PF[Bloom]", pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17)),
+        ("PF[TC]", pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="tc")),
+        ("PF[CF12]", pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="cuckoo")),
+        ("PF[BBF-Fixed]", pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="bbf")),
+        ("PF[Impala512]", pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="impala512")),
+        ("PF[Xor8]", pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="xor")),
+        ("PF[Ribbon8]", pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=17, spare_kind="ribbon")),
+        ("Bloom-8", bloom.BloomConfig(n_capacity=n, bits_per_key=8, num_shards=32, seed=17)),
+        ("Bloom-12", bloom.BloomConfig(n_capacity=n, bits_per_key=12, num_shards=32, seed=17)),
+        ("Bloom-16", bloom.BloomConfig(n_capacity=n, bits_per_key=16, num_shards=32, seed=17)),
+        ("BBF", bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, block_bytes=32,
+                                      num_shards=32, seed=17, pow2_blocks=True)),
+        ("BBF-Fixed", bb.BlockedBloomConfig(n_capacity=n, bits_per_key=10, block_bytes=32, num_shards=32, seed=17)),
+        ("Impala512", bb.BlockedBloomConfig(n_capacity=n, bits_per_key=12, block_bytes=64, num_shards=32, seed=17)),
+        ("TC", tc.TwoChoiceConfig(n_capacity=n, num_shards=32, seed=17)),
+        ("CF-8", ck.CuckooConfig(n_capacity=n, fp_bits=8, num_shards=32, seed=17)),
+        ("CF-12", ck.CuckooConfig(n_capacity=n, num_shards=32, seed=17)),
+        ("CF-16", ck.CuckooConfig(n_capacity=n, fp_bits=16, num_shards=32, seed=17)),
+        ("CF-13-ss", ck.CuckooConfig(n_capacity=n, fp_bits=13, num_shards=32, seed=17,
+                                     semisort=True)),
+        ("Xor-8", xorm.XorConfig(n_capacity=n, fingerprint_bits=8, num_shards=32, seed=17)),
+        ("Xor-16", xorm.XorConfig(n_capacity=n, fingerprint_bits=16, num_shards=32, seed=17)),
         # 2 shards => ~n/2 keys per shard: the fuse layout's density
         # advantage only materializes at large per-shard batches
-        ("BFuse-8", bfm.build_bfuse, bfm.ShardedBFuse,
-         bfm.BFuseConfig(n_capacity=n, fingerprint_bits=8, num_shards=2, seed=17)),
+        ("BFuse-8", bfm.BFuseConfig(n_capacity=n, fingerprint_bits=8, num_shards=2, seed=17)),
         # banded-Gaussian solve at eps=0.10: ~1.10f bits/key — the
         # densest static row (vs xor 1.23f, bfuse ~1.13f)
-        ("Ribbon-8", rbm.build_ribbon, rbm.ShardedRibbon,
-         rbm.RibbonConfig(n_capacity=n, fingerprint_bits=8, num_shards=32, seed=17)),
-        ("Ribbon-16", rbm.build_ribbon, rbm.ShardedRibbon,
-         rbm.RibbonConfig(n_capacity=n, fingerprint_bits=16, num_shards=32, seed=17)),
+        ("Ribbon-8", rbm.RibbonConfig(n_capacity=n, fingerprint_bits=8, num_shards=32, seed=17)),
+        ("Ribbon-16", rbm.RibbonConfig(n_capacity=n, fingerprint_bits=16, num_shards=32, seed=17)),
         # RSQF layout: the mergeable + delete-capable fingerprint row;
         # (r+2)/alpha bits/key, with 2^ceil slot rounding the actual
         # load can halve (documented in sketches/quotient.py)
-        ("QF-8", qfm.build_quotient, qfm.ShardedQuotient,
-         qfm.QuotientFilterConfig(n_capacity=n, remainder_bits=8, num_shards=32, seed=17)),
-        ("QF-16", qfm.build_quotient, qfm.ShardedQuotient,
-         qfm.QuotientFilterConfig(n_capacity=n, remainder_bits=16, num_shards=32, seed=17)),
+        ("QF-8", qfm.QuotientFilterConfig(n_capacity=n, remainder_bits=8, num_shards=32, seed=17)),
+        ("QF-16", qfm.QuotientFilterConfig(n_capacity=n, remainder_bits=16, num_shards=32, seed=17)),
     ]
 
     rows = []
-    for name, build, handle_cls, cfg in filters:
-        handle = handle_cls.from_df(cfg, build(keys, "key", cfg))
+    for name, cfg in filters:
+        handle = base.ShardedFilter.from_df(cfg, base.build_filter(keys, "key", cfg))
         fn = register_contains_udf(spark, f"fpr_{name.replace('[','_').replace(']','')}", handle, cfg.seed)
         found = keys.where(fn("key")).count()
         if found != n:

@@ -27,7 +27,7 @@ def main() -> int:
 
     from prefix_filter_spark.functions import register_contains_udf
     from prefix_filter_spark.session import get_spark
-    from prefix_filter_spark.sketches import bloom, prefix_filter as pfm
+    from prefix_filter_spark.sketches import base, bloom, prefix_filter as pfm
 
     # build stages keep full task parallelism (AQE's byte-based
     # coalescing can't see per-group Python compute — bench.py has the
@@ -38,9 +38,6 @@ def main() -> int:
     )
     if kind == "pf":
         cfg = pfm.PrefixFilterConfig(n_capacity=n, num_shards=32, seed=23)
-        build = lambda df: pfm.build_prefix_filter(df, "key", cfg)  # noqa: E731
-        merge = lambda states, sid: pfm.merge_states(states, cfg, sid)  # noqa: E731
-        handle_cls = pfm.ShardedPrefixFilter
     elif kind == "qf":
         # the quotient filter IS this protocol's natural subject: the
         # only fingerprint filter here whose per-round partial states
@@ -48,14 +45,9 @@ def main() -> int:
         from prefix_filter_spark.sketches import quotient as qfm
 
         cfg = qfm.QuotientFilterConfig(n_capacity=n, num_shards=32, seed=23)
-        build = lambda df: qfm.build_quotient(df, "key", cfg)  # noqa: E731
-        merge = lambda states, sid: qfm.merge_states(states, cfg)  # noqa: E731
-        handle_cls = qfm.ShardedQuotient
     else:
         cfg = bloom.BloomConfig(n_capacity=n, bits_per_key=12, num_shards=32, seed=23)
-        build = lambda df: bloom.build_bloom(df, "key", cfg)  # noqa: E731
-        merge = lambda states, sid: bloom.merge_states(states)  # noqa: E731
-        handle_cls = bloom.ShardedBloom
+    merge = cfg.family.merge_states
 
     slice_n = n // ROUNDS
     probes_n = 200_000
@@ -84,13 +76,13 @@ def main() -> int:
         t0 = time.perf_counter()
         partial = {
             row["shard_id"]: bytes(row["state"])
-            for row in build(slice_df).collect()
+            for row in base.build_filter(slice_df, "key", cfg).collect()
         }
         for sid, st in partial.items():
-            state[sid] = st if sid not in state else merge([state[sid], st], sid)
+            state[sid] = st if sid not in state else merge([state[sid], st], cfg, sid)
         t_add = time.perf_counter() - t0
 
-        handle = handle_cls(cfg, dict(state))
+        handle = base.ShardedFilter(cfg, dict(state))
         fn = register_contains_udf(spark, f"inc_{kind}_{r}", handle, cfg.seed)
         if prev_fn is not None and prev_fn.broadcast is not None:
             # each round broadcasts the full cumulative state; without
