@@ -19,6 +19,8 @@ arithmetic (numpy semantics match C uint64).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 # splitmix64 constants (Steele et al., public domain; same mixer family as
@@ -66,10 +68,18 @@ def splitmix64(x) -> np.ndarray:
         np.seterr(**old)
 
 
+@functools.lru_cache(maxsize=4096)
+def _seed_key(seed: int) -> np.uint64:
+    return splitmix64(np.uint64(seed & 0xFFFFFFFFFFFFFFFF))
+
+
 def mix_with_seed(x, seed: int) -> np.ndarray:
-    """Seeded remix: splitmix64(x ^ splitmix64(seed))."""
-    s = splitmix64(np.uint64(seed & 0xFFFFFFFFFFFFFFFF))
-    return splitmix64(as_u64(x) ^ s)
+    """Seeded remix: splitmix64(x ^ splitmix64(seed)).
+
+    The seed key is cached: Bloom and blocked Bloom call this once per
+    shard slice with the same seed.
+    """
+    return splitmix64(as_u64(x) ^ _seed_key(seed))
 
 
 def fastrange32(h32, n: int) -> np.ndarray:

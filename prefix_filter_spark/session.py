@@ -2,13 +2,72 @@
 
 Local mode for tests/bench; the same config keys are what we would set
 cluster-side (AQE, Arrow, shuffle-partition sizing).
+
+Importing this module (the package ``__init__`` does) also makes
+zip-archive cache invalidation stat-checked on CPython < 3.13; see
+``_install_zip_stat_check``.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _install_zip_stat_check() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when it changed.
+
+    A PySpark worker calls ``importlib.invalidate_caches()`` at the
+    start of every task. On CPython < 3.13 every ``zipimporter`` then
+    re-reads its archive's whole central directory, and a worker holds
+    one importer per subpackage of ``pyspark.zip`` — a fixed ~200 ms
+    per task. The replacement re-reads only when the archive's
+    ``(st_mtime_ns, st_size)`` differs from the last read or ``stat``
+    fails, so a changed archive is still re-read; importers of one
+    archive share that read, as the stdlib's directory cache already
+    does. Every library UDF imports this package when its task
+    unpickles it, so each reused worker pays from its second task on.
+    Idempotent; a no-op on 3.13+, whose invalidation is lazy.
+    """
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or hasattr(cls.invalidate_caches, "_reads"):
+        return
+    reread = cls.invalidate_caches
+    reads: dict[str, tuple[tuple[int, int], dict]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        seen = reads.get(self.archive)
+        if stamp is not None and seen is not None and seen[0] == stamp:
+            self._files = zipimport._zip_directory_cache[self.archive] = seen[1]
+            return
+        # stat before the read: a write racing the read changes the
+        # stamp, so the next call reads again
+        reread(self)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is None or files is None:
+            reads.pop(self.archive, None)
+        else:
+            reads[self.archive] = (stamp, files)
+
+    invalidate_caches._reads = reads
+    cls.invalidate_caches = invalidate_caches
+    # importers made before this import: one fresh read per archive
+    # gives them a known stamp, so the next task start reads nothing
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, cls):
+            finder.invalidate_caches()
+
+
+_install_zip_stat_check()
 
 
 def get_spark(

@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 
 from prefix_filter_spark import hashing
 
@@ -7,6 +8,26 @@ def test_splitmix64_known_values():
     # splitmix64(0..2) published sequence (seed=0 stream)
     got = hashing.splitmix64(np.arange(3, dtype=np.uint64))
     assert got[0] == np.uint64(0xE220A8397B1DCDAF)
+
+
+def _splitmix64_py(x: int) -> int:
+    m = 2**64 - 1
+    z = (x + 0x9E3779B97F4A7C15) & m
+    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & m
+    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & m
+    return z ^ (z >> 31)
+
+
+@pytest.mark.parametrize("seed", [0, 42, -1, -(2**63), 2**63, 2**64 - 1, 0xF17E])
+def test_mix_with_seed_pinned(seed):
+    """mix_with_seed(x, s) == splitmix64(x ^ splitmix64(s mod 2**64)),
+    bit for bit, on the first call and on a cached second call."""
+    x = np.array([0, 1, 2**63, 2**64 - 1, 0x0123456789ABCDEF], dtype=np.uint64)
+    key = _splitmix64_py(seed % 2**64)
+    expect = np.array([_splitmix64_py(int(v) ^ key) for v in x], dtype=np.uint64)
+    for _ in range(2):
+        np.testing.assert_array_equal(hashing.mix_with_seed(x, seed), expect)
+    np.testing.assert_array_equal(hashing.mix_with_seed(x.view(np.int64), seed), expect)
 
 
 def test_fastrange_bounds_and_uniformity():
