@@ -26,10 +26,12 @@ def _install_zip_stat_check() -> None:
     re-reads its archive's whole central directory, and a worker holds
     one importer per subpackage of ``pyspark.zip`` — a fixed ~200 ms
     per task. The replacement re-reads only when the archive's
-    ``(st_mtime_ns, st_size)`` differs from the last read or ``stat``
-    fails, so a changed archive is still re-read; importers of one
-    archive share that read, as the stdlib's directory cache already
-    does. Every library UDF imports this package when its task
+    ``(st_ino, st_size, st_mtime_ns, st_ctime_ns)`` differs from the
+    last read or ``stat`` fails, so a changed archive is still re-read,
+    also one rewritten at the same size with its mtime carried over
+    (``cp -p``, ``touch -r``): ``utime`` cannot set ctime. Importers of
+    one archive share that read, as the stdlib's directory cache
+    already does. Every library UDF imports this package when its task
     unpickles it, so each reused worker pays from its second task on.
     Idempotent; a no-op on 3.13+, whose invalidation is lazy.
     """
@@ -37,12 +39,12 @@ def _install_zip_stat_check() -> None:
     if sys.version_info >= (3, 13) or hasattr(cls.invalidate_caches, "_reads"):
         return
     reread = cls.invalidate_caches
-    reads: dict[str, tuple[tuple[int, int], dict]] = {}
+    reads: dict[str, tuple[tuple[int, int, int, int], dict]] = {}
 
     def invalidate_caches(self):
         try:
             st = os.stat(self.archive)
-            stamp = (st.st_mtime_ns, st.st_size)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
         except OSError:
             stamp = None
         seen = reads.get(self.archive)

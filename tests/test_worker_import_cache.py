@@ -8,6 +8,7 @@ happen only for an archive that changed. These tests count calls to
 """
 
 import importlib
+import os
 import sys
 import uuid
 import zipfile
@@ -92,6 +93,30 @@ def test_rewritten_archive_is_reread(zip_pkg, count_reads):
     # one read, shared by every importer of the archive
     assert count_reads == [archive]
     assert importlib.import_module(f"{pkg}.fresh").NAME == "fresh"
+
+
+def test_same_size_rewrite_with_old_mtime_is_reread(zip_pkg, count_reads):
+    """A rewrite in place that keeps the archive's size and mtime
+    (``cp -p``, ``touch -r``) is still seen, through its ctime."""
+    archive, pkg, write = zip_pkg
+    write(["old_a"])
+    importlib.import_module(f"{pkg}.sub")
+    importlib.invalidate_caches()
+    before = os.stat(archive)
+    write(["new_b"])
+    # carry the old mtime over; `utime` moves ctime to now, so repeat it
+    # until a coarse clock has ticked past the old ctime
+    os.utime(archive, ns=(before.st_atime_ns, before.st_mtime_ns))
+    while os.stat(archive).st_ctime_ns == before.st_ctime_ns:
+        os.utime(archive, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = os.stat(archive)
+    assert (after.st_ino, after.st_size, after.st_mtime_ns) == (
+        before.st_ino, before.st_size, before.st_mtime_ns
+    )
+    count_reads.clear()
+    importlib.invalidate_caches()
+    assert count_reads == [archive]
+    assert importlib.import_module(f"{pkg}.new_b").NAME == "new_b"
 
 
 def test_missing_archive_is_dropped(zip_pkg, count_reads, tmp_path):
