@@ -23,17 +23,22 @@ def _install_zip_stat_check() -> None:
 
     A PySpark worker calls ``importlib.invalidate_caches()`` at the
     start of every task. On CPython < 3.13 every ``zipimporter`` then
-    re-reads its archive's whole central directory, and a worker holds
-    one importer per subpackage of ``pyspark.zip`` — a fixed ~200 ms
-    per task. The replacement re-reads only when the archive's
-    ``(st_ino, st_size, st_mtime_ns, st_ctime_ns)`` differs from the
-    last read or ``stat`` fails, so a changed archive is still re-read,
-    also one rewritten at the same size with its mtime carried over
-    (``cp -p``, ``touch -r``): ``utime`` cannot set ctime. Importers of
-    one archive share that read, as the stdlib's directory cache
-    already does. Every library UDF imports this package when its task
-    unpickles it, so each reused worker pays from its second task on.
-    Idempotent; a no-op on 3.13+, whose invalidation is lazy.
+    re-reads its archive's whole central directory, and a Spark 4.1
+    worker holds 16 (over ``pyspark.zip``, py4j's zip and the
+    spark-core jar): a fixed ~200 ms per task. The replacement re-reads
+    only when the archive's ``(st_ino, st_size, st_mtime_ns,
+    st_ctime_ns)`` differs from the last read or ``stat`` fails, so a
+    changed archive is still re-read, also one rewritten at the same
+    size with its mtime carried over (``cp -p``, ``touch -r``):
+    ``utime`` cannot set ctime. Importers of one archive share that
+    read, as the stdlib's directory cache already does.
+
+    Every library UDF imports this package when its task unpickles it.
+    The worker's next task start reads each archive once to learn its
+    stamp; later task starts read nothing. Installing reads nothing, so
+    a worker that runs a single task (``spark.python.worker.reuse``
+    off) pays no more than without it. Idempotent; a no-op on 3.13+,
+    whose invalidation is lazy.
     """
     cls = zipimport.zipimporter
     if sys.version_info >= (3, 13) or hasattr(cls.invalidate_caches, "_reads"):
@@ -62,11 +67,6 @@ def _install_zip_stat_check() -> None:
 
     invalidate_caches._reads = reads
     cls.invalidate_caches = invalidate_caches
-    # importers made before this import: one fresh read per archive
-    # gives them a known stamp, so the next task start reads nothing
-    for finder in list(sys.path_importer_cache.values()):
-        if isinstance(finder, cls):
-            finder.invalidate_caches()
 
 
 _install_zip_stat_check()
