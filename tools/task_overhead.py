@@ -114,8 +114,10 @@ def measure() -> dict:
         "udf 1M ms": _median_ms(agg(big, zeros("id"))),
     }
     one = small.coalesce(1)
+    # collect, not first(): a task cut short by a limit may not return
+    # its worker to the pool, so the next run would start a fresh one
     runs = [
-        one.mapInPandas(invalidate_cost, "ms double, reads long, importers long").first()
+        one.mapInPandas(invalidate_cost, "ms double, reads long, importers long").collect()[0]
         for _ in range(REPS + 2)
     ][2:]
     row["invalidate ms"] = statistics.median(r.ms for r in runs)
