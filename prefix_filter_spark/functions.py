@@ -299,31 +299,16 @@ def probe_keys_local(handle, keys) -> "pd.Series":
     ``handle`` is any collected sharded handle exposing ``contains_h``
     and a ``cfg.seed`` (ShardedBloom / ShardedPrefixFilter /
     ShardedXor / …); ``keys`` are raw integer or string keys, hashed
-    with the NumPy/Python twins of the build-side JVM expression
-    (``hashing.spark_xxhash64_long`` / ``_str``, JVM-equality
-    pytest-pinned). The batch analogue of the reference's single-key
+    by ``sources.file_index.hash_probe_keys`` with the NumPy/Python
+    twins of the build-side JVM expression (JVM-equality
+    pytest-pinned); a mixed list raises ``TypeError``. The batch
+    analogue of the reference's single-key
     ``Contain`` (/root/reference/Tests/wrappers.hpp:648-659) for
     needle checks: a blocklist lookup or debugging probe should not
     cost a cluster round-trip.
     """
-    import numpy as np
-
-    from prefix_filter_spark.hashing import (
-        spark_xxhash64_long,
-        spark_xxhash64_str,
-    )
+    from prefix_filter_spark.sources.file_index import hash_probe_keys
 
     keys = list(keys)
-    seed = handle.cfg.seed
-    if not keys:
-        return pd.Series(np.empty(0, dtype=bool), index=[])
-    if all(isinstance(k, (int, np.integer)) for k in keys):
-        h = spark_xxhash64_long(np.array(keys, dtype=np.int64), seed)
-    elif all(isinstance(k, str) for k in keys):
-        h = spark_xxhash64_str(keys, seed)
-    else:
-        raise TypeError(
-            "probe_keys_local needs all-int or all-str keys; mixed or "
-            "other types must go through the SQL UDF path"
-        )
+    h = hash_probe_keys(None, keys, handle.cfg.seed)
     return pd.Series(handle.contains_h(h), index=keys)

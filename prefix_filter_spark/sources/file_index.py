@@ -47,7 +47,6 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -221,7 +220,7 @@ def _state_header_seed(state: bytes) -> int:
     return _BLOOM_HDR.unpack_from(state, 0)[5]
 
 
-def hash_probe_keys(spark: SparkSession, keys: list, seed: int = 42) -> np.ndarray:
+def hash_probe_keys(spark: SparkSession | None, keys: list, seed: int = 42) -> np.ndarray:
     """xxhash64(key, seed) for driver-held probe keys.
 
     Integer keys: the NumPy twin of the build expression
@@ -231,13 +230,19 @@ def hash_probe_keys(spark: SparkSession, keys: list, seed: int = 42) -> np.ndarr
     Python-RDD overhead per call in this image). Other key types fall
     back to one JVM literal-row projection (no Python-RDD scan); int
     literals in that fallback are cast bigint so a mixed key list hashes
-    its ints at the same 8-byte width as the build expression."""
+    its ints at the same 8-byte width as the build expression. With
+    ``spark=None`` only all-int or all-str lists hash (``TypeError``)."""
     if not keys:
         return np.empty(0, dtype=np.uint64)
     if all(isinstance(k, (int, np.integer)) for k in keys):
         return spark_xxhash64_long(np.array(keys, dtype=np.int64), seed)
     if all(isinstance(k, str) for k in keys):
         return spark_xxhash64_str(keys, seed)
+    if spark is None:
+        raise TypeError(
+            "driver-side hashing needs all-int or all-str keys; mixed or "
+            "other types must go through the SQL UDF path"
+        )
 
     def _lit(k):
         lit = F.lit(int(k) if isinstance(k, np.integer) else k)
@@ -358,57 +363,67 @@ def skip_report(
     }
 
 
-def update_file_index(
-    index_df: DataFrame,
-    df: DataFrame,
-    key_col: str,
-    cfg: FileIndexConfig | None = None,
-) -> DataFrame:
-    """Incremental maintenance: index ONLY files not already indexed.
+def _indexed_files(index_path: str) -> set[str]:
+    """The index's decoded ``file`` column, read on the driver by pyarrow
+    (no Spark job; ``_``/``.`` files are skipped). No index: empty."""
+    import pyarrow.dataset as pads
 
-    Parquet files are immutable once written, so an existing state row
-    stays valid forever; new ingest batches add files, and only those
-    produce new states. Scan-cost caveat: the anti-join on file name
-    discards already-indexed rows AFTER the scan — Spark cannot push a
-    join through to the file listing, so this still reads the whole
-    table's key column every run. It exists for callers that only hold
-    a DataFrame; the maintenance job to run at scale is
-    ``append_index_updates``, which subtracts indexed files from the
-    driver-side file LISTING and reads none of the already-covered
-    bytes. Returns old index UNION new states — same schema, so
-    persisting the index is a plain parquet write and resume is a
-    plain read.
-    """
-    cfg = cfg or FileIndexConfig()
-    # tag BEFORE joining: input_file_name() only resolves while the
-    # plan has a single file source, and the anti-join adds a second
-    known = index_df.select("file")
-    fresh = _tagged_keys(df, key_col, cfg.seed).join(
-        known, "file", "left_anti"
-    )
-    new_states = _build_from_tagged(fresh, cfg)
-    return index_df.unionByName(new_states)
+    try:
+        ds = pads.dataset(index_path, format="parquet")
+    except FileNotFoundError:
+        return set()
+    if not ds.files:  # no parquet part, e.g. an older version's bare marker
+        return set()
+    return {
+        _decode_file_uri(f)
+        for f in ds.to_table(columns=["file"]).column("file").to_pylist()
+    }
+
+
+def _refresh(spark, files, index_path, key_col, cfg, base_path) -> int:
+    """Make the index at ``index_path`` cover exactly ``files``, each
+    once; returns the number of files whose states were written.
+
+    The index's own file column is the only record of what is indexed,
+    so the Spark write's job commit is the only commit point and a
+    replay after a crash anywhere writes nothing twice. A row naming a
+    file outside ``files`` (superseded by an overwrite or compaction) is
+    stale and would prune reads onto files outside the content: the
+    index is then rebuilt over ``files``. Otherwise only files with no
+    row are scanned and appended. 0-row files (by their footer) are
+    skipped: they never get a row, so they would be rescanned forever."""
+    import pyarrow.parquet as pq
+
+    have = _indexed_files(index_path)
+    want = {_decode_file_uri(f) for f in files}
+    rebuild = bool(have - want)
+    todo = [
+        p
+        for p in sorted(want if rebuild else want - have)
+        if pq.read_metadata(p).num_rows
+    ]
+    if todo:
+        fresh = spark.read.option("basePath", base_path).parquet(*todo)
+        states = _build_from_tagged(_tagged_keys(fresh, key_col, cfg.seed), cfg)
+    elif rebuild:  # no stale row may survive
+        states = spark.createDataFrame([], INDEX_SCHEMA)
+    else:
+        return 0
+    states.write.mode("overwrite" if rebuild else "append").parquet(index_path)
+    return len(todo)
 
 
 def unindexed_files(
     spark: SparkSession, data_path: str, index_path: str
 ) -> list[str]:
-    """Files of the table at ``data_path`` with no index row yet —
-    computed from the driver-side file LISTING (``DataFrame
-    .inputFiles()``, metadata-only) minus the index's file column, both
-    percent-decoded (``inputFiles()`` and ``input_file_name()`` do not
-    always agree on URI encoding). This is what lets the incremental
-    update scan only new bytes: the subtraction happens before any
-    read, not as a post-scan anti-join."""
+    """Files of the table at ``data_path`` with no index row yet — the
+    driver-side file LISTING (``DataFrame.inputFiles()``, metadata-only)
+    minus the index's file column, compared percent-decoded
+    (``inputFiles()`` and ``input_file_name()`` do not always agree on
+    URI encoding), before any read."""
+    have = _indexed_files(index_path)
     all_files = spark.read.parquet(data_path).inputFiles()
-    try:
-        known = {
-            _decode_file_uri(r["file"])
-            for r in spark.read.parquet(index_path).select("file").collect()
-        }
-    except AnalysisException:  # no index yet — first run
-        known = set()
-    return sorted(f for f in all_files if _decode_file_uri(f) not in known)
+    return sorted(f for f in all_files if _decode_file_uri(f) not in have)
 
 
 def append_index_updates(
@@ -418,39 +433,22 @@ def append_index_updates(
     key_col: str,
     cfg: FileIndexConfig | None = None,
 ) -> int:
-    """Idempotent index-maintenance job: bring the persisted index at
-    ``index_path`` up to date with the parquet table at ``data_path``.
+    """Idempotent index-maintenance job: make the persisted index at
+    ``index_path`` cover the parquet table at ``data_path``; returns the
+    number of newly indexed files. It slots in after any ingest (a batch
+    load, a streaming parquet sink's micro-batches, a backfill), and a
+    replay appends nothing. Run it before reading the index for zero-FN
+    pruning over the WHOLE table: a stale index has no row for new files.
 
-    The index table is APPEND-ONLY — parquet data files are immutable,
-    so a state row never changes and covering a new file is one new
-    row. The anti-join on file name makes the job exactly-once for the
-    index no matter how often it runs (a replay appends zero rows), so
-    it slots in after any ingest: a batch load, a Structured Streaming
-    parquet sink's micro-batches, a backfill. Returns the number of
-    newly indexed files.
-
-    First run (no index yet) indexes everything. Reads of a
-    concurrently-growing index are safe because rows are only added;
-    a probe with a stale index simply cannot prune the newest files —
-    callers wanting zero-FN pruning over the WHOLE table should run
-    this first and read the index after it returns.
-
-    The already-indexed files are subtracted from the driver-side file
-    LISTING (``DataFrame.inputFiles()`` — metadata-only, no scan) and
-    the build reads ONLY the unindexed files, so a daily update over a
-    100 TB table scans the day's new bytes, not the corpus (a plain
-    anti-join on ``input_file_name()`` cannot prune the scan — Spark
-    discards indexed rows only after reading them). File names are
-    compared percent-decoded: ``inputFiles()`` and
-    ``input_file_name()`` do not always agree on URI encoding.
+    The file set is the driver-side LISTING (``DataFrame.inputFiles()``,
+    metadata-only) and only files with no index row are read, so a daily
+    update over a 100 TB table scans the day's new bytes (an anti-join
+    on ``input_file_name()`` cannot prune the scan; Spark discards
+    indexed rows only after reading them). An index naming a file the
+    listing no longer holds is rebuilt. The index and the new files'
+    footers are read on the driver: both paths must be driver-visible.
     """
-    cfg = cfg or FileIndexConfig()
-    new_files = unindexed_files(spark, data_path, index_path)
-    if not new_files:
-        return 0
-    fresh = spark.read.parquet(*[_decode_file_uri(f) for f in new_files])
-    new_states = _build_from_tagged(_tagged_keys(fresh, key_col, cfg.seed), cfg)
-    n_new = new_states.count()
-    if n_new:
-        new_states.write.mode("append").parquet(index_path)
-    return n_new
+    files = spark.read.parquet(data_path).inputFiles()
+    return _refresh(
+        spark, files, index_path, key_col, cfg or FileIndexConfig(), data_path
+    )

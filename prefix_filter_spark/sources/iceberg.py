@@ -65,12 +65,12 @@ def read_sequences(spark: SparkSession, source: str) -> DataFrame:
 #   - a metadata manifest ``<path>/metadata/snapshots.json`` listing
 #     every snapshot's files — readers and maintenance jobs plan from
 #     METADATA, never from a filesystem listing;
-#   - snapshot-aware incremental index maintenance
-#     (``update_table_index``): the file-index job records the last
-#     indexed snapshot id and indexes exactly the snapshots after it —
-#     the scan set comes from the manifest delta, so a daily update
-#     reads the day's bytes even if the listing API is slow, eventually
-#     consistent, or the table holds 10^6 files.
+#   - incremental index maintenance (``update_table_index``): the
+#     index must cover exactly the manifest's content files, and its
+#     own ``file`` column is the record of what is covered — a daily
+#     update scans only the content files with no row yet (the day's
+#     bytes), planned from metadata even if the listing API is slow,
+#     eventually consistent, or the table holds 10^6 files.
 #
 # On a real cluster with the Iceberg runtime, ``read_sequences`` above
 # reads the catalog table and the same maintenance logic keys off
@@ -79,8 +79,8 @@ def read_sequences(spark: SparkSession, source: str) -> DataFrame:
 #
 # Maintenance loop order (the one that keeps every invariant):
 #   1. compact_table        (replace snapshot supersedes small files)
-#   2. update_table_index   (boundary moved -> index rebuilds over the
-#                            new content; stale rows never linger)
+#   2. update_table_index   (rows of superseded files -> index rebuilds
+#                            over the content; stale rows never linger)
 #   3. expire_snapshots     (only AFTER the index rebuild: expiry
 #                            deletes superseded files, and an index
 #                            still listing them would prune reads onto
@@ -137,6 +137,14 @@ def write_table(
     summary properties play the same role)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
+    return _commit_snapshot(df, table_path, mode, partition_by, properties)
+
+
+def _commit_snapshot(df, table_path, operation, partition_by=None, properties=None):
+    """Write ``df`` into a fresh ``data/snap-<id>/`` dir and commit it
+    as snapshot ``<id>`` with ``operation``; returns the id.
+    ``errorifexists`` on the dir is what makes a second concurrent
+    writer claiming the same id fail-stop instead of mixing files."""
     manifest = load_manifest(table_path)
     snap_id = (manifest[-1]["snapshot_id"] + 1) if manifest else 1
     snap_dir = os.path.join(table_path, "data", f"snap-{snap_id}")
@@ -155,18 +163,25 @@ def write_table(
     manifest.append(
         {
             "snapshot_id": snap_id,
-            "operation": mode,
+            "operation": operation,
             "ts": time.time(),
             "files": files,
             "properties": properties or {},
         }
     )
-    os.makedirs(os.path.dirname(_manifest_path(table_path)), exist_ok=True)
-    tmp = _manifest_path(table_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, _manifest_path(table_path))  # atomic manifest flip
+    _flip_manifest(table_path, manifest)
     return snap_id
+
+
+def _flip_manifest(table_path: str, entries: list[dict]) -> None:
+    """Replace the manifest with ``entries`` in one atomic rename — the
+    commit point of every table operation."""
+    path = _manifest_path(table_path)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(entries, f, indent=1)
+    os.replace(tmp, path)
 
 
 def table_files(table_path: str, *, after_snapshot: int = 0) -> list[str]:
@@ -250,25 +265,7 @@ def compact_table(
         out = zorder_layout(df, zorder_cols, int(num_files), modes=zorder_modes)
     else:
         out = df.coalesce(int(num_files))
-    manifest = load_manifest(table_path)
-    snap_id = manifest[-1]["snapshot_id"] + 1
-    snap_dir = os.path.join(table_path, "data", f"snap-{snap_id}")
-    out.write.mode("errorifexists").parquet(snap_dir)
-    files = sorted(spark.read.parquet(snap_dir).inputFiles())
-    manifest.append(
-        {
-            "snapshot_id": snap_id,
-            "operation": "replace",
-            "ts": time.time(),
-            "files": files,
-            "properties": {},
-        }
-    )
-    tmp = _manifest_path(table_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, _manifest_path(table_path))
-    return snap_id
+    return _commit_snapshot(out, table_path, "replace")
 
 
 def update_table_index(
@@ -278,61 +275,23 @@ def update_table_index(
     key_col: str,
     cfg=None,
 ) -> int:
-    """Snapshot-aware incremental file-index maintenance: bring the
-    membership index at ``index_path`` up to date with the table's
-    manifest, scanning ONLY the files of snapshots added since the last
-    run (the last indexed snapshot id is recorded next to the index).
-    Idempotent: a replay indexes zero files. Returns newly indexed
-    file count.
-
-    This is the Iceberg-native shape of ``sources.file_index
-    .append_index_updates``: there the new-file set comes from a
-    listing subtraction; here it comes from the manifest delta — O(1)
-    metadata instead of an O(n_files) listing, and immune to
-    eventually-consistent listings."""
+    """Make the membership index at ``index_path`` cover the table's
+    current ``content_files``, planned from the manifest (O(1) metadata,
+    no listing): scan only content files with no index row yet, or
+    rebuild when the index lists files an overwrite or compaction
+    superseded. A replay, also after a crash, indexes zero files.
+    Returns newly indexed file count (``file_index.append_index_updates``
+    is the listing-planned twin)."""
     from prefix_filter_spark.sources import file_index as fidx
 
-    cfg = cfg or fidx.FileIndexConfig()
-    manifest = load_manifest(table_path)
-    if not manifest:
-        raise FileNotFoundError(f"no table at {table_path}")
-    latest = manifest[-1]["snapshot_id"]
-    meta_path = os.path.join(index_path, "_indexed_snapshot.json")
-    try:
-        with open(meta_path) as f:
-            done = json.load(f)["snapshot_id"]
-    except FileNotFoundError:
-        done = 0
-    newer = [s for s in manifest if s["snapshot_id"] > done]
-    boundary_moved = any(s["operation"] != "append" for s in newer)
-    if done == 0 or boundary_moved:
-        # first run, or an overwrite/compaction superseded files the
-        # index lists — stale rows would prune reads to files outside
-        # the table content. (Re)build over the CURRENT content set
-        # (still manifest-planned, no listing); the write replaces the
-        # index.
-        fresh_files = content_files(table_path)
-        write_mode = "overwrite"
-    else:
-        fresh_files = table_files(table_path, after_snapshot=done)
-        write_mode = "append"
-    n_new = 0
-    if fresh_files:
-        fresh = spark.read.option(
-            "basePath", os.path.join(table_path, "data")
-        ).parquet(*[_decode_file_uri(f) for f in fresh_files])
-        states = fidx._build_from_tagged(
-            fidx._tagged_keys(fresh, key_col, cfg.seed), cfg
-        )
-        n_new = states.count()
-        if n_new:
-            states.write.mode(write_mode).parquet(index_path)
-    os.makedirs(index_path, exist_ok=True)
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"snapshot_id": latest}, f)
-    os.replace(tmp, meta_path)
-    return n_new
+    return fidx._refresh(
+        spark,
+        content_files(table_path),
+        index_path,
+        key_col,
+        cfg or fidx.FileIndexConfig(),
+        os.path.join(table_path, "data"),
+    )
 
 
 def table_health(table_path: str, *, small_file_bytes: int = 32 << 20) -> dict:
@@ -409,10 +368,7 @@ def expire_snapshots(table_path: str, *, keep_last: int = 1) -> dict:
     reachable = {f for s in kept for f in s["files"]}
     dead = [f for s in expired for f in s["files"] if f not in reachable]
     # manifest first (atomic), deletions second — see docstring
-    tmp = _manifest_path(table_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(kept, f, indent=1)
-    os.replace(tmp, _manifest_path(table_path))
+    _flip_manifest(table_path, kept)
     n_del = 0
     for f in dead:
         p = _decode_file_uri(f)

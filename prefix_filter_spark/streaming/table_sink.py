@@ -13,8 +13,8 @@ in the SAME atomic manifest flip as the file list — a replayed epoch
 finds its marker in the manifest and commits nothing, and there is no
 crash window where data committed but the marker did not (the
 round-4 ``foreach_batch_build`` lesson, solved here by colocation
-instead of a rename dance). ``update_table_index`` is idempotent by
-snapshot id, so re-running it on a replayed epoch is a no-op.
+instead of a rename dance). On a replayed epoch ``update_table_index``
+finds every content file indexed already and is a no-op.
 
 Store restriction (same as the manifest layer): driver-visible local
 paths; an object-store deployment routes the manifest through its own
@@ -55,10 +55,10 @@ def foreach_batch_table_sink(
     StreamingQuery.
 
     When ``key_col`` and ``index_path`` are given, every commit is
-    followed by ``ice.update_table_index`` — the manifest-delta path,
-    so the per-batch index work is bounded by the batch's files, and a
-    reader composing ``prune_files`` over the index sees every row the
-    moment its snapshot lands."""
+    followed by ``ice.update_table_index``, which scans only the files
+    with no index row yet (the batch's), so a reader composing
+    ``prune_files`` over the index sees every row the moment its
+    snapshot lands."""
     spark = stream_df.sparkSession
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -73,8 +73,8 @@ def foreach_batch_table_sink(
             )
         # else: at-least-once replay of a committed epoch — no snapshot
         if key_col is not None and index_path is not None:
-            # idempotent by snapshot id — safe on replays and catches
-            # up any snapshot whose index update crashed mid-run
+            # indexes only files with no row — safe on replays and
+            # catches up any snapshot whose index update crashed
             ice.update_table_index(
                 spark, table_path, index_path, key_col, index_cfg
             )

@@ -155,43 +155,6 @@ def test_rejects_derived_frames(spark, layout, cfg):
         build_file_index(df, "l_orderkey", cfg).collect()
 
 
-def test_update_file_index_only_new_files(spark, layout, index, cfg, tmp_path):
-    from prefix_filter_spark.sources.file_index import update_file_index
-
-    # persist + reload the index (resume contract: plain parquet)
-    saved = str(tmp_path / "idx")
-    index.write.mode("overwrite").parquet(saved)
-    reloaded = spark.read.parquet(saved)
-
-    # ingest a new batch into the same table path layout
-    extra = str(tmp_path / "extra")
-    (
-        spark.read.parquet(layout)
-        .limit(100)
-        .withColumn("l_orderkey", F.col("l_orderkey") + 10**7)
-        .coalesce(2)
-        .write.mode("overwrite")
-        .parquet(extra)
-    )
-    both = spark.read.parquet(layout, extra)
-    updated = update_file_index(reloaded, both, "l_orderkey", cfg).cache()
-    n_extra = len(
-        [r for r in updated.collect() if "/extra/" in r["file"]]
-    )
-    assert n_extra >= 1
-    assert updated.count() == N_FILES + n_extra
-    # old rows are byte-identical (never rebuilt)
-    old = {r["file"]: bytes(r["state"]) for r in reloaded.collect()}
-    for r in updated.collect():
-        if r["file"] in old:
-            assert bytes(r["state"]) == old[r["file"]]
-    # and the new keys are findable via the updated index
-    key = 10**7 + spark.read.parquet(extra).select(F.min("l_orderkey")).first()[0] - 10**7
-    got = pruned_read(spark, updated, "l_orderkey", [int(key)], cfg).count()
-    assert got > 0
-    updated.unpersist()
-
-
 def test_append_index_updates_idempotent(spark, layout, cfg, tmp_path):
     from prefix_filter_spark.sources.file_index import append_index_updates
 
@@ -199,6 +162,10 @@ def test_append_index_updates_idempotent(spark, layout, cfg, tmp_path):
     # first run indexes every file; immediate re-run adds nothing
     assert append_index_updates(spark, layout, idx_path, "l_orderkey", cfg) == N_FILES
     assert append_index_updates(spark, layout, idx_path, "l_orderkey", cfg) == 0
+    old = {
+        r["file"]: bytes(r["state"])
+        for r in spark.read.parquet(idx_path).collect()
+    }
 
     # simulate an ingest batch: append rows (new files) to the table
     (
@@ -213,8 +180,15 @@ def test_append_index_updates_idempotent(spark, layout, cfg, tmp_path):
     assert n >= 1
     assert append_index_updates(spark, layout, idx_path, "l_orderkey", cfg) == 0
 
-    # index now covers the whole table: pruned read finds the new keys
+    # index now covers the whole table, and the old rows are
+    # byte-identical (appended to, never rebuilt)
     idx = spark.read.parquet(idx_path)
+    rows = idx.collect()
+    assert len(rows) == N_FILES + n
+    for r in rows:
+        if r["file"] in old:
+            assert bytes(r["state"]) == old[r["file"]]
+    # pruned read finds the new keys
     new_key = int(
         spark.read.parquet(layout)
         .filter(F.col("l_orderkey") >= 10**8)

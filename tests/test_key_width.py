@@ -98,6 +98,16 @@ def test_probe_keys_local_empty(spark, cfg):
     assert isinstance(res, pd.Series) and len(res) == 0
 
 
+def test_probe_keys_local_rejects_mixed(spark, cfg):
+    """The driver path has no JVM fallback: a mixed key list raises
+    instead of hashing at a width the build did not use."""
+    handle = bloom.ShardedBloom.from_df(
+        cfg, bloom.build_bloom(_int_df(spark, "bigint", 100), "k", cfg)
+    )
+    with pytest.raises(TypeError, match="all-int or all-str"):
+        probe_keys_local(handle, [5, "5"])
+
+
 def test_hash_probe_keys_empty_and_mixed(spark):
     from prefix_filter_spark.hashing import spark_xxhash64_long
     from prefix_filter_spark.sources.file_index import hash_probe_keys

@@ -103,6 +103,64 @@ def test_snapshot_aware_index_update(spark, li, tmp_path):
     assert pruned_read(spark, idx, "l_orderkey", [key], cfg).count() > 0
 
 
+def _index_files(spark, idx_path):
+    return [r["file"] for r in spark.read.parquet(idx_path).select("file").collect()]
+
+
+def test_index_update_replay_after_rows_landed(spark, li, tmp_path):
+    """A crash after the states of a snapshot landed but before the
+    update returned: the replay finds those rows and writes none twice."""
+    tbl = str(tmp_path / "tbl")
+    idx_path = str(tmp_path / "idx")
+    cfg = FileIndexConfig(bits_per_key=12, expected_keys_per_file=4096)
+    ice.write_table(li.limit(600).repartition(2), tbl, mode="overwrite")
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 2
+    ice.write_table(li.limit(300).repartition(2), tbl)
+    new_files = [_decode_file_uri(f) for f in ice.load_manifest(tbl)[-1]["files"]]
+    build_file_index(
+        spark.read.option("basePath", tbl + "/data").parquet(*new_files),
+        "l_orderkey",
+        cfg,
+    ).write.mode("append").parquet(idx_path)
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 0
+    files = _index_files(spark, idx_path)
+    assert len(files) == len(set(files)) == 4
+
+
+def test_index_update_after_overwrite_with_empty_df(spark, li, tmp_path):
+    """An overwrite with no rows supersedes every indexed file: no stale
+    index row may survive it."""
+    tbl = str(tmp_path / "tbl")
+    idx_path = str(tmp_path / "idx")
+    cfg = FileIndexConfig(bits_per_key=12, expected_keys_per_file=4096)
+    ice.write_table(li.limit(600).repartition(4), tbl, mode="overwrite")
+    ice.write_table(li.limit(300).repartition(2), tbl)
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 6
+    ice.write_table(li.limit(0), tbl, mode="overwrite")
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 0
+    assert _index_files(spark, idx_path) == []
+
+
+def test_index_update_skips_empty_snapshot(spark, li, tmp_path):
+    """A 0-row data file never gets an index row, so it must not be
+    rescanned on every later update: the second update starts no job."""
+    tbl = str(tmp_path / "tbl")
+    idx_path = str(tmp_path / "idx")
+    cfg = FileIndexConfig(bits_per_key=12, expected_keys_per_file=4096)
+    ice.write_table(li.limit(300).repartition(2), tbl, mode="overwrite")
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 2
+    ice.write_table(li.limit(0), tbl)
+    assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 0
+    sc = spark.sparkContext
+    sc.setJobGroup("empty-snapshot-update", "second update")
+    try:
+        assert ice.update_table_index(spark, tbl, idx_path, "l_orderkey", cfg) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("empty-snapshot-update") == []
+    assert len(_index_files(spark, idx_path)) == 2
+
+
 # ---------------------------------------------------------------- skipping
 
 
