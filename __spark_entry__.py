@@ -568,13 +568,11 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import cms
+    from prefix_filter_spark.sketches import base, cms
 
     words = _word_stream(spark, sf_dir)
     cfg = cms.CmsConfig(width=8192, depth=5, seed=42)
-    state = bytes(
-        cms.build_cms(words, F.xxhash64("word", F.lit(2)), cfg).collect()[0]["state"]
-    )
+    state = base.estimate_state(words, F.xxhash64("word", F.lit(2)), cfg)
     top = (
         words.groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -1309,7 +1307,7 @@ def _dds_interval_oks(
 
 
 def q_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prefix_filter_spark.sketches import dds, kll, tdigest
+    from prefix_filter_spark.sketches import base, dds, kll, tdigest
     from prefix_filter_spark.sources.tokenizer import words_col
 
     docs = _docs(spark, sf_dir).select(F.size(words_col("text")).alias("n_words"))
@@ -1318,18 +1316,13 @@ def q_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"percentile(n_words, array({','.join(map(str, qs))}))").alias("p")
     ).collect()[0]["p"]
     sk = kll.KllSketch.from_bytes(
-        bytes(kll.build_kll(docs, "n_words", kll.KllConfig(k=200, seed=42)).collect()[0]["state"])
+        base.estimate_state(docs, "n_words", kll.KllConfig(k=200, seed=42))
     )
     td = tdigest.TDigest.from_bytes(
-        bytes(
-            tdigest.build_tdigest(docs, "n_words", tdigest.TDigestConfig(delta=200))
-            .collect()[0]["state"]
-        )
+        base.estimate_state(docs, "n_words", tdigest.TDigestConfig(delta=200))
     )
     dd_cfg = dds.DDSketchConfig(alpha=0.01)
-    dd = dds.DDSketch.from_bytes(
-        bytes(dds.build_dds(docs, "n_words", dd_cfg).collect()[0]["state"])
-    )
+    dd = dds.DDSketch.from_bytes(base.estimate_state(docs, "n_words", dd_cfg))
     kqs, tqs, dqs = sk.quantiles(qs), td.quantiles(qs), dd.quantiles(qs)
     k_oks = _rank_interval_oks(docs, "n_words", list(zip(qs, (float(v) for v in kqs))))
     t_oks = _rank_interval_oks(docs, "n_words", list(zip(qs, (float(v) for v in tqs))))
@@ -1533,8 +1526,7 @@ def q_per_source_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok,
         "source",
         F.xxhash64("word", F.lit(5)),
-        acc_factory=lambda: hll.HllAccumulator(cfg),
-        merge_fn=hll.merge_states,
+        cfg,
         salt_on="doc_id",
         salt_buckets=16,
     ).toPandas()

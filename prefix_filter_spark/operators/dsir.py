@@ -172,13 +172,10 @@ def select_top_fraction(
     m = max(1, math.ceil(frac * n))
     if not approx:
         return weights.orderBy(F.desc("weight_fp"), F.asc("doc_id")).limit(m)
-    from prefix_filter_spark.sketches import kll
+    from prefix_filter_spark.sketches import base, kll
 
     sk = kll.KllSketch.from_bytes(
-        bytes(
-            kll.build_kll(weights, "weight_fp", kll.KllConfig(k=200, seed=7))
-            .collect()[0]["state"]
-        )
+        base.estimate_state(weights, "weight_fp", kll.KllConfig(k=200, seed=7))
     )
     thresh = float(sk.quantiles([1.0 - frac])[0])
     return weights.where(F.col("weight_fp") >= thresh)

@@ -66,8 +66,7 @@ def embedding_subspace_drift(
         df,
         group_col,
         vec_col,
-        acc_factory=lambda: fd.FdAccumulator(cfg),
-        merge_fn=fd.merge_states,
+        cfg,
         salt_on=salt_on,
         salt_buckets=salt_buckets,
     ).collect()  # one row per group — bounded by design

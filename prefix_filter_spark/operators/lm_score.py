@@ -306,8 +306,7 @@ def perplexity_cutoffs_by_group(
         scores.where(F.col("perplexity").isNotNull()),
         group_col,
         F.col("perplexity"),
-        acc_factory=lambda: dds.DDSketch(cfg),
-        merge_fn=dds.merge_states,
+        cfg,
         salt_on="doc_id",
     ).collect()
     out: dict[str, tuple[float, float]] = {}

@@ -166,8 +166,7 @@ def source_overlap_matrix(
         shingles,
         "group",
         "g",
-        acc_factory=lambda: kmv.KmvAccumulator(cfg),
-        merge_fn=kmv.merge_states,
+        cfg,
         salt_on="g",
         salt_buckets=salt_buckets,
     )

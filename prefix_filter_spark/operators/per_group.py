@@ -11,20 +11,21 @@ the hot source (50% of a 10^12-row corpus) on one reducer; instead:
   phase 2: groupBy(source) merges the tiny partials (associative, so
            the fan-out is semantically free).
 
-Works for every accumulator/merge pair in the library (HLL, CMS, KLL,
-t-digest, Bloom-family via curried merges).
+Works for every estimate sketch in the library (HLL, CMS, KLL,
+t-digest, DDSketch, Misra-Gries, KMV, AMS, Frequent Directions): the
+config says which (``cfg.family``).
 """
 
 from __future__ import annotations
 
 import time
-from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from prefix_filter_spark.plans.salting import salt_col
+from prefix_filter_spark.sketches import base
 
 GROUP_SCHEMA = (
     "group string, state binary, n_rows long, n_partials long, build_ns long"
@@ -35,25 +36,27 @@ def sketch_by_group(
     df: DataFrame,
     group_col: str,
     value_col,
+    cfg,
     *,
-    acc_factory: Callable,
-    merge_fn: Callable[[list[bytes]], bytes],
     salt_on: str,
     salt_buckets: int = 16,
 ) -> DataFrame:
-    """-> (group, state, n_rows, n_partials, build_ns) — one sketch per
-    group, built skew-safely."""
+    """-> (group, state, n_rows, n_partials, build_ns) — one ``cfg``
+    sketch per group, built skew-safely. NULL values are skipped
+    (``n_rows`` still counts their rows)."""
     col = F.col(value_col) if isinstance(value_col, str) else value_col
     salted = df.select(
         F.col(group_col).alias("group"),
         col.alias("v"),
         salt_col(salt_on, salt_buckets).alias("_salt"),
     )
+    integral = "v" in base.integral_columns(salted)
+    merge = cfg.family.merge_states
 
     def build_partial(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.perf_counter_ns()
-        acc = acc_factory()
-        acc.update(pdf["v"].to_numpy())
+        acc = cfg.family.accumulator(cfg)
+        acc.update(base.non_null_values(pdf["v"], integral))
         return pd.DataFrame(
             {
                 "group": [pdf["group"].iloc[0]],
@@ -71,7 +74,7 @@ def sketch_by_group(
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.perf_counter_ns()
         states = [bytes(s) for s in pdf["state"]]
-        merged = merge_fn(states) if len(states) > 1 else states[0]
+        merged = merge(states, cfg, 0) if len(states) > 1 else states[0]
         return pd.DataFrame(
             {
                 "group": [pdf["group"].iloc[0]],

@@ -100,34 +100,22 @@ def token_sketch_profile(
         .cast("long")
         .alias("ntok_once"),
     )
+    sketches = {
+        "hll": ("tok", hll_m.HllConfig()),
+        "cms": ("tok", cms_m.CmsConfig()),
+        "mg": ("tok", mg_m.MgConfig()),
+        "kmv": ("tok", kmv_m.KmvConfig()),
+        "kll": ("ntok_once", kll_m.KllConfig()),
+        "tdigest": ("ntok_once", td_m.TDigestConfig()),
+    }
     partials = base.build_partials_multi(
-        ex,
-        {"tok": "tok", "ntok_once": "ntok_once"},
-        {
-            "hll": ("tok", lambda: hll_m.HllAccumulator(hll_m.HllConfig())),
-            "cms": ("tok", lambda: cms_m.CmsAccumulator(cms_m.CmsConfig())),
-            "mg": ("tok", lambda: mg_m.MgAccumulator(mg_m.MgConfig())),
-            "kmv": ("tok", lambda: kmv_m.KmvAccumulator(kmv_m.KmvConfig())),
-            "kll": ("ntok_once", lambda: kll_m.KllSketch(kll_m.KllConfig())),
-            "tdigest": (
-                "ntok_once",
-                lambda: td_m.TDigest(td_m.TDigestConfig()),
-            ),
-        },
+        ex, {"tok": "tok", "ntok_once": "ntok_once"}, sketches
     ).cache()
     partials.count()  # materialize the ONE scan before fanning out
-    mergers = {
-        "hll": hll_m.merge_states,
-        "cms": cms_m.merge_states,
-        "mg": mg_m.merge_states,
-        "kmv": kmv_m.merge_states,
-        "kll": kll_m.merge_states,
-        "tdigest": td_m.merge_states,
-    }
     states: dict[str, bytes] = {}
-    for name, merge_fn in mergers.items():
+    for name, (_, cfg) in sketches.items():
         rows = base.tree_merge(
-            partials.where(F.col("sketch") == name), merge_fn
+            partials.where(F.col("sketch") == name), cfg
         ).collect()
         if not rows:
             partials.unpersist()

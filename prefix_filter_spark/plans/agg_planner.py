@@ -32,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prefix_filter_spark.sketches import mg
+from prefix_filter_spark.sketches import base, mg
 
 
 @dataclass(frozen=True)
@@ -48,18 +48,10 @@ def detect_key_skew(df: DataFrame, key_col: str, mg_k: int = 256) -> SkewReport:
     """One shuffle-free MG pass over the key column. ``mg_k`` bounds
     both the summary size and the error: err <= total / (k+1), so with
     k=256 any key above ~0.4% of the corpus is visible."""
-    rows = (
-        mg.build_mg(
-            df.select(F.col(key_col).cast("string").alias("k")),
-            "k",
-            mg.MgConfig(k=mg_k),
-        )
-        .select("state")
-        .collect()
-    )
-    if not rows:  # empty input: no partials at all
-        return SkewReport(0, 0, "", 0.0, 0.0)
-    total, err, counts = mg.estimates(bytes(rows[0]["state"]))
+    # NULL is one group of a groupBy too (and can be the hot one); the
+    # sketch skips NULL values, so count it under the name "None"
+    key = F.coalesce(F.col(key_col).cast("string"), F.lit("None"))
+    total, err, counts = mg.estimates(base.estimate_state(df, key, mg.MgConfig(k=mg_k)))
     if not counts or total == 0:
         return SkewReport(total, 0, "", 0.0, 0.0)
     top_key, top_cnt = max(counts.items(), key=lambda kv: kv[1])
@@ -96,9 +88,8 @@ def plan_sketch_by_group(
     df: DataFrame,
     group_col: str,
     value_col,
+    cfg,
     *,
-    acc_factory,
-    merge_fn,
     salt_on: str,
     skew_share: float = 0.05,
     max_buckets: int = 64,
@@ -121,8 +112,7 @@ def plan_sketch_by_group(
         df,
         group_col,
         value_col,
-        acc_factory=acc_factory,
-        merge_fn=merge_fn,
+        cfg,
         salt_on=salt_on,
         salt_buckets=buckets,
     )

@@ -9,7 +9,8 @@ prefix filter and the Bloom family report 3 (lookups + adds,
 wrappers.hpp:806-808) while the two-choice and cuckoo tables report 7
 (wrappers.hpp:197-199,500-502: CF and TC support Remove).
 
-Estimate sketches (HLL / CMS / KLL / t-digest) have no reference
+Estimate sketches (HLL / CMS / KLL / t-digest / DDSketch / Misra-Gries /
+KMV / AMS / Frequent Directions) have no reference
 counterpart in this enum; they report ADD|ESTIMATE — ESTIMATE is this
 engine's extension bit (8) for "answers aggregate queries, not
 membership".
@@ -91,6 +92,14 @@ REGISTRY: dict[str, SketchInfo] = {
         "mg", 11, Capability.ADD | Capability.ESTIMATE,
         "prefix_filter_spark.sketches.mg", "north-rule extension (no reference wrapper)",
     ),
+    "ams": SketchInfo(
+        "ams", 18, Capability.ADD | Capability.ESTIMATE,
+        "prefix_filter_spark.sketches.ams", "north-rule extension (no reference wrapper)",
+    ),
+    "fd": SketchInfo(
+        "fd", 19, Capability.ADD | Capability.ESTIMATE,
+        "prefix_filter_spark.sketches.fd", "north-rule extension (no reference wrapper)",
+    ),
     "dds": SketchInfo(
         "dds", 13, Capability.ADD | Capability.ESTIMATE,
         "prefix_filter_spark.sketches.dds",
@@ -147,7 +156,8 @@ def info(sketch: str) -> SketchInfo:
     """Look up by registry name OR by a shard row's ``sketch`` column
     value, which carries config suffixes: ``cuckoo12``, ``cuckoo13ss``
     (semisort variant), ``hll14``, ``tc12``, ``bbf256``, ``bloom12``,
-    ``kll200``, ``cms5x8192``, ``tdigest200``, ``prefix_filter``."""
+    ``kll200``, ``cms5x8192``, ``tdigest200``, ``ams7x4096``, ``fd16x64``,
+    ``prefix_filter``."""
     if sketch in REGISTRY:
         return REGISTRY[sketch]
     m = re.match(r"^([a-z_]+?)[0-9x]*(?:ss)?$", sketch)

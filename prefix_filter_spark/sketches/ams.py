@@ -20,7 +20,7 @@ Count-Sketch form (Charikar-Chen-Farach-Colton 2002, Thorup-Zhang 2004):
   what an optimizer needs when keys repeat.
 
 Distributed shape: counters are integers and merge by elementwise add
-(associative + commutative), so the build is base.build_partials — one
+(associative + commutative), so the build is base.build_estimate — one
 partial per partition, zero data shuffle — and base.tree_merge fans the
 partials in. Two tables sketched with the SAME config are comparable.
 
@@ -37,7 +37,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
@@ -109,7 +108,7 @@ def _parse_state(state: bytes):
     return d, w, total, seed, counters
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     parsed = [_parse_state(s) for s in states]
     d, w, seed = parsed[0][0], parsed[0][1], parsed[0][3]
     if any(p[0] != d or p[1] != w or p[3] != seed for p in parsed):
@@ -145,20 +144,11 @@ def total_count(state: bytes) -> int:
     return _parse_state(state)[2]
 
 
-def build_ams(df: DataFrame, value_col, cfg: AmsConfig) -> DataFrame:
-    """Hashed key column -> one merged AMS state row. Zero data
-    shuffle: per-partition partials + tree merge of tiny states."""
-    partials = base.build_partials(
-        df,
-        value_col,
-        sketch_name=f"ams{cfg.depth}x{cfg.width}",
-        acc_factory=lambda: AmsAccumulator(cfg),
-    )
-    return base.tree_merge(partials, merge_states)
-
-
-def sketch_bytes(df: DataFrame, value_col, cfg: AmsConfig) -> bytes:
-    rows = build_ams(df, value_col, cfg).collect()
-    if not rows:
-        return AmsAccumulator(cfg).to_bytes()
-    return bytes(rows[0]["state"])
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"ams{cfg.depth}x{cfg.width}",
+    accumulator=AmsAccumulator,
+    merge_states=merge_states,
+)
+AmsConfig.family = FAMILY
+build_ams = base.build_estimate
+sketch_bytes = base.estimate_state

@@ -29,6 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from prefix_filter_spark.hashing import as_u64, shard_of
 from prefix_filter_spark.plans.sharding import hashed_key_col, shard_col, widen_key_col
@@ -232,15 +233,14 @@ def build_filter(df: DataFrame, key_col, cfg, value_col=None) -> DataFrame:
     )
 
 
-def merge_shard_states(df: DataFrame, merge) -> DataFrame:
-    """Combine same-shard partial states (associative + commutative).
+def merge_shard_states(df: DataFrame, cfg) -> DataFrame:
+    """Combine same-shard partial states (associative + commutative)
+    with ``cfg``'s family merge, ``merge_states(states, cfg, shard_id)``
+    — the prefix filter needs the shard id for spare re-keying; the
+    estimate sketches' shard id is mere lineage.
 
     Used for incremental / streaming builds where several batches each
-    produced partial states for the same shard. ``merge`` is either a
-    sharded filter's config — its family's ``merge_states(states, cfg,
-    shard_id)`` runs, which the prefix filter needs for spare re-keying
-    — or ``f(states)`` for the global-state sketches (HLL/CMS/KLL/
-    t-digest/...), whose shard id is mere lineage. The result is
+    produced partial states for the same shard. The result is
     order-independent by the sketches' associativity (pytest-verified
     by shuffling orders).
 
@@ -248,11 +248,7 @@ def merge_shard_states(df: DataFrame, merge) -> DataFrame:
     (which coarsens shard ids) for key-sharded filters — that is only
     for global-state sketches where shard_id is mere lineage.
     """
-    family = getattr(merge, "family", None)
-    if family is None:
-        combine = lambda states, sid: merge(states)  # noqa: E731
-    else:
-        combine = lambda states, sid: family.merge_states(states, merge, sid)  # noqa: E731
+    merge = cfg.family.merge_states
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         states = [bytes(s) for s in pdf["state"]]
@@ -261,7 +257,7 @@ def merge_shard_states(df: DataFrame, merge) -> DataFrame:
             {
                 "sketch": [pdf["sketch"].iloc[0]],
                 "shard_id": [sid],
-                "state": [combine(states, sid) if len(states) > 1 else states[0]],
+                "state": [merge(states, cfg, sid) if len(states) > 1 else states[0]],
                 "n_keys": [int(pdf["n_keys"].sum())],  # upper bound across batches
                 "input_rows": [int(pdf["input_rows"].sum())],
                 "build_ns": [int(pdf["build_ns"].sum())],
@@ -329,49 +325,55 @@ def remove_keys_sharded(
     )
 
 
-def build_partials(
-    df: DataFrame,
-    value_col,
-    *,
-    sketch_name: str,
-    acc_factory: Callable[[], "Accumulator"],
-) -> DataFrame:
-    """One partial sketch state per input partition, no shuffle at all.
+@dataclass(frozen=True)
+class EstimateFamily:
+    """One global-state estimate sketch kind (HLL, CMS, KLL, t-digest,
+    DDSketch, Misra-Gries, KMV, AMS, Frequent Directions) as a record.
+    Each estimate module declares one as ``FAMILY`` and its config class
+    carries it as ``family``, so the config alone says how to build and
+    merge (``build_estimate``, ``estimate_state``,
+    ``build_partials_multi``, ``tree_merge``, ``merge_shard_states``):
 
-    For sketches whose state is small and global (HLL registers, CMS
-    counters, KLL compactors, t-digest centroids): each partition folds
-    its rows into an accumulator (vectorized update per Arrow batch),
-    emits one shard row keyed by the Spark partition id (per-partition
-    lineage), and ``tree_merge`` combines the partials. This is the
-    map-side-combine shape: at 1000 executors the shuffle moves only
-    num_partitions tiny states, never the data.
+    - ``sketch_name(cfg)``: the shard rows' ``sketch`` column
+      (``hll14``, ``cms5x8192``, ``kll200``, ...);
+    - ``accumulator(cfg)``: an empty ``Accumulator`` to fold values in;
+    - ``merge_states(states, cfg, shard_id)``: combine partials — the
+      ``FilterFamily`` signature, so merges never ask which record they
+      hold; the state headers carry everything the merge checks, so the
+      module functions default ``cfg`` and ``shard_id``.
     """
-    col = value_col if not isinstance(value_col, str) else F.col(value_col)
-    src = df.select(col.alias("v"), F.spark_partition_id().alias("pid"))
 
-    def run(batches):
-        acc = acc_factory()
-        rows = 0
-        pid = -1
-        t0 = time.perf_counter_ns()
-        for pdf in batches:
-            if len(pdf):
-                pid = int(pdf["pid"].iloc[0])
-                acc.update(pdf["v"].to_numpy())
-                rows += len(pdf)
-        if rows:
-            yield pd.DataFrame(
-                {
-                    "sketch": [sketch_name],
-                    "shard_id": [pid],
-                    "state": [acc.to_bytes()],
-                    "n_keys": [rows],
-                    "input_rows": [rows],
-                    "build_ns": [time.perf_counter_ns() - t0],
-                }
-            )
+    sketch_name: Callable
+    accumulator: Callable
+    merge_states: Callable
 
-    return src.mapInPandas(run, schema=SHARD_SCHEMA)
+
+class Accumulator:
+    """Interface for ``EstimateFamily.accumulator`` values."""
+
+    def update(self, values: np.ndarray) -> None:  # pragma: no cover
+        raise NotImplementedError
+
+    def to_bytes(self) -> bytes:  # pragma: no cover
+        raise NotImplementedError
+
+
+def non_null_values(series: pd.Series, integral: bool) -> np.ndarray:
+    """A value column's non-NULL values as the accumulators take them.
+    Nullable integral columns arrive in pandas as float64 + NaN; after
+    the NULLs drop they are cast back to int64, exact for |v| < 2^53
+    (every token-id / count column here). ``integral`` comes from the
+    column's Spark type, so fractional doubles are never truncated."""
+    arr = series.dropna().to_numpy()
+    if integral and arr.dtype.kind == "f":
+        arr = arr.astype(np.int64)
+    return arr
+
+
+def integral_columns(df: DataFrame) -> set[str]:
+    """Names of ``df``'s columns whose Spark type is integral (read
+    from the analyzed schema — no job)."""
+    return {f.name for f in df.schema.fields if isinstance(f.dataType, IntegralType)}
 
 
 def build_partials_multi(
@@ -379,26 +381,27 @@ def build_partials_multi(
     value_cols: dict,
     sketches: dict,
 ) -> DataFrame:
-    """N accumulator sketches from ONE pass over the data — the
-    scan-count win of the partials family at 100 TB: the standard
+    """N estimate sketches from ONE pass over the data, one partial
+    state per (input partition, sketch) and no shuffle at all — the
+    map-side-combine shape: at 1000 executors the shuffle moves only
+    num_partitions tiny states, never the data, and the standard
     observability suite (distinct + frequency + heavy hitters +
     quantiles) costs one corpus read instead of one per sketch.
 
     ``value_cols``: {col_key: Column-or-name} — each value expression
     is evaluated once JVM-side and shipped once through Arrow, shared
     by every sketch bound to it. ``sketches``: {sketch_name: (col_key,
-    acc_factory)}. NULL values are skipped per sketch (so one exploded
-    row stream can carry a per-ROW value in one column and a per-GROUP
-    value materialized only on the group's first row in another —
-    NULLs elsewhere). Nullable long columns arrive in pandas as
-    float64 + NaN; after dropna they are cast back to int64, exact for
-    |v| < 2^53 (every token-id / count column here).
+    cfg)}, the kind being ``cfg.family``. NULL values are skipped per
+    sketch (so one exploded row stream can carry a per-ROW value in one
+    column and a per-GROUP value materialized only on the group's first
+    row in another — NULLs elsewhere; see ``non_null_values``).
 
-    Output: SHARD_SCHEMA rows, one per (partition, sketch) — the same
-    shape ``build_partials`` emits, so ``tree_merge`` and the lineage
-    tooling apply unchanged. ``build_ns`` records the partition's
-    whole-scan time on each of its rows (the accumulators share the
-    pass; per-sketch attribution would be fiction). Callers fanning
+    Output: SHARD_SCHEMA rows keyed by the Spark partition id
+    (per-partition lineage): ``n_keys`` counts the sketch's non-NULL
+    values, ``input_rows`` the partition's rows, and ``build_ns`` the
+    partition's whole-scan time on each of its rows (the accumulators
+    share the pass; per-sketch attribution would be fiction).
+    ``tree_merge`` combines the partials of one sketch. Callers fanning
     out into per-sketch tree_merges should cache the returned
     DataFrame first — each downstream filter re-scans otherwise.
     """
@@ -407,9 +410,10 @@ def build_partials_multi(
         c = F.col(col) if isinstance(col, str) else col
         sel.append(c.alias(k))
     src = df.select(*sel, F.spark_partition_id().alias("pid"))
+    integral = integral_columns(src)
 
     def run(batches):
-        accs = {name: fac() for name, (_, fac) in sketches.items()}
+        accs = {name: cfg.family.accumulator(cfg) for name, (_, cfg) in sketches.items()}
         rows = {name: 0 for name in sketches}
         pid = -1
         t0 = time.perf_counter_ns()
@@ -420,14 +424,10 @@ def build_partials_multi(
             pid = int(pdf["pid"].iloc[0])
             total += len(pdf)
             for name, (key, _) in sketches.items():
-                v = pdf[key].dropna()
-                if not len(v):
-                    continue
-                arr = v.to_numpy()
-                if arr.dtype.kind == "f":
-                    arr = arr.astype(np.int64)
-                accs[name].update(arr)
-                rows[name] += len(v)
+                arr = non_null_values(pdf[key], key in integral)
+                if len(arr):
+                    accs[name].update(arr)
+                    rows[name] += len(arr)
         if total:
             ns = time.perf_counter_ns() - t0
             yield pd.DataFrame(
@@ -446,12 +446,13 @@ def build_partials_multi(
 
 def tree_merge(
     df: DataFrame,
-    merge_fn: Callable[[list[bytes]], bytes],
+    cfg,
     fanout: int = 32,
     cache_result: bool = False,
 ) -> DataFrame:
     """Reduce partial states to one row via a fan-in tree of grouped
-    merges (the north rule's tree-merge): round r groups shard_id//fanout^r.
+    merges (the north rule's tree-merge): round r groups shard_id//fanout^r
+    and combines each group with ``cfg``'s family merge.
 
     Each round is a tiny shuffle of (num_states / fanout^r) rows; the
     result is independent of grouping because the combines are
@@ -479,20 +480,29 @@ def tree_merge(
     while bound > 1:
         prev = merge_shard_states(
             prev.withColumn("shard_id", (F.col("shard_id") / F.lit(fanout)).cast("int")),
-            merge_fn,
+            cfg,
         )
         bound = -(-bound // fanout)
     return prev.cache() if cache_result else prev
 
 
-class Accumulator:
-    """Interface for build_partials accumulators."""
+def build_estimate(df: DataFrame, value_col, cfg) -> DataFrame:
+    """df[value_col] -> the one merged shard row of the estimate sketch
+    ``cfg`` configures: per-partition partials, then the fan-in tree
+    merge. NULL values are skipped; empty input gives no row."""
+    partials = build_partials_multi(
+        df, {"v": value_col}, {cfg.family.sketch_name(cfg): ("v", cfg)}
+    )
+    return tree_merge(partials, cfg)
 
-    def update(self, values: np.ndarray) -> None:  # pragma: no cover
-        raise NotImplementedError
 
-    def to_bytes(self) -> bytes:  # pragma: no cover
-        raise NotImplementedError
+def estimate_state(df: DataFrame, value_col, cfg) -> bytes:
+    """The merged state bytes of ``build_estimate``; on empty input, the
+    state of an empty accumulator."""
+    rows = build_estimate(df, value_col, cfg).select("state").collect()
+    if not rows:
+        return cfg.family.accumulator(cfg).to_bytes()
+    return bytes(rows[0]["state"])
 
 
 def collect_states(shards_df: DataFrame) -> dict[int, bytes]:

@@ -20,7 +20,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
@@ -106,7 +105,7 @@ def _parse_state(state: bytes):
     return d, w, total, seed, counters
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     parsed = [_parse_state(s) for s in states]
     d, w, seed = parsed[0][0], parsed[0][1], parsed[0][3]
     if any(p[0] != d or p[1] != w or p[3] != seed for p in parsed):
@@ -129,11 +128,10 @@ def total_count(state: bytes) -> int:
     return _parse_state(state)[2]
 
 
-def build_cms(df: DataFrame, value_col, cfg: CmsConfig) -> DataFrame:
-    partials = base.build_partials(
-        df,
-        value_col,
-        sketch_name=f"cms{cfg.depth}x{cfg.width}",
-        acc_factory=lambda: CmsAccumulator(cfg),
-    )
-    return base.tree_merge(partials, merge_states)
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"cms{cfg.depth}x{cfg.width}",
+    accumulator=CmsAccumulator,
+    merge_states=merge_states,
+)
+CmsConfig.family = FAMILY
+build_cms = base.build_estimate

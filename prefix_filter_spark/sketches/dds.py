@@ -43,7 +43,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.sketches import base
 
@@ -222,20 +221,17 @@ class DDSketch(base.Accumulator):
         return out
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     sk = DDSketch.from_bytes(states[0])
     for s in states[1:]:
         sk = sk.merge(DDSketch.from_bytes(s))
     return sk.to_bytes()
 
 
-def build_dds(df: DataFrame, value_col, cfg: DDSketchConfig) -> DataFrame:
-    """df[value_col] -> one merged shard row (build_partials: zero
-    shuffles of data, only num_partitions tiny states move)."""
-    partials = base.build_partials(
-        df,
-        value_col,
-        sketch_name=f"dds{int(cfg.alpha * 10000)}",
-        acc_factory=lambda: DDSketch(cfg),
-    )
-    return base.tree_merge(partials, merge_states)
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"dds{int(cfg.alpha * 10000)}",
+    accumulator=DDSketch,
+    merge_states=merge_states,
+)
+DDSketchConfig.family = FAMILY
+build_dds = base.build_estimate

@@ -16,7 +16,7 @@ n x d to the driver.
 
 Why it fits this library: FD is *deterministic* and *mergeable* —
 shrink(stack(B1, B2)) satisfies the same bound with the slacks adding
-(GLPW16 Thm. 3.1) — so it drops straight into the build_partials ->
+(GLPW16 Thm. 3.1) — so it drops straight into the build_partials_multi ->
 tree_merge shape every other sketch here uses: one pass over the rows,
 one tiny state per partition, a log-fanout reduction of states. At
 10^12 rows the shuffle moves num_partitions * (2*ell*d) doubles, never
@@ -46,7 +46,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.sketches import base
 
@@ -150,7 +149,7 @@ def _parse_state(state: bytes):
     return ell, dim, n, fro, delta, b
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     """Stack every stored row and re-shrink: associative up to the FD
     bound, with the exact removed mass folded into the merged delta."""
     ell, dim, _, _, _, _ = _parse_state(states[0])
@@ -210,17 +209,11 @@ def subspace_distance(sa: bytes, sb: bytes, k: int) -> float:
     return float(1.0 - np.mean(c**2))
 
 
-def build_fd(df: DataFrame, vec_col, cfg: FdConfig) -> DataFrame:
-    """One FD state per partition, tree-merged — no data shuffle."""
-    partials = base.build_partials(
-        df,
-        vec_col,
-        sketch_name=f"fd{cfg.ell}x{cfg.dim}",
-        acc_factory=lambda: FdAccumulator(cfg),
-    )
-    return base.tree_merge(partials, merge_states)
-
-
-def sketch_bytes(df: DataFrame, vec_col, cfg: FdConfig) -> bytes:
-    row = build_fd(df, vec_col, cfg).select("state").collect()[0]
-    return bytes(row["state"])
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"fd{cfg.ell}x{cfg.dim}",
+    accumulator=FdAccumulator,
+    merge_states=merge_states,
+)
+FdConfig.family = FAMILY
+build_fd = base.build_estimate
+sketch_bytes = base.estimate_state

@@ -118,7 +118,7 @@ def _parse_state(state: bytes) -> tuple[int, np.ndarray]:
     return p, np.frombuffer(state, dtype=np.uint8, offset=_HDR.size)
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     metas = [_HDR.unpack_from(s, 0) for s in states]
     if any(
         (m[0], m[1], m[2], m[4]) != (metas[0][0], metas[0][1], metas[0][2], metas[0][4])
@@ -146,14 +146,12 @@ def estimate(state: bytes) -> float:
     return float(est)
 
 
-def build_hll(df: DataFrame, value_col, cfg: HllConfig) -> DataFrame:
-    partials = base.build_partials(
-        df, value_col, sketch_name=f"hll{cfg.p}", acc_factory=lambda: HllAccumulator(cfg)
-    )
-    return base.tree_merge(partials, merge_states)
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"hll{cfg.p}", accumulator=HllAccumulator, merge_states=merge_states
+)
+HllConfig.family = FAMILY
+build_hll = base.build_estimate
 
 
 def distinct_estimate(df: DataFrame, value_col, cfg: HllConfig | None = None) -> float:
-    cfg = cfg or HllConfig()
-    row = build_hll(df, value_col, cfg).select("state").collect()[0]
-    return estimate(bytes(row["state"]))
+    return estimate(base.estimate_state(df, value_col, cfg or HllConfig()))

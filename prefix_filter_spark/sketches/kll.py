@@ -29,7 +29,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import splitmix64
 from prefix_filter_spark.sketches import base
@@ -200,15 +199,15 @@ def range_fraction(state: bytes, lo: float, hi: float) -> float:
     return max(0.0, sk.rank(hi) - sk.rank(float(np.nextafter(lo, -np.inf))))
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     sk = KllSketch.from_bytes(states[0])
     for s in states[1:]:
         sk = sk.merge(KllSketch.from_bytes(s))
     return sk.to_bytes()
 
 
-def build_kll(df: DataFrame, value_col, cfg: KllConfig) -> DataFrame:
-    partials = base.build_partials(
-        df, value_col, sketch_name=f"kll{cfg.k}", acc_factory=lambda: KllSketch(cfg)
-    )
-    return base.tree_merge(partials, merge_states)
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"kll{cfg.k}", accumulator=KllSketch, merge_states=merge_states
+)
+KllConfig.family = FAMILY
+build_kll = base.build_estimate

@@ -28,7 +28,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
@@ -80,7 +79,7 @@ def _parse_state(state: bytes) -> tuple[int, int, np.ndarray]:
     return k, seed, np.frombuffer(state, dtype=np.uint64, offset=_HDR.size)
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     hdr = states[0][: _HDR.size]
     if any(s[: _HDR.size] != hdr for s in states[1:]):
         raise ValueError("cannot merge KMV sketches with different k or seed")
@@ -155,17 +154,9 @@ def jaccard_estimate(sa: bytes, sb: bytes) -> float:
     return len(np.intersect1d(va, vb, assume_unique=True)) / u
 
 
-def build_kmv(df: DataFrame, value_col, cfg: KmvConfig) -> DataFrame:
-    partials = base.build_partials(
-        df,
-        value_col,
-        sketch_name=f"kmv{cfg.k}",
-        acc_factory=lambda: KmvAccumulator(cfg),
-    )
-    return base.tree_merge(partials, merge_states)
-
-
-def sketch_bytes(df: DataFrame, value_col, cfg: KmvConfig | None = None) -> bytes:
-    cfg = cfg or KmvConfig()
-    row = build_kmv(df, value_col, cfg).select("state").collect()[0]
-    return bytes(row["state"])
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"kmv{cfg.k}", accumulator=KmvAccumulator, merge_states=merge_states
+)
+KmvConfig.family = FAMILY
+build_kmv = base.build_estimate
+sketch_bytes = base.estimate_state

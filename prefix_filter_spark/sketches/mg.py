@@ -39,7 +39,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.sketches import base
 
@@ -118,7 +117,7 @@ def _parse_state(state: bytes) -> tuple[int, int, int, dict[str, int]]:
     return k, total, err, counts
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     parsed = [_parse_state(s) for s in states]
     k = parsed[0][0]
     if any(p[0] != k for p in parsed):
@@ -148,20 +147,9 @@ def heavy_hitters(state: bytes, phi: float) -> dict[str, int]:
     return {t: c for t, c in counts.items() if c >= cut}
 
 
-def build_mg(df: DataFrame, value_col, cfg: MgConfig) -> DataFrame:
-    """Distributed build: per-partition MG partials (no shuffle), then
-    the shared fan-in tree merge — identical plan shape to the other
-    §2.4 sketches (base.py: map-side combine, tiny-state shuffle)."""
-    partials = base.build_partials(
-        df,
-        value_col,
-        sketch_name=f"mg{cfg.k}",
-        acc_factory=lambda: MgAccumulator(cfg),
-    )
-    return base.tree_merge(partials, merge_states)
-
-
-def sketch_bytes(df: DataFrame, value_col, cfg: MgConfig | None = None) -> bytes:
-    cfg = cfg or MgConfig()
-    row = build_mg(df, value_col, cfg).select("state").collect()[0]
-    return bytes(row["state"])
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"mg{cfg.k}", accumulator=MgAccumulator, merge_states=merge_states
+)
+MgConfig.family = FAMILY
+build_mg = base.build_estimate
+sketch_bytes = base.estimate_state

@@ -22,7 +22,6 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from prefix_filter_spark.sketches import base
 
@@ -181,15 +180,15 @@ class TDigest(base.Accumulator):
         return out
 
 
-def merge_states(states: list[bytes]) -> bytes:
+def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     td = TDigest.from_bytes(states[0])
     for s in states[1:]:
         td = td.merge(TDigest.from_bytes(s))
     return td.to_bytes()
 
 
-def build_tdigest(df: DataFrame, value_col, cfg: TDigestConfig) -> DataFrame:
-    partials = base.build_partials(
-        df, value_col, sketch_name=f"tdigest{cfg.delta}", acc_factory=lambda: TDigest(cfg)
-    )
-    return base.tree_merge(partials, merge_states)
+FAMILY = base.EstimateFamily(
+    sketch_name=lambda cfg: f"tdigest{cfg.delta}", accumulator=TDigest, merge_states=merge_states
+)
+TDigestConfig.family = FAMILY
+build_tdigest = base.build_estimate

@@ -19,7 +19,7 @@ file:
   ``expected_keys_per_file``; identical headers make slice partials
   OR-mergeable, so the only shuffle moves ``O(n_files)`` tiny states —
   the raw keys never leave their input split (map-side combine, the
-  ``build_partials`` shape from ``sketches/base.py``).
+  ``build_partials_multi`` shape from ``sketches/base.py``).
 - **exact mode** (``exact_size=True``): groupBy(file) over the hashes,
   one state sized to the file's true distinct-key count — tightest
   bits/key, used by the FPR assertions in tests; shuffle is 8 bytes

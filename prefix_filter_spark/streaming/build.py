@@ -8,11 +8,12 @@ the property the merge tests pin down). Two shapes:
 
 - ``foreach_batch_build``: exactly-once accumulation into a parquet
   state store via foreachBatch (the recommended custom-sink pattern);
-  works for every sketch in the library: filters merge through their
-  config's family record, the other sketches through ``merge_states``.
-- ``streaming_distinct_by_source``: applyInPandasWithState showcase —
-  per-`source` running distinct-token estimate with HLL state kept in
-  the streaming state store.
+  works for every mergeable sketch in the library: ``merge_fn`` is its
+  config, whose family record merges (``base.merge_shard_states``).
+- five ``streaming_*_by_source`` ops (HLL distinct, Misra-Gries heavy
+  hitters, KLL and DDSketch quantiles, the six-sketch token profile):
+  one applyInPandasWithState runner keeps each ``source``'s running
+  sketch states in the streaming state store.
 """
 
 from __future__ import annotations
@@ -31,8 +32,7 @@ def foreach_batch_build(
     key_col: str,
     *,
     build_fn: Callable[[DataFrame, str], DataFrame],
-    merge_fn,  # a filter config (its family's shard-aware merge) or
-    # f(states) for the global-state sketches — see base.merge_shard_states
+    merge_fn,  # the sketch's config — see base.merge_shard_states
     state_path: str,
     checkpoint_dir: str,
     trigger_once: bool = True,
@@ -133,6 +133,75 @@ def foreach_batch_build(
     return writer.start()
 
 
+def _by_source(
+    df: DataFrame,
+    sketches: dict,
+    emit: Callable[[dict, int, int], dict],
+    output_schema: str,
+    timeout: str,
+):
+    """Running per-``source`` sketch states via applyInPandasWithState.
+
+    ``sketches``: {state_field: (input_col, cfg)}. Each trigger folds an
+    input column's non-NULL values (``base.non_null_values``) into a
+    fresh accumulator per sketch and merges it into the group's running
+    state with the config's family merge. The state struct is one binary
+    field per sketch plus ``n_rows long``, the group's rows so far.
+    ``emit(states, batch_rows, n_rows)`` returns the output row's
+    columns after ``source``, as ``output_schema`` lists them.
+    """
+    timeout_conf = getattr(GroupStateTimeout, timeout, None)
+    if timeout_conf is None:
+        raise ValueError(
+            f"unknown timeout {timeout!r}; expected a GroupStateTimeout "
+            "name (NoTimeout, ProcessingTimeTimeout, EventTimeTimeout)"
+        )
+    integral = base.integral_columns(df)
+    cols = {col for col, _ in sketches.values()}
+
+    def update(key, pdfs, state: GroupState):
+        accs = {f: cfg.family.accumulator(cfg) for f, (_, cfg) in sketches.items()}
+        rows = 0
+        for pdf in pdfs:
+            rows += len(pdf)
+            vals = {c: base.non_null_values(pdf[c], c in integral) for c in cols}
+            for f, (c, _) in sketches.items():
+                accs[f].update(vals[c])
+        states = {f: acc.to_bytes() for f, acc in accs.items()}
+        n_rows = rows
+        if state.exists:
+            prev = state.get
+            n_rows += int(prev[-1])
+            states = {
+                f: cfg.family.merge_states([bytes(prev[i]), states[f]], cfg, 0)
+                for i, (f, (_, cfg)) in enumerate(sketches.items())
+            }
+        state.update((*states.values(), n_rows))
+        out = {"source": key[0], **emit(states, rows, n_rows)}
+        yield pd.DataFrame({k: [v] for k, v in out.items()})
+
+    fields = ", ".join(f"{f} binary" for f in sketches)
+    return df.groupBy("source").applyInPandasWithState(
+        update,
+        outputStructType=f"source string, {output_schema}",
+        stateStructType=f"{fields}, n_rows long",
+        outputMode="update",
+        timeoutConf=timeout_conf,
+    )
+
+
+def _quantile_names(qs) -> list[str]:
+    # round() — int() truncates under float representation (0.29*100 ==
+    # 28.999... would name the 29th percentile column 'q28')
+    q_names = [f"q{int(round(q * 100))}" for q in qs]
+    if len(set(q_names)) != len(q_names):
+        raise ValueError(
+            f"quantiles {qs} collide at whole-percent column names "
+            f"{q_names}; pick distinct percents"
+        )
+    return q_names
+
+
 def streaming_distinct_by_source(
     events: DataFrame,
     *,
@@ -144,47 +213,17 @@ def streaming_distinct_by_source(
     `source`, state = serialized registers (applyInPandasWithState).
 
     Input stream schema: (source string, token long). Output per batch:
-    (source, n_distinct_est double, n_rows bigint).
+    (source, n_distinct_est double, n_rows bigint) — ``n_rows`` counts
+    this batch's rows of the source.
     """
     from prefix_filter_spark.sketches import hll
 
-    cfg = hll.HllConfig(p=p, seed=seed)
-
-    def update(key, pdfs, state: GroupState):
-        acc = hll.HllAccumulator(cfg)
-        if state.exists:
-            (blob,) = state.get
-            merged_prev = blob
-        else:
-            merged_prev = None
-        rows = 0
-        for pdf in pdfs:
-            acc.update(pdf["token"].to_numpy())
-            rows += len(pdf)
-        new_state = acc.to_bytes()
-        if merged_prev is not None:
-            new_state = hll.merge_states([merged_prev, new_state])
-        state.update((new_state,))
-        yield pd.DataFrame(
-            {
-                "source": [key[0]],
-                "n_distinct_est": [hll.estimate(new_state)],
-                "n_rows": [rows],
-            }
-        )
-
-    timeout_conf = getattr(GroupStateTimeout, timeout, None)
-    if timeout_conf is None:
-        raise ValueError(
-            f"unknown timeout {timeout!r}; expected a GroupStateTimeout "
-            "name (NoTimeout, ProcessingTimeTimeout, EventTimeTimeout)"
-        )
-    return events.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType="source string, n_distinct_est double, n_rows long",
-        stateStructType="state binary",
-        outputMode="update",
-        timeoutConf=timeout_conf,
+    return _by_source(
+        events,
+        {"state": ("token", hll.HllConfig(p=p, seed=seed))},
+        lambda st, rows, _: {"n_distinct_est": hll.estimate(st["state"]), "n_rows": rows},
+        "n_distinct_est double, n_rows long",
+        timeout,
     )
 
 
@@ -206,47 +245,20 @@ def streaming_heavy_hitters_by_source(
     """
     from prefix_filter_spark.sketches import mg
 
-    cfg = mg.MgConfig(k=k)
-
-    def update(key, pdfs, state: GroupState):
-        acc = mg.MgAccumulator(cfg)
-        for pdf in pdfs:
-            acc.update(pdf["token"].to_numpy())
-        new_state = acc.to_bytes()
-        if state.exists:
-            (blob,) = state.get
-            new_state = mg.merge_states([bytes(blob), new_state])
-        state.update((new_state,))
-        total, err, counts = mg.estimates(new_state)
+    def emit(st, _rows, _n_rows):
+        total, err, counts = mg.estimates(st["state"])
         top_token, top_est = (None, None)
         if counts:
             top_token = max(counts, key=lambda t: (counts[t], t))
             top_est = counts[top_token]
-        yield pd.DataFrame(
-            {
-                "source": [key[0]],
-                "n_total": [total],
-                "err": [err],
-                "top_token": [top_token],
-                "top_est": [top_est],
-            }
-        )
+        return {"n_total": total, "err": err, "top_token": top_token, "top_est": top_est}
 
-    timeout_conf = getattr(GroupStateTimeout, timeout, None)
-    if timeout_conf is None:
-        raise ValueError(
-            f"unknown timeout {timeout!r}; expected a GroupStateTimeout "
-            "name (NoTimeout, ProcessingTimeTimeout, EventTimeTimeout)"
-        )
-    return tokens.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "source string, n_total long, err long, "
-            "top_token string, top_est long"
-        ),
-        stateStructType="state binary",
-        outputMode="update",
-        timeoutConf=timeout_conf,
+    return _by_source(
+        tokens,
+        {"state": ("token", mg.MgConfig(k=k))},
+        emit,
+        "n_total long, err long, top_token string, top_est long",
+        timeout,
     )
 
 
@@ -274,51 +286,23 @@ def streaming_quantiles_by_source(
     from prefix_filter_spark.sketches import kll
 
     cfg = kll.KllConfig(k=k, seed=seed)
-    # round() — int() truncates under float representation (0.29*100 ==
-    # 28.999... would name the 29th percentile column 'q28')
-    q_names = [f"q{int(round(q * 100))}" for q in qs]
-    if len(set(q_names)) != len(q_names):
-        raise ValueError(
-            f"quantiles {qs} collide at whole-percent column names "
-            f"{q_names}; pick distinct percents"
-        )
+    q_names = _quantile_names(qs)
 
-    def update(key, pdfs, state: GroupState):
-        acc = kll.KllSketch(cfg)
-        rows = 0
-        for pdf in pdfs:
-            vals = pdf["value"].to_numpy(dtype="float64")
-            acc.update(vals)
-            rows += len(vals)
-        new_state = acc.to_bytes()
-        if state.exists:
-            (blob, prev_rows) = state.get
-            new_state = kll.merge_states([bytes(blob), new_state])
-            rows += int(prev_rows)
-        state.update((new_state, rows))
-        sk = kll.KllSketch.from_bytes(new_state, cfg)
-        est = sk.quantiles(list(qs))
-        out = {"source": [key[0]], "n_rows_total": [rows]}
-        for name, v in zip(q_names, est.tolist()):
-            out[name] = [float(v)]
-        out["rank_eps"] = [cfg.rank_eps()]
-        yield pd.DataFrame(out)
+    def emit(st, _rows, n_rows):
+        est = kll.KllSketch.from_bytes(st["state"], cfg).quantiles(list(qs))
+        return {
+            "n_rows_total": n_rows,
+            **{n: float(v) for n, v in zip(q_names, est.tolist())},
+            "rank_eps": cfg.rank_eps(),
+        }
 
-    timeout_conf = getattr(GroupStateTimeout, timeout, None)
-    if timeout_conf is None:
-        raise ValueError(
-            f"unknown timeout {timeout!r}; expected a GroupStateTimeout "
-            "name (NoTimeout, ProcessingTimeTimeout, EventTimeTimeout)"
-        )
     cols = ", ".join(f"{n} double" for n in q_names)
-    return values.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"source string, n_rows_total long, {cols}, rank_eps double"
-        ),
-        stateStructType="state binary, n_rows long",
-        outputMode="update",
-        timeoutConf=timeout_conf,
+    return _by_source(
+        values,
+        {"state": ("value", cfg)},
+        emit,
+        f"n_rows_total long, {cols}, rank_eps double",
+        timeout,
     )
 
 
@@ -346,56 +330,26 @@ def streaming_dds_quantiles_by_source(
     from prefix_filter_spark.sketches import dds
 
     cfg = dds.DDSketchConfig(alpha=alpha, max_bins=max_bins)
-    q_names = [f"q{int(round(q * 100))}" for q in qs]
-    if len(set(q_names)) != len(q_names):
-        raise ValueError(
-            f"quantiles {qs} collide at whole-percent column names "
-            f"{q_names}; pick distinct percents"
-        )
-    import numpy as _np
+    q_names = _quantile_names(qs)
 
-    def update(key, pdfs, state: GroupState):
-        acc = dds.DDSketch(cfg)
-        rows = 0
-        for pdf in pdfs:
-            vals = pdf["value"].to_numpy(dtype="float64")
-            acc.update(vals)
-            # count what the sketch counts: nulls arrive as NaN and
-            # update() drops non-finite values, so n_rows_total must
-            # track the sketch's own n or the two bookkeepings diverge
-            rows += int(_np.isfinite(vals).sum())
-        new_state = acc.to_bytes()
-        if state.exists:
-            (blob, prev_rows) = state.get
-            merged = dds.DDSketch.from_bytes(bytes(blob)).merge(
-                dds.DDSketch.from_bytes(new_state)
-            )
-            new_state = merged.to_bytes()
-            rows += int(prev_rows)
-        state.update((new_state, rows))
-        sk = dds.DDSketch.from_bytes(new_state)
+    def emit(st, _rows, _n_rows):
+        sk = dds.DDSketch.from_bytes(st["state"])
         est = sk.quantiles(list(qs))
-        out = {"source": [key[0]], "n_rows_total": [rows]}
-        for name, v in zip(q_names, est.tolist()):
-            out[name] = [float(v)]
-        out["alpha"] = [cfg.alpha]
-        yield pd.DataFrame(out)
+        return {
+            # count what the sketch counts: NULL and non-finite values
+            # are not in the sketch, so they are not in n_rows_total
+            "n_rows_total": sk.n,
+            **{n: float(v) for n, v in zip(q_names, est.tolist())},
+            "alpha": cfg.alpha,
+        }
 
-    timeout_conf = getattr(GroupStateTimeout, timeout, None)
-    if timeout_conf is None:
-        raise ValueError(
-            f"unknown timeout {timeout!r}; expected a GroupStateTimeout "
-            "name (NoTimeout, ProcessingTimeTimeout, EventTimeTimeout)"
-        )
     cols = ", ".join(f"{n} double" for n in q_names)
-    return values.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"source string, n_rows_total long, {cols}, alpha double"
-        ),
-        stateStructType="state binary, n_rows long",
-        outputMode="update",
-        timeoutConf=timeout_conf,
+    return _by_source(
+        values,
+        {"state": ("value", cfg)},
+        emit,
+        f"n_rows_total long, {cols}, alpha double",
+        timeout,
     )
 
 
@@ -430,81 +384,29 @@ def streaming_token_profile_by_source(
     merge-order bounds (their states are not canonical under
     regrouping — same caveat their batch merge tests pin).
     """
-    import numpy as np
-
     from prefix_filter_spark.sketches import cms, hll, kll, kmv, mg, tdigest
 
-    mods = {
-        "hll": (hll, lambda: hll.HllAccumulator(hll.HllConfig())),
-        "cms": (cms, lambda: cms.CmsAccumulator(cms.CmsConfig())),
-        "mg": (mg, lambda: mg.MgAccumulator(mg.MgConfig())),
-        "kmv": (kmv, lambda: kmv.KmvAccumulator(kmv.KmvConfig())),
-        "kll": (kll, lambda: kll.KllSketch(kll.KllConfig())),
-        "td": (tdigest, lambda: tdigest.TDigest(tdigest.TDigestConfig())),
-    }
-    order = list(mods)
+    def emit(st, _rows, n_rows):
+        return {
+            "n_total": n_rows,
+            "distinct_est": hll.estimate(st["hll"]),
+            "total_tokens": cms.total_count(st["cms"]),
+            "p50_ntok": kll.KllSketch.from_bytes(st["kll"]).quantile(0.5),
+            **st,
+        }
 
-    def _ints(series):
-        v = series.dropna()
-        if not len(v):
-            return None
-        arr = v.to_numpy()
-        if arr.dtype.kind == "f":
-            arr = arr.astype(np.int64)
-        return arr
-
-    def update(key, pdfs, state: GroupState):
-        accs = {n: fac() for n, (_, fac) in mods.items()}
-        rows = 0
-        for pdf in pdfs:
-            rows += len(pdf)
-            tok = _ints(pdf["token"])
-            if tok is not None:
-                for n in ("hll", "cms", "mg", "kmv"):
-                    accs[n].update(tok)
-            no = _ints(pdf["ntok_once"])
-            if no is not None:
-                accs["kll"].update(no)
-                accs["td"].update(no)
-        new = {n: accs[n].to_bytes() for n in order}
-        if state.exists:
-            prev = state.get
-            n_total = int(prev[-1]) + rows
-            new = {
-                n: mods[n][0].merge_states([bytes(prev[i]), new[n]])
-                for i, n in enumerate(order)
-            }
-        else:
-            n_total = rows
-        state.update(tuple(new[n] for n in order) + (n_total,))
-        yield pd.DataFrame(
-            {
-                "source": [key[0]],
-                "n_total": [n_total],
-                "distinct_est": [hll.estimate(new["hll"])],
-                "total_tokens": [cms.total_count(new["cms"])],
-                "p50_ntok": [kll.KllSketch.from_bytes(new["kll"]).quantile(0.5)],
-                **{n: [new[n]] for n in order},
-            }
-        )
-
-    timeout_conf = getattr(GroupStateTimeout, timeout, None)
-    if timeout_conf is None:
-        raise ValueError(
-            f"unknown timeout {timeout!r}; expected a GroupStateTimeout name"
-        )
-    return events.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "source string, n_total long, distinct_est double, "
-            "total_tokens long, p50_ntok double, "
-            "hll binary, cms binary, mg binary, kmv binary, "
-            "kll binary, td binary"
-        ),
-        stateStructType=(
-            "hll binary, cms binary, mg binary, kmv binary, "
-            "kll binary, td binary, n_total long"
-        ),
-        outputMode="update",
-        timeoutConf=timeout_conf,
+    return _by_source(
+        events,
+        {
+            "hll": ("token", hll.HllConfig()),
+            "cms": ("token", cms.CmsConfig()),
+            "mg": ("token", mg.MgConfig()),
+            "kmv": ("token", kmv.KmvConfig()),
+            "kll": ("ntok_once", kll.KllConfig()),
+            "td": ("ntok_once", tdigest.TDigestConfig()),
+        },
+        emit,
+        "n_total long, distinct_est double, total_tokens long, p50_ntok double, "
+        "hll binary, cms binary, mg binary, kmv binary, kll binary, td binary",
+        timeout,
     )

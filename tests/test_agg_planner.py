@@ -44,6 +44,18 @@ def test_detect_finds_planted_hot_key(skewed):
     assert r.total_rows == 40_000
 
 
+def test_detect_counts_a_hot_null_key(skewed):
+    """NULL is a groupBy group like any other: a NULL-keyed half of
+    the rows is the hot key, although the sketches skip NULL values."""
+    nulls = skewed.select(
+        F.when(F.col("source") != "hot", F.col("source")).alias("source")
+    )
+    r = detect_key_skew(nulls, "source")
+    assert r.top_key == "None"
+    assert 0.45 <= r.top_share_lb <= 0.55
+    assert r.total_rows == 40_000
+
+
 def test_bucket_policy(skewed, uniform):
     hot = detect_key_skew(skewed, "source")
     cold = detect_key_skew(uniform, "source")
@@ -60,8 +72,7 @@ def test_planned_build_bit_identical_to_fixed(skewed):
         skewed,
         "source",
         "v",
-        acc_factory=lambda: hll.HllAccumulator(cfg),
-        merge_fn=hll.merge_states,
+        cfg,
         salt_on="id",
         n_groups=20,
     )
@@ -72,8 +83,7 @@ def test_planned_build_bit_identical_to_fixed(skewed):
         skewed,
         "source",
         "v",
-        acc_factory=lambda: hll.HllAccumulator(cfg),
-        merge_fn=hll.merge_states,
+        cfg,
         salt_on="id",
         salt_buckets=7,  # any other fan-out: merges are associative
     )

@@ -192,9 +192,7 @@ def test_dds_per_group_skew_safe_build(spark):
     out = {
         r["group"]: bytes(r["state"])
         for r in sketch_by_group(
-            df, "source", "v",
-            acc_factory=lambda: dds.DDSketch(cfg),
-            merge_fn=dds.merge_states,
+            df, "source", "v", cfg,
             salt_on="doc_id", salt_buckets=8,
         ).collect()
     }

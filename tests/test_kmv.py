@@ -150,7 +150,7 @@ def test_streaming_kmv_equals_batch(spark, tmp_path):
         stream,
         "key",
         build_fn=lambda df, k: kmv.build_kmv(df, k, cfg),
-        merge_fn=kmv.merge_states,
+        merge_fn=cfg,
         state_path=f"{tmp_path}/state",
         checkpoint_dir=f"{tmp_path}/ckpt",
     )
@@ -175,8 +175,7 @@ def test_per_group_kmv(spark):
         df,
         "source",
         "v",
-        acc_factory=lambda: kmv.KmvAccumulator(cfg),
-        merge_fn=kmv.merge_states,
+        cfg,
         salt_on="v",
     ).toPandas()
     assert len(out) == 3

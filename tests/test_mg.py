@@ -156,8 +156,7 @@ def test_per_group_mg(spark):
         df,
         "source",
         "tok",
-        acc_factory=lambda: mg.MgAccumulator(cfg),
-        merge_fn=mg.merge_states,
+        cfg,
         salt_on="tok",
     ).toPandas()
     assert len(out) == 3

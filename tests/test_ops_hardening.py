@@ -146,7 +146,7 @@ def test_streaming_foreach_batch_equals_batch(spark):
         stream,
         "key",
         build_fn=lambda df, k: bloom.build_bloom(df, k, cfg),
-        merge_fn=bloom.merge_states,
+        merge_fn=cfg,
         state_path=f"{TMP}/stream_state",
         checkpoint_dir=f"{TMP}/stream_ckpt",
     )
@@ -296,9 +296,7 @@ def test_sketch_by_group_salted(spark):
     tok = synthetic.exploded_token_stream(docs)
     cfg = hll.HllConfig(p=13, seed=42)
     out = sketch_by_group(
-        tok, "source", F.col("token").cast("long"),
-        acc_factory=lambda: hll.HllAccumulator(cfg),
-        merge_fn=hll.merge_states,
+        tok, "source", F.col("token").cast("long"), cfg,
         salt_on="doc_id", salt_buckets=16,
     ).toPandas()
     exact = tok.groupBy("source").agg(
@@ -374,7 +372,7 @@ def test_streaming_epoch_replay_is_skipped(spark):
             stream,
             "key",
             build_fn=lambda df, k: bloom.build_bloom(df, k, cfg),
-            merge_fn=bloom.merge_states,
+            merge_fn=cfg,
             state_path=state,
             checkpoint_dir=ckpt,
         )
@@ -419,7 +417,7 @@ def test_streaming_epoch_marker_atomic_and_recovers(spark):
             stream,
             "key",
             build_fn=lambda df, k: bloom.build_bloom(df, k, cfg),
-            merge_fn=bloom.merge_states,
+            merge_fn=cfg,
             state_path=state,
             checkpoint_dir=ckpt,
         )

@@ -1,10 +1,14 @@
-"""The filter-family contract (sketches/base.py FilterFamily) over every
-sharded filter kind: each config carries its module's family record,
-and the one build / merge / probe machinery (``ShardedFilter``, the
-family's ``build_state`` / ``merge_states``) resolves the kind from it.
+"""The family contracts (sketches/base.py FilterFamily, EstimateFamily).
 
-States are built driver-side with each family's ``build_state`` (no
-Spark), so the whole matrix runs in seconds.
+Every sharded filter kind: each config carries its module's family
+record, and the one build / merge / probe machinery (``ShardedFilter``,
+the family's ``build_state`` / ``merge_states``) resolves the kind from
+it. States are built driver-side with each family's ``build_state`` (no
+Spark), so that matrix runs in seconds.
+
+Every estimate kind: ``base.build_estimate`` / ``estimate_state`` over
+Spark skip NULL values, return the empty state on empty input, and leave
+fractional doubles as they are.
 """
 
 from __future__ import annotations
@@ -15,11 +19,12 @@ import importlib
 import pickle
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from prefix_filter_spark import registry
 from prefix_filter_spark.hashing import shard_of
-from prefix_filter_spark.sketches import base
+from prefix_filter_spark.sketches import ams, base, cms, dds, fd, hll, kll, kmv, mg, tdigest
 from prefix_filter_spark.sketches import bfuse as bfm
 from prefix_filter_spark.sketches import blocked_bloom as bbm
 from prefix_filter_spark.sketches import bloom as blm
@@ -209,3 +214,75 @@ def test_every_lookup_sketch_has_a_family_record():
         assert isinstance(importlib.import_module(info.module).FAMILY, base.FilterFamily), name
     for module, cfg in KINDS.values():
         assert registry.info(cfg.family.sketch_name(cfg)).module == module.__name__
+
+
+# estimate kind -> (module, config, Spark type of its value column)
+ESTIMATE_KINDS = {
+    "hll": (hll, hll.HllConfig(p=10), "bigint"),
+    "cms": (cms, cms.CmsConfig(width=256, depth=3), "bigint"),
+    "kll": (kll, kll.KllConfig(k=64), "double"),
+    "tdigest": (tdigest, tdigest.TDigestConfig(delta=50), "double"),
+    "dds": (dds, dds.DDSketchConfig(alpha=0.02), "double"),
+    "mg": (mg, mg.MgConfig(k=16), "string"),
+    "kmv": (kmv, kmv.KmvConfig(k=64), "bigint"),
+    "ams": (ams, ams.AmsConfig(width=128, depth=3), "bigint"),
+    "fd": (fd, fd.FdConfig(ell=4, dim=3), "array<double>"),
+}
+
+
+def test_every_estimate_sketch_has_a_family_record():
+    """Every ESTIMATE entry's module declares an EstimateFamily, its
+    config carries it, and each kind's sketch name resolves back to
+    that module."""
+    estimate = {
+        name: info
+        for name, info in registry.REGISTRY.items()
+        if info.functionality & registry.Capability.ESTIMATE
+    }
+    assert len(estimate) == len(ESTIMATE_KINDS)
+    for name, info in estimate.items():
+        family = importlib.import_module(info.module).FAMILY
+        assert isinstance(family, base.EstimateFamily), name
+    for module, cfg, _ in ESTIMATE_KINDS.values():
+        assert cfg.family is module.FAMILY
+        assert registry.info(cfg.family.sketch_name(cfg)).module == module.__name__
+
+
+@pytest.mark.parametrize("kind", ["hll", "cms", "kmv", "mg", "ams"])
+def test_null_keys_are_skipped(spark, kind):
+    """NULLs in a nullable bigint column are not keys: the state equals
+    a driver-side accumulator fed only the non-NULL values (a NULL used
+    to arrive as NaN and count as the key INT64_MIN)."""
+    module, cfg, _ = ESTIMATE_KINDS[kind]
+    df = spark.createDataFrame([(1,), (2,), (3,), (None,), (None,)], "k bigint")
+    rows = getattr(module, f"build_{kind}")(df, "k", cfg).collect()
+    acc = cfg.family.accumulator(cfg)
+    acc.update(np.array([1, 2, 3], dtype=np.int64))
+    assert bytes(rows[0]["state"]) == acc.to_bytes()
+    assert (rows[0]["n_keys"], rows[0]["input_rows"]) == (3, 5)
+
+
+@pytest.mark.parametrize("kind", sorted(ESTIMATE_KINDS))
+def test_empty_input_gives_the_empty_state(spark, kind):
+    module, cfg, dtype = ESTIMATE_KINDS[kind]
+    empty = spark.createDataFrame([], f"v {dtype}")
+    want = cfg.family.accumulator(cfg).to_bytes()
+    assert base.estimate_state(empty, "v", cfg) == want
+    if hasattr(module, "sketch_bytes"):
+        assert module.sketch_bytes(empty, "v", cfg) == want
+    if kind == "hll":
+        assert hll.distinct_estimate(empty, "v", cfg) == 0.0
+
+
+@pytest.mark.parametrize("kind", ["kll", "tdigest", "dds"])
+def test_double_column_is_not_truncated(spark, kind):
+    """A one-partition double column of fractional values builds exactly
+    the state of a driver-side accumulator fed the same values — only
+    integral columns are cast back from float64."""
+    module, cfg, _ = ESTIMATE_KINDS[kind]
+    vals = np.random.default_rng(11).normal(0.0, 50.0, 3_000)
+    df = spark.createDataFrame(pd.DataFrame({"v": vals})).coalesce(1)
+    build = getattr(module, f"build_{kind}")
+    acc = cfg.family.accumulator(cfg)
+    acc.update(vals)
+    assert bytes(build(df, "v", cfg).collect()[0]["state"]) == acc.to_bytes()

@@ -82,29 +82,11 @@ def test_one_pass_states_match_individual_builds(spark):
         F.col("tok").cast("long").alias("tok"),
         F.when(F.col("pos") == 0, F.col("n_tok")).cast("long").alias("no"),
     )
-    solo_hll = (
-        base.tree_merge(
-            base.build_partials(
-                ex.select("tok"),
-                "tok",
-                sketch_name="hll14",
-                acc_factory=lambda: hll.HllAccumulator(hll.HllConfig()),
-            ),
-            hll.merge_states,
-        ).collect()
-    )
+    solo_hll = base.build_estimate(ex.select("tok"), "tok", hll.HllConfig()).collect()
     assert bytes(solo_hll[0]["state"]) == states["hll"]
-    solo_kll = (
-        base.tree_merge(
-            base.build_partials(
-                ex.where("no is not null").select("no"),
-                "no",
-                sketch_name="kll",
-                acc_factory=lambda: kll.KllSketch(kll.KllConfig()),
-            ),
-            kll.merge_states,
-        ).collect()
-    )
+    solo_kll = base.build_estimate(
+        ex.where("no is not null").select("no"), "no", kll.KllConfig()
+    ).collect()
     assert bytes(solo_kll[0]["state"]) == states["kll"]
 
 
@@ -126,12 +108,12 @@ def test_single_scan_plan(spark, tmp_path):
         ex,
         {"tok": "tok", "no": "no"},
         {
-            "hll": ("tok", lambda: hll.HllAccumulator(hll.HllConfig())),
-            "cms": ("tok", lambda: cms.CmsAccumulator(cms.CmsConfig())),
-            "mg": ("tok", lambda: mg.MgAccumulator(mg.MgConfig())),
-            "kmv": ("tok", lambda: kmv.KmvAccumulator(kmv.KmvConfig())),
-            "kll": ("no", lambda: kll.KllSketch(kll.KllConfig())),
-            "td": ("no", lambda: tdigest.TDigest(tdigest.TDigestConfig())),
+            "hll": ("tok", hll.HllConfig()),
+            "cms": ("tok", cms.CmsConfig()),
+            "mg": ("tok", mg.MgConfig()),
+            "kmv": ("tok", kmv.KmvConfig()),
+            "kll": ("no", kll.KllConfig()),
+            "td": ("no", tdigest.TDigestConfig()),
         },
     )
     plan = partials._jdf.queryExecution().executedPlan().toString()
@@ -184,19 +166,13 @@ def test_streaming_twin_matches_batch(spark, tmp_path):
     assert int(pdf["n_total"].iloc[0]) == ex.count()
 
     batch = {}
-    for name, (col, fac, mod) in {
-        "hll": ("token", lambda: hll.HllAccumulator(hll.HllConfig()), hll),
-        "cms": ("token", lambda: cms.CmsAccumulator(cms.CmsConfig()), cms),
-        "kmv": ("token", lambda: kmv.KmvAccumulator(kmv.KmvConfig()), kmv),
+    for name, cfg in {
+        "hll": hll.HllConfig(),
+        "cms": cms.CmsConfig(),
+        "kmv": kmv.KmvConfig(),
     }.items():
-        part = base.build_partials(
-            ex.select(col).where(F.col(col).isNotNull()),
-            col,
-            sketch_name=name,
-            acc_factory=fac,
-        )
-        batch[name] = bytes(
-            base.tree_merge(part, mod.merge_states).collect()[0]["state"]
+        batch[name] = base.estimate_state(
+            ex.select("token").where(F.col("token").isNotNull()), "token", cfg
         )
     for name in ("hll", "cms", "kmv"):
         assert bytes(pdf[name].iloc[0]) == batch[name], name
