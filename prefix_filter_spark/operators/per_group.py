@@ -21,6 +21,7 @@ from __future__ import annotations
 import time
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,24 +51,25 @@ def sketch_by_group(
         col.alias("v"),
         salt_col(salt_on, salt_buckets).alias("_salt"),
     )
-    integral = "v" in base.integral_columns(salted)
     merge = cfg.family.merge_states
 
-    def build_partial(pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_partial(table: pa.Table) -> pa.Table:
+        # Arrow, not pandas: a nullable bigint column would reach pandas
+        # as float64 and lose the bits above 2^53
         t0 = time.perf_counter_ns()
         acc = cfg.family.accumulator(cfg)
-        acc.update(base.non_null_values(pdf["v"], integral))
-        return pd.DataFrame(
+        acc.update(base.non_null_values(table.column("v")))
+        return pa.table(
             {
-                "group": [pdf["group"].iloc[0]],
-                "state": [acc.to_bytes()],
-                "n_rows": [len(pdf)],
-                "n_partials": [1],
-                "build_ns": [time.perf_counter_ns() - t0],
+                "group": table.column("group").slice(0, 1),
+                "state": pa.array([acc.to_bytes()], pa.binary()),
+                "n_rows": pa.array([table.num_rows], pa.int64()),
+                "n_partials": pa.array([1], pa.int64()),
+                "build_ns": pa.array([time.perf_counter_ns() - t0], pa.int64()),
             }
         )
 
-    partials = salted.groupBy("group", "_salt").applyInPandas(
+    partials = salted.groupBy("group", "_salt").applyInArrow(
         build_partial, schema=GROUP_SCHEMA
     )
 

@@ -111,20 +111,22 @@ def token_sketch_profile(
     partials = base.build_partials_multi(
         ex, {"tok": "tok", "ntok_once": "ntok_once"}, sketches
     ).cache()
-    partials.count()  # materialize the ONE scan before fanning out
-    states: dict[str, bytes] = {}
-    for name, (_, cfg) in sketches.items():
+    partials.count()  # materialize the ONE scan before the merge
+    try:
+        # one tree merges all six sketches (tree_merge is looked up on
+        # the module at call time, so a tracing wrapper sees it)
         rows = base.tree_merge(
-            partials.where(F.col("sketch") == name), cfg
+            partials, {name: cfg for name, (_, cfg) in sketches.items()}
         ).collect()
-        if not rows:
-            partials.unpersist()
-            raise ValueError(
-                "token_sketch_profile: empty input (no token rows) — "
-                "nothing to profile"
-            )
-        states[name] = bytes(rows[0]["state"])
-    partials.unpersist()
+    finally:
+        partials.unpersist()
+    if not rows:
+        raise ValueError(
+            "token_sketch_profile: empty input (no token rows) — "
+            "nothing to profile"
+        )
+    merged = {r["sketch"]: bytes(r["state"]) for r in rows}
+    states = {name: merged[name] for name in sketches}
 
     import numpy as np
 

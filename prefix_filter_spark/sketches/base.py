@@ -27,9 +27,11 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType
 
 from prefix_filter_spark.hashing import as_u64, shard_of
 from prefix_filter_spark.plans.sharding import hashed_key_col, shard_col, widen_key_col
@@ -37,6 +39,16 @@ from prefix_filter_spark.plans.sharding import hashed_key_col, shard_col, widen_
 SHARD_SCHEMA = (
     "sketch string, shard_id int, state binary, "
     "n_keys long, input_rows long, build_ns long"
+)
+_SHARD_ARROW = pa.schema(
+    [
+        ("sketch", pa.string()),
+        ("shard_id", pa.int32()),
+        ("state", pa.binary()),
+        ("n_keys", pa.int64()),
+        ("input_rows", pa.int64()),
+        ("build_ns", pa.int64()),
+    ]
 )
 
 # state_fn(shard_id, unique_sorted_u64_hashes) -> bytes
@@ -233,11 +245,14 @@ def build_filter(df: DataFrame, key_col, cfg, value_col=None) -> DataFrame:
     )
 
 
-def merge_shard_states(df: DataFrame, cfg) -> DataFrame:
-    """Combine same-shard partial states (associative + commutative)
-    with ``cfg``'s family merge, ``merge_states(states, cfg, shard_id)``
-    — the prefix filter needs the shard id for spare re-keying; the
-    estimate sketches' shard id is mere lineage.
+def merge_shard_states(df: DataFrame, cfgs: dict) -> DataFrame:
+    """Combine partial states of the same sketch and shard id
+    (associative + commutative). ``cfgs`` maps each ``sketch`` column
+    value to its config; a group merges with that config's family merge,
+    ``merge_states(states, cfg, shard_id)`` — the prefix filter needs the
+    shard id for spare re-keying; the estimate sketches' shard id is mere
+    lineage. A frame of one sketch passes one entry,
+    ``{cfg.family.sketch_name(cfg): cfg}``.
 
     Used for incremental / streaming builds where several batches each
     produced partial states for the same shard. The result is
@@ -248,23 +263,26 @@ def merge_shard_states(df: DataFrame, cfg) -> DataFrame:
     (which coarsens shard ids) for key-sharded filters — that is only
     for global-state sketches where shard_id is mere lineage.
     """
-    merge = cfg.family.merge_states
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         states = [bytes(s) for s in pdf["state"]]
+        name = pdf["sketch"].iloc[0]
         sid = int(pdf["shard_id"].iloc[0])
+        cfg = cfgs[name]
         return pd.DataFrame(
             {
-                "sketch": [pdf["sketch"].iloc[0]],
+                "sketch": [name],
                 "shard_id": [sid],
-                "state": [merge(states, cfg, sid) if len(states) > 1 else states[0]],
+                "state": [
+                    cfg.family.merge_states(states, cfg, sid) if len(states) > 1 else states[0]
+                ],
                 "n_keys": [int(pdf["n_keys"].sum())],  # upper bound across batches
                 "input_rows": [int(pdf["input_rows"].sum())],
                 "build_ns": [int(pdf["build_ns"].sum())],
             }
         )
 
-    return df.groupBy("shard_id").applyInPandas(merge_group, schema=SHARD_SCHEMA)
+    return df.groupBy("sketch", "shard_id").applyInPandas(merge_group, schema=SHARD_SCHEMA)
 
 
 def remove_keys_sharded(
@@ -358,22 +376,15 @@ class Accumulator:
         raise NotImplementedError
 
 
-def non_null_values(series: pd.Series, integral: bool) -> np.ndarray:
+def non_null_values(arr: pa.Array | pa.ChunkedArray) -> np.ndarray:
     """A value column's non-NULL values as the accumulators take them.
-    Nullable integral columns arrive in pandas as float64 + NaN; after
-    the NULLs drop they are cast back to int64, exact for |v| < 2^53
-    (every token-id / count column here). ``integral`` comes from the
-    column's Spark type, so fractional doubles are never truncated."""
-    arr = series.dropna().to_numpy()
-    if integral and arr.dtype.kind == "f":
-        arr = arr.astype(np.int64)
-    return arr
-
-
-def integral_columns(df: DataFrame) -> set[str]:
-    """Names of ``df``'s columns whose Spark type is integral (read
-    from the analyzed schema — no job)."""
-    return {f.name for f in df.schema.fields if isinstance(f.dataType, IntegralType)}
+    NULLs drop on the Arrow array by its validity mask, so integral
+    values keep all 64 bits and fractional doubles stay as they are;
+    NaN in a floating column is skipped like a NULL."""
+    out = pc.drop_null(arr).to_numpy(zero_copy_only=False)
+    if out.dtype.kind == "f":
+        out = out[~np.isnan(out)]
+    return out
 
 
 def build_partials_multi(
@@ -401,58 +412,57 @@ def build_partials_multi(
     values, ``input_rows`` the partition's rows, and ``build_ns`` the
     partition's whole-scan time on each of its rows (the accumulators
     share the pass; per-sketch attribution would be fiction).
-    ``tree_merge`` combines the partials of one sketch. Callers fanning
-    out into per-sketch tree_merges should cache the returned
-    DataFrame first — each downstream filter re-scans otherwise.
+    ``tree_merge(partials, {name: cfg, ...})`` combines the partials of
+    every sketch in one tree.
     """
-    sel = []
-    for k, col in value_cols.items():
-        c = F.col(col) if isinstance(col, str) else col
-        sel.append(c.alias(k))
-    src = df.select(*sel, F.spark_partition_id().alias("pid"))
-    integral = integral_columns(src)
+    src = df.select(
+        *[(F.col(c) if isinstance(c, str) else c).alias(k) for k, c in value_cols.items()]
+    )
+    keys = list(value_cols)  # the Columns stay on the driver
 
     def run(batches):
         accs = {name: cfg.family.accumulator(cfg) for name, (_, cfg) in sketches.items()}
         rows = {name: 0 for name in sketches}
-        pid = -1
         t0 = time.perf_counter_ns()
         total = 0
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            pid = int(pdf["pid"].iloc[0])
-            total += len(pdf)
+            total += batch.num_rows
+            vals = {key: non_null_values(batch.column(key)) for key in keys}
             for name, (key, _) in sketches.items():
-                arr = non_null_values(pdf[key], key in integral)
-                if len(arr):
-                    accs[name].update(arr)
-                    rows[name] += len(arr)
+                if len(vals[key]):
+                    accs[name].update(vals[key])
+                    rows[name] += len(vals[key])
         if total:
             ns = time.perf_counter_ns() - t0
-            yield pd.DataFrame(
+            n = len(sketches)
+            yield pa.RecordBatch.from_pydict(
                 {
                     "sketch": list(sketches),
-                    "shard_id": [pid] * len(sketches),
-                    "state": [accs[n].to_bytes() for n in sketches],
-                    "n_keys": [rows[n] for n in sketches],
-                    "input_rows": [total] * len(sketches),
-                    "build_ns": [ns] * len(sketches),
-                }
+                    "shard_id": [TaskContext.get().partitionId()] * n,
+                    "state": [accs[name].to_bytes() for name in sketches],
+                    "n_keys": [rows[name] for name in sketches],
+                    "input_rows": [total] * n,
+                    "build_ns": [ns] * n,
+                },
+                schema=_SHARD_ARROW,
             )
 
-    return src.mapInPandas(run, schema=SHARD_SCHEMA)
+    return src.mapInArrow(run, schema=SHARD_SCHEMA)
 
 
 def tree_merge(
     df: DataFrame,
-    cfg,
+    cfgs: dict,
     fanout: int = 32,
-    cache_result: bool = False,
 ) -> DataFrame:
-    """Reduce partial states to one row via a fan-in tree of grouped
-    merges (the north rule's tree-merge): round r groups shard_id//fanout^r
-    and combines each group with ``cfg``'s family merge.
+    """Reduce the partial states of every sketch in ``df`` to one row per
+    sketch via a fan-in tree of grouped merges (the north rule's
+    tree-merge): round r groups (sketch, shard_id//fanout^r) and combines
+    each group with ``cfgs[sketch]``'s family merge (see
+    ``merge_shard_states``). One call serves a whole
+    ``build_partials_multi`` frame, so N sketches share one tree.
 
     Each round is a tiny shuffle of (num_states / fanout^r) rows; the
     result is independent of grouping because the combines are
@@ -461,16 +471,14 @@ def tree_merge(
     The tree is composed LAZILY: one small job reads the max shard id
     off the cached partials (which also materializes them), the round
     count follows arithmetically from that bound, and the whole fan-in
-    chain executes inside the caller's single action — round-1's
-    cache+count per round cost 2 extra Spark jobs per sketch build
-    whose latency dominated small-input builds.
+    chain executes inside the caller's single action.
 
-    Tradeoff: because only the PARTIALS are cached, every action on the
-    returned DataFrame re-executes the log-fanout merge rounds (cheap —
-    they touch num_states/fanout^r rows — but not free). Single-action
-    consumers (the common path: collect the merged state once) want the
-    default; pass ``cache_result=True`` when the merged result is acted
-    on repeatedly (e.g. a diagnostics loop over the same merged state).
+    Caching: ``df`` is cached here and stays cached — every action on
+    the returned DataFrame reads it, so only the caller knows when it
+    is done: call ``df.unpersist()`` after the last action (as
+    ``estimate_state`` and ``token_sketch_profile`` do). Each action
+    re-executes the log-fanout merge rounds (cheap — they touch
+    num_states/fanout^r rows).
     """
     prev = df.cache()
     row = prev.agg(F.max("shard_id").alias("m")).collect()[0]
@@ -480,26 +488,34 @@ def tree_merge(
     while bound > 1:
         prev = merge_shard_states(
             prev.withColumn("shard_id", (F.col("shard_id") / F.lit(fanout)).cast("int")),
-            cfg,
+            cfgs,
         )
         bound = -(-bound // fanout)
-    return prev.cache() if cache_result else prev
+    return prev
+
+
+def _single_partials(df: DataFrame, value_col, cfg) -> tuple[DataFrame, dict]:
+    name = cfg.family.sketch_name(cfg)
+    return build_partials_multi(df, {"v": value_col}, {name: ("v", cfg)}), {name: cfg}
 
 
 def build_estimate(df: DataFrame, value_col, cfg) -> DataFrame:
     """df[value_col] -> the one merged shard row of the estimate sketch
     ``cfg`` configures: per-partition partials, then the fan-in tree
-    merge. NULL values are skipped; empty input gives no row."""
-    partials = build_partials_multi(
-        df, {"v": value_col}, {cfg.family.sketch_name(cfg): ("v", cfg)}
-    )
-    return tree_merge(partials, cfg)
+    merge. NULL values are skipped; empty input gives no row. The
+    partials stay cached (see ``tree_merge``)."""
+    return tree_merge(*_single_partials(df, value_col, cfg))
 
 
 def estimate_state(df: DataFrame, value_col, cfg) -> bytes:
-    """The merged state bytes of ``build_estimate``; on empty input, the
-    state of an empty accumulator."""
-    rows = build_estimate(df, value_col, cfg).select("state").collect()
+    """The merged state bytes of ``build_estimate``, with its cached
+    partials released; on empty input, the state of an empty
+    accumulator."""
+    partials, cfgs = _single_partials(df, value_col, cfg)
+    try:
+        rows = tree_merge(partials, cfgs).select("state").collect()
+    finally:
+        partials.unpersist()
     if not rows:
         return cfg.family.accumulator(cfg).to_bytes()
     return bytes(rows[0]["state"])

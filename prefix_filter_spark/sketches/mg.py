@@ -52,46 +52,63 @@ class MgConfig:
     k: int = 256  # max counters kept; err <= n/(k+1)
 
 
-def _compress(counts: dict[str, int], k: int) -> int:
-    """Compress to at most k counters; returns the subtracted amount."""
-    if len(counts) <= k:
-        return 0
-    # (k+1)-th largest count is the subtraction that leaves <= k positive
-    vals = np.sort(np.fromiter(counts.values(), dtype=np.int64))[::-1]
-    sub = int(vals[k])
-    for t in list(counts):
-        c = counts[t] - sub
-        if c > 0:
-            counts[t] = c
-        else:
-            del counts[t]
-    return sub
+def _fold(keys: np.ndarray, cnts: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray, int]:
+    """Sum the counts of equal keys, then compress to at most k counters:
+    subtract the (k+1)-th largest count from every counter and drop the
+    non-positive ones. Returns (sorted distinct keys, counts, subtracted
+    amount). The survivors depend only on the counts, not on key order."""
+    uniq, inv = np.unique(keys, return_inverse=True)
+    sums = np.zeros(len(uniq), dtype=np.int64)
+    np.add.at(sums, inv, cnts)
+    if len(sums) <= k:
+        return uniq, sums, 0
+    sub = int(np.partition(sums, len(sums) - k - 1)[len(sums) - k - 1])
+    keep = sums > sub
+    return uniq[keep], sums[keep] - sub, sub
+
+
+def _as_keys(values: np.ndarray) -> np.ndarray:
+    """Integral input stays int64 (stringified only in ``to_bytes``);
+    everything else is counted by its ``str`` form."""
+    if values.dtype.kind in "iu" and np.can_cast(values.dtype, np.int64):
+        return values.astype(np.int64, copy=False)
+    return values.astype(str)
 
 
 class MgAccumulator(base.Accumulator):
+    """Counters as parallel ``keys``/``cnts`` arrays: each batch folds in
+    with one ``np.unique`` over the kept keys plus the batch."""
+
     def __init__(self, cfg: MgConfig):
         self.cfg = cfg
-        self.counts: dict[str, int] = {}
+        self.keys = np.zeros(0, dtype=np.int64)
+        self.cnts = np.zeros(0, dtype=np.int64)
         self.total = 0
         self.err = 0
 
     def update(self, values: np.ndarray) -> None:
         if len(values) == 0:
             return
-        toks, cnts = np.unique(values.astype(str), return_counts=True)
-        for t, c in zip(toks, cnts):
-            self.counts[t] = self.counts.get(t, 0) + int(c)
-        self.total += int(cnts.sum())
-        self.err += _compress(self.counts, self.cfg.k)
+        batch = _as_keys(values)
+        if batch.dtype.kind != self.keys.dtype.kind:
+            batch, self.keys = batch.astype(str), self.keys.astype(str)
+        self.keys, self.cnts, sub = _fold(
+            np.concatenate([self.keys, batch]),
+            np.concatenate([self.cnts, np.ones(len(batch), dtype=np.int64)]),
+            self.cfg.k,
+        )
+        self.total += len(batch)
+        self.err += sub
 
     def to_bytes(self) -> bytes:
-        return _serialize(self.cfg.k, self.total, self.err, self.counts)
+        return _serialize(self.cfg.k, self.total, self.err, self.keys, self.cnts)
 
 
-def _serialize(k: int, total: int, err: int, counts: dict[str, int]) -> bytes:
-    toks = sorted(counts)
-    blobs = [t.encode("utf-8") for t in toks]
-    cnt_arr = np.array([counts[t] for t in toks], dtype=np.int64)
+def _serialize(k: int, total: int, err: int, keys: np.ndarray, cnts: np.ndarray) -> bytes:
+    toks = [str(t) for t in keys]
+    order = sorted(range(len(toks)), key=toks.__getitem__)
+    blobs = [toks[i].encode("utf-8") for i in order]
+    cnt_arr = np.asarray(cnts, dtype=np.int64)[order]
     len_arr = np.array([len(b) for b in blobs], dtype=np.uint32)
     return (
         _HDR.pack(_MAGIC, _VERSION, 0, 0, k, total, err, len(toks))
@@ -101,7 +118,8 @@ def _serialize(k: int, total: int, err: int, counts: dict[str, int]) -> bytes:
     )
 
 
-def _parse_state(state: bytes) -> tuple[int, int, int, dict[str, int]]:
+def _parse_arrays(state: bytes) -> tuple[int, int, int, np.ndarray, np.ndarray]:
+    """(k, total, err, token object array, int64 counts)."""
     magic, version, _, _, k, total, err, n = _HDR.unpack_from(state, 0)
     if magic != _MAGIC or version != _VERSION:
         raise ValueError("bad mg state")
@@ -110,26 +128,30 @@ def _parse_state(state: bytes) -> tuple[int, int, int, dict[str, int]]:
     off += 8 * n
     lens = np.frombuffer(state, dtype=np.uint32, offset=off, count=n)
     off += 4 * n
-    counts: dict[str, int] = {}
-    for c, ln in zip(cnts, lens):
-        counts[state[off : off + ln].decode("utf-8")] = int(c)
-        off += ln
-    return k, total, err, counts
+    ends = off + np.cumsum(lens, dtype=np.int64)
+    toks = np.array(
+        [state[e - ln : e].decode("utf-8") for e, ln in zip(ends.tolist(), lens.tolist())],
+        dtype=object,
+    )
+    return k, total, err, toks, cnts
+
+
+def _parse_state(state: bytes) -> tuple[int, int, int, dict[str, int]]:
+    k, total, err, toks, cnts = _parse_arrays(state)
+    return k, total, err, dict(zip(toks.tolist(), cnts.tolist()))
 
 
 def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
-    parsed = [_parse_state(s) for s in states]
+    parsed = [_parse_arrays(s) for s in states]
     k = parsed[0][0]
     if any(p[0] != k for p in parsed):
         raise ValueError("cannot merge MG summaries with different k")
+    keys, cnts, sub = _fold(
+        np.concatenate([p[3] for p in parsed]), np.concatenate([p[4] for p in parsed]), k
+    )
     total = sum(p[1] for p in parsed)
-    err = sum(p[2] for p in parsed)
-    counts: dict[str, int] = {}
-    for _, _, _, c in parsed:
-        for t, v in c.items():
-            counts[t] = counts.get(t, 0) + v
-    err += _compress(counts, k)
-    return _serialize(k, total, err, counts)
+    err = sum(p[2] for p in parsed) + sub
+    return _serialize(k, total, err, keys, cnts)
 
 
 def estimates(state: bytes) -> tuple[int, int, dict[str, int]]:

@@ -20,9 +20,12 @@ from __future__ import annotations
 
 from typing import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import IntegralType
 
 from prefix_filter_spark.sketches import base
 
@@ -107,7 +110,9 @@ def foreach_batch_build(
         if existing is None:
             merged = partial
         else:
-            merged = base.merge_shard_states(existing.unionByName(partial), merge_fn)
+            merged = base.merge_shard_states(
+                existing.unionByName(partial), {merge_fn.family.sketch_name(merge_fn): merge_fn}
+            )
         # write-then-swap: materialize to a scratch dir (the merged plan
         # reads state_path, which an in-place overwrite would clobber
         # mid-read), stamp the epoch into the scratch dir, then promote
@@ -143,9 +148,9 @@ def _by_source(
     """Running per-``source`` sketch states via applyInPandasWithState.
 
     ``sketches``: {state_field: (input_col, cfg)}. Each trigger folds an
-    input column's non-NULL values (``base.non_null_values``) into a
-    fresh accumulator per sketch and merges it into the group's running
-    state with the config's family merge. The state struct is one binary
+    input column's non-NULL values into a fresh accumulator per sketch
+    and merges it into the group's running state with the config's
+    family merge. The state struct is one binary
     field per sketch plus ``n_rows long``, the group's rows so far.
     ``emit(states, batch_rows, n_rows)`` returns the output row's
     columns after ``source``, as ``output_schema`` lists them.
@@ -156,15 +161,28 @@ def _by_source(
             f"unknown timeout {timeout!r}; expected a GroupStateTimeout "
             "name (NoTimeout, ProcessingTimeTimeout, EventTimeTimeout)"
         )
-    integral = base.integral_columns(df)
     cols = {col for col, _ in sketches.values()}
+    # a nullable integral column reaches pandas as float64, which loses
+    # the bits above 2^53: ship it NULL-free beside its validity flag
+    integral = {c for c in cols if isinstance(df.schema[c].dataType, IntegralType)}
+    df = df.withColumns(
+        {
+            **{f"{c}__valid": F.col(c).isNotNull() for c in integral},
+            **{c: F.coalesce(F.col(c), F.lit(0)) for c in integral},
+        }
+    )
+
+    def values(pdf: pd.DataFrame, c: str) -> np.ndarray:
+        if c in integral:
+            return pdf[c].to_numpy()[pdf[f"{c}__valid"].to_numpy()]
+        return pdf[c].dropna().to_numpy()
 
     def update(key, pdfs, state: GroupState):
         accs = {f: cfg.family.accumulator(cfg) for f, (_, cfg) in sketches.items()}
         rows = 0
         for pdf in pdfs:
             rows += len(pdf)
-            vals = {c: base.non_null_values(pdf[c], c in integral) for c in cols}
+            vals = {c: values(pdf, c) for c in cols}
             for f, (c, _) in sketches.items():
                 accs[f].update(vals[c])
         states = {f: acc.to_bytes() for f, acc in accs.items()}

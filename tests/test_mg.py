@@ -167,3 +167,35 @@ def test_per_group_mg(spark):
         hot = f"HOT_{src}"
         assert hot in counts
         assert counts[hot] <= 7_500 <= counts[hot] + err
+
+
+def _oracle_inputs(dtype: str, rng) -> np.ndarray:
+    ranks = np.minimum(rng.zipf(1.3, size=6_000), 3_000)
+    if dtype == "int64":
+        return (ranks * 7_919 - 10_000).astype(np.int64)
+    if dtype == "float":
+        return ranks / 8.0
+    return np.array([f"tok{r}" for r in ranks], dtype=object)
+
+
+@pytest.mark.parametrize("k", [4, 256])
+@pytest.mark.parametrize("dtype", ["int64", "str", "float"])
+def test_array_kernel_matches_dict_oracle(dtype, k):
+    """The array kernel's ``to_bytes`` and ``merge_states`` equal the
+    dict implementation byte for byte, with compression running after
+    nearly every one of many small batches."""
+    from tests.mg_dict_oracle import DictMgAccumulator, merge_states
+
+    rng = np.random.default_rng(k)
+    cfg = mg.MgConfig(k=k)
+    parts_new, parts_old = [], []
+    for _ in range(5):
+        new, old = mg.MgAccumulator(cfg), DictMgAccumulator(cfg)
+        for batch in np.array_split(_oracle_inputs(dtype, rng), 60):
+            new.update(batch)
+            old.update(batch)
+        assert new.to_bytes() == old.to_bytes()
+        parts_new.append(new.to_bytes())
+        parts_old.append(old.to_bytes())
+    assert mg.merge_states(parts_new) == merge_states(parts_old)
+    assert mg.merge_states(parts_new[:2]) == merge_states(parts_old[:2])

@@ -160,7 +160,7 @@ def test_distributed_delete_and_incremental_merge(spark, keys_df):
     partials = qf.build_quotient(half1, "key", cfg).unionAll(
         qf.build_quotient(half2, "key", cfg)
     )
-    merged = merge_shard_states(partials, cfg)
+    merged = merge_shard_states(partials, {cfg.family.sketch_name(cfg): cfg})
     direct = qf.build_quotient(keys_df, "key", cfg)
     ms = {r["shard_id"]: bytes(r["state"]) for r in merged.collect()}
     ds = {r["shard_id"]: bytes(r["state"]) for r in direct.collect()}

@@ -286,3 +286,48 @@ def test_double_column_is_not_truncated(spark, kind):
     acc = cfg.family.accumulator(cfg)
     acc.update(vals)
     assert bytes(build(df, "v", cfg).collect()[0]["state"]) == acc.to_bytes()
+
+
+def _hll_of_big_ids_with_a_null(spark, path: str, tmp_path) -> bytes | float:
+    """1,000 distinct bigint ids 2^60 + i plus one NULL through one of
+    the three estimate build paths: the merged HLL state (batch paths)
+    or the running estimate (streaming)."""
+    from prefix_filter_spark.operators.per_group import sketch_by_group
+    from prefix_filter_spark.streaming.build import streaming_distinct_by_source
+
+    cfg = hll.HllConfig(p=12, seed=42)
+    rows = [("s", (1 << 60) + i) for i in range(1_000)] + [("s", None)]
+    df = spark.createDataFrame(rows, "source string, token bigint").coalesce(1)
+    if path == "build_partials_multi":
+        return base.estimate_state(df, "token", cfg)
+    if path == "sketch_by_group":
+        out = sketch_by_group(df, "source", "token", cfg, salt_on="source").collect()
+        return bytes(out[0]["state"])
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+    stream = spark.readStream.schema("source string, token bigint").parquet(src)
+    q = (
+        streaming_distinct_by_source(stream, p=cfg.p, seed=cfg.seed)
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("big_ids_with_a_null")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    assert q.awaitTermination(120)
+    return spark.sql("SELECT max(n_distinct_est) FROM big_ids_with_a_null").collect()[0][0]
+
+
+@pytest.mark.parametrize("path", ["build_partials_multi", "sketch_by_group", "streaming"])
+def test_nullable_bigint_keeps_bits_above_2_53(spark, tmp_path, path):
+    """A NULL in a bigint batch must not round the other values through
+    float64: every build path equals the accumulator fed the 1,000 ids
+    (through float64 they collapse to a handful of distinct values)."""
+    acc = hll.HllAccumulator(hll.HllConfig(p=12, seed=42))
+    acc.update(np.arange(1_000, dtype=np.int64) + (1 << 60))
+    got = _hll_of_big_ids_with_a_null(spark, path, tmp_path)
+    if path == "streaming":
+        assert got == hll.estimate(acc.to_bytes())
+    else:
+        assert got == acc.to_bytes()

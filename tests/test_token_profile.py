@@ -196,3 +196,19 @@ def test_empty_input_raises_clearly(spark):
     )
     with pytest.raises(ValueError, match="empty input"):
         token_sketch_profile(empty)
+
+
+def test_estimate_and_profile_release_their_cache(spark):
+    """tree_merge caches its partials; estimate_state and the profile
+    unpersist them, so neither leaves a persistent RDD behind."""
+    from prefix_filter_spark.sketches import base, hll
+
+    df, _ = _seqs(spark, n_docs=60)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        base.estimate_state(spark.range(1_000), "id", hll.HllConfig())
+        assert jsc.getPersistentRDDs().size() == before
+    for _ in range(2):
+        token_sketch_profile(df)
+        assert jsc.getPersistentRDDs().size() == before

@@ -37,7 +37,7 @@ def _props(plan: str) -> dict[str, object]:
         "broadcast joins": len(re.findall(r"BroadcastHashJoin", plan)),
         "sort-merge joins": len(re.findall(r"SortMergeJoin", plan)),
         "python nodes": len(
-            re.findall(r"FlatMapGroupsInPandas|ArrowEvalPython|MapInPandas|MapInArrow|BatchEvalPython", plan)
+            re.findall(r"FlatMapGroupsIn(?:Pandas|Arrow)|ArrowEvalPython|MapInPandas|MapInArrow|BatchEvalPython", plan)
         ),
         "row-at-a-time python (BatchEvalPython)": len(re.findall(r"BatchEvalPython", plan)),
         "pushed filters": bool(re.search(r"DataFilters: \[.*isnotnull", plan)),
@@ -78,10 +78,10 @@ def main() -> int:
          "fact scan -> ArrowEvalPython filter probe (map-side, before any "
          "exchange) -> broadcast join; the join's input is the pruned fact"),
         ("kmv_build", None,
-         "map-side partials (MapInPandas over the value column only) + "
+         "map-side partials (MapInArrow over the value column only) + "
          "log-fanout tree merge of tiny state rows; no data shuffle"),
         ("mg_build", None,
-         "same partials + tree-merge shape as kmv/hll: MapInPandas over "
+         "same partials + tree-merge shape as kmv/hll: MapInArrow over "
          "the token column, no data shuffle"),
         ("sequence_packing", None,
          "NO global-order Window (the single-task cliff); one hash "
@@ -138,7 +138,7 @@ def main() -> int:
          "the corpus itself never shuffles"),
         ("fd_build", None,
          "matrix sketch: same partials + tree-merge shape as kmv/hll — "
-         "MapInPandas over the embedding column, tiny state rows, no "
+         "MapInArrow over the embedding column, tiny state rows, no "
          "data shuffle"),
     ]
 
