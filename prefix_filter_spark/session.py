@@ -11,6 +11,7 @@ zip-archive cache invalidation stat-checked on CPython < 3.13; see
 from __future__ import annotations
 
 import os
+import site
 import sys
 import zipimport
 
@@ -33,12 +34,15 @@ def _install_zip_stat_check() -> None:
     ``utime`` cannot set ctime. Importers of one archive share that
     read, as the stdlib's directory cache already does.
 
-    Every library UDF imports this package when its task unpickles it.
-    The worker's next task start reads each archive once to learn its
-    stamp; later task starts read nothing. Installing reads nothing, so
-    a worker that runs a single task (``spark.python.worker.reuse``
-    off) pays no more than without it. Idempotent; a no-op on 3.13+,
-    whose invalidation is lazy.
+    Under ``get_spark`` the worker daemon (``worker_daemon``) installs
+    it and learns every archive's stamp before it forks, so no task
+    start re-reads an unchanged archive: not a worker's first task, not
+    PySpark's own tasks, not under ``spark.python.worker.reuse=false``.
+    Without that daemon a worker installs it when a task unpickles a
+    library UDF; its next task start reads each archive once to learn
+    the stamp, and workers that never import the package keep paying.
+    Installing reads nothing. Idempotent; a no-op on 3.13+, whose
+    invalidation is lazy.
     """
     cls = zipimport.zipimporter
     if sys.version_info >= (3, 13) or hasattr(cls.invalidate_caches, "_reads"):
@@ -71,6 +75,23 @@ def _install_zip_stat_check() -> None:
 
 _install_zip_stat_check()
 
+DAEMON_MODULE = "prefix_filter_spark.worker_daemon"
+
+
+def _workers_import_package() -> bool:
+    """Whether the Python workers this process's Spark starts can import
+    the package: its parent directory is the working directory (first
+    on a worker's path), on ``PYTHONPATH``, or a site-packages
+    directory."""
+    parent = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    roots = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    return any(r and os.path.realpath(r) == parent for r in roots)
+
 
 def get_spark(
     app_name: str = "prefix_filter_spark",
@@ -83,6 +104,10 @@ def get_spark(
     ``cores=None`` uses ``local[*]``. Shuffle partitions default to the
     core count — at cluster scale this is instead sized so each shuffle
     partition holds ~128MB (SURVEY.md §4).
+
+    When the workers can import the package, their daemon is
+    ``worker_daemon``, so every forked worker starts with the archive
+    stamps learned; otherwise Spark's default daemon stays.
     """
     if cores is None:
         cores_env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -110,6 +135,8 @@ def get_spark(
         # cast/overflow semantics (round-2 verdict finding #1).
         .config("spark.sql.ansi.enabled", "true")
     )
+    if _workers_import_package():
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -334,10 +334,10 @@ def pruned_read(
         if any_file is None:
             raise ValueError("pruned_read over an EMPTY index: build or "
                              "update the index before probing")
-        schema = spark.read.parquet(_decode_file_uri(any_file["file"])).schema
-        return spark.createDataFrame([], schema).filter(
-            F.col(key_col).isin(keys)
-        )
+        # planned on the JVM as an empty local relation, as in skipping_read
+        return spark.read.parquet(_decode_file_uri(any_file["file"])).where(
+            F.lit(False)
+        ).filter(F.col(key_col).isin(keys))
     return spark.read.parquet(*[_decode_file_uri(f) for f in files]).filter(
         F.col(key_col).isin(keys)
     )

@@ -182,9 +182,10 @@ def skipping_read(
         raise ValueError("skipping_read needs keys and/or ranges")
 
     if not survivors:
-        first = [_decode_file_uri(f) for f in _resolve_files(spark, path)[:1]]
-        schema = spark.read.parquet(*(first or [path])).schema
-        return spark.createDataFrame([], schema).where(pred)
+        # an empty result planned on the JVM (a false filter folds to an
+        # empty local relation): no Python task runs to produce it
+        first = [_decode_file_uri(f) for f in all_files[:1]]
+        return spark.read.parquet(*(first or [path])).where(F.lit(False)).where(pred)
     return spark.read.parquet(*sorted(survivors)).where(pred)
 
 

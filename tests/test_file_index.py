@@ -143,10 +143,12 @@ def test_exact_mode_matches_uniform_on_fn(spark, layout, cfg):
     assert total_bits / total_keys < 16
 
 
-def test_pruned_read_empty_when_all_pruned(spark, index, cfg):
+def test_pruned_read_empty_when_all_pruned(spark, layout, index, cfg):
     out = pruned_read(spark, index, "l_orderkey", [-12345], cfg)
     assert out.count() == 0
-    assert "l_orderkey" in out.columns
+    assert out.schema == spark.read.parquet(layout).schema
+    # planned on the JVM: no Python-RDD scan of a local list
+    assert "ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_rejects_derived_frames(spark, layout, cfg):

@@ -284,6 +284,9 @@ def test_skipping_read_empty_when_all_pruned(spark, zlayout, zidx, zstats):
         cfg=cfg,
     )
     assert got.count() == 0
+    assert got.schema == spark.read.parquet(zlayout).schema
+    # planned on the JVM: no Python-RDD scan of a local list
+    assert "ExistingRDD" not in got._jdf.queryExecution().executedPlan().toString()
 
 
 def test_compact_table_replace_snapshot(spark, li, tmp_path):

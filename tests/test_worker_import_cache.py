@@ -3,10 +3,13 @@
 A PySpark worker calls ``importlib.invalidate_caches()`` at the start of
 every task; on CPython < 3.13 each ``zipimporter`` re-reads its whole
 archive directory there. Importing the package makes that re-read
-happen only for an archive that changed. These tests count calls to
+happen only for an archive that changed, and the worker daemon
+(``worker_daemon``) imports it and learns every archive's stamp before
+it forks a worker. These tests count calls to
 ``zipimport._read_directory``; none of them times anything.
 """
 
+import contextlib
 import importlib
 import os
 import sys
@@ -140,16 +143,14 @@ def test_install_is_idempotent():
 
 
 def test_reused_worker_skips_the_reread(spark):
-    """In a real PySpark worker, once the library is imported and one
-    ``importlib.invalidate_caches()`` has learned each archive's stamp,
-    the next one (as at every later task start) reads no archive
-    directory; without the patch each reads one per zip importer, 16
-    on Spark 4.1. Runs the UDF twice: when the second run lands in the
-    first run's worker, its calls read nothing either."""
+    """In a real PySpark worker ``importlib.invalidate_caches()`` (as at
+    every task start) reads no archive directory: the worker daemon
+    learned each archive's stamp before it forked the worker. Without
+    the patch each call reads one per zip importer, 16 on Spark 4.1.
+    Runs the UDF twice, in a fresh or a reused worker alike."""
 
     def reads_on_invalidate(batches):
         import importlib
-        import os
         import zipimport
 
         for pdf in batches:
@@ -174,7 +175,6 @@ def test_reused_worker_skips_the_reread(spark):
         )
         yield pd.DataFrame(
             {
-                "pid": [os.getpid()],
                 "first": [first],
                 "second": [len(calls) - first],
                 "importers": [importers],
@@ -182,10 +182,110 @@ def test_reused_worker_skips_the_reread(spark):
         )
 
     df = spark.range(1000).coalesce(1)
-    schema = "pid long, first long, second long, importers long"
+    schema = "first long, second long, importers long"
     runs = [df.mapInPandas(reads_on_invalidate, schema).collect()[0] for _ in range(2)]
     if runs[0].importers == 0:
         pytest.skip("the Python workers import nothing from a zip archive")
-    assert [r.second for r in runs] == [0, 0]
-    if runs[1].pid == runs[0].pid:
-        assert runs[1].first == 0
+    assert [(r.first, r.second) for r in runs] == [(0, 0), (0, 0)]
+
+
+@contextlib.contextmanager
+def fresh_worker_pool(sc):
+    """Python tasks started inside run in a new worker pool, with its
+    own daemon: Spark keys its pools by the workers' environment."""
+    sc.environment["PFS_TEST_WORKER_POOL"] = uuid.uuid4().hex
+    try:
+        yield
+    finally:
+        del sc.environment["PFS_TEST_WORKER_POOL"]
+
+
+def first_task_reads():
+    """A task function that yields, per task: whether it is its
+    worker's first, whether the package is loaded, the archive reads of
+    one ``invalidate_caches()`` and the worker's zip importers. Nested,
+    so it is pickled by value and its worker imports nothing for it."""
+
+    def probe(_):
+        import importlib
+        import sys
+        import zipimport
+
+        first = not hasattr(sys, "_pfs_test_seen")
+        sys._pfs_test_seen = True
+        calls = []
+        real = zipimport._read_directory
+
+        def counting(path):
+            calls.append(path)
+            return real(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        importers = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        yield first, "prefix_filter_spark" in sys.modules, len(calls), importers
+
+    return probe
+
+
+def test_daemon_warms_plain_rdd_tasks(spark):
+    """A PySpark-own task that imports nothing (a plain ``RDD.map``)
+    finds the package loaded and reads no archive directory, also as
+    the first task of a freshly forked worker."""
+    sc = spark.sparkContext
+    assert sc.getConf().get("spark.python.daemon.module") == session.DAEMON_MODULE
+    with fresh_worker_pool(sc):
+        runs = [
+            sc.parallelize(range(2), 2).mapPartitions(first_task_reads()).collect()
+            for _ in range(2)
+        ]
+    if not any(importers for run in runs for *_, importers in run):
+        pytest.skip("the Python workers import nothing from a zip archive")
+    assert all(first for first, *_ in runs[0])  # a new pool forks new workers
+    assert {(loaded, reads) for run in runs for _, loaded, reads, _ in run} == {(True, 0)}
+
+
+def test_zip_added_after_daemon_start_is_importable(spark, tmp_path):
+    """The daemon learned the stamps of the archives it saw; a zip
+    shipped with ``addPyFile`` later is still found by the next task."""
+    sc = spark.sparkContext
+    pkg = f"zadded_{uuid.uuid4().hex}"
+    archive = str(tmp_path / f"{pkg}.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{pkg}/__init__.py", "VALUE = 7\n")
+
+    def value(_):
+        import importlib
+
+        yield importlib.import_module(pkg).VALUE
+
+    with fresh_worker_pool(sc):
+        assert sc.parallelize([0], 1).mapPartitions(first_task_reads()).count() == 1
+        sc.addPyFile(archive)
+        assert sc.parallelize([0], 1).mapPartitions(value).collect() == [7]
+
+
+def test_daemon_module_needs_an_importable_package(tmp_path, monkeypatch):
+    """``get_spark`` names the warm daemon only when the workers can
+    import the package: from the working directory, ``PYTHONPATH`` or
+    site-packages. Starts no session."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.setattr(session.site, "getsitepackages", lambda: [str(tmp_path / "site")])
+    monkeypatch.setattr(session.site, "getusersitepackages", lambda: str(tmp_path / "user"))
+    assert not session._workers_import_package()
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path / "lib"), "", parent]))
+    assert session._workers_import_package()
+    monkeypatch.setenv("PYTHONPATH", str(tmp_path / "lib"))
+    assert not session._workers_import_package()
+    monkeypatch.setattr(session.site, "getsitepackages", lambda: [parent])
+    assert session._workers_import_package()
+    monkeypatch.setattr(session.site, "getsitepackages", lambda: [])
+    monkeypatch.chdir(parent)
+    assert session._workers_import_package()

@@ -8,19 +8,25 @@ Measures, for one checkout of the library:
   that returns zeros, over 1k and 1M cached rows. The UDF references
   the package, so its worker imports the library when it unpickles the
   UDF, as it does for every library UDF;
+- ``local_list``: a count over a 3-row ``createDataFrame(<local
+  list>)`` frame, whose scan is a task of PySpark's own that imports
+  nothing of the library;
 - ``invalidate``: the time of ``importlib.invalidate_caches()`` inside
-  a task of a reused worker that has imported the library, with the
-  number of ``zipimport._read_directory`` calls it makes and the
-  number of zip importers the worker holds. PySpark makes that call at
-  the start of every task.
+  a task that has imported the library, with the number of
+  ``zipimport._read_directory`` calls it makes and the number of zip
+  importers the worker holds. PySpark makes that call at the start of
+  every task.
 
 Each figure is the median of 7 timed runs after two untimed warm-up
-runs. The result is one row of ``BENCH/task_overhead.md``,
-keyed by ``--label``; rows with other labels are kept, so a parent and
-a change row can be measured back to back:
+runs. ``--reuse`` sets ``spark.python.worker.reuse`` (default
+``true``); with ``false`` every task runs in a freshly forked worker.
+The result is one row of ``BENCH/task_overhead.md``, keyed by
+``--label`` and ``--reuse``; other rows are kept, so a parent and a
+change row can be measured back to back:
 
     python tools/task_overhead.py --label change
     python tools/task_overhead.py --label parent --checkout ../parent
+    python tools/task_overhead.py --label change --reuse false
 
 ``--checkout`` names the checkout whose ``prefix_filter_spark`` the
 driver and the workers import (default: the one holding this tool).
@@ -42,8 +48,8 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(HERE, "BENCH", "task_overhead.md")
 REPS = 7
 COLUMNS = (
-    "label", "python", "jvm_agg 1k ms", "udf 1k ms", "udf 1M ms",
-    "invalidate ms", "reads/task", "zip importers",
+    "label", "reuse", "python", "jvm_agg 1k ms", "udf 1k ms", "udf 1M ms",
+    "local_list 3 ms", "invalidate ms", "reads/task", "zip importers",
 )
 
 
@@ -58,13 +64,15 @@ def _median_ms(fn) -> float:
     return statistics.median(times)
 
 
-def measure() -> dict:
+def measure(reuse: str) -> dict:
     from pyspark.sql import functions as F
 
     import prefix_filter_spark
 
     spark = prefix_filter_spark.get_spark(
-        app_name="task-overhead", cores=min(4, os.cpu_count() or 4)
+        app_name="task-overhead",
+        cores=min(4, os.cpu_count() or 4),
+        extra_conf={"spark.python.worker.reuse": reuse},
     )
 
     @F.pandas_udf("long")
@@ -112,6 +120,9 @@ def measure() -> dict:
         "jvm_agg 1k ms": _median_ms(agg(small, F.col("id") * 0)),
         "udf 1k ms": _median_ms(agg(small, zeros("id"))),
         "udf 1M ms": _median_ms(agg(big, zeros("id"))),
+        "local_list 3 ms": _median_ms(
+            lambda: spark.createDataFrame([(1,), (2,), (3,)], "a long").count()
+        ),
     }
     one = small.coalesce(1)
     # collect, not first(): a task cut short by a limit may not return
@@ -134,14 +145,15 @@ def write_row(row: dict) -> None:
         for line in open(OUT):
             cells = [c.strip() for c in line.strip().strip("|").split("|")]
             if line.startswith("| ") and line.strip() != head and len(cells) == len(COLUMNS):
-                rows[cells[0]] = line.rstrip("\n")
-    rows[row["label"]] = "| " + " | ".join(
+                rows[cells[0], cells[1]] = line.rstrip("\n")
+    rows[row["label"], row["reuse"]] = "| " + " | ".join(
         f"{row[c]:.1f}" if isinstance(row[c], float) else str(row[c]) for c in COLUMNS
     ) + " |"
     with open(OUT, "w") as f:
         f.write(
             "# Fixed per-task cost of a pandas UDF\n\n"
-            "`python tools/task_overhead.py --label <label> [--checkout DIR]`;"
+            "`python tools/task_overhead.py --label <label> [--reuse true|false]"
+            " [--checkout DIR]`;"
             " medians of timed runs after two warm-up runs. Columns are"
             " defined in the tool's docstring.\n\n"
         )
@@ -153,6 +165,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--label", required=True)
     ap.add_argument("--checkout", default=HERE)
+    ap.add_argument("--reuse", choices=("true", "false"), default="true")
     args = ap.parse_args()
     checkout = os.path.abspath(args.checkout)
     # the workers run in the driver's directory and put it first on
@@ -163,8 +176,8 @@ def main() -> int:
         p for p in (checkout, os.environ.get("PYTHONPATH")) if p
     )
     os.environ.setdefault("SPARK_DRIVER_MEM", "2g")
-    row = measure()
-    row["label"] = args.label
+    row = measure(args.reuse)
+    row["label"], row["reuse"] = args.label, args.reuse
     row["python"] = ".".join(map(str, sys.version_info[:3]))
     write_row(row)
     print(row)
