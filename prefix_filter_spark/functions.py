@@ -25,6 +25,7 @@ from prefix_filter_spark.plans.sharding import hashed_key_col
 
 
 import functools
+import weakref
 
 
 # module-level (picklable by reference) cached state deserializers —
@@ -114,6 +115,10 @@ class ContainsFunction:
         return self.udf(hashed_key_col(key, self.seed))
 
 
+# per SparkContext: the sketch SQL surface's JVM functions by name
+_SKETCH_JUDFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def register_sketch_sql(spark: SparkSession) -> None:
     """Register the estimate surface over serialized sketch state, so a
     shard-state table is queryable with plain SQL (SURVEY.md M3):
@@ -125,7 +130,26 @@ def register_sketch_sql(spark: SparkSession) -> None:
     All pandas UDFs (Arrow-batched); states are small binary blobs, so
     the per-row deserialize cost is amortized by an LRU cache keyed on
     the full state bytes (states repeat across rows in a join).
+
+    Cheap to call again: the JVM functions are built once per
+    SparkContext (~250 py4j round trips for the 14), and a later call
+    re-binds each name to its function in ``spark``'s registry, so a
+    dropped or shadowed name resolves as after the first call.
     """
+    sc = spark.sparkContext
+    judfs = _SKETCH_JUDFS.get(sc)
+    if judfs is None:
+        _SKETCH_JUDFS[sc] = {
+            name: spark.udf.register(name, f)._judf for name, f in _sketch_udfs().items()
+        }
+        return
+    registry = spark._jsparkSession.udf()
+    for name, judf in judfs.items():
+        registry.registerPython(name, judf)
+
+
+def _sketch_udfs() -> dict:
+    """The sketch SQL surface's pandas UDFs by SQL name."""
     from prefix_filter_spark.sketches import cms, hll
 
     @F.pandas_udf(T.DoubleType())
@@ -246,21 +270,22 @@ def register_sketch_sql(spark: SparkSession) -> None:
     def mg_total(state: pd.Series) -> pd.Series:
         return state.map(lambda s: _mg_cached(bytes(s))[0] if s is not None else None)
 
-    spark.udf.register("mg_estimate", mg_estimate)
-    spark.udf.register("mg_error", mg_error)
-    spark.udf.register("mg_total", mg_total)
-
-    spark.udf.register("hll_estimate", hll_estimate)
-    spark.udf.register("cms_point", cms_point)
-    spark.udf.register("kll_quantile", kll_quantile)
-    spark.udf.register("kll_rank", kll_rank)
-    spark.udf.register("tdigest_quantile", tdigest_quantile)
-    spark.udf.register("dds_quantile", dds_quantile)
-    spark.udf.register("kmv_estimate", kmv_estimate)
-    spark.udf.register("kmv_union", kmv_union)
-    spark.udf.register("kmv_intersection", kmv_intersection)
-    spark.udf.register("kmv_difference", kmv_difference)
-    spark.udf.register("kmv_jaccard", kmv_jaccard)
+    return {
+        "mg_estimate": mg_estimate,
+        "mg_error": mg_error,
+        "mg_total": mg_total,
+        "hll_estimate": hll_estimate,
+        "cms_point": cms_point,
+        "kll_quantile": kll_quantile,
+        "kll_rank": kll_rank,
+        "tdigest_quantile": tdigest_quantile,
+        "dds_quantile": dds_quantile,
+        "kmv_estimate": kmv_estimate,
+        "kmv_union": kmv_union,
+        "kmv_intersection": kmv_intersection,
+        "kmv_difference": kmv_difference,
+        "kmv_jaccard": kmv_jaccard,
+    }
 
 
 def register_state_contains(spark: SparkSession, name: str = "bf_state_contains"):

@@ -58,7 +58,7 @@ def sketch_by_group(
         # as float64 and lose the bits above 2^53
         t0 = time.perf_counter_ns()
         acc = cfg.family.accumulator(cfg)
-        acc.update(base.non_null_values(table.column("v")))
+        acc.update(base.non_null_values(table.column("v"), vector_rows=cfg.family.vector_rows))
         return pa.table(
             {
                 "group": table.column("group").slice(0, 1),

@@ -67,13 +67,16 @@ def token_sketch_profile(
     heavy-hitter tokens (Misra-Gries), and n_tok quantiles (KLL +
     t-digest) — six sketches, one read.
 
-    Built on ``sketches.base.build_partials_multi``: a single
-    posexplode projection carries each token once per occurrence in
-    one column and each doc's n_tok exactly once (materialized on the
-    doc's first token row, NULL elsewhere — the per-sketch NULL skip
-    routes it only to the quantile accumulators). Separate builds
-    would read the corpus six times; at 10^12 sequences the scan IS
-    the cost, so this is a ~6x wall-clock cut for the suite.
+    Built on ``sketches.base.build_partials_multi`` over one row per
+    document: the ``tokens`` array ships through Arrow as the list it
+    is and the worker flattens it for the four token sketches, and
+    ``n_tok`` (NULL for a document without tokens) feeds the two
+    quantile sketches once per document. Separate builds would read
+    the corpus six times; at 10^12 sequences the scan IS the cost, so
+    this is a ~6x wall-clock cut for the suite.
+
+    Spark jobs: one scan fills the cached partials and bounds their
+    shard ids, then one collect runs the whole merge tree.
 
     Returns (states, report): ``states`` maps sketch name -> merged
     state bytes (each mergeable downstream — resumable / unionable
@@ -91,40 +94,41 @@ def token_sketch_profile(
         tdigest as td_m,
     )
 
-    ex = seqs.select(
-        F.posexplode("tokens").alias("pos", "tok"),
-        F.col("n_tok"),
-    ).select(
-        F.col("tok").cast("long").alias("tok"),
-        F.when(F.col("pos") == 0, F.col("n_tok"))
-        .cast("long")
-        .alias("ntok_once"),
-    )
     sketches = {
-        "hll": ("tok", hll_m.HllConfig()),
-        "cms": ("tok", cms_m.CmsConfig()),
-        "mg": ("tok", mg_m.MgConfig()),
-        "kmv": ("tok", kmv_m.KmvConfig()),
-        "kll": ("ntok_once", kll_m.KllConfig()),
-        "tdigest": ("ntok_once", td_m.TDigestConfig()),
+        "hll": ("tokens", hll_m.HllConfig()),
+        "cms": ("tokens", cms_m.CmsConfig()),
+        "mg": ("tokens", mg_m.MgConfig()),
+        "kmv": ("tokens", kmv_m.KmvConfig()),
+        "kll": ("n_tok", kll_m.KllConfig()),
+        "tdigest": ("n_tok", td_m.TDigestConfig()),
     }
-    partials = base.build_partials_multi(
-        ex, {"tok": "tok", "ntok_once": "ntok_once"}, sketches
-    ).cache()
-    partials.count()  # materialize the ONE scan before the merge
+    value_cols = {
+        "tokens": "tokens",
+        "n_tok": F.when(F.size("tokens") > 0, F.col("n_tok")).cast("long"),
+    }
+    partials = base.build_partials_multi(seqs, value_cols, sketches).cache()
     try:
+        # the ONE scan: materializes the partials, counts the tokens
+        # fed and bounds the shard ids, so the merge needs no job of
+        # its own before the collect
+        top, n_tokens = partials.agg(
+            F.max("shard_id"),
+            F.sum(F.when(F.col("sketch") == "hll", F.col("n_keys"))),
+        ).collect()[0]
+        if not n_tokens:
+            raise ValueError(
+                "token_sketch_profile: empty input (no token rows) — "
+                "nothing to profile"
+            )
         # one tree merges all six sketches (tree_merge is looked up on
         # the module at call time, so a tracing wrapper sees it)
         rows = base.tree_merge(
-            partials, {name: cfg for name, (_, cfg) in sketches.items()}
+            partials,
+            {name: cfg for name, (_, cfg) in sketches.items()},
+            shard_bound=top + 1,
         ).collect()
     finally:
         partials.unpersist()
-    if not rows:
-        raise ValueError(
-            "token_sketch_profile: empty input (no token rows) — "
-            "nothing to profile"
-        )
     merged = {r["sketch"]: bytes(r["state"]) for r in rows}
     states = {name: merged[name] for name in sketches}
 

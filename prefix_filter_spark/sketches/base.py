@@ -23,7 +23,7 @@ from __future__ import annotations
 import functools
 import time
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -358,12 +358,16 @@ class EstimateFamily:
     - ``merge_states(states, cfg, shard_id)``: combine partials — the
       ``FilterFamily`` signature, so merges never ask which record they
       hold; the state headers carry everything the merge checks, so the
-      module functions default ``cfg`` and ``shard_id``.
+      module functions default ``cfg`` and ``shard_id``;
+    - ``vector_rows``: the accumulator takes each row of a list column
+      as one vector (Frequent Directions' embeddings); every other kind
+      takes a list column's elements (see ``value_windows``).
     """
 
     sketch_name: Callable
     accumulator: Callable
     merge_states: Callable
+    vector_rows: bool = False
 
 
 class Accumulator:
@@ -376,14 +380,39 @@ class Accumulator:
         raise NotImplementedError
 
 
-def non_null_values(arr: pa.Array | pa.ChunkedArray) -> np.ndarray:
-    """A value column's non-NULL values as the accumulators take them.
+def value_windows(
+    arr: pa.Array | pa.ChunkedArray, size: int | None = None, *, vector_rows: bool = False
+) -> Iterator[np.ndarray]:
+    """A value column's non-NULL values as the accumulators take them,
+    in windows of at most ``size`` input values (default: one window;
+    an empty column gives one empty window).
+
+    A list column feeds its elements: NULL and empty lists feed none,
+    and integral elements widen to int64, as a JVM ``cast("long")`` of
+    the exploded column gave them. Windows are cut over the elements,
+    so ``size`` bounds the values an accumulator takes at a time however
+    long the lists are. With ``vector_rows`` each
+    non-NULL list is one value instead (``EstimateFamily.vector_rows``).
+
     NULLs drop on the Arrow array by its validity mask, so integral
     values keep all 64 bits and fractional doubles stay as they are;
     NaN in a floating column is skipped like a NULL."""
-    out = pc.drop_null(arr).to_numpy(zero_copy_only=False)
-    if out.dtype.kind == "f":
-        out = out[~np.isnan(out)]
+    flat = not vector_rows and (pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type))
+    if flat:
+        arr = pc.list_flatten(arr)
+    size = size or len(arr) or 1
+    for start in range(0, len(arr) or 1, size):
+        out = pc.drop_null(arr.slice(start, size)).to_numpy(zero_copy_only=False)
+        if out.dtype.kind == "f":
+            out = out[~np.isnan(out)]
+        elif flat and out.dtype.kind == "i":
+            out = out.astype(np.int64, copy=False)
+        yield out
+
+
+def non_null_values(arr: pa.Array | pa.ChunkedArray, *, vector_rows: bool = False) -> np.ndarray:
+    """All of a value column's ``value_windows`` in one array."""
+    (out,) = value_windows(arr, vector_rows=vector_rows)
     return out
 
 
@@ -403,22 +432,34 @@ def build_partials_multi(
     is evaluated once JVM-side and shipped once through Arrow, shared
     by every sketch bound to it. ``sketches``: {sketch_name: (col_key,
     cfg)}, the kind being ``cfg.family``. NULL values are skipped per
-    sketch (so one exploded row stream can carry a per-ROW value in one
-    column and a per-GROUP value materialized only on the group's first
-    row in another — NULLs elsewhere; see ``non_null_values``).
+    sketch, so one row can carry a value for some sketches and NULL for
+    the others. A list column feeds its elements (see
+    ``value_windows``): one row per document ships its token array once
+    and the worker flattens it, rather than the JVM exploding it into
+    one Arrow row per token. Each accumulator takes its values in
+    windows of at most the session's Arrow batch size
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``), so a partition
+    that fits one batch feeds exactly the windows an exploded stream's
+    batches would.
 
     Output: SHARD_SCHEMA rows keyed by the Spark partition id
-    (per-partition lineage): ``n_keys`` counts the sketch's non-NULL
-    values, ``input_rows`` the partition's rows, and ``build_ns`` the
-    partition's whole-scan time on each of its rows (the accumulators
-    share the pass; per-sketch attribution would be fiction).
-    ``tree_merge(partials, {name: cfg, ...})`` combines the partials of
-    every sketch in one tree.
+    (per-partition lineage): ``n_keys`` counts the values the sketch
+    took (list elements for a list column), ``input_rows`` the
+    partition's rows of ``df`` (documents, for the token profile), and
+    ``build_ns`` the partition's whole-scan time on each of its rows
+    (the accumulators share the pass; per-sketch attribution would be
+    fiction). ``tree_merge(partials, {name: cfg, ...})`` combines the
+    partials of every sketch in one tree.
     """
     src = df.select(
         *[(F.col(c) if isinstance(c, str) else c).alias(k) for k, c in value_cols.items()]
     )
-    keys = list(value_cols)  # the Columns stay on the driver
+    window = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    window = window if window > 0 else None  # <= 0: batches are unbounded
+    # sketches sharing a column and input shape share its windows
+    feeds: dict = {}
+    for name, (key, cfg) in sketches.items():
+        feeds.setdefault((key, cfg.family.vector_rows), []).append(name)
 
     def run(batches):
         accs = {name: cfg.family.accumulator(cfg) for name, (_, cfg) in sketches.items()}
@@ -429,11 +470,12 @@ def build_partials_multi(
             if not batch.num_rows:
                 continue
             total += batch.num_rows
-            vals = {key: non_null_values(batch.column(key)) for key in keys}
-            for name, (key, _) in sketches.items():
-                if len(vals[key]):
-                    accs[name].update(vals[key])
-                    rows[name] += len(vals[key])
+            for (key, vector_rows), names in feeds.items():
+                for vals in value_windows(batch.column(key), window, vector_rows=vector_rows):
+                    if len(vals):
+                        for name in names:
+                            accs[name].update(vals)
+                            rows[name] += len(vals)
         if total:
             ns = time.perf_counter_ns() - t0
             n = len(sketches)
@@ -456,6 +498,7 @@ def tree_merge(
     df: DataFrame,
     cfgs: dict,
     fanout: int = 32,
+    shard_bound: int | None = None,
 ) -> DataFrame:
     """Reduce the partial states of every sketch in ``df`` to one row per
     sketch via a fan-in tree of grouped merges (the north rule's
@@ -471,7 +514,9 @@ def tree_merge(
     The tree is composed LAZILY: one small job reads the max shard id
     off the cached partials (which also materializes them), the round
     count follows arithmetically from that bound, and the whole fan-in
-    chain executes inside the caller's single action.
+    chain executes inside the caller's single action. A caller that
+    already ran a job over the partials passes ``shard_bound`` (max
+    shard id + 1) and saves that job.
 
     Caching: ``df`` is cached here and stays cached — every action on
     the returned DataFrame reads it, so only the caller knows when it
@@ -481,10 +526,12 @@ def tree_merge(
     num_states/fanout^r rows).
     """
     prev = df.cache()
-    row = prev.agg(F.max("shard_id").alias("m")).collect()[0]
-    if row["m"] is None:
-        return prev  # no partials (empty input)
-    bound = int(row["m"]) + 1
+    bound = shard_bound
+    if bound is None:
+        row = prev.agg(F.max("shard_id").alias("m")).collect()[0]
+        if row["m"] is None:
+            return prev  # no partials (empty input)
+        bound = int(row["m"]) + 1
     while bound > 1:
         prev = merge_shard_states(
             prev.withColumn("shard_id", (F.col("shard_id") / F.lit(fanout)).cast("int")),

@@ -213,6 +213,7 @@ FAMILY = base.EstimateFamily(
     sketch_name=lambda cfg: f"fd{cfg.ell}x{cfg.dim}",
     accumulator=FdAccumulator,
     merge_states=merge_states,
+    vector_rows=True,
 )
 FdConfig.family = FAMILY
 build_fd = base.build_estimate

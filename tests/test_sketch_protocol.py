@@ -21,6 +21,7 @@ import pickle
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from prefix_filter_spark import registry
 from prefix_filter_spark.hashing import shard_of
@@ -260,6 +261,37 @@ def test_null_keys_are_skipped(spark, kind):
     acc.update(np.array([1, 2, 3], dtype=np.int64))
     assert bytes(rows[0]["state"]) == acc.to_bytes()
     assert (rows[0]["n_keys"], rows[0]["input_rows"]) == (3, 5)
+
+
+@pytest.mark.parametrize("elem", ["int", "bigint"])
+def test_list_column_feeds_its_elements(spark, elem):
+    """A list column ships one row per document and the worker flattens
+    it: NULL arrays, empty arrays and NULL elements feed nothing, and
+    the states equal those of the posexplode + cast("long") stream of
+    the same partition, also for a document longer than one Arrow batch
+    (65,536 values) and for Misra-Gries, whose state depends on how
+    the values are cut into updates."""
+    rng = np.random.default_rng(17)
+    lo, hi = (-(1 << 31), 1 << 31) if elem == "int" else (-(1 << 40), 1 << 40)
+    docs = [rng.integers(lo, hi, n).tolist() for n in (5, 0, 70_000, 9)]
+    docs[0][2] = None
+    docs[2][65_535] = None
+    rows = [(d,) for d in docs[:2]] + [(None,)] + [(d,) for d in docs[2:]]
+    lists = spark.createDataFrame(rows, f"tokens array<{elem}>").coalesce(1)
+    exploded = lists.select(F.posexplode("tokens")).select(F.col("col").cast("long").alias("tok"))
+    kinds = ["hll", "cms", "mg", "kmv"]
+    sketches = {kind: ("v", ESTIMATE_KINDS[kind][1]) for kind in kinds}
+
+    def partials(df, col):
+        got = base.build_partials_multi(df, {"v": col}, sketches).collect()
+        return {r["sketch"]: r for r in got}
+
+    flat, want = partials(lists, "tokens"), partials(exploded, "tok")
+    n_values = sum(len(d) for d in docs) - 2
+    for kind in kinds:
+        assert bytes(flat[kind]["state"]) == bytes(want[kind]["state"]), kind
+        assert flat[kind]["n_keys"] == want[kind]["n_keys"] == n_values
+        assert flat[kind]["input_rows"] == len(rows)
 
 
 @pytest.mark.parametrize("kind", sorted(ESTIMATE_KINDS))

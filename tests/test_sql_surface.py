@@ -28,6 +28,27 @@ def test_sql_estimates(spark):
     assert abs(q - 49_500) < 1_500
 
 
+def test_register_again_rebinds_a_dropped_name(spark):
+    """A second register_sketch_sql re-binds every name to the JVM
+    functions the first call built: a dropped cms_point comes back and
+    answers as before."""
+    from prefix_filter_spark import functions
+
+    register_sketch_sql(spark)
+    built = functions._SKETCH_JUDFS[spark.sparkContext]
+    df = spark.range(20_000).select((F.col("id") % 5_000).alias("v"))
+    cms.build_cms(df, "v", cms.CmsConfig(seed=3)).createOrReplaceTempView("cms_again")
+    query = "SELECT sum(cms_point(state, k)) FROM cms_again, (SELECT explode(array(0, 7, 99)) k)"
+    want = spark.sql(query).collect()[0][0]
+    assert want >= 12  # each value appears 4x
+
+    spark.sql("DROP TEMPORARY FUNCTION cms_point")
+    assert not spark.catalog.functionExists("cms_point")
+    register_sketch_sql(spark)
+    assert functions._SKETCH_JUDFS[spark.sparkContext] is built
+    assert spark.sql(query).collect()[0][0] == want
+
+
 def test_sql_kmv_set_ops(spark):
     register_sketch_sql(spark)
     cfg = kmv.KmvConfig(k=4096, seed=9)

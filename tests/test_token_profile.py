@@ -198,6 +198,58 @@ def test_empty_input_raises_clearly(spark):
         token_sketch_profile(empty)
 
 
+def test_documents_without_tokens_raise_clearly(spark):
+    """Documents whose arrays are all empty or NULL still ship partial
+    rows (with empty states); the profile must refuse them like an
+    empty table."""
+    import pytest
+
+    docs = spark.createDataFrame(
+        [("a", [], 0, "s"), ("b", None, 0, "s"), ("c", [], 0, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    with pytest.raises(ValueError, match="no token rows"):
+        token_sketch_profile(docs)
+
+
+def test_profile_counts_only_documents_with_tokens(spark):
+    """Empty and NULL token arrays feed no n_tok: the quantile sketches
+    see one value per document with at least one token, and the token
+    sketches see every non-NULL element."""
+    from prefix_filter_spark.sketches import kll
+
+    rows = [
+        ("a", [1, 2, 3], 3, "s"),
+        ("b", [], 0, "s"),
+        ("c", None, 0, "s"),
+        ("d", [4, None, 4], 3, "s"),
+        ("e", [], 0, "s"),
+        ("f", [5], 1, "s"),
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    states, report = token_sketch_profile(docs)
+    assert kll.KllSketch.from_bytes(states["kll"]).n_total == 3
+    assert report["total_tokens"] == 6
+
+
+def test_profile_runs_one_scan_job_and_one_merge_job(spark):
+    """The scan that fills the cached partials also bounds the shard
+    ids, so the profile starts two Spark actions and no more: that
+    scan and the merge tree's collect, 5 jobs in the status tracker
+    under AQE. A separate count() or max-shard-id read before the
+    merge would add two more."""
+    df, _ = _seqs(spark, n_docs=80)
+    sc = spark.sparkContext
+    sc.setJobGroup("token-profile-jobs", "job count")
+    try:
+        token_sketch_profile(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("token-profile-jobs")) == 5
+
+
 def test_estimate_and_profile_release_their_cache(spark):
     """tree_merge caches its partials; estimate_state and the profile
     unpersist them, so neither leaves a persistent RDD behind."""
