@@ -1,7 +1,7 @@
 """Registered Spark SQL surface over serialized sketch state.
 
-Membership/estimate queries are exposed as vectorized pandas UDFs so a
-user can write plain SQL, e.g.::
+Membership/estimate queries are exposed as vectorized pandas or Arrow
+UDFs so a user can write plain SQL, e.g.::
 
     SELECT count(*) FROM probes WHERE bf_contains(xxhash64(token, 42))
 
@@ -16,7 +16,10 @@ once per executor, not per task (pyspark_guide.md 'Pitfalls').
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,7 +32,14 @@ import weakref
 
 
 # module-level (picklable by reference) cached state deserializers —
-# the SQL quantile UDFs see the same blob on every row of a join
+# the state-taking SQL UDFs see the same blob on every row of a join
+@functools.lru_cache(maxsize=64)
+def _cms_cached(state: bytes):
+    from prefix_filter_spark.sketches import cms
+
+    return cms.CmsState.from_bytes(state)
+
+
 @functools.lru_cache(maxsize=64)
 def _kll_cached(state: bytes):
     from prefix_filter_spark.sketches import kll
@@ -127,9 +137,10 @@ def register_sketch_sql(spark: SparkSession) -> None:
         SELECT cms_point(state, token) FROM cms_shards, probe_tokens
         SELECT kll_quantile(state, 0.5), tdigest_quantile(state, 0.99) ...
 
-    All pandas UDFs (Arrow-batched); states are small binary blobs, so
-    the per-row deserialize cost is amortized by an LRU cache keyed on
-    the full state bytes (states repeat across rows in a join).
+    All Arrow-batched (pandas or Arrow UDFs); a function that takes a
+    state and one argument per row groups the batch's rows by state
+    and decodes each distinct state once, through an LRU cache keyed
+    on the full state bytes (states repeat across rows in a join).
 
     Cheap to call again: the JVM functions are built once per
     SparkContext (~250 py4j round trips for the 14), and a later call
@@ -148,77 +159,64 @@ def register_sketch_sql(spark: SparkSession) -> None:
         registry.registerPython(name, judf)
 
 
+def _per_state(cache, fn, dtype):
+    """Arrow UDF body ``(state, arg) -> array`` for the functions that
+    answer one argument per row against a state column: rows are
+    grouped by identical state blob (``dictionary_encode`` hashes them
+    in Arrow), each distinct blob is decoded once through ``cache``
+    and answered for all its rows by ``fn(decoded, arg_values)``. A
+    NULL state or argument gives NULL. Argument values reach ``fn`` as
+    the NumPy array of their own Arrow type, so a bigint key never
+    passes through float64."""
+
+    def run(state: pa.Array, arg: pa.Array) -> pa.Array:
+        enc = pc.dictionary_encode(state)
+        codes = enc.indices.fill_null(-1).to_numpy().copy()
+        codes[arg.is_null().to_numpy(zero_copy_only=False)] = -1
+        order = np.argsort(codes, kind="stable")
+        cuts = np.searchsorted(codes[order], np.arange(len(enc.dictionary) + 1))
+        out = np.zeros(len(state), dtype=dtype)
+        for j, blob in enumerate(enc.dictionary):
+            rows = order[cuts[j] : cuts[j + 1]]
+            if len(rows):
+                vals = arg.take(rows).to_numpy(zero_copy_only=False)
+                out[rows] = fn(cache(blob.as_py()), vals)
+        return pa.array(out, mask=codes < 0)
+
+    return run
+
+
 def _sketch_udfs() -> dict:
-    """The sketch SQL surface's pandas UDFs by SQL name."""
-    from prefix_filter_spark.sketches import cms, hll
+    """The sketch SQL surface's vectorized UDFs by SQL name."""
+    from prefix_filter_spark.sketches import hll, mg
 
     @F.pandas_udf(T.DoubleType())
     def hll_estimate(state: pd.Series) -> pd.Series:
         return state.map(lambda s: hll.estimate(bytes(s)) if s is not None else None)
 
-    @F.pandas_udf(T.LongType())
-    def cms_point(state: pd.Series, key: pd.Series) -> pd.Series:
-        import numpy as np
+    cms_point = F.arrow_udf(T.LongType())(
+        _per_state(_cms_cached, lambda sk, keys: sk.point(keys), np.int64)
+    )
 
-        out = np.zeros(len(state), dtype=object)
-        if len(state):
-            # group rows by identical state blob, probe each group batch;
-            # NULL states (e.g. left joins against a sparse state table)
-            # yield NULL like the other sketch UDFs, not a TypeError
-            groups: dict[bytes, list[int]] = {}
-            for i, s in enumerate(state):
-                if s is None:
-                    out[i] = None
-                else:
-                    groups.setdefault(bytes(s), []).append(i)
-            for blob, idxs in groups.items():
-                ks = key.iloc[idxs].to_numpy()
-                for j, v in zip(idxs, cms.point_estimates(blob, ks)):
-                    out[j] = int(v)
-        return pd.Series(out)
+    def quantile(sk, qs):
+        # one weighted-items/centroid walk per blob, not one per row
+        return sk.quantiles(qs.astype(np.float64))
 
-    def _grouped_quantile(cache):
-        """Group rows by identical state blob, evaluate the whole
-        quantile vector per group via the sketch's vectorized
-        ``quantiles`` (one weighted-items/centroid walk per blob
-        instead of one per ROW) — same shape as cms_point above.
-        NULL states yield NULL."""
-
-        def run(state: pd.Series, q: pd.Series) -> pd.Series:
-            import numpy as np
-
-            out = np.empty(len(state), dtype=object)
-            groups: dict[bytes, list[int]] = {}
-            for i, s in enumerate(state):
-                if s is None:
-                    out[i] = None
-                else:
-                    groups.setdefault(bytes(s), []).append(i)
-            for blob, idxs in groups.items():
-                vals = cache(blob).quantiles(q.iloc[idxs].to_numpy(dtype=np.float64))
-                for j, v in zip(idxs, vals):
-                    out[j] = float(v)
-            return pd.Series(out)
-
-        return run
-
-    kll_quantile = F.pandas_udf(T.DoubleType())(_grouped_quantile(_kll_cached))
-    tdigest_quantile = F.pandas_udf(T.DoubleType())(_grouped_quantile(_td_cached))
-    dds_quantile = F.pandas_udf(T.DoubleType())(_grouped_quantile(_dds_cached))
-
-    @F.pandas_udf(T.DoubleType())
-    def kll_rank(state: pd.Series, v: pd.Series) -> pd.Series:
-        """Approximate CDF: fraction of sketched values <= v (rank
-        error +-eps like the quantile direction). The selectivity
-        estimator behind range-scan planning: P(lo <= x <= hi) =
-        kll_rank(state, hi) - kll_rank(state, lo-)."""
-        out = []
-        for s, x in zip(state, v):
-            if s is None or x is None:
-                out.append(None)
-            else:
-                out.append(float(_kll_cached(bytes(s)).rank(float(x))))
-        return pd.Series(out, dtype=object)
+    kll_quantile = F.arrow_udf(T.DoubleType())(_per_state(_kll_cached, quantile, np.float64))
+    tdigest_quantile = F.arrow_udf(T.DoubleType())(_per_state(_td_cached, quantile, np.float64))
+    dds_quantile = F.arrow_udf(T.DoubleType())(_per_state(_dds_cached, quantile, np.float64))
+    # Approximate CDF: fraction of sketched values <= v (rank error
+    # +-eps like the quantile direction). The selectivity estimator
+    # behind range-scan planning: P(lo <= x <= hi) =
+    # kll_rank(state, hi) - kll_rank(state, lo-).
+    kll_rank = F.arrow_udf(T.DoubleType())(
+        _per_state(_kll_cached, lambda sk, vs: [sk.rank(float(v)) for v in vs], np.float64)
+    )
+    # lower-bound count for a token (0 when absent: the MG lower bound
+    # for any token outside the summary)
+    mg_estimate = F.arrow_udf(T.LongType())(
+        _per_state(_mg_cached, lambda est, toks: mg.lookup(est[2], toks), np.int64)
+    )
 
     from prefix_filter_spark.sketches import kmv
 
@@ -249,18 +247,6 @@ def _sketch_udfs() -> dict:
         _kmv_pairwise(kmv.difference_estimate)
     )
     kmv_jaccard = F.pandas_udf(T.DoubleType())(_kmv_pairwise(kmv.jaccard_estimate))
-
-    @F.pandas_udf(T.LongType())
-    def mg_estimate(state: pd.Series, token: pd.Series) -> pd.Series:
-        """Lower-bound count for a token (0 when absent — the MG lower
-        bound for any token outside the summary)."""
-        out = []
-        for s, t in zip(state, token):
-            if s is None or t is None:
-                out.append(None)
-            else:
-                out.append(_mg_cached(bytes(s))[2].get(t, 0))
-        return pd.Series(out, dtype=object)
 
     @F.pandas_udf(T.LongType())
     def mg_error(state: pd.Series) -> pd.Series:

@@ -154,13 +154,20 @@ class KllSketch(base.Accumulator):
 
     @classmethod
     def from_bytes(cls, state: bytes, cfg: KllConfig | None = None) -> "KllSketch":
+        if len(state) < _HDR.size:
+            raise ValueError("bad kll state: truncated header")
         magic, version, _, k, n_levels, n_total, ccount = _HDR.unpack_from(state, 0)
-        if magic != _MAGIC or version != _VERSION:
+        # a KMV state has the same magic and version, and zero where KLL keeps k
+        if magic != _MAGIC or version != _VERSION or k == 0:
             raise ValueError("bad kll state")
-        off = _HDR.size
-        lens = np.frombuffer(state, dtype=np.uint32, count=n_levels, offset=off)
-        off += 4 * n_levels
-        items = np.frombuffer(state, dtype=np.float64, count=int(lens.sum()), offset=off)
+        off = _HDR.size + 4 * n_levels
+        if len(state) < off:
+            raise ValueError("bad kll state: truncated level table")
+        lens = np.frombuffer(state, dtype=np.uint32, count=n_levels, offset=_HDR.size)
+        n_items = int(lens.sum(dtype=np.int64))
+        if len(state) != off + 8 * n_items:
+            raise ValueError("bad kll state: byte length does not match the header")
+        items = np.frombuffer(state, dtype=np.float64, count=n_items, offset=off)
         sk = cls(cfg or KllConfig(k=k))
         sk.levels = []
         pos = 0

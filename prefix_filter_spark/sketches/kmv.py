@@ -73,8 +73,13 @@ class KmvAccumulator(base.Accumulator):
 
 
 def _parse_state(state: bytes) -> tuple[int, int, np.ndarray]:
-    magic, version, _, _, k, seed = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
+    if len(state) < _HDR.size:
+        raise ValueError("bad kmv state: truncated header")
+    magic, version, pad8, pad16, k, seed = _HDR.unpack_from(state, 0)
+    # a KLL state has the same magic and version: its k sits where KMV
+    # writes zero padding
+    n, rem = divmod(len(state) - _HDR.size, 8)
+    if magic != _MAGIC or version != _VERSION or pad8 or pad16 or rem or n > k:
         raise ValueError("bad kmv state")
     return k, seed, np.frombuffer(state, dtype=np.uint64, offset=_HDR.size)
 

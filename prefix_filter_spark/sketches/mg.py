@@ -160,6 +160,13 @@ def estimates(state: bytes) -> tuple[int, int, dict[str, int]]:
     return total, err, counts
 
 
+def lookup(counts: dict[str, int], tokens: np.ndarray) -> np.ndarray:
+    """Lower-bound counts of ``tokens`` in an ``estimates`` map, each
+    keyed as ``to_bytes`` stores it (an integral token by its decimal
+    string); 0 for a token outside the summary."""
+    return np.array([counts.get(str(t), 0) for t in _as_keys(tokens)], dtype=np.int64)
+
+
 def heavy_hitters(state: bytes, phi: float) -> dict[str, int]:
     """Tokens that MAY have true frequency >= phi * n (no false
     negatives: est + err >= true, so true >= phi*n implies

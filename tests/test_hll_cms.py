@@ -112,6 +112,138 @@ def test_cms_spark_heavy_hitters(spark, documents):
     assert n == toks.count()
 
 
+# ---------------- CMS state versions ----------------------------------
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+_EDGE_COUNTERS = [0, 1, 65_534, 65_535, 65_536, 2**32 - 1, 2**32, 2**32 + 1, 2**62, -1, -(2**40)]
+
+
+def _cms_acc(counters: np.ndarray, total: int = 0, seed: int = 7) -> cms.CmsAccumulator:
+    d, w = counters.shape
+    acc = cms.CmsAccumulator(cms.CmsConfig(width=w, depth=d, seed=seed))
+    acc.counters = counters.astype(np.int64)
+    acc.total = total
+    return acc
+
+
+def _v2_state(st_: cms.CmsState) -> bytes:
+    """The version 2 layout (i64 counters), as written before version 3."""
+    hdr = cms._HDR.pack(cms._MAGIC, 2, st_.depth, 0, st_.width, 0, st_.total, st_.seed)
+    return hdr + st_.counters.astype("<i8").tobytes()
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.integers(1, 4),
+    st.integers(1, 48),
+    st.data(),
+)
+def test_cms_state_round_trip(d, w, data):
+    """Any counter matrix (0, the u16 edge, past 2^32, negative) decodes
+    to itself; the version and size follow the escape count, and a
+    version 2 state of the same counters re-encodes to the same bytes."""
+    value = st.one_of(
+        st.integers(0, 65_534), st.integers(0, 70_000), st.sampled_from(_EDGE_COUNTERS),
+        st.integers(-(2**63), 2**63 - 1),
+    )
+    counters = np.array(data.draw(st.lists(value, min_size=d * w, max_size=d * w)), dtype=np.int64)
+    acc = _cms_acc(counters.reshape(d, w), total=data.draw(st.integers(0, 2**63 - 1)))
+    state = acc.to_bytes()
+    dec = cms.CmsState.from_bytes(state)
+    assert np.array_equal(dec.counters, acc.counters)
+    assert (dec.depth, dec.width, dec.total, dec.seed) == (d, w, acc.total, 7)
+    n_esc = int(np.count_nonzero((counters >= 65_535) | (counters < 0)))
+    if 12 * n_esc >= 6 * d * w:
+        assert state[4] == 2 and len(state) == 32 + 8 * d * w
+    else:
+        assert state[4] == 3 and len(state) == 32 + 2 * d * w + 12 * n_esc
+    assert cms.merge_states([_v2_state(dec)]) == state
+
+
+def test_cms_all_escapes_fall_back_to_version_2():
+    acc = _cms_acc(np.full((3, 16), 70_000))
+    state = acc.to_bytes()
+    assert state[4] == 2 and len(state) == 32 + 8 * 3 * 16
+    assert np.array_equal(cms.CmsState.from_bytes(state).counters, acc.counters)
+
+
+def _two_cms_states():
+    cfg = cms.CmsConfig(width=512, depth=4, seed=11)
+    accs = [cms.CmsAccumulator(cfg) for _ in range(2)]
+    rng = np.random.default_rng(3)
+    for acc in accs:
+        # key 0's 70,000 copies push one counter per row past 65,535
+        acc.update(np.concatenate([np.zeros(70_000, np.int64), rng.integers(0, 300, 50_000)]))
+    return accs
+
+
+def test_cms_version_2_state_merges_with_version_3():
+    a, b = _two_cms_states()
+    v3a, v3b = a.to_bytes(), b.to_bytes()
+    assert v3a[4] == 3 and int.from_bytes(v3a[12:16], "little") > 0  # some escapes
+    v2a, v2b = (_v2_state(cms.CmsState.from_bytes(s)) for s in (v3a, v3b))
+    merged = cms.merge_states([v2a, v3b])
+    assert merged == cms.merge_states([v3a, v3b]) == cms.merge_states([v2a, v2b])
+    dec = cms.CmsState.from_bytes(merged)
+    assert np.array_equal(dec.counters, a.counters + b.counters)
+    assert dec.total == a.total + b.total
+    keys = np.arange(400)
+    assert np.array_equal(cms.point_estimates(v2a, keys), cms.point_estimates(v3a, keys))
+
+
+def test_cms_version_2_state_answers_cms_point(spark):
+    from prefix_filter_spark.functions import register_sketch_sql
+
+    register_sketch_sql(spark)
+    a, _ = _two_cms_states()
+    v3 = a.to_bytes()
+    spark.createDataFrame(
+        [("v2", _v2_state(cms.CmsState.from_bytes(v3))), ("v3", v3)], "ver string, state binary"
+    ).createOrReplaceTempView("cms_versions")
+    rows = spark.sql(
+        "SELECT ver, k, cms_point(state, k) c FROM cms_versions, "
+        "(SELECT id AS k FROM range(400)) ORDER BY ver, k"
+    ).collect()
+    got = {v: [r["c"] for r in rows if r["ver"] == v] for v in ("v2", "v3")}
+    assert got["v2"] == got["v3"] == cms.point_estimates(v3, np.arange(400)).tolist()
+
+
+def test_cms_truncated_or_padded_state_raises():
+    import pytest
+
+    a, _ = _two_cms_states()
+    state = a.to_bytes()
+    esc_at = 32 + 2 * 4 * 512
+    bad = [
+        state[:31], state[:32], state[:-1], state[:-12], state + b"\0", state + bytes(12),
+        state[:4] + bytes([4]) + state[5:],  # unknown version
+        state[:12] + (0).to_bytes(4, "little") + state[16:],  # escape count says 0
+        state[:esc_at] + (10**6).to_bytes(4, "little") + state[esc_at + 4 :],  # index out of range
+    ]
+    for b in bad:
+        with pytest.raises(ValueError):
+            cms.CmsState.from_bytes(b)
+        with pytest.raises(ValueError):
+            cms.merge_states([state, b])
+
+
+def test_cms_profile_state_is_a_quarter_of_version_2(spark):
+    """The perfbench token profile's corpus shape (16k synthetic
+    documents, 5 x 8192 counters): the state is <= 26% of the version
+    2 size, and its counters are the same."""
+    from prefix_filter_spark.sketches import base
+    from prefix_filter_spark.sources.synthetic import synthetic_documents
+
+    cfg = cms.CmsConfig()
+    state = base.estimate_state(synthetic_documents(spark, 16_000, seed=1), "tokens", cfg)
+    assert state[4] == 3
+    assert len(state) <= 0.26 * (8 * cfg.depth * cfg.width + 32)
+    dec = cms.CmsState.from_bytes(state)
+    assert dec.total == int(dec.counters[0].sum())
+    assert cms.CmsState.from_bytes(_v2_state(dec)).counters.tolist() == dec.counters.tolist()
+
+
 def test_tree_merge_produces_single_row(spark):
     cfg = hll.HllConfig(p=10, seed=5)
     df = spark.range(100_000).repartition(16)

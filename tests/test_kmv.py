@@ -198,3 +198,28 @@ def test_spark_partial_merge_equals_single_pass(spark):
         df.toPandas()["h"].to_numpy().astype(np.int64), cfg, chunks=1
     )
     assert dist == flat
+
+
+def test_kll_and_kmv_decoders_reject_each_others_state():
+    """Both kinds write magic 'PFSK', version 1: every decoder, merge
+    and estimate of one kind raises ValueError on the other's state."""
+    import pytest
+
+    from prefix_filter_spark.sketches import kll
+
+    vals = np.arange(10_000, dtype=np.int64)
+    kll_acc = kll.KllSketch(kll.KllConfig())
+    kll_acc.update(vals.astype(np.float64))
+    kll_state = kll_acc.to_bytes()
+    kmv_state = _acc_bytes(vals, kmv.KmvConfig())
+    for fn in (kmv.estimate, kmv.retained_values, lambda s: kmv.merge_states([s, s])):
+        with pytest.raises(ValueError):
+            fn(kll_state)
+    for fn in (kll.KllSketch.from_bytes, lambda s: kll.merge_states([s, s])):
+        with pytest.raises(ValueError):
+            fn(kmv_state)
+    with pytest.raises(ValueError):
+        kmv.union_estimate(kmv_state, kll_state)
+    # each kind's own state still decodes
+    assert abs(kmv.estimate(kmv_state) - 10_000) <= 4 * kmv.KmvConfig().rel_error() * 10_000
+    assert abs(kll.KllSketch.from_bytes(kll_state).quantile(0.5) - 5_000) <= 300

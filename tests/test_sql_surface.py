@@ -177,3 +177,44 @@ def test_bf_state_contains_sql_over_file_index(spark, tmp_path):
     assert sql_files == fidx.prune_files(idx, np.array([h]), cfg)
     assert len(sql_files) >= 1
     idx.unpersist()
+
+
+def test_cms_point_and_mg_estimate_null_and_large_keys(spark):
+    """A bigint probe column with a NULL in the batch: the NULL key
+    answers NULL, and keys past 2^53 are probed exactly (count-min
+    never underestimates an inserted key; MG finds both tokens)."""
+    from prefix_filter_spark.sketches import mg
+
+    register_sketch_sql(spark)
+    big = [2**60 + 1, 2**60 + 3]
+    df = spark.createDataFrame([(k,) for k in big], "v bigint")
+    cms.build_cms(df, "v", cms.CmsConfig(seed=5)).createOrReplaceTempView("cms_big")
+    mg.build_mg(df, "v", mg.MgConfig(k=8)).createOrReplaceTempView("mg_big")
+    rows = spark.sql(
+        "SELECT p.k, cms_point(c.state, p.k) c, mg_estimate(m.state, p.k) m "
+        f"FROM VALUES ({big[0]}L), (NULL), ({big[1]}L) AS p(k), cms_big c, mg_big m"
+    ).collect()
+    got = {r["k"]: (r["c"], r["m"]) for r in rows}
+    assert got == {big[0]: (1, 1), None: (None, None), big[1]: (1, 1)}
+
+
+def test_kll_and_kmv_sql_reject_each_others_state(spark):
+    """KLL and KMV share magic and version; each SQL function raises on
+    the other kind's state instead of answering."""
+    import numpy as np
+    import pytest
+
+    register_sketch_sql(spark)
+    df = spark.range(10_000).select(F.col("id").cast("double").alias("v"))
+    kll.build_kll(df, "v", kll.KllConfig()).createOrReplaceTempView("kll_other")
+    kmv.build_kmv(df, "v", kmv.KmvConfig()).createOrReplaceTempView("kmv_other")
+    for query, msg in (
+        ("SELECT kmv_estimate(state) FROM kll_other", "bad kmv state"),
+        ("SELECT kll_quantile(state, 0.5) FROM kmv_other", "bad kll state"),
+    ):
+        with pytest.raises(Exception, match=msg):
+            spark.sql(query).collect()
+    # each kind's own state still answers
+    assert spark.sql("SELECT kmv_estimate(state) FROM kmv_other").collect()[0][0] > 0
+    q = spark.sql("SELECT kll_quantile(state, 0.5) FROM kll_other").collect()[0][0]
+    assert np.isfinite(q)
