@@ -16,6 +16,9 @@ once per executor, not per task (pyspark_guide.md 'Pitfalls').
 
 from __future__ import annotations
 
+import functools
+import weakref
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -25,47 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from prefix_filter_spark.plans.sharding import hashed_key_col
-
-
-import functools
-import weakref
-
-
-# module-level (picklable by reference) cached state deserializers —
-# the state-taking SQL UDFs see the same blob on every row of a join
-@functools.lru_cache(maxsize=64)
-def _cms_cached(state: bytes):
-    from prefix_filter_spark.sketches import cms
-
-    return cms.CmsState.from_bytes(state)
-
-
-@functools.lru_cache(maxsize=64)
-def _kll_cached(state: bytes):
-    from prefix_filter_spark.sketches import kll
-
-    return kll.KllSketch.from_bytes(state)
-
-
-@functools.lru_cache(maxsize=64)
-def _td_cached(state: bytes):
-    from prefix_filter_spark.sketches import tdigest
-
-    return tdigest.TDigest.from_bytes(state)
-
-
-@functools.lru_cache(maxsize=64)
-def _dds_cached(state: bytes):
-    from prefix_filter_spark.sketches import dds
-
-    return dds.DDSketch.from_bytes(state)
-
-
-@functools.lru_cache(maxsize=64)
-def _mg_cached(state: bytes):
-    from prefix_filter_spark.sketches import mg
-
-    return mg.estimates(state)  # (total, err, counts)
 
 
 def register_contains_udf(
@@ -125,6 +87,84 @@ class ContainsFunction:
         return self.udf(hashed_key_col(key, self.seed))
 
 
+@functools.lru_cache(maxsize=64)
+def _decoded(decode, state: bytes):
+    """The one decoder cache of the state-taking SQL functions: a
+    join repeats one state blob on many rows and across batches.
+    ``decode`` is a function of the state bytes or a class whose
+    ``from_bytes`` is (the class, because it pickles by reference to
+    the workers, where a bound classmethod would pickle by value)."""
+    return getattr(decode, "from_bytes", decode)(state)
+
+
+_NP_DTYPE = {"double": np.float64, "bigint": np.int64, "boolean": np.bool_}
+
+
+def _state_udf(out_type: T.DataType, decode, fn):
+    """Arrow UDF ``(state, *args) -> out_type`` over a state column.
+
+    Rows are grouped by identical state blob (``dictionary_encode``
+    hashes them in Arrow); each distinct blob is decoded once through
+    ``_decoded(decode, blob)`` and answered for all its rows by one
+    ``fn(decoded, *arg_values)`` call, whose result is an array over
+    those rows or a scalar for all of them. A NULL state or argument
+    gives NULL. Argument values reach ``fn`` as the NumPy array of
+    their own Arrow type, so a bigint never passes through float64."""
+    dtype = _NP_DTYPE[out_type.simpleString()]
+
+    def run(state: pa.Array, *args: pa.Array) -> pa.Array:
+        enc = pc.dictionary_encode(state)
+        codes = enc.indices.fill_null(-1).to_numpy().copy()
+        for arg in args:
+            codes[arg.is_null().to_numpy(zero_copy_only=False)] = -1
+        order = np.argsort(codes, kind="stable")
+        cuts = np.searchsorted(codes[order], np.arange(len(enc.dictionary) + 1))
+        out = np.zeros(len(state), dtype=dtype)
+        for j, blob in enumerate(enc.dictionary):
+            rows = order[cuts[j] : cuts[j + 1]]
+            if len(rows):
+                vals = [arg.take(rows).to_numpy(zero_copy_only=False) for arg in args]
+                out[rows] = fn(_decoded(decode, blob.as_py()), *vals)
+        return pa.array(out, mask=codes < 0)
+
+    return F.arrow_udf(out_type)(run)
+
+
+def _sketch_sql_table() -> dict:
+    """The sketch SQL surface by name: ``(spark type, decode, fn)``."""
+    from prefix_filter_spark.sketches import cms, dds, hll, kll, kmv, mg, tdigest
+
+    D, L = T.DoubleType(), T.LongType()
+
+    def quantiles(sk, qs):
+        return sk.quantiles(qs.astype(np.float64))
+
+    def pair(op):
+        # binary set expression over two state columns (e.g. the
+        # sketches of two crawl snapshots joined side by side)
+        return lambda sa, sbs: [op(sa, sb) for sb in sbs]
+
+    return {
+        "hll_estimate": (D, bytes, hll.estimate),
+        "cms_point": (L, cms.CmsState, cms.CmsState.point),
+        "kll_quantile": (D, kll.KllSketch, quantiles),
+        # approximate CDF, the selectivity estimator behind range-scan
+        # planning (``kll.range_fraction``)
+        "kll_rank": (D, kll.KllSketch, lambda sk, vs: sk.ranks(vs.astype(np.float64))),
+        "tdigest_quantile": (D, tdigest.TDigest, quantiles),
+        "dds_quantile": (D, dds.DDSketch, quantiles),
+        # lower-bound count for a token (0 outside the summary)
+        "mg_estimate": (L, mg.estimates, lambda est, toks: mg.lookup(est[2], toks)),
+        "mg_error": (L, mg.estimates, lambda est: est[1]),
+        "mg_total": (L, mg.estimates, lambda est: est[0]),
+        "kmv_estimate": (D, bytes, kmv.estimate),
+        "kmv_union": (D, bytes, pair(kmv.union_estimate)),
+        "kmv_intersection": (D, bytes, pair(kmv.intersection_estimate)),
+        "kmv_difference": (D, bytes, pair(kmv.difference_estimate)),
+        "kmv_jaccard": (D, bytes, pair(kmv.jaccard_estimate)),
+    }
+
+
 # per SparkContext: the sketch SQL surface's JVM functions by name
 _SKETCH_JUDFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
@@ -137,10 +177,11 @@ def register_sketch_sql(spark: SparkSession) -> None:
         SELECT cms_point(state, token) FROM cms_shards, probe_tokens
         SELECT kll_quantile(state, 0.5), tdigest_quantile(state, 0.99) ...
 
-    All Arrow-batched (pandas or Arrow UDFs); a function that takes a
-    state and one argument per row groups the batch's rows by state
-    and decodes each distinct state once, through an LRU cache keyed
-    on the full state bytes (states repeat across rows in a join).
+    Every name is one ``_state_udf`` over a row of
+    ``_sketch_sql_table``: an Arrow UDF that groups the batch's rows by
+    state, decodes each distinct state once (one LRU keyed on the
+    decoder and the full state bytes, as states repeat across rows in
+    a join) and answers NULL for a NULL state or argument.
 
     Cheap to call again: the JVM functions are built once per
     SparkContext (~250 py4j round trips for the 14), and a later call
@@ -151,127 +192,13 @@ def register_sketch_sql(spark: SparkSession) -> None:
     judfs = _SKETCH_JUDFS.get(sc)
     if judfs is None:
         _SKETCH_JUDFS[sc] = {
-            name: spark.udf.register(name, f)._judf for name, f in _sketch_udfs().items()
+            name: spark.udf.register(name, _state_udf(*row))._judf
+            for name, row in _sketch_sql_table().items()
         }
         return
     registry = spark._jsparkSession.udf()
     for name, judf in judfs.items():
         registry.registerPython(name, judf)
-
-
-def _per_state(cache, fn, dtype):
-    """Arrow UDF body ``(state, arg) -> array`` for the functions that
-    answer one argument per row against a state column: rows are
-    grouped by identical state blob (``dictionary_encode`` hashes them
-    in Arrow), each distinct blob is decoded once through ``cache``
-    and answered for all its rows by ``fn(decoded, arg_values)``. A
-    NULL state or argument gives NULL. Argument values reach ``fn`` as
-    the NumPy array of their own Arrow type, so a bigint key never
-    passes through float64."""
-
-    def run(state: pa.Array, arg: pa.Array) -> pa.Array:
-        enc = pc.dictionary_encode(state)
-        codes = enc.indices.fill_null(-1).to_numpy().copy()
-        codes[arg.is_null().to_numpy(zero_copy_only=False)] = -1
-        order = np.argsort(codes, kind="stable")
-        cuts = np.searchsorted(codes[order], np.arange(len(enc.dictionary) + 1))
-        out = np.zeros(len(state), dtype=dtype)
-        for j, blob in enumerate(enc.dictionary):
-            rows = order[cuts[j] : cuts[j + 1]]
-            if len(rows):
-                vals = arg.take(rows).to_numpy(zero_copy_only=False)
-                out[rows] = fn(cache(blob.as_py()), vals)
-        return pa.array(out, mask=codes < 0)
-
-    return run
-
-
-def _sketch_udfs() -> dict:
-    """The sketch SQL surface's vectorized UDFs by SQL name."""
-    from prefix_filter_spark.sketches import hll, mg
-
-    @F.pandas_udf(T.DoubleType())
-    def hll_estimate(state: pd.Series) -> pd.Series:
-        return state.map(lambda s: hll.estimate(bytes(s)) if s is not None else None)
-
-    cms_point = F.arrow_udf(T.LongType())(
-        _per_state(_cms_cached, lambda sk, keys: sk.point(keys), np.int64)
-    )
-
-    def quantile(sk, qs):
-        # one weighted-items/centroid walk per blob, not one per row
-        return sk.quantiles(qs.astype(np.float64))
-
-    kll_quantile = F.arrow_udf(T.DoubleType())(_per_state(_kll_cached, quantile, np.float64))
-    tdigest_quantile = F.arrow_udf(T.DoubleType())(_per_state(_td_cached, quantile, np.float64))
-    dds_quantile = F.arrow_udf(T.DoubleType())(_per_state(_dds_cached, quantile, np.float64))
-    # Approximate CDF: fraction of sketched values <= v (rank error
-    # +-eps like the quantile direction). The selectivity estimator
-    # behind range-scan planning: P(lo <= x <= hi) =
-    # kll_rank(state, hi) - kll_rank(state, lo-).
-    kll_rank = F.arrow_udf(T.DoubleType())(
-        _per_state(_kll_cached, lambda sk, vs: [sk.rank(float(v)) for v in vs], np.float64)
-    )
-    # lower-bound count for a token (0 when absent: the MG lower bound
-    # for any token outside the summary)
-    mg_estimate = F.arrow_udf(T.LongType())(
-        _per_state(_mg_cached, lambda est, toks: mg.lookup(est[2], toks), np.int64)
-    )
-
-    from prefix_filter_spark.sketches import kmv
-
-    @F.pandas_udf(T.DoubleType())
-    def kmv_estimate(state: pd.Series) -> pd.Series:
-        return state.map(lambda s: kmv.estimate(bytes(s)) if s is not None else None)
-
-    def _kmv_pairwise(op):
-        """Binary set expression over two state columns (e.g. the
-        sketches of two crawl snapshots joined side by side)."""
-
-        def run(sa: pd.Series, sb: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    op(bytes(a), bytes(b)) if a is not None and b is not None else None
-                    for a, b in zip(sa, sb)
-                ],
-                dtype=object,
-            )
-
-        return run
-
-    kmv_union = F.pandas_udf(T.DoubleType())(_kmv_pairwise(kmv.union_estimate))
-    kmv_intersection = F.pandas_udf(T.DoubleType())(
-        _kmv_pairwise(kmv.intersection_estimate)
-    )
-    kmv_difference = F.pandas_udf(T.DoubleType())(
-        _kmv_pairwise(kmv.difference_estimate)
-    )
-    kmv_jaccard = F.pandas_udf(T.DoubleType())(_kmv_pairwise(kmv.jaccard_estimate))
-
-    @F.pandas_udf(T.LongType())
-    def mg_error(state: pd.Series) -> pd.Series:
-        return state.map(lambda s: _mg_cached(bytes(s))[1] if s is not None else None)
-
-    @F.pandas_udf(T.LongType())
-    def mg_total(state: pd.Series) -> pd.Series:
-        return state.map(lambda s: _mg_cached(bytes(s))[0] if s is not None else None)
-
-    return {
-        "mg_estimate": mg_estimate,
-        "mg_error": mg_error,
-        "mg_total": mg_total,
-        "hll_estimate": hll_estimate,
-        "cms_point": cms_point,
-        "kll_quantile": kll_quantile,
-        "kll_rank": kll_rank,
-        "tdigest_quantile": tdigest_quantile,
-        "dds_quantile": dds_quantile,
-        "kmv_estimate": kmv_estimate,
-        "kmv_union": kmv_union,
-        "kmv_intersection": kmv_intersection,
-        "kmv_difference": kmv_difference,
-        "kmv_jaccard": kmv_jaccard,
-    }
 
 
 def register_state_contains(spark: SparkSession, name: str = "bf_state_contains"):
@@ -284,24 +211,15 @@ def register_state_contains(spark: SparkSession, name: str = "bf_state_contains"
         SELECT file FROM file_index
         WHERE bf_state_contains(state, xxhash64(CAST(42 AS BIGINT), 42))
 
-    Row-at-a-state but Arrow-batched across rows; intended for
-    state-table scale (one row per file/shard), not per-key scans —
-    key-column probes belong to register_contains_udf.
+    Each distinct state in a batch probes all of its rows' hashes in
+    one vectorised call; NULL state or hash gives NULL. Key-column
+    probes against one handle belong to register_contains_udf.
     """
     from prefix_filter_spark.sketches import bloom
 
-    @F.pandas_udf(T.BooleanType())
-    def _state_contains(state: pd.Series, h: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = [
-            bool(bloom.contains_h_in_state(bytes(s), np.array([v]))[0])
-            for s, v in zip(state, h)
-        ]
-        return pd.Series(out)
-
-    spark.udf.register(name, _state_contains)
-    return _state_contains
+    udf = _state_udf(T.BooleanType(), bytes, bloom.contains_h_in_state)
+    spark.udf.register(name, udf)
+    return udf
 
 
 def probe_keys_local(handle, keys) -> "pd.Series":

@@ -127,12 +127,17 @@ class KllSketch(base.Accumulator):
         return items[np.minimum(idx, len(items) - 1)]
 
     def rank(self, value: float) -> float:
+        return float(self.ranks([value])[0])
+
+    def ranks(self, values) -> np.ndarray:
+        """Fraction of sketched weight at or below each value: one
+        weighted-items pass + one searchsorted for the whole vector."""
+        values = np.asarray(values, dtype=np.float64)
         items, weights = self._weighted_items()
         if len(items) == 0:
-            return float("nan")
-        cw = np.cumsum(weights)
-        idx = int(np.searchsorted(items, value, side="right"))
-        return float(cw[idx - 1] / cw[-1]) if idx > 0 else 0.0
+            return np.full(len(values), np.nan)
+        cw = np.concatenate([[0.0], np.cumsum(weights)])
+        return cw[np.searchsorted(items, values, side="right")] / cw[-1]
 
     # -- serde -----------------------------------------------------------
     def to_bytes(self) -> bytes:
@@ -198,12 +203,11 @@ def range_fraction(state: bytes, lo: float, hi: float) -> float:
     rank(lo-), each side within the sketch's rank_eps. ``lo-`` is the
     open left bound (values strictly below lo), realized via
     np.nextafter so integer-valued data at exactly ``lo`` counts."""
-    import numpy as np
-
     sk = KllSketch.from_bytes(state)
     if hi < lo:
         return 0.0
-    return max(0.0, sk.rank(hi) - sk.rank(float(np.nextafter(lo, -np.inf))))
+    r_hi, r_lo = sk.ranks([hi, np.nextafter(lo, -np.inf)])
+    return max(0.0, float(r_hi - r_lo))
 
 
 def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:

@@ -1,29 +1,28 @@
 """Checkpoint/resume, salted skew aggregation, synthetic source,
 streaming builds."""
 
-import shutil
-
-import pytest
 from pyspark.sql import functions as F
 
 from prefix_filter_spark.plans import checkpoint, salting
 from prefix_filter_spark.sketches import bloom
 from prefix_filter_spark.sources import synthetic
 
-TMP = "/root/repo/.tmp/tests"
+
+def _drain(q, timeout: float = 120) -> None:
+    """Wait for a streaming query and fail unless it finished with no
+    exception: a dead or stalled stream must not pass on a partial
+    sink. A query still running at the timeout is stopped first."""
+    finished = q.awaitTermination(timeout)
+    if not finished:
+        q.stop()
+    assert finished, f"streaming query {q.name or q.id} did not finish in {timeout} s"
+    assert q.exception() is None, q.exception()
 
 
-@pytest.fixture(autouse=True, scope="module")
-def _clean_tmp():
-    shutil.rmtree(TMP, ignore_errors=True)
-    yield
-    shutil.rmtree(TMP, ignore_errors=True)
-
-
-def test_build_or_resume_full_cycle(spark):
+def test_build_or_resume_full_cycle(spark, tmp_path):
     cfg = bloom.BloomConfig(n_capacity=20_000, bits_per_key=10, num_shards=8, seed=3)
     keys = spark.range(20_000).select(F.col("id").alias("key"))
-    path = f"{TMP}/bloom_ckpt"
+    path = f"{tmp_path}/bloom_ckpt"
 
     built = checkpoint.build_or_resume(
         spark, keys, "key",
@@ -45,7 +44,7 @@ def test_build_or_resume_full_cycle(spark):
     assert states1 == states2
 
 
-def test_build_or_resume_partial(spark):
+def test_build_or_resume_partial(spark, tmp_path):
     """Simulate a crash that persisted only half the shards: resume
     rebuilds exactly the missing ones and the union equals a clean build."""
     cfg = bloom.BloomConfig(n_capacity=20_000, bits_per_key=10, num_shards=8, seed=4)
@@ -53,7 +52,7 @@ def test_build_or_resume_partial(spark):
     full = bloom.build_bloom(keys, "key", cfg)
     full_states = {r["shard_id"]: bytes(r["state"]) for r in full.collect()}
 
-    path = f"{TMP}/bloom_partial"
+    path = f"{tmp_path}/bloom_partial"
     kept = full.where(F.col("shard_id") < 4)
     checkpoint.save_shards(kept, path)
 
@@ -86,7 +85,7 @@ def test_salted_agg_matches_plain(spark):
     assert 0.4 < frac < 0.6
 
 
-def test_synthetic_documents_deterministic_and_shaped(spark):
+def test_synthetic_documents_deterministic_and_shaped(spark, tmp_path):
     a = synthetic.synthetic_documents(spark, 1_000, seed=42).toPandas()
     b = synthetic.synthetic_documents(spark, 1_000, seed=42).toPandas()
     assert a.equals(b)
@@ -94,7 +93,7 @@ def test_synthetic_documents_deterministic_and_shaped(spark):
     assert (a["n_tok"] == a["tokens"].map(len)).all()
     # token-array round-trip invariant (input_hint per-row invariant)
     docs = synthetic.synthetic_documents(spark, 500, seed=1)
-    path = f"{TMP}/tokens_roundtrip"
+    path = f"{tmp_path}/tokens_roundtrip"
     docs.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     rebuilt = (
@@ -116,23 +115,18 @@ def test_synthetic_documents_deterministic_and_shaped(spark):
     assert top["count"] > tok.count() / 1000
 
 
-def test_streaming_foreach_batch_equals_batch(spark):
+def test_streaming_foreach_batch_equals_batch(spark, tmp_path):
     """Stream the key range in 4 micro-batch files; final merged state
     must equal the one-shot batch build (merge associativity live)."""
     from prefix_filter_spark.streaming.build import foreach_batch_build
 
-    import shutil
-
     cfg = bloom.BloomConfig(n_capacity=20_000, bits_per_key=10, num_shards=4, seed=5)
     keys = spark.range(20_000).select(F.col("id").alias("key"))
-    for d in ("stream_src", "stream_state", "stream_ckpt"):
-        shutil.rmtree(f"{TMP}/{d}", ignore_errors=True)
-    src_dir = f"{TMP}/stream_src"
+    src_dir = f"{tmp_path}/stream_src"
     for i in range(4):
         # coalesce(1): exactly ONE file per slice -> exactly 4
         # micro-batches. Without it each write emits up to 32 part
-        # files (128 batches), and awaitTermination(120) can time out
-        # SILENTLY, reading partial state — a flaky one-bit mismatch.
+        # files (128 batches), enough to outrun the drain timeout.
         keys.where(F.pmod("key", F.lit(4)) == i).coalesce(1).write.mode(
             "overwrite" if i == 0 else "append"
         ).parquet(src_dir)
@@ -147,15 +141,14 @@ def test_streaming_foreach_batch_equals_batch(spark):
         "key",
         build_fn=lambda df, k: bloom.build_bloom(df, k, cfg),
         merge_fn=cfg,
-        state_path=f"{TMP}/stream_state",
-        checkpoint_dir=f"{TMP}/stream_ckpt",
+        state_path=f"{tmp_path}/stream_state",
+        checkpoint_dir=f"{tmp_path}/stream_ckpt",
     )
-    finished = q.awaitTermination(240)
-    assert finished, "stream did not drain — state below would be partial"
+    _drain(q, 240)
 
     got = {
         r["shard_id"]: bytes(r["state"])
-        for r in spark.read.parquet(f"{TMP}/stream_state").collect()
+        for r in spark.read.parquet(f"{tmp_path}/stream_state").collect()
     }
     want = {
         r["shard_id"]: bytes(r["state"])
@@ -164,14 +157,14 @@ def test_streaming_foreach_batch_equals_batch(spark):
     assert got == want
 
 
-def test_streaming_stateful_hll(spark):
+def test_streaming_stateful_hll(spark, tmp_path):
     from prefix_filter_spark.streaming.build import streaming_distinct_by_source
 
     docs = synthetic.synthetic_documents(spark, 2_000, seed=9)
     tok = synthetic.exploded_token_stream(docs).select(
         "source", F.col("token").cast("long").alias("token")
     )
-    src_dir = f"{TMP}/stateful_src"
+    src_dir = f"{tmp_path}/stateful_src"
     tok.write.mode("overwrite").parquet(src_dir)
     stream = spark.readStream.schema("source string, token long").parquet(src_dir)
     out = streaming_distinct_by_source(stream, p=12, seed=42)
@@ -180,10 +173,10 @@ def test_streaming_stateful_hll(spark):
         .format("memory")
         .queryName("hll_by_source")
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{TMP}/stateful_ckpt")
+        .option("checkpointLocation", f"{tmp_path}/stateful_ckpt")
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     got = spark.sql(
         "SELECT source, max(n_distinct_est) est FROM hll_by_source GROUP BY source"
     ).toPandas()
@@ -208,13 +201,13 @@ def test_iceberg_adapter_fallback(spark):
         iceberg.read_sequences(spark, "pfs.db.sequences")
 
 
-def test_windowed_streaming_with_watermark(spark):
+def test_windowed_streaming_with_watermark(spark, tmp_path):
     """Watermarked tumbling-window agg: streaming (append mode) result
     equals the same plan run in batch over the same input."""
     from prefix_filter_spark.streaming.windowed import windowed_event_stats
 
     events = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-    src_dir = f"{TMP}/win_src"
+    src_dir = f"{tmp_path}/win_src"
     events.write.mode("overwrite").parquet(src_dir)
     schema = events.schema
     stream = spark.readStream.schema(schema).parquet(src_dir)
@@ -224,10 +217,10 @@ def test_windowed_streaming_with_watermark(spark):
         .format("memory")
         .queryName("win_stats")
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{TMP}/win_ckpt")
+        .option("checkpointLocation", f"{tmp_path}/win_ckpt")
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     got = spark.sql(
         "SELECT * FROM win_stats ORDER BY window_start, event_type"
     ).toPandas()
@@ -247,7 +240,7 @@ def test_windowed_streaming_with_watermark(spark):
     assert (merged["sum_value_s"] == merged["sum_value_b"]).all()
 
 
-def test_streaming_prefix_filter_build(spark):
+def test_streaming_prefix_filter_build(spark, tmp_path):
     """PF through the streaming path: merge_fn is the config, whose
     family merge receives the shard id (the spare re-keys on global PD
     index) — final state must equal the batch build bit-for-bit."""
@@ -256,7 +249,7 @@ def test_streaming_prefix_filter_build(spark):
 
     cfg = pfm.PrefixFilterConfig(n_capacity=30_000, num_shards=4, seed=6)
     keys = spark.range(30_000).select(F.col("id").alias("key"))
-    src_dir = f"{TMP}/pf_stream_src"
+    src_dir = f"{tmp_path}/pf_stream_src"
     for i in range(3):
         keys.where(F.pmod("key", F.lit(3)) == i).write.mode(
             "overwrite" if i == 0 else "append"
@@ -271,13 +264,13 @@ def test_streaming_prefix_filter_build(spark):
         "key",
         build_fn=lambda df, k: pfm.build_prefix_filter(df, k, cfg),
         merge_fn=cfg,
-        state_path=f"{TMP}/pf_stream_state",
-        checkpoint_dir=f"{TMP}/pf_stream_ckpt",
+        state_path=f"{tmp_path}/pf_stream_state",
+        checkpoint_dir=f"{tmp_path}/pf_stream_ckpt",
     )
-    q.awaitTermination(120)
+    _drain(q)
     got = {
         r["shard_id"]: bytes(r["state"])
-        for r in spark.read.parquet(f"{TMP}/pf_stream_state").collect()
+        for r in spark.read.parquet(f"{tmp_path}/pf_stream_state").collect()
     }
     want = {
         r["shard_id"]: bytes(r["state"])
@@ -312,7 +305,7 @@ def test_sketch_by_group_salted(spark):
     assert web["n_partials"] == 16
 
 
-def test_streaming_foreach_batch_cuckoo(spark):
+def test_streaming_foreach_batch_cuckoo(spark, tmp_path):
     """Streamed cuckoo accumulation == one-shot batch build bit-for-bit
     (deterministic rebuild merge through the config's family record)."""
     from prefix_filter_spark.sketches import cuckoo as ck
@@ -320,7 +313,7 @@ def test_streaming_foreach_batch_cuckoo(spark):
 
     cfg = ck.CuckooConfig(n_capacity=20_000, num_shards=4, seed=6)
     keys = spark.range(20_000).select(F.col("id").alias("key"))
-    src_dir = f"{TMP}/ck_stream_src"
+    src_dir = f"{tmp_path}/ck_stream_src"
     for i in range(3):
         keys.where(F.pmod("key", F.lit(3)) == i).write.mode(
             "overwrite" if i == 0 else "append"
@@ -336,14 +329,14 @@ def test_streaming_foreach_batch_cuckoo(spark):
         "key",
         build_fn=lambda df, k: ck.build_cuckoo(df, k, cfg),
         merge_fn=cfg,
-        state_path=f"{TMP}/ck_stream_state",
-        checkpoint_dir=f"{TMP}/ck_stream_ckpt",
+        state_path=f"{tmp_path}/ck_stream_state",
+        checkpoint_dir=f"{tmp_path}/ck_stream_ckpt",
     )
-    q.awaitTermination(120)
+    _drain(q)
 
     got = {
         r["shard_id"]: bytes(r["state"])
-        for r in spark.read.parquet(f"{TMP}/ck_stream_state").collect()
+        for r in spark.read.parquet(f"{tmp_path}/ck_stream_state").collect()
     }
     want = {
         r["shard_id"]: bytes(r["state"])
@@ -352,7 +345,7 @@ def test_streaming_foreach_batch_cuckoo(spark):
     assert got == want
 
 
-def test_streaming_epoch_replay_is_skipped(spark):
+def test_streaming_epoch_replay_is_skipped(spark, tmp_path):
     """foreachBatch is at-least-once: a replayed epoch (marker says it
     was applied) must be a no-op, while a FRESH checkpoint over the same
     state store (epoch ids restart at 0) must still apply batches."""
@@ -362,9 +355,9 @@ def test_streaming_epoch_replay_is_skipped(spark):
 
     cfg = bloom.BloomConfig(n_capacity=10_000, bits_per_key=10, num_shards=4, seed=9)
     keys = spark.range(10_000).select(F.col("id").alias("key"))
-    src = f"{TMP}/replay_src"
+    src = f"{tmp_path}/replay_src"
     keys.write.mode("overwrite").parquet(src)
-    state = f"{TMP}/replay_state"
+    state = f"{tmp_path}/replay_state"
 
     def run(ckpt):
         stream = spark.readStream.schema("key long").parquet(src)
@@ -376,25 +369,25 @@ def test_streaming_epoch_replay_is_skipped(spark):
             state_path=state,
             checkpoint_dir=ckpt,
         )
-        q.awaitTermination(120)
+        _drain(q)
 
     # claim epoch 999 was already applied under checkpoint A -> the
     # stream's epoch 0 must be skipped and NO state written
     with open(state + ".last_epoch", "w") as f:
-        json.dump({"checkpoint": f"{TMP}/replay_ckpt_a", "epoch": 999}, f)
-    run(f"{TMP}/replay_ckpt_a")
+        json.dump({"checkpoint": f"{tmp_path}/replay_ckpt_a", "epoch": 999}, f)
+    run(f"{tmp_path}/replay_ckpt_a")
     import os
 
     assert not os.path.exists(state), "replayed epoch was applied"
 
     # a FRESH checkpoint (different dir) restarts epochs at 0 and must
     # NOT be mistaken for a replay — state gets built
-    run(f"{TMP}/replay_ckpt_b")
+    run(f"{tmp_path}/replay_ckpt_b")
     got = spark.read.parquet(state)
     assert got.count() == cfg.num_shards
 
 
-def test_streaming_epoch_marker_atomic_and_recovers(spark):
+def test_streaming_epoch_marker_atomic_and_recovers(spark, tmp_path):
     """The epoch marker lives INSIDE the promoted state directory
     (committed by the same rename as the state), and an interrupted
     promote (state renamed away, new state never renamed in) recovers
@@ -405,11 +398,11 @@ def test_streaming_epoch_marker_atomic_and_recovers(spark):
     from prefix_filter_spark.streaming.build import foreach_batch_build
 
     cfg = bloom.BloomConfig(n_capacity=10_000, bits_per_key=10, num_shards=4, seed=11)
-    src = f"{TMP}/atomic_src"
+    src = f"{tmp_path}/atomic_src"
     spark.range(10_000).select(F.col("id").alias("key")).write.mode(
         "overwrite"
     ).parquet(src)
-    state = f"{TMP}/atomic_state"
+    state = f"{tmp_path}/atomic_state"
 
     def run(ckpt):
         stream = spark.readStream.schema("key long").parquet(src)
@@ -421,14 +414,14 @@ def test_streaming_epoch_marker_atomic_and_recovers(spark):
             state_path=state,
             checkpoint_dir=ckpt,
         )
-        q.awaitTermination(120)
+        _drain(q)
 
-    run(f"{TMP}/atomic_ckpt_a")
+    run(f"{tmp_path}/atomic_ckpt_a")
     marker_path = os.path.join(state, "_epoch.json")
     assert os.path.exists(marker_path), "marker must ride inside the state dir"
     with open(marker_path) as f:
         marker = json.load(f)
-    assert marker["checkpoint"] == f"{TMP}/atomic_ckpt_a"
+    assert marker["checkpoint"] == f"{tmp_path}/atomic_ckpt_a"
     assert not os.path.exists(state + ".last_epoch"), "no side-file marker"
     before = {
         (r["shard_id"]): bytes(r["state"])
@@ -439,7 +432,7 @@ def test_streaming_epoch_marker_atomic_and_recovers(spark):
     os.rename(state, state + ".old")
     # a fresh-checkpoint run must first RECOVER the old state, see its
     # marker (different checkpoint -> not a replay), and re-apply
-    run(f"{TMP}/atomic_ckpt_b")
+    run(f"{tmp_path}/atomic_ckpt_b")
     assert os.path.isdir(state) and not os.path.isdir(state + ".old")
     after = {
         (r["shard_id"]): bytes(r["state"])
@@ -449,7 +442,7 @@ def test_streaming_epoch_marker_atomic_and_recovers(spark):
     assert before == after
 
 
-def test_streaming_stateful_mg_heavy_hitters(spark):
+def test_streaming_stateful_mg_heavy_hitters(spark, tmp_path):
     """MG state through applyInPandasWithState across multiple
     micro-batches: bounded state, running deterministic bound, and the
     planted per-source hot token leads the final batch output."""
@@ -467,7 +460,7 @@ def test_streaming_stateful_mg_heavy_hitters(spark):
         .alias("token"),
         F.pmod(F.col("id"), F.lit(3)).alias("b"),
     )
-    src_dir = f"{TMP}/mg_src"
+    src_dir = f"{tmp_path}/mg_src"
     for i in range(3):  # three files -> three micro-batches
         tok.where(F.col("b") == i).drop("b").write.mode(
             "overwrite" if i == 0 else "append"
@@ -483,10 +476,10 @@ def test_streaming_stateful_mg_heavy_hitters(spark):
         .format("memory")
         .queryName("mg_by_source")
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{TMP}/mg_ckpt")
+        .option("checkpointLocation", f"{tmp_path}/mg_ckpt")
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     final = spark.sql(
         """SELECT source, n_total, err, top_token, top_est FROM (
              SELECT *, row_number() OVER (PARTITION BY source ORDER BY n_total DESC) rn
@@ -501,7 +494,7 @@ def test_streaming_stateful_mg_heavy_hitters(spark):
         assert r["top_est"] <= true_hot <= r["top_est"] + r["err"]
 
 
-def test_streaming_stateful_kll_quantiles(spark):
+def test_streaming_stateful_kll_quantiles(spark, tmp_path):
     """KLL state through applyInPandasWithState across three
     micro-batches: bounded state, and the final running quantiles are
     within the sketch's rank-eps of the exact per-source quantiles over
@@ -516,7 +509,7 @@ def test_streaming_stateful_kll_quantiles(spark):
         (F.xxhash64("id", F.lit(7)) % 100_000).cast("double").alias("value"),
         F.pmod(F.col("id"), F.lit(3)).alias("b"),
     )
-    src_dir = f"{TMP}/kll_src"
+    src_dir = f"{tmp_path}/kll_src"
     for i in range(3):
         vals.where(F.col("b") == i).drop("b").write.mode(
             "overwrite" if i == 0 else "append"
@@ -532,10 +525,10 @@ def test_streaming_stateful_kll_quantiles(spark):
         .format("memory")
         .queryName("kll_by_source")
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{TMP}/kll_ckpt")
+        .option("checkpointLocation", f"{tmp_path}/kll_ckpt")
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     final = spark.sql(
         """SELECT * FROM (
              SELECT *, row_number() OVER (PARTITION BY source
@@ -554,7 +547,7 @@ def test_streaming_stateful_kll_quantiles(spark):
             assert abs(rank - qq) <= eps, (r["source"], col, rank, qq)
 
 
-def test_streaming_dds_quantiles_bit_equals_batch(spark):
+def test_streaming_dds_quantiles_bit_equals_batch(spark, tmp_path):
     """DDS streaming twin: after any trigger chopping the running
     per-source state is BIT-IDENTICAL to a batch build over the same
     rows (exact integer counts), and every estimate is within alpha of
@@ -572,7 +565,7 @@ def test_streaming_dds_quantiles_bit_equals_batch(spark):
         .alias("value"),
         F.pmod(F.col("id"), F.lit(4)).alias("b"),
     )
-    src_dir = f"{TMP}/dds_src"
+    src_dir = f"{tmp_path}/dds_src"
     for i in range(4):
         vals.where(F.col("b") == i).drop("b").write.mode(
             "overwrite" if i == 0 else "append"
@@ -588,10 +581,10 @@ def test_streaming_dds_quantiles_bit_equals_batch(spark):
         .format("memory")
         .queryName("dds_by_source")
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{TMP}/dds_ckpt")
+        .option("checkpointLocation", f"{tmp_path}/dds_ckpt")
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     import numpy as np
 
     final = spark.sql(

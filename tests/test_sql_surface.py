@@ -218,3 +218,198 @@ def test_kll_and_kmv_sql_reject_each_others_state(spark):
     assert spark.sql("SELECT kmv_estimate(state) FROM kmv_other").collect()[0][0] > 0
     q = spark.sql("SELECT kll_quantile(state, 0.5) FROM kll_other").collect()[0][0]
     assert np.isfinite(q)
+
+
+def test_bf_state_contains_null_hash_in_batch_keeps_members(spark):
+    """A NULL hash in the same probe batch as member hashes answers
+    NULL and every member is still found, the hashes past 2^53
+    included (the bigint column must not pass through float64); a NULL
+    state answers NULL."""
+    import numpy as np
+
+    from prefix_filter_spark.functions import register_state_contains
+    from prefix_filter_spark.hashing import as_u64
+    from prefix_filter_spark.sketches import bloom
+
+    hashes = np.random.default_rng(3).integers(-(2**63), 2**63 - 1, 1_000, dtype=np.int64)
+    hashes[0] = 2**60 + 1
+    cfg = bloom.BloomConfig(n_capacity=1_000, bits_per_key=12, num_shards=1, seed=7)
+    state = bloom.build_state(cfg, 0, as_u64(hashes))
+    spark.createDataFrame([(state,)], "state binary").createOrReplaceTempView("bf_one")
+    register_state_contains(spark)
+
+    probe = ", ".join(f"({int(h)}L)" for h in hashes[:200]) + ", (NULL)"
+    rows = spark.sql(
+        f"SELECT p.h, bf_state_contains(b.state, p.h) c FROM VALUES {probe} AS p(h), bf_one b"
+    ).collect()
+    got = {r["h"]: r["c"] for r in rows}
+    assert len(got) == 201
+    assert got.pop(None) is None
+    assert sorted(h for h, c in got.items() if c is not True) == []
+    assert spark.sql("SELECT bf_state_contains(CAST(NULL AS BINARY), 5L)").first()[0] is None
+
+
+def test_kll_ranks_equal_the_per_value_loop():
+    """``KllSketch.ranks`` answers exactly as one ``rank`` walk per
+    value did, NaN on an empty sketch."""
+    import numpy as np
+
+    def rank_loop(sk, value):
+        items, weights = sk._weighted_items()
+        if len(items) == 0:
+            return float("nan")
+        cw = np.cumsum(weights)
+        idx = int(np.searchsorted(items, value, side="right"))
+        return float(cw[idx - 1] / cw[-1]) if idx > 0 else 0.0
+
+    rng = np.random.default_rng(5)
+    sk = kll.KllSketch(kll.KllConfig(k=64, seed=5))
+    sk.update(rng.normal(size=20_000))
+    values = np.concatenate([rng.normal(size=500), [-np.inf, np.inf, np.nan, 0.0]])
+    values = np.concatenate([values, sk._weighted_items()[0][:50]])  # exact ties
+    want = np.array([rank_loop(sk, v) for v in values])
+    assert np.array_equal(sk.ranks(values), want, equal_nan=True)
+    assert sk.rank(values[0]) == want[0]
+
+    empty = kll.KllSketch(kll.KllConfig())
+    assert np.isnan(empty.ranks([0.0, 1.0])).all()
+    assert np.isnan(empty.rank(0.0))
+    state = sk.to_bytes()
+    lo, hi = -0.5, 0.5
+    old = max(0.0, rank_loop(sk, hi) - rank_loop(sk, float(np.nextafter(lo, -np.inf))))
+    assert kll.range_fraction(state, lo, hi) == old
+
+
+# -- the SQL surface matrix -------------------------------------------------
+# Every registered name over one coalesced batch: two distinct states, a
+# NULL state, a NULL argument and a bigint argument past 2^53, each cell
+# equal (floats bit-equal) to the module function called in Python; and
+# over an empty batch.
+
+_BIG = 2**60 + 1
+
+
+def _matrix_states():
+    import numpy as np
+
+    from prefix_filter_spark.hashing import as_u64
+    from prefix_filter_spark.sketches import bloom, dds, mg
+
+    rng = np.random.default_rng(12)
+    ints = (
+        np.concatenate([np.full(100, _BIG), rng.integers(0, 1_000, 2_000)]),
+        np.concatenate([np.full(100, _BIG + 2), rng.integers(500, 3_000, 3_000)]),
+    )
+    floats = (rng.lognormal(size=5_000), rng.lognormal(1.0, 2.0, size=3_000))
+
+    def states(cfg, values):
+        out = []
+        for v in values:
+            acc = cfg.family.accumulator(cfg)
+            acc.update(v)
+            out.append(acc.to_bytes())
+        return tuple(out)
+
+    bcfg = bloom.BloomConfig(n_capacity=3_100, bits_per_key=12, num_shards=1, seed=7)
+    return {
+        "hll": states(hll.HllConfig(p=10, seed=3), ints),
+        "cms": states(cms.CmsConfig(width=512, depth=4, seed=3), ints),
+        "kll": states(kll.KllConfig(k=64, seed=3), floats),
+        "tdigest": states(tdigest.TDigestConfig(delta=50), floats),
+        "dds": states(dds.DDSketchConfig(), floats),
+        "mg": states(mg.MgConfig(k=16), ints),
+        "kmv": states(kmv.KmvConfig(k=256, seed=3), ints),
+        "bloom": tuple(bloom.build_state(bcfg, 0, as_u64(v)) for v in ints),
+    }
+
+
+def _matrix_specs():
+    """name -> (state kind, argument SQL type or None, three argument
+    values, the answer for one row computed in Python)."""
+    import numpy as np
+
+    from prefix_filter_spark.sketches import bloom, dds, mg
+
+    keys = [_BIG, 17, _BIG + 2]
+    qs = [0.5, 0.01, 0.99]
+
+    def quantile(cls):
+        return lambda s, q: float(cls.from_bytes(s).quantiles([q])[0])
+
+    pair = {
+        f"kmv_{op}": ("kmv", "binary", None, getattr(kmv, f"{op}_estimate"))
+        for op in ("union", "intersection", "difference", "jaccard")
+    }
+    return {
+        "hll_estimate": ("hll", None, None, hll.estimate),
+        "kmv_estimate": ("kmv", None, None, kmv.estimate),
+        "mg_total": ("mg", None, None, lambda s: mg.estimates(s)[0]),
+        "mg_error": ("mg", None, None, lambda s: mg.estimates(s)[1]),
+        "cms_point": (
+            "cms", "bigint", keys, lambda s, k: int(cms.point_estimates(s, np.array([k]))[0])
+        ),
+        "mg_estimate": (
+            "mg", "bigint", keys, lambda s, k: int(mg.lookup(mg.estimates(s)[2], np.array([k]))[0])
+        ),
+        "kll_rank": (
+            "kll", "bigint", [2, 0, _BIG], lambda s, v: kll.KllSketch.from_bytes(s).rank(float(v))
+        ),
+        "kll_quantile": ("kll", "double", qs, quantile(kll.KllSketch)),
+        "tdigest_quantile": ("tdigest", "double", qs, quantile(tdigest.TDigest)),
+        "dds_quantile": ("dds", "double", qs, quantile(dds.DDSketch)),
+        "bf_state_contains": (
+            "bloom", "bigint", keys,
+            lambda s, h: bool(bloom.contains_h_in_state(s, np.array([h]))[0]),
+        ),
+        **pair,
+    }
+
+
+def _same(got, want) -> bool:
+    import struct
+
+    if isinstance(want, float):
+        return isinstance(got, float) and struct.pack("<d", got) == struct.pack("<d", want)
+    return type(got) is type(want) and got == want
+
+
+def test_sql_surface_matrix(spark):
+    import pyarrow as pa
+
+    from prefix_filter_spark import functions
+
+    register_sketch_sql(spark)
+    udfs = {name: functions._state_udf(*row) for name, row in functions._sketch_sql_table().items()}
+    udfs["bf_state_contains"] = functions.register_state_contains(spark)
+    arrow = {
+        "binary": pa.binary(), "bigint": pa.int64(), "double": pa.float64(), "boolean": pa.bool_()
+    }
+    states = _matrix_states()
+    specs = _matrix_specs()
+    assert set(specs) == set(udfs)
+    for name, (kind, arg_type, args, fn) in specs.items():
+        a, b = states[kind]
+        if arg_type == "binary":
+            args = [b, a, b]
+        x = args or [None] * 3
+        # two states, NULL state, NULL argument, big argument, first state again
+        rows = [(a, x[0]), (b, x[1]), (None, x[0]), (a, None), (b, x[2]), (a, x[1])]
+        df = spark.createDataFrame(
+            [(i, s, v) for i, (s, v) in enumerate(rows)],
+            f"i int, s binary, x {arg_type or 'int'}",
+        ).coalesce(1)
+        call = f"{name}(s, x)" if arg_type else f"{name}(s)"
+        got = dict(df.selectExpr("i", f"{call} r").collect())
+        for i, (s, v) in enumerate(rows):
+            if s is None or (arg_type and v is None):
+                assert got[i] is None, (name, i, got[i])
+            else:
+                want = fn(s, v) if arg_type else fn(s)
+                assert _same(got[i], want), (name, i, got[i], want)
+
+        # an empty batch: no rows through SQL, and straight into the
+        # kernel (Spark need not call a UDF on an empty partition)
+        assert df.where("i < 0").selectExpr(call).collect() == []
+        empty_args = [pa.array([], arrow[arg_type])] if arg_type else []
+        out = udfs[name].func(pa.array([], pa.binary()), *empty_args)
+        assert len(out) == 0 and out.type == arrow[udfs[name].returnType.simpleString()]
