@@ -118,19 +118,6 @@ def shard_of(h, num_shards: int) -> np.ndarray:
     return fastrange32(as_u64(h) >> np.uint64(32), num_shards)
 
 
-def bit_length_u64(z) -> np.ndarray:
-    """Vectorized bit_length for uint64 (0 -> 0). ~6 branch-free steps."""
-    z = as_u64(z).copy()
-    out = np.zeros(z.shape, dtype=np.int64)
-    for shift in (32, 16, 8, 4, 2, 1):
-        s = np.uint64(shift)
-        big = z >= (np.uint64(1) << s)
-        out[big] += shift
-        z[big] >>= s
-    out[z > 0] += 1
-    return out
-
-
 # XXH64 primes (Collet, xxHash — public domain; same constants as
 # Spark's catalyst XXH64, which is what F.xxhash64 evaluates).
 _XX_P1 = np.uint64(0x9E3779B185EBCA87)

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import math
 import statistics
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -41,9 +40,7 @@ import numpy as np
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSA"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBHIIqQ")
+FORMAT = base.StateFormat("ams", b"PFSA", (1,), "BHIIqQ")
 _SALT = 0xA3F2
 
 
@@ -92,8 +89,8 @@ class AmsAccumulator(base.Accumulator):
 
     def to_bytes(self) -> bytes:
         return (
-            _HDR.pack(
-                _MAGIC, _VERSION, self.cfg.depth, 0, self.cfg.width, 0,
+            FORMAT.pack(
+                1, self.cfg.depth, 0, self.cfg.width, 0,
                 self.total, self.cfg.seed & 0xFFFFFFFFFFFFFFFF,
             )
             + self.counters.tobytes()
@@ -101,10 +98,10 @@ class AmsAccumulator(base.Accumulator):
 
 
 def _parse_state(state: bytes):
-    magic, version, d, _, w, _, total, seed = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad ams state")
-    counters = np.frombuffer(state, dtype=np.int64, offset=_HDR.size).reshape(d, w)
+    r = FORMAT.open(state)
+    d, _, w, _, total, seed = r.fields
+    counters = r.array(np.int64, d * w).reshape(d, w)
+    r.end()
     return d, w, total, seed, counters
 
 
@@ -115,7 +112,7 @@ def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
         raise ValueError("cannot merge AMS with different dims/seed")
     total = sum(p[2] for p in parsed)
     counters = np.sum([p[4] for p in parsed], axis=0)
-    return _HDR.pack(_MAGIC, _VERSION, d, 0, w, 0, total, seed) + counters.tobytes()
+    return FORMAT.pack(1, d, 0, w, 0, total, seed) + counters.tobytes()
 
 
 def f2_estimate(state: bytes) -> int:

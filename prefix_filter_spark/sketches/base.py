@@ -21,6 +21,7 @@ from its key batch instead of 25M single-key Add() calls.
 from __future__ import annotations
 
 import functools
+import struct
 import time
 from dataclasses import dataclass
 from typing import Callable, Iterator
@@ -50,6 +51,87 @@ _SHARD_ARROW = pa.schema(
         ("build_ns", pa.int64()),
     ]
 )
+
+# every registered StateFormat by its magic
+STATE_FORMATS: dict = {}
+
+
+class StateFormat:
+    """One sketch kind's serialized state layout: magic (4 bytes) | u8
+    version | ``fields`` (a little-endian struct format) | body. Each
+    sketch module declares one as ``FORMAT``, writes its header with
+    ``pack`` and reads every state through ``open``, so the layout and
+    its checks live here once. Magics are unique across kinds (checked
+    at import), which lets ``open`` name the kind of a foreign state."""
+
+    __slots__ = ("kind", "magic", "versions", "header")
+
+    def __init__(self, kind: str, magic: bytes, versions: tuple, fields: str = ""):
+        if magic in STATE_FORMATS:
+            raise ValueError(f"{kind} state magic {magic!r} is {STATE_FORMATS[magic].kind}'s")
+        self.kind, self.magic, self.versions = kind, magic, versions
+        self.header = struct.Struct("<4sB" + fields)
+        STATE_FORMATS[magic] = self
+
+    def pack(self, version: int, *fields) -> bytes:
+        return self.header.pack(self.magic, version, *fields)
+
+    def open(self, state) -> "StateReader":
+        """Check the header and return the reader at the body. A state
+        too short for the header, of another magic, or of a version
+        outside ``versions`` raises ``ValueError``."""
+        hdr = self.header
+        if state[:4] != self.magic:
+            other = STATE_FORMATS.get(bytes(state[:4]))
+            got = f"a state of kind {other.kind}" if other else "bytes of no known kind"
+            raise ValueError(f"bad {self.kind} state: got {got}")
+        if len(state) < hdr.size:
+            raise ValueError(f"bad {self.kind} state: {len(state)} bytes, shorter than its header")
+        _, version, *fields = hdr.unpack_from(state)
+        if version not in self.versions:
+            raise ValueError(f"bad {self.kind} state: version {version} not in {self.versions}")
+        return StateReader(self.kind, state, hdr.size, version, fields)
+
+
+class StateReader:
+    """A cursor over one opened state: ``version``, the header
+    ``fields``, then the body in order. Reads are zero-copy and raise
+    ``ValueError`` past the end; ``end()`` raises on trailing bytes, so
+    a decoder that ends with it takes exactly what its header says."""
+
+    __slots__ = ("kind", "state", "pos", "version", "fields")
+
+    def __init__(self, kind: str, state, pos: int, version: int, fields: list):
+        self.kind, self.state, self.pos = kind, state, pos
+        self.version, self.fields = version, fields
+
+    def array(self, dtype, count) -> np.ndarray:
+        dtype, start = np.dtype(dtype), self.pos
+        count = int(count)
+        self.pos += dtype.itemsize * count
+        if count < 0 or self.pos > len(self.state):
+            raise ValueError(
+                f"bad {self.kind} state: {len(self.state)} bytes, the header "
+                f"describes at least {self.pos}"
+            )
+        return np.frombuffer(self.state, dtype, count, start)
+
+    def take(self, n) -> bytes:
+        """The next ``n`` raw bytes (a nested state)."""
+        return self.array(np.uint8, n).tobytes()
+
+    def rest(self, dtype) -> np.ndarray:
+        n, extra = divmod(len(self.state) - self.pos, np.dtype(dtype).itemsize)
+        if extra:
+            raise ValueError(f"bad {self.kind} state: body is not whole {np.dtype(dtype)} values")
+        return self.array(dtype, n)
+
+    def end(self) -> None:
+        if self.pos != len(self.state):
+            raise ValueError(
+                f"bad {self.kind} state: {len(self.state) - self.pos} trailing bytes"
+            )
+
 
 # state_fn(shard_id, unique_sorted_u64_hashes) -> bytes
 # (with value_col: state_fn(shard_id, raw_u64_hashes, values) -> bytes)

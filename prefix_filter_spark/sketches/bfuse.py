@@ -27,12 +27,12 @@ State layout (little-endian):
     magic 'PFSF' | u8 version | u8 fp_bits | u8 attempt | u8 pad
     | u32 segment_length | u32 num_segments | u64 seed
     | u32 num_shards | fingerprint array (u8 / u16)
+    [(num_segments + 2) * segment_length]
 """
 
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -41,9 +41,7 @@ from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches.xor import _peel
 
-_MAGIC = b"PFSF"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBBBIIQI")
+FORMAT = base.StateFormat("bfuse", b"PFSF", (1,), "BBBIIQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _MAX_ATTEMPTS = 128
 
@@ -131,8 +129,8 @@ def build_state(cfg: BFuseConfig, shard_id: int, hashes_u64: np.ndarray) -> byte
                 f"(n={len(hashes_u64)}, slots={slots})"
             )
     return (
-        _HDR.pack(
-            _MAGIC, _VERSION, cfg.fingerprint_bits, attempt, 0,
+        FORMAT.pack(
+            1, cfg.fingerprint_bits, attempt, 0,
             seg_len, num_seg, cfg.seed & _SEED_MASK, cfg.num_shards,
         )
         + fingers.tobytes()
@@ -140,20 +138,16 @@ def build_state(cfg: BFuseConfig, shard_id: int, hashes_u64: np.ndarray) -> byte
 
 
 def _parse_state(state: bytes):
-    magic, version, fp_bits, attempt, _, seg_len, num_seg, seed, ns = (
-        _HDR.unpack_from(state, 0)
-    )
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad bfuse state header")
+    r = FORMAT.open(state)
+    fp_bits, attempt, _, seg_len, num_seg, seed, ns = r.fields
     dtype = np.uint16 if fp_bits == 16 else np.uint8
-    fingers = np.frombuffer(state, dtype=dtype, offset=_HDR.size)
+    fingers = r.array(dtype, (num_seg + 2) * seg_len)
+    r.end()
     return fp_bits, attempt, seg_len, num_seg, seed, ns, fingers
 
 
 def check_state(cfg: BFuseConfig, state: bytes) -> None:
-    magic, version, fp_bits, _a, _p, _sl, _ns_, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad bfuse state header")
+    fp_bits, _, _, _, seed, ns, _ = _parse_state(state)
     if (
         fp_bits != cfg.fingerprint_bits
         or seed != (cfg.seed & _SEED_MASK)

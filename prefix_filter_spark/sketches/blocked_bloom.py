@@ -17,13 +17,12 @@ per op instead of k scattered lines -> much faster probes, ~2x higher
 FPR at the same bits/key (block-local collisions).
 
 State: 'PFBB' | u8 ver | u8 log2(block_bytes) | u16 pad | u64 num_blocks
-       | blocks (num_blocks * block_bytes).
+       | u64 seed | u32 num_shards | blocks (num_blocks * block_bytes).
 """
 
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 from functools import reduce
 
@@ -32,11 +31,9 @@ import numpy as np
 from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFBB"
-_VERSION = 2
-# magic | ver | log2(block_bytes) | pad | num_blocks u64 | seed u64
-# | num_shards u32 — seed/shard count serialized so mismatches fail loud
-_HDR = struct.Struct("<4sBBHQQI")
+# log2(block_bytes) | pad | num_blocks u64 | seed u64 | num_shards u32
+# — seed/shard count serialized so mismatches fail loud
+FORMAT = base.StateFormat("blocked-bloom", b"PFBB", (2,), "BHQQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 
 # the reference's 8 odd multiply constants (public, from the SIMD
@@ -119,34 +116,23 @@ def build_state(cfg: BlockedBloomConfig, shard_id: int, hashes_u64: np.ndarray) 
         np.bitwise_or.at(
             lanes_arr, lane_idx.ravel(), (np.uint32(1) << bitpos.ravel())
         )
-    return (
-        _HDR.pack(
-            _MAGIC,
-            _VERSION,
-            cfg.block_bytes.bit_length() - 1,
-            0,
-            nblocks,
-            cfg.seed & _SEED_MASK,
-            cfg.num_shards,
-        )
-        + lanes_arr.tobytes()
-    )
+    fields = (cfg.block_bytes.bit_length() - 1, 0, nblocks, cfg.seed & _SEED_MASK, cfg.num_shards)
+    return FORMAT.pack(2, *fields) + lanes_arr.tobytes()
 
 
-def _parse_state(state: bytes):
-    magic, version, log2_bb, _, nblocks, _seed, _ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad blocked-bloom state")
-    block_bytes = 1 << log2_bb
-    lanes = np.frombuffer(state, dtype=np.uint32, offset=_HDR.size)
-    return block_bytes, nblocks, lanes
+def _open(state: bytes) -> tuple[list, np.ndarray]:
+    """The header fields (log2 block bytes, pad, num_blocks, seed,
+    num_shards) and the u32 lanes of a whole state."""
+    r = FORMAT.open(state)
+    lanes = r.array(np.uint32, r.fields[2] << r.fields[0] >> 2)
+    r.end()
+    return r.fields, lanes
 
 
-def check_state(cfg: BlockedBloomConfig, state: bytes) -> None:
-    """Header-only state/config consistency check (probe boundary)."""
-    magic, version, log2_bb, _, nblocks, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad blocked-bloom state")
+def check_state(cfg: BlockedBloomConfig, state: bytes) -> np.ndarray:
+    """State/config consistency check (probe boundary); returns the
+    state's lanes."""
+    (log2_bb, _, nblocks, seed, ns), lanes = _open(state)
     if (
         (1 << log2_bb) != cfg.block_bytes
         or nblocks != cfg.num_blocks_per_shard
@@ -160,11 +146,11 @@ def check_state(cfg: BlockedBloomConfig, state: bytes) -> None:
             f"nblocks={cfg.num_blocks_per_shard}, "
             f"seed={cfg.seed & _SEED_MASK}, num_shards={cfg.num_shards})"
         )
+    return lanes
 
 
 def _contains_in_state(cfg: BlockedBloomConfig, state: bytes, g: np.ndarray) -> np.ndarray:
-    check_state(cfg, state)  # a mismatch here is silent false negatives
-    _, nblocks, lanes_arr = _parse_state(state)
+    lanes_arr = check_state(cfg, state)  # a mismatch here is silent false negatives
     if len(g) == 0:
         return np.zeros(0, dtype=bool)
     block, lanes, bitpos = _block_and_masks(cfg, g)
@@ -177,12 +163,12 @@ def _contains_in_state(cfg: BlockedBloomConfig, state: bytes, g: np.ndarray) -> 
 def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     """OR-merge; the full header (incl. seed + shard count) must agree,
     so the family merge's ``cfg`` and ``shard_id`` are not needed."""
-    hdr = states[0][: _HDR.size]
-    if any(s[: _HDR.size] != hdr for s in states[1:]):
+    parsed = [_open(s) for s in states]
+    fields = parsed[0][0]
+    if any(f != fields for f, _ in parsed[1:]):
         raise ValueError("config mismatch")
-    parsed = [_parse_state(s) for s in states]
-    merged = reduce(np.bitwise_or, (p[2] for p in parsed[1:]), parsed[0][2])
-    return hdr + merged.tobytes()
+    merged = reduce(np.bitwise_or, (lanes for _, lanes in parsed))
+    return FORMAT.pack(2, *fields) + merged.tobytes()
 
 
 def probe_state(

@@ -14,13 +14,13 @@ bit-identical to a single-pass build, which is the north rule's merge
 associativity requirement.
 
 State layout (little-endian):
-    magic 'PFSB' | u8 version | u8 k | u16 pad | u64 m_bits | bit array
+    magic 'PFSB' | u8 version | u8 k | u16 pad | u64 m_bits | u64 seed
+    | u32 num_shards | bit array u8[m_bits / 8]
 """
 
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 from functools import reduce
 
@@ -29,12 +29,10 @@ import numpy as np
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSB"
-_VERSION = 2
-# magic | ver | k | pad | m_bits u64 | seed u64 | num_shards u32 — seed
-# and shard count are serialized so probe/merge boundaries can reject a
+# k | pad | m_bits u64 | seed u64 | num_shards u32 — seed and shard
+# count are serialized so probe/merge boundaries can reject a
 # state/config mismatch loudly (a wrong seed is silent false negatives)
-_HDR = struct.Struct("<4sBBHQQI")
+FORMAT = base.StateFormat("bloom", b"PFSB", (2,), "BHQQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 
 
@@ -96,28 +94,22 @@ def build_state(cfg: BloomConfig, shard_id: int, hashes_u64: np.ndarray) -> byte
         pos = _probe_positions(g, cfg.k, m)
         bits[pos.ravel()] = True
     packed = np.packbits(bits, bitorder="little")
-    return (
-        _HDR.pack(
-            _MAGIC, _VERSION, cfg.k, 0, m, cfg.seed & _SEED_MASK, cfg.num_shards
-        )
-        + packed.tobytes()
-    )
+    return FORMAT.pack(2, cfg.k, 0, m, cfg.seed & _SEED_MASK, cfg.num_shards) + packed.tobytes()
 
 
-def _parse_state(state: bytes) -> tuple[int, int, np.ndarray]:
-    magic, version, k, _, m, _seed, _ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad bloom state header")
-    arr = np.frombuffer(state, dtype=np.uint8, offset=_HDR.size)
-    return k, m, arr
+def _open(state: bytes) -> tuple[list, np.ndarray]:
+    """The header fields (k, pad, m_bits, seed, num_shards) and the
+    packed bit array of a whole state."""
+    r = FORMAT.open(state)
+    bits = r.array(np.uint8, -(-r.fields[2] // 8))
+    r.end()
+    return r.fields, bits
 
 
 def check_state(cfg: BloomConfig, state: bytes) -> None:
     """Reject a state/config mismatch before probing mis-derives bit
-    positions (silent false negatives) — header-only, no body parse."""
-    magic, version, k, _, m, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad bloom state header")
+    positions (silent false negatives)."""
+    k, _, m, seed, ns = _open(state)[0]
     if (
         k != cfg.k
         or m != cfg.m_bits_per_shard
@@ -131,8 +123,9 @@ def check_state(cfg: BloomConfig, state: bytes) -> None:
         )
 
 
-def _contains_in_state(state: bytes, g: np.ndarray) -> np.ndarray:
-    k, m, packed = _parse_state(state)
+def _contains(fields: list, packed: np.ndarray, g: np.ndarray) -> np.ndarray:
+    """Membership of the remixed hashes ``g`` in an ``_open``ed state."""
+    k, _, m, _, _ = fields
     if len(g) == 0:
         return np.zeros(0, dtype=bool)
     pos = _probe_positions(g, k, m)
@@ -144,14 +137,14 @@ def _contains_in_state(state: bytes, g: np.ndarray) -> np.ndarray:
 
 def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
     """OR-merge same-shard partials (bloom.hpp AddAll over subsets).
-    The full header (incl. seed + shard count) must agree byte-for-byte,
-    so the family merge's ``cfg`` and ``shard_id`` are not needed."""
-    hdr = states[0][: _HDR.size]
-    if any(s[: _HDR.size] != hdr for s in states[1:]):
+    The full header (incl. seed + shard count) must agree, so the
+    family merge's ``cfg`` and ``shard_id`` are not needed."""
+    parsed = [_open(s) for s in states]
+    fields = parsed[0][0]
+    if any(f != fields for f, _ in parsed[1:]):
         raise ValueError("cannot merge bloom states with different configs")
-    parsed = [_parse_state(s) for s in states]
-    merged = reduce(np.bitwise_or, (p[2] for p in parsed[1:]), parsed[0][2])
-    return hdr + merged.tobytes()
+    merged = reduce(np.bitwise_or, (bits for _, bits in parsed))
+    return FORMAT.pack(2, *fields) + merged.tobytes()
 
 
 def prepare_state(cfg: BloomConfig, state: bytes) -> bytes:
@@ -162,7 +155,7 @@ def prepare_state(cfg: BloomConfig, state: bytes) -> bytes:
 def probe_state(
     cfg: BloomConfig, state: bytes, shard_id: int, h_u64: np.ndarray
 ) -> np.ndarray:
-    return _contains_in_state(state, seed_mix(h_u64, cfg.seed))
+    return _contains(*_open(state), seed_mix(h_u64, cfg.seed))
 
 
 def contains_h_in_state(state: bytes, h) -> np.ndarray:
@@ -170,8 +163,8 @@ def contains_h_in_state(state: bytes, h) -> np.ndarray:
     seed from the state header — the state-COLUMN path (SQL UDF over a
     table of states, e.g. the per-file index), where no driver handle
     exists to carry the config."""
-    _magic, _ver, _k, _, _m, seed, _ns = _HDR.unpack_from(state, 0)
-    return _contains_in_state(state, seed_mix(as_u64(np.asarray(h)), seed))
+    fields, bits = _open(state)
+    return _contains(fields, bits, seed_mix(as_u64(np.asarray(h)), fields[3]))
 
 
 FAMILY = base.FilterFamily(

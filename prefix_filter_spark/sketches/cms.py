@@ -29,7 +29,6 @@ same a + j*b scheme as the reference Bloom probes (bloom.hpp:140-154).
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 from typing import NamedTuple
 
@@ -38,8 +37,7 @@ import numpy as np
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSC"
-_HDR = struct.Struct("<4sBBHIIqQ")
+FORMAT = base.StateFormat("cms", b"PFSC", (2, 3), "BHIIqQ")
 _ESCAPE = 0xFFFF  # dense u16 sentinel: the value is in the escape list
 _ESC_REC = np.dtype([("idx", "<u4"), ("val", "<i8")])  # 12 bytes, packed
 
@@ -107,13 +105,13 @@ def _pack(d: int, w: int, total: int, seed: int, counters: np.ndarray) -> bytes:
     esc = np.flatnonzero((flat >= _ESCAPE) | (flat < 0))
     seed &= 0xFFFFFFFFFFFFFFFF
     if 12 * len(esc) >= 6 * d * w or d * w > 0xFFFFFFFF:
-        return _HDR.pack(_MAGIC, 2, d, 0, w, 0, total, seed) + flat.astype("<i8").tobytes()
+        return FORMAT.pack(2, d, 0, w, 0, total, seed) + flat.astype("<i8").tobytes()
     dense = flat.astype("<u2")
     dense[esc] = _ESCAPE
     recs = np.empty(len(esc), dtype=_ESC_REC)
     recs["idx"] = esc
     recs["val"] = flat[esc]
-    return _HDR.pack(_MAGIC, 3, d, 0, w, len(esc), total, seed) + dense.tobytes() + recs.tobytes()
+    return FORMAT.pack(3, d, 0, w, len(esc), total, seed) + dense.tobytes() + recs.tobytes()
 
 
 class CmsState(NamedTuple):
@@ -130,20 +128,16 @@ class CmsState(NamedTuple):
         """Decode a version 2 or 3 state. Any other version, a byte
         length that does not match the header, or a malformed escape
         list raises ``ValueError``."""
-        if len(state) < _HDR.size:
-            raise ValueError("bad cms state: truncated header")
-        magic, version, d, _, w, n_esc, total, seed = _HDR.unpack_from(state, 0)
+        r = FORMAT.open(state)
+        d, _, w, n_esc, total, seed = r.fields
         n = d * w
-        if magic != _MAGIC or version not in (2, 3) or (version == 2 and n_esc):
-            raise ValueError("bad cms state")
-        want = _HDR.size + (8 * n if version == 2 else 2 * n + _ESC_REC.itemsize * n_esc)
-        if len(state) != want:
-            raise ValueError(f"bad cms state: {len(state)} bytes, header says {want}")
-        if version == 2:
-            counters = np.frombuffer(state, dtype="<i8", offset=_HDR.size)
+        if r.version == 2:
+            if n_esc:
+                raise ValueError("bad cms state: version 2 with escapes")
+            counters = r.array("<i8", n)
         else:
-            dense = np.frombuffer(state, dtype="<u2", count=n, offset=_HDR.size)
-            recs = np.frombuffer(state, dtype=_ESC_REC, offset=_HDR.size + 2 * n)
+            dense = r.array("<u2", n)
+            recs = r.array(_ESC_REC, n_esc)
             idx = recs["idx"].astype(np.int64)
             if (
                 np.any(idx >= n)
@@ -154,6 +148,7 @@ class CmsState(NamedTuple):
                 raise ValueError("bad cms state: escape list does not match the counters")
             counters = dense.astype(np.int64)
             counters[idx] = recs["val"]
+        r.end()
         return cls(d, w, total, seed, counters.reshape(d, w))
 
     def point(self, keys: np.ndarray) -> np.ndarray:

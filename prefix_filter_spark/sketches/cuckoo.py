@@ -70,7 +70,6 @@ and plain states in one merge.
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -84,9 +83,7 @@ from prefix_filter_spark.hashing import (
 )
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFCK"
-_VERSION = 2
-_HDR = struct.Struct("<4sBBHQQQI")
+FORMAT = base.StateFormat("cuckoo", b"PFCK", (2, 3, 4), "BHQQQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _ALT_FLAG = np.uint16(0x8000)  # bit 15: tag stored in its alternate bucket
 # MurmurHash3 finalizer constant the reference derives r from
@@ -132,7 +129,7 @@ class CuckooConfig:
     def _version(self) -> int:
         if self.semisort:
             return 3
-        return 4 if self.fp_bits == 16 else _VERSION
+        return 4 if self.fp_bits == 16 else 2
 
     @property
     def flagless(self) -> bool:
@@ -261,8 +258,7 @@ def _place(cfg: CuckooConfig, b1: np.ndarray, tag: np.ndarray, num_buckets: int)
 
 
 def _pack_header(cfg: CuckooConfig, nb: int, n_overflow: int) -> bytes:
-    return _HDR.pack(
-        _MAGIC,
+    return FORMAT.pack(
         cfg._version,
         cfg.slots_per_bucket,
         cfg.fp_bits,
@@ -353,21 +349,16 @@ def build_state(cfg: CuckooConfig, shard_id: int, hashes_u64: np.ndarray) -> byt
 
 
 def _parse_state(state: bytes):
-    magic, version, slots, fp_bits, nb, n_ov, seed, num_shards = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version not in (2, 3, 4):
-        raise ValueError("bad cuckoo state")
-    off = _HDR.size
+    r = FORMAT.open(state)
+    slots, fp_bits, nb, n_ov, seed, num_shards = r.fields
+    version = r.version
     if version == 3:
         nbytes = (12 + 4 * (fp_bits - 4) + 7) // 8
-        raw = np.frombuffer(state, dtype=np.uint8, count=nb * nbytes, offset=off)
-        table = _unpack_table_ss(raw, nb, fp_bits)
-        off += nb * nbytes
+        table = _unpack_table_ss(r.array(np.uint8, nb * nbytes), nb, fp_bits)
     else:
-        table = np.frombuffer(
-            state, dtype=np.uint16, count=nb * slots, offset=off
-        ).reshape(nb, slots)
-        off += nb * slots * 2
-    overflow = np.frombuffer(state, dtype=np.uint64, count=n_ov, offset=off)
+        table = r.array(np.uint16, nb * slots).reshape(nb, slots)
+    overflow = r.array(np.uint64, n_ov)
+    r.end()
     return slots, fp_bits, nb, table, overflow, seed, num_shards, version
 
 
@@ -393,11 +384,13 @@ def _pairs_of_state(cfg: CuckooConfig, state: bytes) -> np.ndarray:
     return np.concatenate([packed, overflow])
 
 
-def _check_geometry(cfg: CuckooConfig, state: bytes) -> None:
+def _check_geometry(cfg: CuckooConfig, state: bytes):
     """Loudly reject a state built under a different geometry: decoding
     bucket indices from one nb and rebuilding into another is either an
-    IndexError or — worse — silent false negatives."""
-    slots, fp_bits, nb, _, _, seed, num_shards, version = _parse_state(state)
+    IndexError or — worse — silent false negatives. Returns the
+    ``_parse_state`` tuple."""
+    parsed = _parse_state(state)
+    slots, fp_bits, nb, _, _, seed, num_shards, version = parsed
     if (
         nb != cfg.num_buckets_per_shard
         or slots != cfg.slots_per_bucket
@@ -414,6 +407,7 @@ def _check_geometry(cfg: CuckooConfig, state: bytes) -> None:
             f"seed={cfg.seed & _SEED_MASK}, num_shards={cfg.num_shards}, "
             f"ver={cfg._version})"
         )
+    return parsed
 
 
 def _encode_table(cfg: CuckooConfig, table: np.ndarray) -> bytes:
@@ -440,8 +434,8 @@ def merge_states(states: list[bytes], cfg: CuckooConfig, shard_id: int = 0) -> b
 
 
 def _contains_in_state(cfg: CuckooConfig, state: bytes, g_hashes: np.ndarray) -> np.ndarray:
-    _check_geometry(cfg, state)  # a mismatch here is silent false negatives
-    slots, fp_bits, nb, table, overflow, _seed, _ns, version = _parse_state(state)
+    # a mismatch here is silent false negatives
+    _, fp_bits, nb, table, overflow, _, _, version = _check_geometry(cfg, state)
     b1, tag = _derive(cfg, g_hashes, nb)
     b2 = _alt_bucket(b1, tag, nb)
     plain = tag.astype(np.uint16)

@@ -39,16 +39,13 @@ State ('PFSD' | u8 ver | u8 pad ×3 | f64 alpha | u32 max_bins | u64 n
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 
 import numpy as np
 
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSD"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBBBdIQQII")
+FORMAT = base.StateFormat("dds", b"PFSD", (1,), "BBBdIQQII")
 
 
 @dataclass(frozen=True)
@@ -171,8 +168,8 @@ class DDSketch(base.Accumulator):
     # -- serde ---------------------------------------------------------
     def to_bytes(self) -> bytes:
         return (
-            _HDR.pack(
-                _MAGIC, _VERSION, 0, 0, 0,
+            FORMAT.pack(
+                1, 0, 0, 0,
                 self.cfg.alpha, self.cfg.max_bins,
                 self.n, self.zero_count,
                 len(self.pos_idx), len(self.neg_idx),
@@ -185,18 +182,13 @@ class DDSketch(base.Accumulator):
 
     @classmethod
     def from_bytes(cls, state: bytes) -> "DDSketch":
-        magic, ver, _, _, _, alpha, max_bins, n, zc, np_, nn = _HDR.unpack_from(state, 0)
-        if magic != _MAGIC or ver != _VERSION:
-            raise ValueError("bad dds state")
+        r = FORMAT.open(state)
+        _, _, _, alpha, max_bins, n, zc, np_, nn = r.fields
         sk = cls(DDSketchConfig(alpha=alpha, max_bins=max_bins))
-        off = _HDR.size
         for name, ln in (("pos", np_), ("neg", nn)):
-            idx = np.frombuffer(state, dtype=np.int64, count=ln, offset=off).copy()
-            off += 8 * ln
-            cnt = np.frombuffer(state, dtype=np.int64, count=ln, offset=off).copy()
-            off += 8 * ln
-            setattr(sk, f"{name}_idx", idx)
-            setattr(sk, f"{name}_cnt", cnt)
+            setattr(sk, f"{name}_idx", r.array(np.int64, ln).copy())
+            setattr(sk, f"{name}_cnt", r.array(np.int64, ln).copy())
+        r.end()
         sk.n = n
         sk.zero_count = zc
         return sk

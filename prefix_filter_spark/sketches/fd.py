@@ -42,18 +42,15 @@ training-pipeline operators (similarity.py, dedup.py semdedup) consume.
 
 from __future__ import annotations
 
-import struct
 from dataclasses import dataclass
 
 import numpy as np
 
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFFD"
-_VERSION = 1
-# magic | ver u8 | pad u8 | ell u16 | dim u32 | n_rows u64 | fro_sq f64
-# | delta f64 | k u32 (stored rows) | pad u32 | then B[k, dim] float64.
-_HDR = struct.Struct("<4sBBHIQddII")
+# pad u8 | ell u16 | dim u32 | n_rows u64 | fro_sq f64 | delta f64
+# | k u32 (stored rows) | pad u32 | then B[k, dim] float64.
+FORMAT = base.StateFormat("fd", b"PFFD", (1,), "BHIQddII")
 
 
 @dataclass(frozen=True)
@@ -125,9 +122,8 @@ class FdAccumulator(base.Accumulator):
             self._shrink()
         body = np.ascontiguousarray(self.buf[: self.used])
         return (
-            _HDR.pack(
-                _MAGIC,
-                _VERSION,
+            FORMAT.pack(
+                1,
                 0,
                 self.cfg.ell,
                 self.cfg.dim,
@@ -142,10 +138,10 @@ class FdAccumulator(base.Accumulator):
 
 
 def _parse_state(state: bytes):
-    magic, ver, _, ell, dim, n, fro, delta, k, _ = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or ver != _VERSION:
-        raise ValueError("bad fd state")
-    b = np.frombuffer(state, dtype=np.float64, offset=_HDR.size).reshape(k, dim)
+    r = FORMAT.open(state)
+    _, ell, dim, n, fro, delta, k, _ = r.fields
+    b = r.array(np.float64, k * dim).reshape(k, dim)
+    r.end()
     return ell, dim, n, fro, delta, b
 
 

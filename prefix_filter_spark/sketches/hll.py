@@ -4,7 +4,8 @@ North-rule extension (SURVEY.md §2.4) — no reference implementation;
 semantics per Flajolet et al. 2007 / HLL++ (Heule et al. 2013), the same
 family as Spark's built-in ``approx_count_distinct`` (our oracle).
 
-State: magic 'PFSH' | u8 ver | u8 p | u16 pad | registers u8[2^p].
+State: magic 'PFSH' | u8 ver | u8 p | u16 format | u64 seed | registers
+u8[2^p] (dense) or sorted u32 (idx << 8 | rank) entries (sparse).
 Merge = elementwise max (associative, commutative, idempotent).
 Error: +-1.04/sqrt(m) relative std at large n; linear counting below.
 """
@@ -12,7 +13,6 @@ Error: +-1.04/sqrt(m) relative std at large n; linear counting below.
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 from functools import reduce
 
@@ -22,12 +22,10 @@ from pyspark.sql import DataFrame
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSH"
-_VERSION = 2
-# magic | ver | p | pad | seed u64 — the seed is serialized so merging
-# registers produced under a different hash mix fails loudly instead of
-# silently corrupting the estimate
-_HDR = struct.Struct("<4sBBHQ")
+# p | format | seed u64 — the seed is serialized so merging registers
+# produced under a different hash mix fails loudly instead of silently
+# corrupting the estimate
+FORMAT = base.StateFormat("hll", b"PFSH", (2,), "BHQ")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 
 
@@ -86,8 +84,8 @@ class HllAccumulator(base.Accumulator):
         )
 
 
-# pad field doubles as the format tag: 0 = dense register array,
-# 1 = sparse sorted u32 entries (idx << 8 | rank)
+# the format field: 0 = dense register array, 1 = sparse sorted u32
+# entries (idx << 8 | rank)
 _FMT_DENSE, _FMT_SPARSE = 0, 1
 
 
@@ -97,46 +95,44 @@ def _serialize(p: int, seed: int, regs: np.ndarray, *, sparse: bool) -> bytes:
     if sparse and nnz < m // 4:
         idx = np.flatnonzero(regs).astype(np.uint32)
         entries = (idx << np.uint32(8)) | regs[idx].astype(np.uint32)
-        return (
-            _HDR.pack(_MAGIC, _VERSION, p, _FMT_SPARSE, seed & _SEED_MASK)
-            + entries.tobytes()
-        )
-    return _HDR.pack(_MAGIC, _VERSION, p, _FMT_DENSE, seed & _SEED_MASK) + regs.tobytes()
+        return FORMAT.pack(2, p, _FMT_SPARSE, seed & _SEED_MASK) + entries.tobytes()
+    return FORMAT.pack(2, p, _FMT_DENSE, seed & _SEED_MASK) + regs.tobytes()
 
 
-def _parse_state(state: bytes) -> tuple[int, np.ndarray]:
-    magic, version, p, fmt, _seed = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad hll state")
-    if fmt == _FMT_SPARSE:
-        entries = np.frombuffer(state, dtype=np.uint32, offset=_HDR.size)
+def _parse_state(state: bytes) -> tuple[list, np.ndarray]:
+    """The header fields (p, format, seed) and the dense registers."""
+    r = FORMAT.open(state)
+    p, fmt, _ = r.fields
+    if fmt == _FMT_DENSE:
+        regs = r.array(np.uint8, 1 << p)
+    elif fmt == _FMT_SPARSE:
+        entries = r.rest(np.uint32)
+        idx = (entries >> np.uint32(8)).astype(np.int64)
+        if np.any(idx >= 1 << p):
+            raise ValueError(f"bad hll state: sparse entry past register {(1 << p) - 1}")
         regs = np.zeros(1 << p, dtype=np.uint8)
-        regs[(entries >> np.uint32(8)).astype(np.int64)] = (
-            entries & np.uint32(0xFF)
-        ).astype(np.uint8)
-        return p, regs
-    return p, np.frombuffer(state, dtype=np.uint8, offset=_HDR.size)
+        regs[idx] = (entries & np.uint32(0xFF)).astype(np.uint8)
+    else:
+        raise ValueError(f"bad hll state: format {fmt} is neither dense nor sparse")
+    r.end()
+    return r.fields, regs
 
 
 def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
-    metas = [_HDR.unpack_from(s, 0) for s in states]
-    if any(
-        (m[0], m[1], m[2], m[4]) != (metas[0][0], metas[0][1], metas[0][2], metas[0][4])
-        for m in metas[1:]
-    ):
-        raise ValueError("cannot merge HLLs with different p or seed")
     parsed = [_parse_state(s) for s in states]
+    p, _, seed = parsed[0][0]
+    if any((f[0], f[2]) != (p, seed) for f, _ in parsed[1:]):
+        raise ValueError("cannot merge HLLs with different p or seed")
     regs = reduce(np.maximum, (r for _, r in parsed))
-    p, seed = metas[0][2], metas[0][4]
     # result stays sparse only if every input chose sparse (keeps the
     # dense default's bytes unchanged and the format monotone)
-    all_sparse = all(m[3] == _FMT_SPARSE for m in metas)
+    all_sparse = all(f[1] == _FMT_SPARSE for f, _ in parsed)
     return _serialize(p, seed, regs, sparse=all_sparse)
 
 
 def estimate(state: bytes) -> float:
     """Raw HLL estimator with linear-counting small-range correction."""
-    p, regs = _parse_state(state)
+    (p, _, _), regs = _parse_state(state)
     m = 1 << p
     alpha = 0.7213 / (1.0 + 1.079 / m)
     est = alpha * m * m / np.power(2.0, -regs.astype(np.float64)).sum()

@@ -25,7 +25,6 @@ State: 'PFSK' | u8 ver | u8 pad | u16 k | u32 n_levels | u64 n_total
 
 from __future__ import annotations
 
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -33,9 +32,7 @@ import numpy as np
 from prefix_filter_spark.hashing import splitmix64
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSK"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBHIQQ")
+FORMAT = base.StateFormat("kll", b"PFSK", (1,), "BHIQQ")
 _C = 2.0 / 3.0
 
 
@@ -144,35 +141,21 @@ class KllSketch(base.Accumulator):
         lens = np.array([len(lv) for lv in self.levels], dtype=np.uint32)
         items = np.concatenate(self.levels) if self.levels else np.empty(0)
         return (
-            _HDR.pack(
-                _MAGIC,
-                _VERSION,
-                0,
-                self.cfg.k,
-                len(self.levels),
-                self.n_total,
-                self.compact_count,
-            )
+            FORMAT.pack(1, 0, self.cfg.k, len(self.levels), self.n_total, self.compact_count)
             + lens.tobytes()
             + items.astype(np.float64).tobytes()
         )
 
     @classmethod
     def from_bytes(cls, state: bytes, cfg: KllConfig | None = None) -> "KllSketch":
-        if len(state) < _HDR.size:
-            raise ValueError("bad kll state: truncated header")
-        magic, version, _, k, n_levels, n_total, ccount = _HDR.unpack_from(state, 0)
-        # a KMV state has the same magic and version, and zero where KLL keeps k
-        if magic != _MAGIC or version != _VERSION or k == 0:
-            raise ValueError("bad kll state")
-        off = _HDR.size + 4 * n_levels
-        if len(state) < off:
-            raise ValueError("bad kll state: truncated level table")
-        lens = np.frombuffer(state, dtype=np.uint32, count=n_levels, offset=_HDR.size)
-        n_items = int(lens.sum(dtype=np.int64))
-        if len(state) != off + 8 * n_items:
-            raise ValueError("bad kll state: byte length does not match the header")
-        items = np.frombuffer(state, dtype=np.float64, count=n_items, offset=off)
+        r = FORMAT.open(state)
+        _, k, n_levels, n_total, ccount = r.fields
+        # (a KMV state written before its own magic reads as k == 0 here)
+        if k == 0:
+            raise ValueError("bad kll state: k=0")
+        lens = r.array(np.uint32, n_levels)
+        items = r.array(np.float64, lens.sum(dtype=np.int64))
+        r.end()
         sk = cls(cfg or KllConfig(k=k))
         sk.levels = []
         pos = 0

@@ -9,7 +9,7 @@ Dasgupta et al. 2016, the DataSketches theta sketch). This is the
 sketch a dedup pipeline reaches for when it needs "how many tokens do
 these two crawls share?" without a distinct-join.
 
-State: magic 'PFSK' | u8 ver | u8 pad | u16 pad | u32 k | seed u64 |
+State: magic 'PFKM' | u8 ver | u8 pad | u16 pad | u32 k | seed u64 |
 sorted u64[min(n_distinct, k)]. Merge = union of value sets, keep the
 k smallest (associative, commutative, idempotent). With fewer than k
 distinct values the sketch is the exact hash set.
@@ -24,7 +24,6 @@ in ``intersection_estimate``).
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -32,9 +31,9 @@ import numpy as np
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSK"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBHIQ")
+# KMV states written before this magic used KLL's 'PFSK' (same layout
+# otherwise); they no longer load
+FORMAT = base.StateFormat("kmv", b"PFKM", (1,), "BHIQ")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _FULL_RANGE = float(2**64)
 
@@ -64,33 +63,33 @@ class KmvAccumulator(base.Accumulator):
         self.values = merged[: self.cfg.k]
 
     def to_bytes(self) -> bytes:
-        return (
-            _HDR.pack(
-                _MAGIC, _VERSION, 0, 0, self.cfg.k, self.cfg.seed & _SEED_MASK
-            )
-            + self.values.tobytes()
-        )
+        return FORMAT.pack(1, 0, 0, self.cfg.k, self.cfg.seed & _SEED_MASK) + self.values.tobytes()
 
 
-def _parse_state(state: bytes) -> tuple[int, int, np.ndarray]:
-    if len(state) < _HDR.size:
-        raise ValueError("bad kmv state: truncated header")
-    magic, version, pad8, pad16, k, seed = _HDR.unpack_from(state, 0)
-    # a KLL state has the same magic and version: its k sits where KMV
-    # writes zero padding
-    n, rem = divmod(len(state) - _HDR.size, 8)
-    if magic != _MAGIC or version != _VERSION or pad8 or pad16 or rem or n > k:
-        raise ValueError("bad kmv state")
-    return k, seed, np.frombuffer(state, dtype=np.uint64, offset=_HDR.size)
+def _parse_state(state: bytes) -> tuple[list, np.ndarray]:
+    """The header fields (pad, pad, k, seed) and the retained values."""
+    try:
+        r = FORMAT.open(state)
+    except ValueError as e:
+        if state[:4] != b"PFSK":
+            raise
+        raise ValueError(
+            f"{e}; a kmv state written before kmv's magic became 'PFKM' "
+            "has the 'PFSK' layout and no longer loads: rebuild it"
+        ) from e
+    vals = r.rest(np.uint64)
+    if len(vals) > r.fields[2]:
+        raise ValueError(f"bad kmv state: {len(vals)} values, more than k={r.fields[2]}")
+    return r.fields, vals
 
 
 def merge_states(states: list[bytes], cfg=None, shard_id: int = 0) -> bytes:
-    hdr = states[0][: _HDR.size]
-    if any(s[: _HDR.size] != hdr for s in states[1:]):
+    parsed = [_parse_state(s) for s in states]
+    fields = parsed[0][0]
+    if any(f != fields for f, _ in parsed[1:]):
         raise ValueError("cannot merge KMV sketches with different k or seed")
-    k, _, _ = _parse_state(states[0])
-    vals = np.unique(np.concatenate([_parse_state(s)[2] for s in states]))
-    return hdr + vals[:k].tobytes()
+    vals = np.unique(np.concatenate([v for _, v in parsed]))
+    return FORMAT.pack(1, *fields) + vals[: fields[2]].tobytes()
 
 
 def _theta_raw(k: int, vals: np.ndarray) -> int:
@@ -107,11 +106,11 @@ def retained_values(state: bytes) -> np.ndarray:
     two sketches' intersection estimate is nonzero iff their retained
     sets share a value, so an inverted index over these arrays finds
     every nonzero pair without the quadratic estimate pass."""
-    return _parse_state(state)[2]
+    return _parse_state(state)[1]
 
 
 def estimate(state: bytes) -> float:
-    k, _, vals = _parse_state(state)
+    (_, _, k, _), vals = _parse_state(state)
     if len(vals) < k:
         return float(len(vals))
     theta = _theta_raw(k, vals) / _FULL_RANGE
@@ -120,8 +119,8 @@ def estimate(state: bytes) -> float:
 
 def _aligned(sa: bytes, sb: bytes) -> tuple[np.ndarray, np.ndarray, float]:
     """Restrict both value sets below the shared (smaller) theta."""
-    ka, seed_a, va = _parse_state(sa)
-    kb, seed_b, vb = _parse_state(sb)
+    (_, _, ka, seed_a), va = _parse_state(sa)
+    (_, _, kb, seed_b), vb = _parse_state(sb)
     if seed_a != seed_b:
         raise ValueError("set expressions need sketches built with one seed")
     t = min(_theta_raw(ka, va), _theta_raw(kb, vb))

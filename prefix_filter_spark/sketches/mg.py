@@ -35,16 +35,13 @@ sorted by token for bit-stable serialization of a given counter map.
 
 from __future__ import annotations
 
-import struct
 from dataclasses import dataclass
 
 import numpy as np
 
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSM"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBHIqqI")
+FORMAT = base.StateFormat("mg", b"PFSM", (1,), "BHIqqI")
 
 
 @dataclass(frozen=True)
@@ -111,7 +108,7 @@ def _serialize(k: int, total: int, err: int, keys: np.ndarray, cnts: np.ndarray)
     cnt_arr = np.asarray(cnts, dtype=np.int64)[order]
     len_arr = np.array([len(b) for b in blobs], dtype=np.uint32)
     return (
-        _HDR.pack(_MAGIC, _VERSION, 0, 0, k, total, err, len(toks))
+        FORMAT.pack(1, 0, 0, k, total, err, len(toks))
         + cnt_arr.tobytes()
         + len_arr.tobytes()
         + b"".join(blobs)
@@ -120,17 +117,15 @@ def _serialize(k: int, total: int, err: int, keys: np.ndarray, cnts: np.ndarray)
 
 def _parse_arrays(state: bytes) -> tuple[int, int, int, np.ndarray, np.ndarray]:
     """(k, total, err, token object array, int64 counts)."""
-    magic, version, _, _, k, total, err, n = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad mg state")
-    off = _HDR.size
-    cnts = np.frombuffer(state, dtype=np.int64, offset=off, count=n)
-    off += 8 * n
-    lens = np.frombuffer(state, dtype=np.uint32, offset=off, count=n)
-    off += 4 * n
-    ends = off + np.cumsum(lens, dtype=np.int64)
+    r = FORMAT.open(state)
+    _, _, k, total, err, n = r.fields
+    cnts = r.array(np.int64, n)
+    lens = r.array(np.uint32, n)
+    ends = np.cumsum(lens, dtype=np.int64)
+    blob = r.take(ends[-1] if n else 0)
+    r.end()
     toks = np.array(
-        [state[e - ln : e].decode("utf-8") for e, ln in zip(ends.tolist(), lens.tolist())],
+        [blob[e - ln : e].decode("utf-8") for e, ln in zip(ends.tolist(), lens.tolist())],
         dtype=object,
     )
     return k, total, err, toks, cnts

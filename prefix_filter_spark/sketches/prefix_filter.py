@@ -23,14 +23,14 @@ expected ~6.8% overflow at that load (wrappers.hpp:548-562 derives
 1.08 * 0.0586 / 0.935 for the TC spare).
 
 State layout (little-endian):
-  'PFSP' | u8 ver | u8 pad | u16 pad | u32 num_pd | u32 spare_bytes_len
-  | headers u64[num_pd] | body u8[num_pd * 25] | spare bloom state
+  'PFSP' | u8 ver | u8 spare_kind | u16 pad | u32 num_pd
+  | u32 spare_bytes_len | u64 seed | u32 num_shards
+  | headers u64[num_pd] | body u8[num_pd * 25] | spare filter state
 """
 
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -44,13 +44,11 @@ from prefix_filter_spark.hashing import (
 )
 from prefix_filter_spark.sketches import base, bloom, pd_kernel
 
-_MAGIC = b"PFSP"
-_VERSION = 2
-# magic | ver | spare_kind (0=bloom, 1=tc) | pad | num_pd u32
-# | spare_len u32 | seed u64 | num_shards u32 — seed, shard count and
-# spare kind are serialized so probe/merge boundaries reject a
-# state/config mismatch loudly (silent false negatives otherwise)
-_HDR = struct.Struct("<4sBBHIIQI")
+# spare_kind (_SPARE_KIND_CODE) | pad | num_pd u32 | spare_len u32
+# | seed u64 | num_shards u32 — seed, shard count and spare kind are
+# serialized so probe/merge boundaries reject a state/config mismatch
+# loudly (silent false negatives otherwise)
+FORMAT = base.StateFormat("prefix-filter", b"PFSP", (2,), "BHIIQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _SPARE_KIND_CODE = {
     "bloom": 0, "tc": 1, "cuckoo": 2, "bbf": 3, "impala512": 4, "xor": 5,
@@ -190,9 +188,8 @@ def build_state(cfg: PrefixFilterConfig, shard_id: int, hashes_u64: np.ndarray) 
 
 
 def _pack_header(cfg: PrefixFilterConfig, num_pd: int, spare_len: int) -> bytes:
-    return _HDR.pack(
-        _MAGIC,
-        _VERSION,
+    return FORMAT.pack(
+        2,
         _SPARE_KIND_CODE[cfg.spare_kind],
         0,
         num_pd,
@@ -202,13 +199,13 @@ def _pack_header(cfg: PrefixFilterConfig, num_pd: int, spare_len: int) -> bytes:
     )
 
 
-def check_state(cfg: PrefixFilterConfig, state: bytes) -> None:
-    """Header-only state/config consistency check. Seed, shard count,
-    PD count and spare kind all change how a probe derives or routes —
-    any mismatch would be silent false negatives."""
-    magic, version, spare_kind, _, num_pd, _sl, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad prefix-filter state header")
+def check_state(cfg: PrefixFilterConfig, state: bytes):
+    """State/config consistency check; returns the ``_parse_state``
+    triple. Seed, shard count, PD count and spare kind all change how a
+    probe derives or routes — any mismatch would be silent false
+    negatives."""
+    r = FORMAT.open(state)
+    spare_kind, _, num_pd, spare_len, seed, ns = r.fields
     if (
         num_pd != cfg.num_pd_per_shard
         or seed != (cfg.seed & _SEED_MASK)
@@ -222,20 +219,20 @@ def check_state(cfg: PrefixFilterConfig, state: bytes) -> None:
             f"seed={cfg.seed & _SEED_MASK}, num_shards={cfg.num_shards}, "
             f"spare_kind={_SPARE_KIND_CODE[cfg.spare_kind]})"
         )
+    return _parse_body(r)
 
 
 def _parse_state(state: bytes):
-    magic, version, _, _, num_pd, spare_len, _seed, _ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad prefix-filter state header")
-    off = _HDR.size
-    headers = np.frombuffer(state, dtype=np.uint64, count=num_pd, offset=off)
-    off += num_pd * 8
-    body = np.frombuffer(
-        state, dtype=np.uint8, count=num_pd * pd_kernel.MAX_CAP, offset=off
-    ).reshape(num_pd, pd_kernel.MAX_CAP)
-    off += num_pd * pd_kernel.MAX_CAP
-    spare = state[off : off + spare_len]
+    """(PD headers, PD bodies, spare state) of a whole state."""
+    return _parse_body(FORMAT.open(state))
+
+
+def _parse_body(r: base.StateReader):
+    num_pd, spare_len = r.fields[2], r.fields[3]
+    headers = r.array(np.uint64, num_pd)
+    body = r.array(np.uint8, num_pd * pd_kernel.MAX_CAP).reshape(num_pd, pd_kernel.MAX_CAP)
+    spare = r.take(spare_len)
+    r.end()
     return headers, body, spare
 
 
@@ -267,8 +264,7 @@ def merge_states(states: list[bytes], cfg: PrefixFilterConfig, shard_id: int) ->
     spares = []
     any_overflow = np.zeros(num_pd, dtype=bool)
     for s in states:
-        check_state(cfg, s)
-        headers, body, spare = _parse_state(s)
+        headers, body, spare = check_state(cfg, s)
         pd_i, qr_i, overflow_i = _items_of_state(headers, body)
         all_pd.append(pd_i)
         all_qr.append(qr_i)
@@ -356,8 +352,7 @@ def prepare_state(cfg: PrefixFilterConfig, state: bytes):
     """Check the header and decode the shard's PD headers once, so
     every Arrow batch probes as matrix ops (amortized select64,
     SURVEY.md §4)."""
-    check_state(cfg, state)
-    headers, body, spare = _parse_state(state)
+    headers, body, spare = check_state(cfg, state)
     counts_incl, overflowed, last_quot = pd_kernel.decode_headers(headers)
     max_qr = pd_kernel.max_qr_of(body, counts_incl, overflowed, last_quot)
     # compact dtypes: decoded tables ride the broadcast after

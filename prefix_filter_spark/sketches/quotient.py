@@ -59,7 +59,6 @@ State layout (little-endian):
 from __future__ import annotations
 
 import functools
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -68,9 +67,7 @@ from pyspark.sql import DataFrame
 from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSQ"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBHQQQI")
+FORMAT = base.StateFormat("quotient", b"PFSQ", (1,), "BHQQQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _SALT_FP = 0x9F0
 _DTYPE = {8: np.uint8, 16: np.uint16}
@@ -174,8 +171,8 @@ def _encode(cfg: QuotientFilterConfig, fps: np.ndarray) -> bytes:
         rend_bits[ends] = True
         rend = np.packbits(rend_bits, bitorder="little")
     return (
-        _HDR.pack(
-            _MAGIC, _VERSION, r, 0,
+        FORMAT.pack(
+            1, r, 0,
             n_q, m, cfg.seed & _SEED_MASK, cfg.num_shards,
         )
         + occ.tobytes()
@@ -185,17 +182,14 @@ def _encode(cfg: QuotientFilterConfig, fps: np.ndarray) -> bytes:
 
 
 def _parse(state: bytes):
-    magic, version, r, _pad, n_q, m, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad quotient filter state header")
-    off = _HDR.size
-    occ_len = (n_q + 7) // 8
-    rend_len = (m + 7) // 8
-    occ = np.frombuffer(state, dtype=np.uint8, count=occ_len, offset=off)
-    off += occ_len
-    rend = np.frombuffer(state, dtype=np.uint8, count=rend_len, offset=off)
-    off += rend_len
-    slots = np.frombuffer(state, dtype=_DTYPE[r], count=m, offset=off)
+    rd = FORMAT.open(state)
+    r, _, n_q, m, seed, ns = rd.fields
+    if r not in _DTYPE:
+        raise ValueError(f"bad quotient state: remainder_bits {r} is not 8 or 16")
+    occ = rd.array(np.uint8, (n_q + 7) // 8)
+    rend = rd.array(np.uint8, (m + 7) // 8)
+    slots = rd.array(_DTYPE[r], m)
+    rd.end()
     return r, n_q, m, seed, ns, occ, rend, slots
 
 
@@ -253,9 +247,7 @@ def _contains_in_state(
 
 
 def check_state(cfg: QuotientFilterConfig, state: bytes) -> None:
-    magic, version, r, _pad, n_q, _m, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad quotient filter state header")
+    r, n_q, _, seed, ns, *_ = _parse(state)
     if (
         r != cfg.remainder_bits
         or n_q != cfg.n_slots

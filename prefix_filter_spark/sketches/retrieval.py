@@ -35,7 +35,6 @@ State layout (little-endian):
 
 from __future__ import annotations
 
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -43,9 +42,7 @@ import numpy as np
 from prefix_filter_spark.sketches import base
 from prefix_filter_spark.sketches.ribbon import _MAX_ATTEMPTS, _W, _derive, _m_for, _solve
 
-_MAGIC = b"PFSV"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBBBQQI")
+FORMAT = base.StateFormat("retrieval", b"PFSV", (1,), "BBBQQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _DTYPE = {8: np.uint8, 16: np.uint16, 32: np.uint32}
 
@@ -114,18 +111,26 @@ def build_state(
                 f"(n={len(hashes_u64)}, m={m}) — epsilon too tight?"
             )
     return (
-        _HDR.pack(
-            _MAGIC, _VERSION, cfg.value_bits, attempt, 0,
+        FORMAT.pack(
+            1, cfg.value_bits, attempt, 0,
             m, cfg.seed & _SEED_MASK, cfg.num_shards,
         )
         + z.tobytes()
     )
 
 
+def _parse_state(state: bytes):
+    r = FORMAT.open(state)
+    vbits, attempt, _, m, seed, ns = r.fields
+    if vbits not in _DTYPE:
+        raise ValueError(f"bad retrieval state: value_bits {vbits} is not 8, 16 or 32")
+    z = r.array(_DTYPE[vbits], m)
+    r.end()
+    return vbits, attempt, m, seed, ns, z
+
+
 def check_state(cfg: RetrievalConfig, state: bytes) -> None:
-    magic, version, vbits, _att, _pad, _m, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad retrieval state header")
+    vbits, _, _, seed, ns, _ = _parse_state(state)
     if (
         vbits != cfg.value_bits
         or seed != (cfg.seed & _SEED_MASK)
@@ -143,12 +148,9 @@ def _lookup_in_state(state: bytes, h_u64: np.ndarray) -> np.ndarray:
     """Vectorized lookup: gather the w-slot window, mask by coefficient
     bits, XOR-reduce — identical probe shape to the ribbon filter, but
     the reduction IS the answer (int64 array)."""
-    magic, version, vbits, attempt, _pad, m, seed, _ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad retrieval state header")
+    _, attempt, m, seed, _, z = _parse_state(state)
     if len(h_u64) == 0:
         return np.zeros(0, dtype=np.int64)
-    z = np.frombuffer(state, dtype=_DTYPE[vbits], offset=_HDR.size)
     start, coeff, _fp = _derive(h_u64, seed, attempt, m, 8)
     idx = start[:, None] + np.arange(_W, dtype=np.int64)[None, :]
     vals = z[idx]

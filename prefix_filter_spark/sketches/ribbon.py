@@ -41,7 +41,6 @@ State layout (little-endian):
 
 from __future__ import annotations
 
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -49,9 +48,7 @@ import numpy as np
 from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSR"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBBBQQI")
+FORMAT = base.StateFormat("ribbon", b"PFSR", (1,), "BBBQQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _W = 64  # ribbon width: one machine word, as the paper recommends
 _MAX_ATTEMPTS = 64
@@ -191,8 +188,8 @@ def build_state(cfg: RibbonConfig, shard_id: int, hashes_u64: np.ndarray) -> byt
                 f"(n={len(hashes_u64)}, m={m}) — epsilon too tight?"
             )
     return (
-        _HDR.pack(
-            _MAGIC, _VERSION, cfg.fingerprint_bits, attempt, 0,
+        FORMAT.pack(
+            1, cfg.fingerprint_bits, attempt, 0,
             m, cfg.seed & _SEED_MASK, cfg.num_shards,
         )
         + z.tobytes()
@@ -200,20 +197,17 @@ def build_state(cfg: RibbonConfig, shard_id: int, hashes_u64: np.ndarray) -> byt
 
 
 def _parse_state(state: bytes):
-    magic, version, fp_bits, attempt, _, m, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad ribbon state header")
-    dtype = np.uint16 if fp_bits == 16 else np.uint8
-    z = np.frombuffer(state, dtype=dtype, offset=_HDR.size)
+    r = FORMAT.open(state)
+    fp_bits, attempt, _, m, seed, ns = r.fields
+    z = r.array(np.uint16 if fp_bits == 16 else np.uint8, m)
+    r.end()
     return fp_bits, attempt, m, seed, ns, z
 
 
 def check_state(cfg: RibbonConfig, state: bytes) -> None:
     """Reject a state/config mismatch before probing (a wrong seed is
-    silent false negatives) — header-only; m is per-shard data."""
-    magic, version, fp_bits, _att, _pad, _m, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad ribbon state header")
+    silent false negatives); m is per-shard data."""
+    fp_bits, _, _, seed, ns, _ = _parse_state(state)
     if (
         fp_bits != cfg.fingerprint_bits
         or seed != (cfg.seed & _SEED_MASK)

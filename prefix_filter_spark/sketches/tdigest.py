@@ -18,16 +18,13 @@ State: 'PFST' | u8 ver | u8 pad | u16 delta | u32 n_centroids
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 
 import numpy as np
 
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFST"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBHIddd")
+FORMAT = base.StateFormat("tdigest", b"PFST", (1,), "BHIddd")
 
 
 @dataclass(frozen=True)
@@ -139,9 +136,8 @@ class TDigest(base.Accumulator):
     def to_bytes(self) -> bytes:
         self._flush()
         return (
-            _HDR.pack(
-                _MAGIC,
-                _VERSION,
+            FORMAT.pack(
+                1,
                 0,
                 self.cfg.delta,
                 len(self.means),
@@ -155,14 +151,12 @@ class TDigest(base.Accumulator):
 
     @classmethod
     def from_bytes(cls, state: bytes, cfg: TDigestConfig | None = None) -> "TDigest":
-        magic, version, _, delta, n, vmin, vmax, _total = _HDR.unpack_from(state, 0)
-        if magic != _MAGIC or version != _VERSION:
-            raise ValueError("bad tdigest state")
-        off = _HDR.size
+        r = FORMAT.open(state)
+        _, delta, n, vmin, vmax, _total = r.fields
         td = cls(cfg or TDigestConfig(delta=delta))
-        td.means = np.frombuffer(state, dtype=np.float64, count=n, offset=off).copy()
-        off += 8 * n
-        td.weights = np.frombuffer(state, dtype=np.float64, count=n, offset=off).copy()
+        td.means = r.array(np.float64, n).copy()
+        td.weights = r.array(np.float64, n).copy()
+        r.end()
         td.vmin = vmin
         td.vmax = vmax
         return td

@@ -35,7 +35,6 @@ to the wrong pairs.
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -44,9 +43,7 @@ from pyspark.sql import DataFrame
 from prefix_filter_spark.hashing import as_u64, mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFTC"
-_VERSION = 2
-_HDR = struct.Struct("<4sBBHIIQI")
+FORMAT = base.StateFormat("two-choice", b"PFTC", (2,), "BHIIQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _ALT_FLAG = np.uint16(0x8000)  # bit 15: stored in its alternate bucket
 
@@ -152,9 +149,8 @@ def _fill_buckets(
 
 
 def _pack_header(cfg: TwoChoiceConfig, nb: int, n_overflow: int) -> bytes:
-    return _HDR.pack(
-        _MAGIC,
-        _VERSION,
+    return FORMAT.pack(
+        2,
         cfg.slots_per_bucket,
         cfg.fp_bits,
         nb,
@@ -176,15 +172,11 @@ def build_state(cfg: TwoChoiceConfig, shard_id: int, hashes_u64: np.ndarray) -> 
 
 
 def _parse_state(state: bytes):
-    magic, version, slots, fp_bits, nb, n_ov, seed, num_shards = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad two-choice state")
-    off = _HDR.size
-    table = np.frombuffer(state, dtype=np.uint16, count=nb * slots, offset=off).reshape(
-        nb, slots
-    )
-    off += nb * slots * 2
-    overflow = np.frombuffer(state, dtype=np.uint32, count=n_ov, offset=off)
+    r = FORMAT.open(state)
+    slots, fp_bits, nb, n_ov, seed, num_shards = r.fields
+    table = r.array(np.uint16, nb * slots).reshape(nb, slots)
+    overflow = r.array(np.uint32, n_ov)
+    r.end()
     return slots, fp_bits, nb, table, overflow, seed, num_shards
 
 
@@ -204,10 +196,12 @@ def _pairs_of_state(cfg: TwoChoiceConfig, state: bytes) -> np.ndarray:
     return np.concatenate([packed, overflow.astype(np.uint64)])
 
 
-def _check_geometry(cfg: TwoChoiceConfig, state: bytes) -> None:
+def _check_geometry(cfg: TwoChoiceConfig, state: bytes):
     """Reject states built under a different geometry before a rebuild
-    silently mis-places every pair (or IndexErrors)."""
-    slots, fp_bits, nb, _, _, seed, num_shards = _parse_state(state)
+    silently mis-places every pair (or IndexErrors); returns the
+    ``_parse_state`` tuple."""
+    parsed = _parse_state(state)
+    slots, fp_bits, nb, _, _, seed, num_shards = parsed
     if (
         nb != cfg.num_buckets_per_shard
         or slots != cfg.slots_per_bucket
@@ -222,6 +216,7 @@ def _check_geometry(cfg: TwoChoiceConfig, state: bytes) -> None:
             f"fp_bits={cfg.fp_bits}, seed={cfg.seed & _SEED_MASK}, "
             f"num_shards={cfg.num_shards})"
         )
+    return parsed
 
 
 def merge_states(states: list[bytes], cfg: TwoChoiceConfig, shard_id: int = 0) -> bytes:
@@ -241,8 +236,8 @@ def merge_states(states: list[bytes], cfg: TwoChoiceConfig, shard_id: int = 0) -
 
 
 def _contains_in_state(cfg: TwoChoiceConfig, state: bytes, g_hashes: np.ndarray) -> np.ndarray:
-    _check_geometry(cfg, state)  # a mismatch here is silent false negatives
-    slots, fp_bits, nb, table, overflow, _seed, _ns = _parse_state(state)
+    # a mismatch here is silent false negatives
+    _, _, nb, table, overflow, _, _ = _check_geometry(cfg, state)
     b1, fp = _derive(cfg, g_hashes, nb)  # g_hashes are the raw key hashes
     b2 = _alt_bucket(cfg, b1, fp, nb)
     plain = fp.astype(np.uint16)

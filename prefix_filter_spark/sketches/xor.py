@@ -29,12 +29,11 @@ mergeability. Capability mask: LOOKUP only.
 State layout (little-endian):
     magic 'PFSX' | u8 version | u8 fp_bits | u8 attempt | u8 pad
     | u64 seglen | u64 seed | u32 num_shards | fingerprint array
-    (u8 when fp_bits==8, u16 when fp_bits==16)
+    [3 * seglen] (u8 when fp_bits==8, u16 when fp_bits==16)
 """
 
 from __future__ import annotations
 
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -42,9 +41,7 @@ import numpy as np
 from prefix_filter_spark.hashing import mix_with_seed
 from prefix_filter_spark.sketches import base
 
-_MAGIC = b"PFSX"
-_VERSION = 1
-_HDR = struct.Struct("<4sBBBBQQI")
+FORMAT = base.StateFormat("xor", b"PFSX", (1,), "BBBQQI")
 _SEED_MASK = 0xFFFFFFFFFFFFFFFF
 _MAX_ATTEMPTS = 64  # peeling fails w.p. << 1e-6 per attempt at c=1.23
 
@@ -183,8 +180,8 @@ def build_state(cfg: XorConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
                 f"(n={len(hashes_u64)}, slots={slots}) — capacity too tight?"
             )
     return (
-        _HDR.pack(
-            _MAGIC, _VERSION, cfg.fingerprint_bits, attempt, 0,
+        FORMAT.pack(
+            1, cfg.fingerprint_bits, attempt, 0,
             seglen, cfg.seed & _SEED_MASK, cfg.num_shards,
         )
         + fingers.tobytes()
@@ -192,22 +189,19 @@ def build_state(cfg: XorConfig, shard_id: int, hashes_u64: np.ndarray) -> bytes:
 
 
 def _parse_state(state: bytes):
-    magic, version, fp_bits, attempt, _, seglen, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad xor state header")
-    dtype = np.uint16 if fp_bits == 16 else np.uint8
-    fingers = np.frombuffer(state, dtype=dtype, offset=_HDR.size)
+    r = FORMAT.open(state)
+    fp_bits, attempt, _, seglen, seed, ns = r.fields
+    fingers = r.array(np.uint16 if fp_bits == 16 else np.uint8, 3 * seglen)
+    r.end()
     return fp_bits, attempt, seglen, seed, ns, fingers
 
 
 def check_state(cfg: XorConfig, state: bytes) -> None:
     """Reject a state/config mismatch before probing (a wrong seed is
-    silent false negatives) — header-only. seglen is per-shard data
-    (derived from the shard's actual key count), so the probe reads it
-    from the header rather than comparing it to the config."""
-    magic, version, fp_bits, _att, _pad, _seglen, seed, ns = _HDR.unpack_from(state, 0)
-    if magic != _MAGIC or version != _VERSION:
-        raise ValueError("bad xor state header")
+    silent false negatives). seglen is per-shard data (derived from
+    the shard's actual key count), so the probe reads it from the
+    header rather than comparing it to the config."""
+    fp_bits, _, _, seed, ns, _ = _parse_state(state)
     if (
         fp_bits != cfg.fingerprint_bits
         or seed != (cfg.seed & _SEED_MASK)

@@ -58,7 +58,8 @@ from prefix_filter_spark.hashing import (
 from prefix_filter_spark.plans.sharding import hashed_key_col, widen_key_col
 from prefix_filter_spark.sketches.bloom import (
     BloomConfig,
-    _contains_in_state,
+    _contains,
+    _open,
     build_state,
     merge_states,
     seed_mix,
@@ -214,12 +215,6 @@ def _build_from_tagged(src: DataFrame, cfg: FileIndexConfig) -> DataFrame:
     return partials.groupBy("file").applyInPandas(merge_group, INDEX_SCHEMA)
 
 
-def _state_header_seed(state: bytes) -> int:
-    from prefix_filter_spark.sketches.bloom import _HDR as _BLOOM_HDR
-
-    return _BLOOM_HDR.unpack_from(state, 0)[5]
-
-
 def hash_probe_keys(spark: SparkSession | None, keys: list, seed: int = 42) -> np.ndarray:
     """xxhash64(key, seed) for driver-held probe keys.
 
@@ -280,17 +275,17 @@ def probe_file_index(
                 continue
             n_maybe = []
             for s in pdf["state"]:
-                blob = bytes(s)
+                fields, bits = _open(bytes(s))
                 # a probe under the wrong seed would return silent
                 # false negatives — the one failure an AMQ must never
                 # have; the header carries the build seed, so check it
-                state_seed = _state_header_seed(blob)
+                state_seed = fields[3]
                 if state_seed != want_seed:
                     raise ValueError(
                         f"file-index state built with seed {state_seed} "
                         f"probed with cfg.seed {want_seed}"
                     )
-                n_maybe.append(int(_contains_in_state(blob, g).sum()))
+                n_maybe.append(int(_contains(fields, bits, g).sum()))
             yield pd.DataFrame({"file": pdf["file"], "n_maybe": n_maybe})
 
     return index_df.mapInPandas(probe, schema="file string, n_maybe long")

@@ -197,7 +197,7 @@ def streaming_dedup_amq_aged(
             g = bloom.seed_mix(hs, cfg.seed)
             seen = np.zeros(len(hs), dtype=bool)
             for blob in gens:
-                seen |= bloom._contains_in_state(blob, g)
+                seen |= bloom._contains(*bloom._open(blob), g)
             first = np.zeros(len(hs), dtype=bool)
             _, first_idx = np.unique(hs, return_index=True)
             first[first_idx] = True

@@ -30,7 +30,7 @@ def _serialize(k: int, total: int, err: int, counts: dict[str, int]) -> bytes:
     cnt_arr = np.array([counts[t] for t in toks], dtype=np.int64)
     len_arr = np.array([len(b) for b in blobs], dtype=np.uint32)
     return (
-        mg._HDR.pack(mg._MAGIC, mg._VERSION, 0, 0, k, total, err, len(toks))
+        mg.FORMAT.pack(1, 0, 0, k, total, err, len(toks))
         + cnt_arr.tobytes()
         + len_arr.tobytes()
         + b"".join(blobs)

@@ -46,12 +46,6 @@ def test_fixed_reduce_range():
     assert quot.max() < 25 and rem.max() < 256
 
 
-def test_bit_length():
-    vals = np.array([0, 1, 2, 3, 255, 256, 2**63, 2**64 - 1], dtype=np.uint64)
-    expect = [0, 1, 2, 2, 8, 9, 64, 64]
-    assert hashing.bit_length_u64(vals).tolist() == expect
-
-
 def test_shard_of_matches_jvm_expression(spark):
     """NumPy shard routing must equal the Catalyst expression (build path)."""
     from pyspark.sql import functions as F

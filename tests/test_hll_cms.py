@@ -129,7 +129,7 @@ def _cms_acc(counters: np.ndarray, total: int = 0, seed: int = 7) -> cms.CmsAccu
 
 def _v2_state(st_: cms.CmsState) -> bytes:
     """The version 2 layout (i64 counters), as written before version 3."""
-    hdr = cms._HDR.pack(cms._MAGIC, 2, st_.depth, 0, st_.width, 0, st_.total, st_.seed)
+    hdr = cms.FORMAT.pack(2, st_.depth, 0, st_.width, 0, st_.total, st_.seed)
     return hdr + st_.counters.astype("<i8").tobytes()
 
 
@@ -265,8 +265,8 @@ def test_hll_sparse_same_registers_and_estimate():
     dense_acc.update(vals)
     sparse_acc.update(vals)
     sd, ss = dense_acc.to_bytes(), sparse_acc.to_bytes()
-    pd_, rd = hll._parse_state(sd)
-    ps, rs = hll._parse_state(ss)
+    (pd_, _, _), rd = hll._parse_state(sd)
+    (ps, _, _), rs = hll._parse_state(ss)
     assert (pd_, ps) == (14, 14)
     assert np.array_equal(rd, rs)
     assert hll.estimate(sd) == hll.estimate(ss)
@@ -278,7 +278,7 @@ def test_hll_sparse_promotes_to_dense_when_full():
     acc = hll.HllAccumulator(hll.HllConfig(p=10, sparse=True))
     acc.update(vals)
     # nnz ~ m at 50k >> m=1024: serializer must fall back to dense
-    assert len(acc.to_bytes()) == hll._HDR.size + 1024
+    assert len(acc.to_bytes()) == hll.FORMAT.header.size + 1024
 
 
 def test_hll_merge_mixed_formats_equals_dense_merge():
@@ -302,4 +302,4 @@ def test_hll_merge_mixed_formats_equals_dense_merge():
         s for i, s in enumerate(mixed_states) if i % 2 == 0
     ]
     merged_sparse = hll.merge_states(all_sparse)
-    assert hll._HDR.unpack_from(merged_sparse, 0)[3] == hll._FMT_SPARSE
+    assert hll.FORMAT.open(merged_sparse).fields[1] == hll._FMT_SPARSE

@@ -201,8 +201,9 @@ def test_spark_partial_merge_equals_single_pass(spark):
 
 
 def test_kll_and_kmv_decoders_reject_each_others_state():
-    """Both kinds write magic 'PFSK', version 1: every decoder, merge
-    and estimate of one kind raises ValueError on the other's state."""
+    """Every decoder, merge and estimate of one kind raises ValueError
+    on the other's state (KMV wrote KLL's magic 'PFSK' before it had
+    its own)."""
     import pytest
 
     from prefix_filter_spark.sketches import kll

@@ -217,6 +217,30 @@ def test_every_lookup_sketch_has_a_family_record():
         assert registry.info(cfg.family.sketch_name(cfg)).module == module.__name__
 
 
+def test_every_sketch_module_registers_one_state_format():
+    """Each sketch module with a FAMILY declares exactly one
+    StateFormat, every format is in the one registry, and no two kinds
+    share a magic (so a decoder can always tell a foreign state)."""
+    import pkgutil
+
+    from prefix_filter_spark import sketches
+
+    formats = {}
+    for mod_info in pkgutil.iter_modules(sketches.__path__):
+        module = importlib.import_module(f"{sketches.__name__}.{mod_info.name}")
+        if not hasattr(module, "FAMILY"):
+            continue
+        own = [v for v in vars(module).values() if isinstance(v, base.StateFormat)]
+        assert len(own) == 1, module.__name__
+        formats[module.__name__] = own[0]
+    assert len(formats) == 19
+    assert len({f.magic for f in formats.values()}) == len(formats)
+    assert len({f.kind for f in formats.values()}) == len(formats)
+    assert set(base.STATE_FORMATS.values()) == set(formats.values())
+    with pytest.raises(ValueError, match="magic"):
+        base.StateFormat("copy", hll.FORMAT.magic, (1,))
+
+
 # estimate kind -> (module, config, Spark type of its value column)
 ESTIMATE_KINDS = {
     "hll": (hll, hll.HllConfig(p=10), "bigint"),

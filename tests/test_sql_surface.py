@@ -199,8 +199,8 @@ def test_cms_point_and_mg_estimate_null_and_large_keys(spark):
 
 
 def test_kll_and_kmv_sql_reject_each_others_state(spark):
-    """KLL and KMV share magic and version; each SQL function raises on
-    the other kind's state instead of answering."""
+    """Each SQL function of KLL and KMV (which once shared a magic)
+    raises on the other kind's state instead of answering."""
     import numpy as np
     import pytest
 
